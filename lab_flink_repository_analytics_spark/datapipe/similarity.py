@@ -65,9 +65,10 @@ def norm(a: Column | str) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def flat_dot(a: Column | str, b: Column | str, dim: int, parts: int = 1) -> Column:
+def flat_dot(a: str, b: str, dim: int, parts: int = 1) -> Column:
     """Bit-identical to :func:`dot` for ``dim``-wide arrays, unrolled as a
-    flat left-associated sum of ``a[i]·b[i]`` terms.
+    flat left-associated sum of ``a[i]·b[i]`` terms over two column names
+    (dotted names like ``l.v`` are qualified references).
 
     Why it exists: ``F.aggregate``/``F.zip_with`` lambdas are evaluated
     per-element by the interpreted HigherOrderFunction path — outside
@@ -75,6 +76,9 @@ def flat_dot(a: Column | str, b: Column | str, dim: int, parts: int = 1) -> Colu
     of SemDeDup at the 100× rehearsal (123s of a 105s+profile query; the
     98M-pair join itself took 1.7s).  A fixed-width chain of GetArrayItem
     · cast · multiply · add compiles into the surrounding codegen stage.
+    The chain is built as ONE SQL string (:func:`_flat_dot_text`) and one
+    ``F.expr`` parse: building it element by element from Python cost ~1s
+    of py4j chatter per 64-wide call.
 
     Exactness (``parts=1``): ``((x0·y0 + x1·y1) + x2·y2) + …`` is the same
     IEEE double sequence as the fold's ``((0.0 + x0·y0) + x1·y1) + …``
@@ -101,90 +105,7 @@ def flat_dot(a: Column | str, b: Column | str, dim: int, parts: int = 1) -> Colu
     """
     if dim <= 0:
         return F.lit(0.0)
-    parts = max(1, min(parts, dim))
-    if isinstance(a, str) and isinstance(b, str):
-        # Fast construction path (round-10): the same expression tree
-        # built as ONE SQL string + one F.expr parse.  The element-wise
-        # py4j loop below costs ~1s of driver chatter per 64-wide call
-        # (measured; it was the bulk of embedding_near_dup's fixed
-        # "planning floor"); the parsed text analyzes to the identical
-        # GetArrayItem·Cast·Multiply·Add tree, so plans, codegen and
-        # result bits are unchanged.  Dotted names ("l.v") parse as
-        # qualified attribute references.
-        return F.expr(_flat_dot_text(a, b, dim, parts))
-    a, b = _c(a), _c(b)
-    chunk = -(-dim // parts)  # ceil — last partial may be short
-    partials: list[Column] = []
-    for start in range(0, dim, chunk):
-        acc = None
-        for i in range(start, min(start + chunk, dim)):
-            t = a.getItem(i).cast("double") * b.getItem(i).cast("double")
-            acc = t if acc is None else acc + t
-        partials.append(acc)
-    total = partials[0]
-    for p in partials[1:]:
-        total = total + p
-    return total
-
-
-def _flat_dot_lit_text(a: str, vals: list) -> str:
-    """SQL text of the flat fold-order chain Σ ``a[i]·vals[i]`` against a
-    Python-held literal vector (parts=1, left-associated — BIT-identical
-    to the ``zip_with``/``aggregate`` fold at ``len(vals)`` width, since
-    ``0.0 + x₀ = x₀`` for non-NaN doubles), with each literal emitted via
-    :func:`_lit_d` so it round-trips exactly.  Used by the inline
-    assignment chains so the per-centroid dots run in whole-stage codegen
-    instead of the interpreted HOF path (round-10)."""
-    acc = None
-    for i, v in enumerate(vals):
-        t = f"(CAST({a}[{i}] AS DOUBLE) * {_lit_d(float(v))})"
-        acc = t if acc is None else f"({acc} + {t})"
-    return acc if acc is not None else "CAST(0.0 AS DOUBLE)"
-
-
-def _flat_dot_lit_split_text(col: str, vals: list, parts: int) -> str:
-    """SQL text of the SPLIT-PARTIALS :func:`flat_dot` chain with one side
-    a Python-held literal vector: same grouping and left-associated order
-    as :func:`_flat_dot_text` (literal side in the ``a`` position), each
-    literal emitted exactly via :func:`_lit_d`.  IEEE multiplication is
-    commutative bit-for-bit, so folding the cast-literal into the term
-    changes nothing; the SUM order is pinned by the parentheses."""
-    col = _quote_ident(col)
-    dim = len(vals)
-    chunk = -(-dim // parts)
-    groups: list[str] = []
-    for start in range(0, dim, chunk):
-        acc = None
-        for i in range(start, min(start + chunk, dim)):
-            t = f"({_lit_d(float(vals[i]))} * CAST({col}[{i}] AS DOUBLE))"
-            acc = t if acc is None else f"({acc} + {t})"
-        groups.append(acc)
-    total = groups[0]
-    for g in groups[1:]:
-        total = f"({total} + {g})"
-    return total
-
-
-def _flat_dot_py(a, b, dim: int, parts: int) -> float:
-    """Python-float mirror of :func:`flat_dot`'s split-partials order.
-    Python floats ARE IEEE doubles and + / * are the same correctly-
-    rounded operations the JVM executes, so evaluating the identical
-    left-associated sequence here is bit-identical to evaluating the
-    staged expression on an executor — what lets a driver-held query
-    vector's norm be inlined as a literal."""
-    parts = max(1, min(parts, dim))
-    chunk = -(-dim // parts)
-    partials: list[float] = []
-    for start in range(0, dim, chunk):
-        acc = None
-        for i in range(start, min(start + chunk, dim)):
-            t = float(a[i]) * float(b[i])
-            acc = t if acc is None else acc + t
-        partials.append(acc)
-    total = partials[0]
-    for p in partials[1:]:
-        total = total + p
-    return total
+    return F.expr(_flat_dot_text(a, b, dim, parts))
 
 
 #: bounded-query-set gate for the inlined ANN scoring paths: a probe set
@@ -228,17 +149,28 @@ def _quote_ident(name: str) -> str:
     return ".".join(f"`{p}`" for p in name.split("."))
 
 
-def _flat_dot_text(a: str, b: str, dim: int, parts: int) -> str:
-    """SQL text of the :func:`flat_dot` chain — explicit parentheses pin
-    the left-associated grouping of each partial and of the top-level
-    combine, so the parsed tree is the loop-built tree node for node."""
-    a, b = _quote_ident(a), _quote_ident(b)
-    chunk = -(-dim // parts)
+def _flat_dot_text(a: str, b, dim: int, parts: int = 1) -> str:
+    """SQL text of the :func:`flat_dot` chain Σ ``a[i]·b[i]`` — the one
+    SQL-text dot builder.  ``a`` is a column name; ``b`` is a column name
+    or a driver-held Python vector (centroid, hyperplane), whose terms are
+    emitted via :func:`_lit_d` so each literal round-trips exactly.
+    Explicit parentheses pin the left-associated grouping of each partial
+    and of the top-level combine, so the parsed tree is the
+    GetArrayItem·Cast·Multiply·Add tree node for node."""
+    if dim <= 0:
+        return "CAST(0.0 AS DOUBLE)"
+    a = _quote_ident(a)
+    if isinstance(b, str):
+        b = _quote_ident(b)
+        rhs = [f"CAST({b}[{i}] AS DOUBLE)" for i in range(dim)]
+    else:
+        rhs = [_lit_d(float(x)) for x in b[:dim]]
+    chunk = -(-dim // max(1, parts))
     groups: list[str] = []
     for start in range(0, dim, chunk):
         acc = None
         for i in range(start, min(start + chunk, dim)):
-            t = f"(CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE))"
+            t = f"(CAST({a}[{i}] AS DOUBLE) * {rhs[i]})"
             acc = t if acc is None else f"({acc} + {t})"
         groups.append(acc)
     total = groups[0]
@@ -285,8 +217,12 @@ def _staged_cosine(
 
 
 def _np_flat_dot(V, W, dim: int, parts: int):
-    """NumPy mirror of :func:`flat_dot`'s split-partials order over row
-    matrices ``V``/``W`` of shape (n, dim): every multiply and add is an
+    """NumPy evaluation of :func:`flat_dot`'s split-partials order over
+    float64 arrays ``V``/``W`` whose LAST axis is the ``dim`` vector axis
+    and whose leading axes broadcast — (n, dim) against (n, dim) or one
+    (1, dim) row, or (b, 1, dim) against (1, m, dim) for a (b, m) pair
+    block — and the only dot this module evaluates outside the JVM:
+    every multiply and add is an
     ELEMENTWISE ufunc call in the exact left-associated sequence the
     staged expression executes per row, so the result vector is
     bit-identical to the JVM evaluation.  (Deliberately NOT np.dot /
@@ -297,7 +233,7 @@ def _np_flat_dot(V, W, dim: int, parts: int):
     for start in range(0, dim, chunk):
         acc = None
         for i in range(start, min(start + chunk, dim)):
-            t = V[:, i] * W[:, i]
+            t = V[..., i] * W[..., i]
             acc = t if acc is None else acc + t
         partials.append(acc)
     total = partials[0]
@@ -306,41 +242,18 @@ def _np_flat_dot(V, W, dim: int, parts: int):
     return total
 
 
-def _lsh_bucket_py(v, nbits: int, dim: int) -> int:
-    """Driver-Python mirror of :func:`_lsh_bucket_text` for one vector —
-    same left-fold order, and Spark's comparison rule for the sign test
-    (NaN compares greater than 0, unlike IEEE/NumPy)."""
-    import math
-
-    out = 0
-    for b in range(nbits):
-        acc = None
-        for i in range(dim):
-            sgn = 1.0 if (i * (2 * b + 3) + b * 7) % 4 < 2 else -1.0
-            t = float(v[i]) * sgn
-            acc = t if acc is None else acc + t
-        if acc > 0 or math.isnan(acc):
-            out += 1 << b
-    return out
-
-
-def _lsh_bucket_np(V, nbits: int, dim: int):
-    """NumPy mirror of :func:`_lsh_bucket_text` over a row matrix: per
-    bit one left-folded elementwise ±column sum, bit-identical to the
-    expression for finite inputs (rows containing non-finite values are
-    the caller's job — Spark's NaN-greatest comparison differs from
-    IEEE)."""
+def _np_norms(vecs: list) -> list[float]:
+    """Norms of driver-held model vectors (centroids) as Python floats for
+    :func:`_lit_d`: √ of each row's parts=1 :func:`_np_flat_dot` self-dot.
+    Bit-identical to the ``0.0 + x₀² + …`` fold of :func:`dot`: a chain
+    that starts at its first term differs from the fold only in the sign
+    of an all-(−0.0) sum, and a sum of squares is never −0.0."""
     import numpy as np
 
-    n = V.shape[0]
-    buck = np.zeros(n, dtype=np.int64)
-    for b in range(nbits):
-        acc = None
-        for i in range(dim):
-            t = V[:, i] * (1.0 if (i * (2 * b + 3) + b * 7) % 4 < 2 else -1.0)
-            acc = t if acc is None else acc + t
-        buck += np.where(acc > 0, 1 << b, 0)
-    return buck
+    if not vecs:
+        return []
+    V = np.asarray(vecs, dtype=np.float64)
+    return np.sqrt(_np_flat_dot(V, V, V.shape[1], 1)).tolist()
 
 
 def _inline_scored(
@@ -351,57 +264,60 @@ def _inline_scored(
     prune_k: int | None = None,
     prune_self: bool = False,
     nbits: int | None = None,
-    qbuckets: list | None = None,
 ):
     """(query_id, neighbor_id[, nlabel], score[, qlabel]) of a BOUNDED
     driver-held query set against the candidate frame ``c`` (columns
     ``neighbor_id``, ``cv``[, ``nlabel``]).
 
     Scoring runs in a ``mapInArrow`` batch function: candidate vectors
-    arrive as one contiguous Arrow buffer, reshape zero-copy to (n, dim),
+    arrive as one contiguous Arrow buffer, reshape to (n, dim) float64,
     and the per-query cosines evaluate as ~dim elementwise NumPy ops in
-    :func:`flat_dot`'s exact split-partials order (guide §4.2 — hand
-    whole batches to vectorized native code).  Why not the codegen
-    expression form: a 64-term×8-part chain per query compiles into
-    generated methods so large that HotSpot either never JITs them or
-    JITs them only after several executions — measured at the 100×
-    replica: 38-75 s executor CPU on the execution a bench actually
-    pays, vs ~a second of NumPy loops for the identical arithmetic.
-    Rows violating the width contract degrade instead of erroring:
-    NULL vector, any NULL element among the first ``dim``, or fewer
-    than ``dim`` elements → NULL score; a zero-norm vector → NaN; extra
-    elements beyond ``dim`` are ignored.  (The ANSI expression path
-    this replaces RAISED on short and zero-norm vectors —
+    :func:`flat_dot`'s exact split-partials order (:func:`_np_flat_dot`;
+    guide §4.2 — hand whole batches to vectorized native code).  Why not
+    the codegen expression form: a 64-term×8-part chain per query
+    compiles into generated methods so large that HotSpot either never
+    JITs them or JITs them only after several executions — measured at
+    the 100× replica: 38-75 s executor CPU on the execution a bench
+    actually pays, vs ~a second of NumPy loops for the identical
+    arithmetic.  Rows violating the width contract degrade instead of
+    erroring: NULL vector, any NULL element among the first ``dim``, or
+    fewer than ``dim`` elements → NULL score; a zero-norm vector → NaN;
+    extra elements beyond ``dim`` are ignored.  (The ANSI expression
+    path this replaces RAISED on short and zero-norm vectors —
     INVALID_ARRAY_INDEX / DIVIDE_BY_ZERO — so none of these rows were
     inside its contract either; on contract data the two paths are
     bit-identical, pinned by
     test_inline_arrow_scorer_bit_identical_to_expression_path.)
 
+    ``nbits``: join-on-bucket semantics inside the batch — a row emits
+    only for queries in its LSH bucket (:func:`_lsh_bucket_np`); a
+    contract-bad row has a NULL bucket in the expression form and never
+    matches.
+
     ``prune_k``: when set, each batch emits only its local top-k rows
     per query under the consumer's exact total order (score DESC with
-    NaN greatest — Spark's double ordering — then neighbor_id ASC),
-    after applying the consumer's own pair filters (``prune_self`` drops
-    the self pair; ``with_label`` + ``prune_k`` drops same-label pairs
-    exactly like the NULL-safe inequality).  The global top-k is a
-    subset of the union of batch-local top-ks under the same total
-    order, and the downstream window recomputes exact ranks, so results
-    are independent of batching.  Batches carrying contract-violating
-    rows (NULL scores possible) skip pruning entirely — NULL ordering
-    stays the window's job."""
-    import math
-
+    NaN greatest — Spark's double ordering — then neighbor_id ASC NULLS
+    FIRST), after applying the consumer's own pair filters
+    (``prune_self`` drops the self pair and NULL ids, exactly like
+    ``query_id != neighbor_id``; ``with_label`` + ``prune_k`` drops
+    same-label pairs exactly like the NULL-safe inequality).  The global
+    top-k is a subset of the union of batch-local top-ks under the same
+    total order, and the downstream window recomputes exact ranks, so
+    results are independent of batching.  Batches carrying
+    contract-violating rows (NULL scores possible) skip pruning unless
+    the bucket mask already drops them — NULL ordering stays the
+    window's job."""
+    import numpy as np
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     p = COSINE_SPLIT_PARTS
-    queries = [
-        (
-            r[0],
-            [float(x) for x in r[1]],
-            math.sqrt(_flat_dot_py(r[1], r[1], dim, p)),
-            (r[2] if with_label else None),
-        )
-        for r in rows
-    ]
+    # _collect_inline_queries guarantees non-NULL ids and exactly-`dim`
+    # finite vectors
+    qids = [r[0] for r in rows]
+    qlabels = [r[2] if with_label else None for r in rows]
+    Q = np.asarray([r[1] for r in rows], dtype=np.float64)
+    nq = np.sqrt(_np_flat_dot(Q, Q, dim, p))
+    qbuckets = _lsh_bucket_np(Q, nbits, dim) if nbits is not None else None
     in_schema = c.schema
     id_field = in_schema["neighbor_id"]
     out_fields = [
@@ -416,32 +332,32 @@ def _inline_scored(
     out_schema = StructType(out_fields)
 
     def score_batches(batches):
-        import numpy as np
         import pyarrow as pa
+        import pyarrow.compute as pc
 
         for b in batches:
             n = b.num_rows
             if n == 0:
                 continue
-            names = b.schema.names
-            i_id = names.index("neighbor_id")
-            i_cv = names.index("cv")
-            ids = b.column(i_id)
-            cv = b.column(i_cv)
-            nlab = b.column(names.index("nlabel")) if with_label else None
-            # fast path: no NULL vectors and every row exactly `dim` wide
-            # → the list values are one contiguous buffer, reshape free
-            flat = None
-            if cv.null_count == 0:
-                vals = cv.combine_chunks().flatten() if isinstance(
-                    cv, pa.ChunkedArray
-                ) else cv.flatten()
-                if len(vals) == n * dim and vals.null_count == 0:
-                    flat = vals.to_numpy(zero_copy_only=False)
-            if flat is not None:
-                V = flat.reshape(n, dim)
-                bad = None
-            else:
+            ids = b.column("neighbor_id")
+            cv = b.column("cv")
+            nlab = b.column("nlabel") if with_label else None
+            # fast path: no NULL vectors or elements and every list
+            # exactly `dim` long (a uniform offset stride — an equal TOTAL
+            # length alone would reshape ragged rows [1,2,3],[4] as
+            # [[1,2],[3,4]]) → the list values are one contiguous buffer
+            V = bad = None
+            if cv.null_count == 0 and pc.all(
+                pc.equal(pc.list_value_length(cv), dim)
+            ).as_py():
+                vals = cv.flatten()
+                if vals.null_count == 0:
+                    # float64: an array<float> column arrives as float32,
+                    # and the expression path casts every element to DOUBLE
+                    V = vals.to_numpy(zero_copy_only=False).astype(
+                        np.float64, copy=False
+                    ).reshape(n, dim)
+            if V is None:
                 # contract-violating batch (NULL/ragged/short rows):
                 # densify with the expression path's NULL rule
                 V = np.zeros((n, dim), dtype=np.float64)
@@ -455,51 +371,38 @@ def _inline_scored(
                         bad[j] = True
                     else:
                         V[j, :] = row[:dim]
+            mask = bad if bad is not None and bad.any() else None
             with np.errstate(divide="ignore", invalid="ignore"):
                 nc = np.sqrt(_np_flat_dot(V, V, dim, p))
-                scores = []
-                for qid, qv, nq, qlabel in queries:
-                    Q = np.broadcast_to(
-                        np.asarray(qv, dtype=np.float64), (n, dim)
-                    )
-                    scores.append(_np_flat_dot(Q, V, dim, p) / (nq * nc))
-            mask = bad if bad is not None and bad.any() else None
-            ids_np = None
-            try:
-                ids_np = ids.to_numpy(zero_copy_only=False)
-            except Exception:
-                ids_np = None  # non-numeric ids: no pruning/self filter
-            buck = None
-            if nbits is not None:
-                # join-on-bucket semantics inside the batch: rows emit
-                # only for queries whose bucket matches; a contract-bad
-                # row has a NULL bucket in the expression form and never
-                # matches; Spark's NaN-greatest sign test is mirrored
-                # per-row for non-finite vectors
-                buck = _lsh_bucket_np(V, nbits, dim)
-                nonfin = ~np.isfinite(V).all(axis=1)
-                if bad is not None:
-                    nonfin &= ~bad
-                for j in np.flatnonzero(nonfin):
-                    buck[j] = _lsh_bucket_py(V[j], nbits, dim)
-                if bad is not None:
-                    buck[bad] = -1
-            for qi, ((qid, qv, nq, qlabel), score) in enumerate(
-                zip(queries, scores)
-            ):
+                scores = [
+                    _np_flat_dot(Q[qi : qi + 1], V, dim, p) / (nq[qi] * nc)
+                    for qi in range(len(qids))
+                ]
+                buck = _lsh_bucket_np(V, nbits, dim) if nbits is not None else None
+            if buck is not None and mask is not None:
+                buck[mask] = -1
+            id_rank = None
+            if prune_k is not None:
+                try:
+                    # neighbor_id ASC NULLS FIRST, for any orderable id type
+                    id_rank = pc.rank(
+                        ids, "ascending", null_placement="at_start"
+                    ).to_numpy()
+                except pa.ArrowNotImplementedError:
+                    pass  # unorderable id type: no pruning
+            can_prune = id_rank is not None and (mask is None or buck is not None)
+            for qi, (qid, qlabel, score) in enumerate(zip(qids, qlabels, scores)):
                 sel = None
-                can_prune = prune_k is not None and ids_np is not None and (
-                    mask is None or buck is not None
-                )
                 if buck is not None or can_prune:
                     keep = np.ones(n, dtype=bool)
                     if buck is not None:
                         keep &= buck == qbuckets[qi]
-                    if prune_self and qid is not None and ids_np is not None:
-                        keep &= ids_np != qid
+                    if prune_self:
+                        ne = pc.not_equal(ids, pa.scalar(qid, ids.type))
+                        keep &= pc.fill_null(ne, False).to_numpy(
+                            zero_copy_only=False
+                        )
                     if with_label:
-                        import pyarrow.compute as pc
-
                         if qlabel is None:
                             keep[:] = False
                         else:
@@ -511,32 +414,20 @@ def _inline_scored(
                         s = score[idx]
                         nan = np.isnan(s)
                         order = np.lexsort(
-                            (ids_np[idx], np.where(nan, 0.0, -s), ~nan)
+                            (id_rank[idx], np.where(nan, 0.0, -s), ~nan)
                         )
                         idx = idx[order[:prune_k]]
                     sel = pa.array(idx)
-                take = (lambda a: a.take(sel)) if sel is not None else (
-                    lambda a: a
-                )
-                m = len(sel) if sel is not None else n
-                cols = [
-                    pa.array(np.full(m, qid), type=pa.int64()).cast(ids.type)
-                    if qid is not None
-                    else pa.nulls(m, ids.type),
-                    take(ids),
-                ]
+                take = (lambda a: a) if sel is None else (lambda a: a.take(sel))
+                m = n if sel is None else len(sel)
+                # constant columns in the candidate id / label type
+                cols = [pa.repeat(pa.scalar(qid, ids.type), m), take(ids)]
                 if with_label:
-                    cols.append(take(nlab))
-                    cols.append(
-                        pa.nulls(m, nlab.type)
-                        if qlabel is None
-                        else pa.array([qlabel] * m).cast(nlab.type)
-                    )
-                cols.append(
-                    take(pa.array(score, mask=mask))
-                    if sel is not None
-                    else pa.array(score, mask=mask)
-                )
+                    cols += [
+                        take(nlab),
+                        pa.repeat(pa.scalar(qlabel, nlab.type), m),
+                    ]
+                cols.append(take(pa.array(score, mask=mask)))
                 yield pa.RecordBatch.from_arrays(
                     cols, names=[f.name for f in out_fields]
                 )
@@ -629,14 +520,24 @@ LSH_NBITS = 8
 
 
 def _hyperplane_sign(bit: int, dim_index: Column) -> Column:
-    """Deterministic ±1 component of hyperplane ``bit`` at dimension i.
+    """Column form of :func:`_hyperplane_signs` for a width-unknown
+    vector (``dim_index`` is the element position)."""
+    v = (dim_index * (2 * bit + 3) + bit * 7) % 4
+    return F.when(v < 2, F.lit(1.0)).otherwise(F.lit(-1.0))
+
+
+def _hyperplane_signs(nbits: int, dim: int) -> list[list[float]]:
+    """The ±1.0 components of LSH hyperplanes ``0..nbits-1`` at width
+    ``dim``, shared by the SQL-text and NumPy bucket paths.
 
     Uses a small affine congruence (no engine hash): sign = +1 iff
     (i*(2*bit+3) + bit*7) mod 4 < 2.  Crude but fixed and portable; LSH
     quality only needs the planes to be ~uncorrelated.
     """
-    v = (dim_index * (2 * bit + 3) + bit * 7) % 4
-    return F.when(v < 2, F.lit(1.0)).otherwise(F.lit(-1.0))
+    return [
+        [1.0 if (i * (2 * b + 3) + b * 7) % 4 < 2 else -1.0 for i in range(dim)]
+        for b in range(nbits)
+    ]
 
 
 def lsh_bucket(
@@ -653,7 +554,7 @@ def lsh_bucket(
     introduce is erased by the ``proj > 0`` comparison (−0.0 > 0 and
     +0.0 > 0 are both false)."""
     if dim is not None and isinstance(vec, str):
-        return F.expr(_lsh_bucket_text(_quote_ident(vec), nbits, dim))
+        return F.expr(_lsh_bucket_text(vec, nbits, dim))
     v = _c(vec)
     idx = F.sequence(F.lit(0), F.size(v) - 1)
     bits = []
@@ -675,24 +576,35 @@ def lsh_bucket(
 
 
 def _lsh_bucket_text(v: str, nbits: int, dim: int) -> str:
-    """SQL text of :func:`lsh_bucket` for a fixed-width vector: per bit a
-    flat left-associated sum of ``±v[i]`` terms (the affine sign rule
-    evaluated in Python), then the same CASE/add/cast chain."""
-    bits = []
-    for b in range(nbits):
-        acc = None
-        for i in range(dim):
-            sgn = "1.0" if (i * (2 * b + 3) + b * 7) % 4 < 2 else "-1.0"
-            t = f"(CAST({v}[{i}] AS DOUBLE) * CAST('{sgn}' AS DOUBLE))"
-            acc = t if acc is None else f"({acc} + {t})"
-        bits.append(
-            f"(CASE WHEN ({acc}) > CAST(0.0 AS DOUBLE)"
-            f" THEN {1 << b} ELSE 0 END)"
-        )
+    """SQL text of :func:`lsh_bucket` for a fixed-width vector column:
+    per bit the parts=1 :func:`_flat_dot_text` chain against the ±1.0
+    hyperplane, then the same CASE/add/cast chain."""
+    bits = [
+        f"(CASE WHEN ({_flat_dot_text(v, signs, dim)}) > CAST(0.0 AS DOUBLE)"
+        f" THEN {1 << b} ELSE 0 END)"
+        for b, signs in enumerate(_hyperplane_signs(nbits, dim))
+    ]
     total = bits[0]
     for t in bits[1:]:
         total = f"({total} + {t})"
     return f"CAST(({total}) AS INT)"
+
+
+def _lsh_bucket_np(V, nbits: int, dim: int):
+    """NumPy evaluation of :func:`_lsh_bucket_text` over a float64 row
+    matrix: per bit the parts=1 :func:`_np_flat_dot` against the
+    hyperplane row, bit-identical to the expression for every row —
+    the sign test follows Spark's comparison, where NaN is greater than
+    0 (IEEE/NumPy say it is not)."""
+    import numpy as np
+
+    signs = np.asarray(_hyperplane_signs(nbits, dim), dtype=np.float64)
+    buck = np.zeros(V.shape[0], dtype=np.int64)
+    with np.errstate(invalid="ignore"):
+        for b in range(nbits):
+            proj = _np_flat_dot(V, signs[b : b + 1], dim, 1)
+            buck += np.where((proj > 0) | np.isnan(proj), 1 << b, 0)
+    return buck
 
 
 def sampled_centroids(
@@ -756,8 +668,8 @@ def _inline_assignments(
     ``array_sort`` over (-cosine, cid) structs — one narrow projection,
     no crossJoin row expansion, no window exchange.  Tie-break and float
     semantics are bit-identical to the join+window plan: centroid norms
-    are pre-folded in Python with the same left-to-right IEEE-double
-    order as :func:`dot`, and ascending (-cs, cid) ≡ (cs DESC, cid).
+    are evaluated driver-side by :func:`_np_norms` (bit-identical to the
+    :func:`dot` fold), and ascending (-cs, cid) ≡ (cs DESC, cid).
 
     Round-10: each centroid's cosine is STAGED as its own projected
     column (a flat fold-order ``v[i]·c_i`` literal chain, parts=1 — BIT
@@ -774,22 +686,16 @@ def _inline_assignments(
     rows whose vectors differ in width from the centroids are out of
     contract (the fold form NULLed their cosines; the flat form reads the
     first ``dim`` elements)."""
-    import math
-
     # one expr-string parse per staged cosine column: the per-element
     # py4j construction this replaces cost ~1s per centroid row of pure
     # driver chatter (round-10 measurement)
+    cents = sorted(cent_rows, key=lambda r: r["cid"])
     cs_cols = []
     entries = []
     dim = None
-    for j, r in enumerate(sorted(cent_rows, key=lambda r: r["cid"])):
-        cv = [float(x) for x in r["cv"]]
-        dim = len(cv)
-        acc = 0.0
-        for x in cv:
-            acc += x * x
-        ncv = math.sqrt(acc)
-        dot_txt = _flat_dot_lit_text("`v`", cv)
+    for j, (r, ncv) in enumerate(zip(cents, _np_norms([r["cv"] for r in cents]))):
+        dim = len(r["cv"])
+        dot_txt = _flat_dot_text("v", r["cv"], dim)
         cs_cols.append(
             F.expr(f"({dot_txt} / (`_nv` * {_lit_d(ncv)}))").alias(f"_cs{j}")
         )
@@ -848,12 +754,14 @@ def hierarchical_assignments(
     THEMSELVES (so no routing bucket is ever empty, even with duplicate
     centroid vectors); each vector picks its best super then the best
     centroid within that super's bucket, both by (cos DESC, id ASC).  The
-    driver-side centroid→super cosines use the same left-to-right IEEE
-    double fold as :func:`dot`.  ``n_super`` defaults to
-    ``1`` for quantizers ≤ HIERARCHICAL_MIN_LISTS — which reduces to the
-    flat argmax bit-for-bit — else ``isqrt(k)``.  Precondition for
-    n_super > 1: non-zero-norm vectors (routing cosines are undefined on
-    zero vectors; the flat n_super = 1 path has no such constraint).
+    driver-side centroid→super cosines use :func:`_np_flat_dot` at
+    parts=1: it differs from the :func:`dot` fold only in the sign of an
+    all-(−0.0) dot, and ±0 tie in the (−cs, sid) comparison.
+    ``n_super`` defaults to ``1`` for quantizers ≤ HIERARCHICAL_MIN_LISTS
+    — which reduces to the flat argmax bit-for-bit — else ``isqrt(k)``.
+    Precondition for n_super > 1: non-zero-norm vectors (routing cosines
+    are undefined on zero vectors; the flat n_super = 1 path has no such
+    constraint).
 
     Plan: TWO chained narrow projections (super rank, then a bucket
     lookup and an in-place ``array_sort`` argmax) — no shuffle, no window
@@ -879,6 +787,8 @@ def hierarchical_assignments(
     """
     import math
 
+    import numpy as np
+
     if max_inline is None:
         max_inline = MAX_INLINE_CENTROIDS
     cent = centroids.select("cid", "cv")
@@ -886,14 +796,12 @@ def hierarchical_assignments(
     if n_super is None:
         n_super = 1 if k <= HIERARCHICAL_MIN_LISTS else max(1, math.isqrt(k))
 
-    def _pydot(a, b):
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc += x * y
-        return acc
-
     if k <= max_inline:
         rows = sorted(cent.collect(), key=lambda r: int(r["cid"]))
+        if n_super == 1:
+            # single routing bucket = flat argmax over the whole quantizer
+            # — identical compare chain to _inline_assignments
+            return _inline_assignments(vectors, rows, 1, id_col, vec_col)
         sup_src = rows[:n_super]
     else:
         rows = None
@@ -902,38 +810,32 @@ def hierarchical_assignments(
             key=lambda r: int(r["cid"]),
         )
 
-    supers = []
-    for r in sup_src:
-        sv = [float(x) for x in r["cv"]]
-        supers.append((int(r["cid"]), sv, math.sqrt(_pydot(sv, sv))))
+    supers = [
+        (int(r["cid"]), [float(x) for x in r["cv"]], ns)
+        for r, ns in zip(sup_src, _np_norms([r["cv"] for r in sup_src]))
+    ]
     super_ids = {sid for sid, _, _ in supers}
+    sup_dim = len(supers[0][1]) if supers else None
 
-    if n_super == 1 and rows is not None:
-        # single routing bucket = flat argmax over the whole quantizer —
-        # identical compare chain to _inline_assignments
-        return _inline_assignments(vectors, rows, 1, id_col, vec_col)
-
-    def _sup_entries(vec_sql: str, nv_sql: str) -> Column:
+    def _sup_entries(vec: str, nv_sql: str) -> Column:
         # expr-string construction (round-10): one parse; the routing
         # dots are flat fold-order literal chains (codegen) — bit-identical
-        # to the former HOF fold at the quantizer width, see
-        # _flat_dot_lit_text
+        # to the former HOF fold at the quantizer width
         entries = []
         for sid, sv, ns in supers:
-            cs = f"({_flat_dot_lit_text(vec_sql, sv)} / ({nv_sql} * {_lit_d(ns)}))"
+            cs = f"({_flat_dot_text(vec, sv, len(sv))} / ({nv_sql} * {_lit_d(ns)}))"
             entries.append(f"named_struct('negcs', -{cs}, 'sid', {int(sid)})")
         return F.expr(
             f"element_at(array_sort(array({', '.join(entries)})), 1)['sid']"
         )
 
-    sup_dim = len(supers[0][1]) if supers else None
     base = vectors.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v")
     ).withColumn(
         "_nv",
         F.sqrt(flat_dot("v", "v", sup_dim)) if sup_dim else norm(F.col("v")),
     )
-    best_sid = _sup_entries("`v`", "`_nv`")
+    best_sid = _sup_entries("v", "`_nv`")
 
     scored = F.transform(
         F.col("_cands"),
@@ -954,31 +856,32 @@ def hierarchical_assignments(
     )
 
     if rows is not None:
+        # driver-side routing (supers are the rows' prefix): cosine of
+        # every centroid to every super, one _np_flat_dot per super
+        C = np.asarray([r["cv"] for r in rows], dtype=np.float64)
+        nc = _np_norms([r["cv"] for r in rows])
+        with np.errstate(divide="ignore", invalid="ignore"):
+            cs = [
+                _np_flat_dot(C, C[s : s + 1], sup_dim, 1) / (np.asarray(nc) * nc[s])
+                for s in range(len(supers))
+            ]
         buckets: dict[int, list] = {sid: [] for sid, _, _ in supers}
-        for r in rows:
+        for j, r in enumerate(rows):
             cid = int(r["cid"])
-            cv = [float(x) for x in r["cv"]]
-            if cid in super_ids:
-                buckets[cid].append(r)
-                continue
-            nc = math.sqrt(_pydot(cv, cv))
-            best = None
-            for sid, sv, ns in supers:
-                cs = _pydot(cv, sv) / (nc * ns)
-                key = (-cs, sid)
-                if best is None or key < best[0]:
-                    best = (key, sid)
-            buckets[best[1]].append(r)
+            if cid not in super_ids:
+                # nearest super by (cos DESC, sid ASC)
+                cid = min(
+                    (-float(cs[s][j]), sid) for s, (sid, _, _) in enumerate(supers)
+                )[1]
+            buckets[cid].append(j)
         map_args = []
         for sid, _, _ in supers:
-            arr = []
-            for r in buckets[sid]:
-                cv = [float(x) for x in r["cv"]]
-                arr.append(
-                    f"named_struct('cid', {int(r['cid'])},"
-                    f" 'cv', {_lit_array_d(cv)},"
-                    f" 'ncv', {_lit_d(math.sqrt(_pydot(cv, cv)))})"
-                )
+            arr = [
+                f"named_struct('cid', {int(rows[j]['cid'])},"
+                f" 'cv', {_lit_array_d(rows[j]['cv'])},"
+                f" 'ncv', {_lit_d(nc[j])})"
+                for j in buckets[sid]
+            ]
             map_args += [str(int(sid)), "array(" + ", ".join(arr) + ")"]
         cand_map = F.expr("map(" + ", ".join(map_args) + ")")
         return pick(
@@ -991,7 +894,7 @@ def hierarchical_assignments(
     cw = cent.withColumn("_nc", norm(F.col("cv")))
     cent_sid = F.when(
         F.col("cid").isin(*[int(s) for s in super_ids]), F.col("cid")
-    ).otherwise(_sup_entries("`cv`", "`_nc`"))
+    ).otherwise(_sup_entries("cv", "`_nc`"))
     bucket = (
         cw.select(
             cent_sid.alias("sid"),
@@ -1016,24 +919,33 @@ def ivf_assignments(
     n_best: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    inline: bool = True,
 ) -> DataFrame:
     """Rank each vector's centroids by cosine; keep the best ``n_best``.
 
-    Default plan (``inline=True``, quantizer ≤ MAX_INLINE_CENTROIDS):
-    collect the centroid table driver-side — it is model-artifact-sized
-    by contract, never data-scale — and assign via a pure codegen
-    projection (see :func:`_inline_assignments`).  The vector table is
-    scanned once with NO shuffle at any scale.
-
-    Fallback (large quantizers): centroids broadcast into a crossJoin,
-    per-vector rank via a window partitioned by vector id — one hash
-    exchange of the #centroids-expanded pair table.
+    Default plan (quantizer ≤ MAX_INLINE_CENTROIDS): collect the centroid
+    table driver-side — it is model-artifact-sized by contract, never
+    data-scale — and assign via a pure codegen projection (see
+    :func:`_inline_assignments`).  The vector table is scanned once with
+    NO shuffle at any scale.  Larger quantizers take
+    :func:`_join_assignments`.
     """
-    if inline:
-        rows = centroids.select("cid", "cv").collect()
-        if len(rows) <= MAX_INLINE_CENTROIDS:
-            return _inline_assignments(vectors, rows, n_best, id_col, vec_col)
+    rows = centroids.select("cid", "cv").collect()
+    if len(rows) <= MAX_INLINE_CENTROIDS:
+        return _inline_assignments(vectors, rows, n_best, id_col, vec_col)
+    return _join_assignments(vectors, centroids, n_best, id_col, vec_col)
+
+
+def _join_assignments(
+    vectors: DataFrame,
+    centroids: DataFrame,
+    n_best: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """:func:`ivf_assignments` for quantizers above MAX_INLINE_CENTROIDS:
+    centroids broadcast into a crossJoin, per-vector rank via a window
+    partitioned by vector id — one hash exchange of the
+    #centroids-expanded pair table."""
     v = vectors.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     pairs = v.crossJoin(F.broadcast(centroids)).select(
         "id", "v", "cid", cosine("v", "cv").alias("cs")
@@ -1071,12 +983,8 @@ def ivf_topk(
         cand = _inline_assignments(candidates, rows, 1, id_col, vec_col)
         probes = _inline_assignments(queries, rows, nprobe, id_col, vec_col)
     else:
-        cand = ivf_assignments(
-            candidates, centroids, 1, id_col, vec_col, inline=False
-        )
-        probes = ivf_assignments(
-            queries, centroids, nprobe, id_col, vec_col, inline=False
-        )
+        cand = _join_assignments(candidates, centroids, 1, id_col, vec_col)
+        probes = _join_assignments(queries, centroids, nprobe, id_col, vec_col)
     cand = cand.select(
         F.col("id").alias("neighbor_id"), F.col("v").alias("cv2"), "cid"
     )
@@ -1155,15 +1063,8 @@ def lsh_topk(
         c = candidates.select(
             F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
         )
-        qb = [_lsh_bucket_py(r[1], nbits, dim) for r in rows]
         scored = _inline_scored(
-            c,
-            rows,
-            dim,
-            prune_k=k,
-            prune_self=True,
-            nbits=nbits,
-            qbuckets=qb,
+            c, rows, dim, prune_k=k, prune_self=True, nbits=nbits
         )
         return ranked(
             scored.filter(F.col("query_id") != F.col("neighbor_id")).select(
@@ -1360,8 +1261,6 @@ def _semdedup_dropped_arrow(asg, dim: int, threshold: float, id_col: str):
     Caller contract (the ``dim`` gate): every vector non-NULL and
     exactly ``dim`` wide — semdedup only takes this path after its
     min==max width probe."""
-    import math as _math
-
     from pyspark.sql.types import StructField, StructType
 
     p = COSINE_SPLIT_PARTS
@@ -1380,31 +1279,23 @@ def _semdedup_dropped_arrow(asg, dim: int, threshold: float, id_col: str):
             return pa.table({"id": pa.array([], type=id_type)})
         order = np.argsort(ids, kind="stable")
         ids = ids[order]
+        # float64 like the expression path's CAST(x AS DOUBLE): an
+        # array<float> column arrives as float32
         V = (
             tbl.column("v").chunk(0).flatten()
-            .to_numpy(zero_copy_only=False).reshape(m, dim)
+            .to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+            .reshape(m, dim)
         )[order]
         with np.errstate(divide="ignore", invalid="ignore"):
             norm = np.sqrt(_np_flat_dot(V, V, dim, p))
             dropped = np.zeros(m, dtype=bool)
-            chunk = -(-dim // p)
-            # row blocks bound the (block × m) pair matrix; each block
-            # accumulates the same left-associated partial order as
-            # flat_dot, elementwise over the block
+            # row blocks bound the (block × m) pair matrix; a (block, 1,
+            # dim) × (1, m, dim) broadcast evaluates every pair's dot
+            # in flat_dot's split-partials order
             bs = max(1, min(m, 4_194_304 // m))
             for s in range(0, m - 1, bs):
                 e = min(s + bs, m)
-                B = V[s:e]
-                partials = []
-                for start in range(0, dim, chunk):
-                    acc = None
-                    for d in range(start, min(start + chunk, dim)):
-                        t = np.multiply.outer(B[:, d], V[:, d])
-                        acc = t if acc is None else acc + t
-                    partials.append(acc)
-                P = partials[0]
-                for q in partials[1:]:
-                    P = P + q
+                P = _np_flat_dot(V[s:e, None, :], V[None, :, :], dim, p)
                 cs = P / np.multiply.outer(norm[s:e], norm)
                 hit = (cs >= cut) | np.isnan(cs)  # Spark: NaN >= t
                 # pair rule: lo strictly below hi in ascending-id order
@@ -1649,11 +1540,10 @@ def kmeans_lloyd_df(
     Scale shape per iteration: assignment is the inlined-quantizer
     projection (NO shuffle — centroids are driver-held model state,
     k ≤ MAX_INLINE_CENTROIDS by contract, exactly how MLlib holds
-    centers); the update is one per-cluster hash aggregation of ``dim``
-    flat decimal sums when the caller pins the vector width, else one
-    (cluster, dim) hash aggregation over a posexplode.  The driver
-    round-trips k×dim scalars per iteration — bounded model state,
-    never data.
+    centers); the update is :func:`group_centroids` over the assignment
+    (one per-cluster hash aggregation of ``dim`` flat decimal sums when
+    the caller pins the vector width).  The driver round-trips k×dim
+    scalars per iteration — bounded model state, never data.
     """
     cents = [
         {"cid": r["cid"], "cv": [float(x) for x in r["cv"]]}
@@ -1670,72 +1560,8 @@ def kmeans_lloyd_df(
             # (round-10, guide §2.4 — the output plan is bit-identical
             # with or without it)
             break
-        if dim is not None:
-            # Fixed-width single-aggregation update (round-10, guide
-            # §2.2/§2.3 — same shape as mean_pairwise_cosine's dim path):
-            # with the vector width pinned by the caller's table contract,
-            # the per-(cluster, dim) means become ``dim`` flat decimal SUMs
-            # plus one COUNT in a single per-cluster HashAggregate — no
-            # posexplode Generate multiplying rows ×dim before the
-            # exchange, no second (cid) aggregation, no collect_list.
-            # Bit-identical within the width contract: decimal sums are
-            # exact (grouping-independent), the per-(cid, pos) row count
-            # equals the per-cid row count when every vector has exactly
-            # ``dim`` elements, and the double division + round are the
-            # same expressions.  Rows narrower/wider than ``dim`` are out
-            # of contract (same stance as embedding_near_dup); the
-            # explode path below stays for generic callers.
-            upd = (
-                asg.groupBy("cid")
-                .agg(
-                    F.count(F.lit(1)).alias("_n"),
-                    *[
-                        F.sum(
-                            F.get("v", d).cast("double").cast("decimal(30,15)")
-                        ).alias(f"_s{d}")
-                        for d in range(dim)
-                    ],
-                )
-                .select(
-                    "cid",
-                    *[
-                        F.round(
-                            F.col(f"_s{d}").cast("double") / F.col("_n"), 6
-                        ).alias(f"_m{d}")
-                        for d in range(dim)
-                    ],
-                )
-                .collect()
-            )
-            new = {
-                r["cid"]: [float(r[f"_m{d}"]) for d in range(dim)] for r in upd
-            }
-            cents = [
-                {"cid": c["cid"], "cv": new.get(c["cid"], c["cv"])}
-                for c in cents
-            ]
-            continue
-        upd = (
-            asg.select("cid", F.posexplode("v").alias("pos", "x"))
-            .groupBy("cid", "pos")
-            .agg(
-                F.round(
-                    F.sum(F.col("x").cast("double").cast("decimal(30,15)"))
-                    .cast("double")
-                    / F.count(F.lit(1)),
-                    6,
-                ).alias("m")
-            )
-            .groupBy("cid")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    lambda s: s["m"],
-                ).alias("cv")
-            )
-            .collect()
-        )
-        new = {r["cid"]: [float(x) for x in r["cv"]] for r in upd}
+        upd = group_centroids(asg, ["cid"], vec_col="v", dim=dim).collect()
+        new = {r["cid"]: [float(x) for x in r["centroid"]] for r in upd}
         cents = [
             {"cid": c["cid"], "cv": new.get(c["cid"], c["cv"])} for c in cents
         ]

@@ -9,8 +9,6 @@ Replicates the mapping logic of GithubCommitSource / GithubPullRequestSource
 * PRs listed state=ALL, base branch, sorted by created ascending, filtered
   ``createdAt > lastTime`` (:62-73); ``mergeCommit`` from merge_commit_sha
   (:139-141)
-* user-detail lookups cached (≙ the 10k-entry LRU, GithubSource.java:59-74)
-  via ``functools.lru_cache``
 
 The pure mapping functions (`commit_row`, `pull_row`) take already-fetched
 API JSON dicts so they are testable offline; `fetch_json` is the only
@@ -22,7 +20,6 @@ from __future__ import annotations
 import json
 import urllib.request
 from datetime import datetime, timedelta
-from functools import lru_cache
 
 API = "https://api.github.com"
 PAGE_SIZE = 100  # ref GithubCommitSource.java:34
@@ -47,11 +44,6 @@ def _ts(s: str | None) -> datetime | None:
     if dt.tzinfo is not None:
         dt = dt.astimezone(timezone.utc).replace(tzinfo=None)
     return dt.replace(microsecond=(dt.microsecond // 1000) * 1000)
-
-
-@lru_cache(maxsize=10_000)  # ≙ DEFAULT_MAX_USERS_IN_CACHE, GithubSource.java:28
-def _user_details(login: str, token: str | None = None) -> dict:
-    return fetch_json(f"{API}/users/{login}", token)
 
 
 def until_for(since: datetime, now: datetime) -> tuple[datetime, bool]:

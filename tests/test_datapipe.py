@@ -673,6 +673,19 @@ def test_hard_negatives_excludes_same_label_and_ranks(spark):
     ]
 
 
+def _expression_scores(qdf, c, dim):
+    # the staged-cosine join the inline Arrow scorer replaced
+    q = qdf.select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
+    )
+    qs, cs, score = SIM._staged_cosine(q, c, "qv", "cv", dim)
+    return {
+        (r["query_id"], r["neighbor_id"]): r["score"]
+        for r in F.broadcast(qs).crossJoin(cs)
+        .select("query_id", "neighbor_id", score.alias("score")).collect()
+    }
+
+
 def test_inline_arrow_scorer_bit_identical_to_expression_path(spark):
     # round-11: the bounded-query ANN scorer moved from the staged-cosine
     # expression join to a vectorized Arrow pass (SIM._inline_scored).
@@ -699,14 +712,7 @@ def test_inline_arrow_scorer_bit_identical_to_expression_path(spark):
         (r["query_id"], r["neighbor_id"]): r["score"]
         for r in SIM._inline_scored(c, rows, dim).collect()
     }
-    # expression reference: the exact staged-cosine join the r10 tree ran
-    q = qdf.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
-    qs, cs, score = SIM._staged_cosine(q, c.withColumnRenamed("cv", "cv"), "qv", "cv", dim)
-    ref = {
-        (r["query_id"], r["neighbor_id"]): r["score"]
-        for r in F.broadcast(qs).crossJoin(cs)
-        .select("query_id", "neighbor_id", score.alias("score")).collect()
-    }
+    ref = _expression_scores(qdf, c, dim)
     assert set(got) == set(ref)
     for key in ref:
         a, b = got[key], ref[key]
@@ -735,23 +741,119 @@ def test_inline_arrow_scorer_bit_identical_to_expression_path(spark):
         else:
             assert s is None, (qid, nid, s)
 
-    # LSH bucket mirrors: python/numpy buckets == expression buckets
-    finite = [(i, v) for i, v in cands if v is not None
+    # LSH bucket: the NumPy path == the expression on every row, including
+    # non-finite and -0.0 ones (Spark's comparison has NaN > 0)
+    import numpy as np
+
+    finite = [v[:dim] for _, v in cands if v is not None
               and len(v) >= dim and all(x is not None for x in v[:dim])]
-    expr_buckets = {
-        r["neighbor_id"]: r["b"]
-        for r in c.filter(F.col("neighbor_id").isin([i for i, _ in finite]))
-        .select("neighbor_id", SIM.lsh_bucket("cv", 8, dim=dim).alias("b"))
+    inf, nan = float("inf"), float("nan")
+    lsh_rows = finite + [
+        [nan] + [1.0] * (dim - 1),
+        [inf] * dim,
+        [-inf] + [0.5] * (dim - 1),
+        [inf, -inf] + [0.0] * (dim - 2),
+        [-0.0] * dim,
+    ]
+    ldf = spark.createDataFrame(
+        list(enumerate(lsh_rows)), "i int, v array<double>"
+    )
+    expr_buckets = [
+        r["b"]
+        for r in ldf.orderBy("i")
+        .select(SIM.lsh_bucket("v", 8, dim=dim).alias("b"))
         .collect()
-    }
-    for i, v in finite:
-        assert SIM._lsh_bucket_py(v[:dim], 8, dim) == expr_buckets[i], i
+    ]
+    got_buckets = SIM._lsh_bucket_np(np.asarray(lsh_rows), 8, dim).tolist()
+    assert got_buckets == expr_buckets
 
     # batch-local pruning never changes the final top-k
     full = SIM.brute_force_topk(qdf, c.withColumnRenamed("cv", "embedding")
                                 .withColumnRenamed("neighbor_id", "vec_id"),
                                 k=3, dim=dim)
     assert len(full.collect()) > 0
+
+
+def test_inline_arrow_scorer_float32_vectors_bit_identical(spark):
+    # array<float> (the embeddings table type) arrives in Arrow as float32;
+    # the expression path casts every element to DOUBLE, so the NumPy
+    # norms must too
+    import random
+
+    rng = random.Random(3)
+    dim = 16
+    cands = [(i, [rng.uniform(-1, 1) for _ in range(dim)]) for i in range(40)]
+    c = spark.createDataFrame(cands, "neighbor_id bigint, cv array<float>")
+    qdf = spark.createDataFrame(cands[:2], "vec_id bigint, embedding array<float>")
+    rows = SIM._collect_inline_queries(qdf, ["vec_id", "embedding"], "embedding", dim)
+    got = {
+        (r["query_id"], r["neighbor_id"]): r["score"]
+        for r in SIM._inline_scored(c, rows, dim).collect()
+    }
+    assert got == _expression_scores(qdf, c, dim)
+
+
+def test_inline_arrow_scorer_ragged_batch_not_reshaped(spark):
+    # one batch whose list lengths (dim-1, dim+1) sum to n*dim: the
+    # zero-copy reshape must not be taken — the short row scores NULL and
+    # the wide row scores on its first dim elements
+    dim = 4
+    c = spark.createDataFrame(
+        [(1, [6.0, 7.0, 8.0]), (2, [1.0, 2.0, 3.0, 4.0, 5.0])],
+        "neighbor_id bigint, cv array<double>",
+    ).coalesce(1)
+    qdf = spark.createDataFrame(
+        [(100, [1.0, 0.5, -0.25, 2.0])], "vec_id bigint, embedding array<double>"
+    )
+    rows = SIM._collect_inline_queries(qdf, ["vec_id", "embedding"], "embedding", dim)
+    got = {
+        r["neighbor_id"]: r["score"]
+        for r in SIM._inline_scored(c, rows, dim).collect()
+    }
+    truncated = spark.createDataFrame(
+        [(2, [1.0, 2.0, 3.0, 4.0])], "neighbor_id bigint, cv array<double>"
+    )
+    assert got[1] is None
+    assert got[2] == _expression_scores(qdf, truncated, dim)[(100, 2)]
+
+
+def _topk_rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_brute_force_topk_null_candidate_id_keeps_k_rows(spark):
+    # the NULL-id candidate scores best; the batch-local top-k must drop
+    # it like the consumer's query_id != neighbor_id does, not spend a
+    # slot on it
+    rows = [
+        (None, [1.0, 0.0, 0.0]),
+        (0, [1.0, 0.01, 0.0]),
+        (1, [1.0, 0.2, 0.0]),
+        (2, [1.0, 0.5, 0.1]),
+        (3, [0.2, 1.0, 0.0]),
+        (4, [0.0, 0.3, 1.0]),
+    ]
+    emb = spark.createDataFrame(
+        rows, "vec_id bigint, embedding array<double>"
+    ).repartition(1)
+    q = emb.filter(F.col("vec_id") == 0)
+    fast = _topk_rows(SIM.brute_force_topk(q, emb, k=2, dim=3))
+    assert fast == _topk_rows(SIM.brute_force_topk(q, emb, k=2))
+    assert [r[1] for r in fast] == [1, 2]
+
+
+def test_brute_force_topk_string_ids(spark):
+    rows = [
+        (f"v{i}", [((i * 13 + j * 5) % 9) / 4.0 - 1.0 for j in range(5)])
+        for i in range(12)
+    ]
+    emb = spark.createDataFrame(
+        rows, "vec_id string, embedding array<double>"
+    ).repartition(1)
+    q = emb.filter(F.col("vec_id").isin("v0", "v1"))
+    fast = _topk_rows(SIM.brute_force_topk(q, emb, k=3, dim=5))
+    assert fast == _topk_rows(SIM.brute_force_topk(q, emb, k=3))
+    assert len(fast) == 6
 
 
 def test_gram_strings_matches_split_construction(spark):

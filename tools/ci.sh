@@ -33,6 +33,8 @@ EXTENDED_SMOKE_QUERIES=(
   leakage_safe_split_counts ffd_packing_summary event_value_drift
   bpe_fertility_by_source near_dup_source_matrix mixture_token_quotas
   quota_fill_counts length_bucket_stats source_mixture_weights
+  ann_cosine_topk ann_lsh_topk ann_ivf_topk ann_recall_eval
+  hard_negative_mining label_centroids label_redundancy embedding_near_dup
 )
 
 if [[ "$QUICK" == "--extended-smoke" ]]; then
