@@ -1221,15 +1221,15 @@ def quantization_error(vec: Column | str, quant: Column) -> Column:
 
 def _round6_ge_cut(threshold: float) -> float:
     """Smallest double ``t`` such that ``cs >= t`` (IEEE double compare)
-    ⟺ ``double(round_half_up(cs, 6)) >= double(threshold)`` — Spark's
-    ``F.round(cs, 6) >= lit(threshold)`` predicate, reduced to one raw
-    double comparison so a vectorized scorer can apply it without
+    ⟺ Spark's ``F.round(cs, 6) >= lit(threshold)`` predicate, reduced to
+    one raw double comparison so a vectorized scorer can apply it without
     per-pair decimal arithmetic.  Derivation: the smallest 6-decimal
     value k·1e-6 whose double is >= the threshold's double, minus the
-    half-up tie 5e-7, lifted to the smallest double at-or-above that
-    decimal cut.  Positive thresholds only (half-up rounds positives
-    away from zero)."""
-    import math
+    half-up tie 5e-7, is the decimal cut.  Spark rounds the shortest
+    decimal of ``cs`` (``BigDecimal.valueOf``), so the passing doubles
+    start at the cut's NEAREST double — its shortest decimal is the cut
+    itself, even when it lies below.  Positive thresholds only (half-up
+    rounds positives away from zero)."""
     from decimal import Decimal
 
     if not threshold > 0:
@@ -1238,11 +1238,7 @@ def _round6_ge_cut(threshold: float) -> float:
     k = int(td * 10**6)  # floor
     if float(Decimal(k) / Decimal(10**6)) < threshold:
         k += 1
-    cut = Decimal(k) / Decimal(10**6) - Decimal("0.0000005")
-    t = float(cut)
-    if Decimal(t) < cut:
-        t = math.nextafter(t, math.inf)
-    return t
+    return float(Decimal(k) / Decimal(10**6) - Decimal("0.0000005"))
 
 
 def _semdedup_dropped_arrow(asg, dim: int, threshold: float, id_col: str):
@@ -1260,7 +1256,7 @@ def _semdedup_dropped_arrow(asg, dim: int, threshold: float, id_col: str):
 
     Caller contract (the ``dim`` gate): every vector non-NULL and
     exactly ``dim`` wide — semdedup only takes this path after its
-    min==max width probe."""
+    min==max width and NULL-count probe."""
     from pyspark.sql.types import StructField, StructType
 
     p = COSINE_SPLIT_PARTS
@@ -1354,7 +1350,8 @@ def semdedup(
 
     Ragged embedding widths: pair cosines NULL out (zip_with pads the
     shorter array), so differing-width vectors are never near-dups; the
-    codegen fast path is only taken when all widths match.
+    Arrow fast path is only taken when all widths match and no vector is
+    NULL (a NULL vector is never a near-dup and is kept).
     """
     from lab_flink_repository_analytics_spark.session import (
         persist_bounded,
@@ -1386,14 +1383,18 @@ def semdedup(
     # checks min==max width: a ragged embedding column falls back to the
     # fold-based cosine instead of silently NULLing short rows' norms /
     # truncating long rows' dots at a width sampled from one arbitrary row.
+    # min/max skip NULLs, so a NULL vector is counted and takes the fold.
     dim_row = asg.agg(
-        F.min(F.size("v")).alias("lo"), F.max(F.size("v")).alias("hi")
+        F.min(F.size("v")).alias("lo"),
+        F.max(F.size("v")).alias("hi"),
+        (F.count("v") == F.count(F.lit(1))).alias("all_set"),
     ).first()
     dim = (
         int(dim_row["lo"])
         if dim_row is not None
         and dim_row["lo"] is not None
         and dim_row["lo"] == dim_row["hi"]
+        and dim_row["all_set"]
         else None
     )
     if dim is not None and threshold > 0:
@@ -1407,7 +1408,7 @@ def semdedup(
         # the ragged-width fallback; the oracle (_dot_split_sql mirror)
         # is unchanged because the values are bit-identical.
         dropped = _semdedup_dropped_arrow(asg, dim, threshold, id_col)
-    else:  # empty input (shape-only plan) or ragged widths: fold cosine
+    else:  # empty input, ragged widths or a NULL vector: fold cosine
         a = asg.select(
             F.col("id").alias("id_lo"), F.col("v").alias("v_lo"), "cluster_id"
         )
@@ -1707,6 +1708,42 @@ def mean_pairwise_cosine(
     )
 
 
+#: fixed-point limb base: values sum on the 2^-50 = 1/_LIMB² grid
+_LIMB = 1 << 25
+
+
+def _fixed_point_limbs(p: Column) -> tuple[Column, Column]:
+    """BIGINT limbs ``hi = floor(p·2^25)``, ``lo = rint(p·2^50) − hi·2^25``
+    of a double ``|p| < 2^12``: ``hi·2^25 + lo == rint(p·2^50)`` exactly,
+    since every scaling is by a power of two, ``floor``/``rint``
+    (half-even) of a double below 2^62 cast to BIGINT unchanged, and
+    ``lo`` lies in [0, 2^25]."""
+    hi = F.floor(p * float(_LIMB))
+    lo = F.rint(p * float(_LIMB * _LIMB)).cast("bigint") - hi * _LIMB
+    return hi, lo
+
+
+def _exact_sum(p: Column) -> Column:
+    """Aggregate: the double nearest Σ ``p``, each value rounded to the
+    2^-50 grid (≤ 2^-51 ≈ 4.4e-16 per value); NULL if every ``p`` is.
+
+    Values with ``|p| < 2^12`` add their :func:`_fixed_point_limbs` as
+    two exact BIGINT sums (order-independent at any partitioning; ANSI
+    raises past 2^26 values instead of wrapping), joined per group as
+    one DECIMAL(38,0) integer and rounded to double once.  The others
+    keep a ``CAST(p AS DECIMAL(30,15))`` sum in the same aggregate —
+    NaN/±inf cast to NULL and |p| ≥ 1e15 raises, as a plain DECIMAL sum
+    does — added in double (one more rounding)."""
+    hi, lo = _fixed_point_limbs(p)
+    small = F.abs(p) < 2.0**12
+    fixed = (
+        F.sum(F.when(small, hi)).cast("decimal(38,0)") * _LIMB
+        + F.sum(F.when(small, lo))
+    ).cast("double") * 2.0**-50
+    wide = F.sum(F.when(~small, p.cast("decimal(30,15)"))).cast("double")
+    return F.coalesce(wide + fixed, wide, fixed)
+
+
 def covariance_matrix(
     vectors: DataFrame,
     vec_col: str = "embedding",
@@ -1715,14 +1752,19 @@ def covariance_matrix(
     """Sample covariance matrix of the embedding column: (i, j, cov) with
     1-based dims, upper triangle by default.
 
-    Engine-exact two-pass moments: Σ x_i·x_j and Σ x_i are DECIMAL sums of
-    deterministic double products (order-independent at any partitioning),
-    combined as (Σxy − Σx·Σy/n)/(n−1) in double, rounded to 6.  Plan: the
-    dim² pair expansion happens per row and meets a map-side partial
-    aggregation immediately — shuffle volume is dim²·#partitions rows
-    (model-sized), never data-scale; the dim-level sums rollup reuses the
-    same scan.  This is the X^T X building block of distributed PCA
-    (:func:`pca_project`).
+    Engine-exact two-pass moments: Σ x_i·x_j is an :func:`_exact_sum`
+    of the double products and Σ x_i a DECIMAL sum of the doubles (both
+    order-independent at any partitioning), combined as
+    (Σxy − Σx·Σy/n)/(n−1) in double, rounded to 6; NULL where fewer than
+    two rows cover the pair (ragged widths).  Only the products' rounding
+    grid differs from the DuckDB oracle's: 2^-50 half-even (≤ 4.4e-16 per
+    product) instead of 1e-15 HALF_UP (≤ 5e-16); both sums are exact, and
+    ``cov`` is pinned cell-for-cell to the DECIMAL form in the tests.
+    Plan: the dim² pair expansion happens per row and meets a map-side
+    partial aggregation immediately — shuffle volume is dim²·#partitions
+    rows (model-sized), never data-scale; the dim-level sums rollup
+    reuses the same scan.  This is the X^T X building block of
+    distributed PCA (:func:`pca_project`).
     """
     from lab_flink_repository_analytics_spark.session import rebalance
 
@@ -1753,11 +1795,9 @@ def covariance_matrix(
     else:
         b = a.select("i0", "xi", F.posexplode("v2").alias("j0", "xj"))
     mom = b.groupBy("i0", "j0").agg(
-        F.sum(
-            (F.col("xi").cast("double") * F.col("xj").cast("double")).cast(
-                "decimal(30,15)"
-            )
-        ).alias("sxy"),
+        _exact_sum(F.col("xi").cast("double") * F.col("xj").cast("double")).alias(
+            "sxy"
+        ),
         F.count(F.lit(1)).alias("n"),
     )
     dims = (
@@ -1773,15 +1813,18 @@ def covariance_matrix(
         .select(
             (F.col("i0") + 1).cast("int").alias("i"),
             (F.col("j0") + 1).cast("int").alias("j"),
-            F.round(
-                (
-                    F.col("sxy").cast("double")
-                    - F.col("si").cast("double")
-                    * F.col("sj").cast("double")
-                    / F.col("n")
-                )
-                / (F.col("n") - 1),
-                6,
+            F.when(
+                F.col("n") > 1,
+                F.round(
+                    (
+                        F.col("sxy")
+                        - F.col("si").cast("double")
+                        * F.col("sj").cast("double")
+                        / F.col("n")
+                    )
+                    / (F.col("n") - 1),
+                    6,
+                ),
             ).alias("cov"),
         )
     )
@@ -1795,9 +1838,9 @@ def pca_project(
 ) -> DataFrame:
     """Project embeddings onto their top-k principal components.
 
-    Distributed part: :func:`covariance_matrix` (exact-decimal moments,
-    model-sized shuffle).  Driver part: eigendecomposition of the dim²
-    matrix (numpy ``eigh`` — model state, like k-means centers) with a
+    Distributed part: :func:`covariance_matrix` (exact fixed-point
+    moments, model-sized shuffle).  Driver part: eigendecomposition of the
+    dim² matrix (numpy ``eigh`` — model state, like k-means centers) with a
     deterministic sign convention (largest-|coord| entry positive).  The
     projection itself inlines the components as literals — one narrow
     codegen pass over the data, no shuffle (same pattern as

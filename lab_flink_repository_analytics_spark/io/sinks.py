@@ -50,8 +50,8 @@ def upsert_by_key(
     way (or partition-overwrite when updates align to partitions); the
     rewrite here is the dependency-free fallback.
 
-    Cost bound (measured, tools/bench_upsert.py at the sf1 replica —
-    BENCH_SF10.md "upsert_by_key at replica scale"): each call rewrites
+    Cost bound (measured at the sf1 replica, BENCH_SF10.md
+    "upsert_by_key at replica scale"): each call rewrites
     the FULL existing dataset, so cost is O(existing ∪ update) — ~1-2s
     at 400k window-summary rows, linear beyond.  Intended for
     window-summary-sized datasets (the reference's ES index held one doc

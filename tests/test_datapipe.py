@@ -1118,6 +1118,158 @@ def test_pca_project_matches_numpy(spark):
     assert np.var(expect_cols[0]) > 5 * np.var(expect_cols[1])
 
 
+def _decimal_moment_cov(vectors):
+    # the DECIMAL(30,15)-per-product formulation covariance_matrix used
+    # before its fixed-point moments; kept here only as the reference
+    v = F.col("v")
+    a = vectors.select(F.col("embedding").alias("v")).select(
+        F.posexplode(v).alias("i0", "xi"), v.alias("v2")
+    )
+    b = a.select(
+        "i0",
+        "xi",
+        F.posexplode(F.expr("slice(v2, i0 + 1, size(v2) - i0)")).alias("jrel", "xj"),
+    ).select("i0", "xi", (F.col("i0") + F.col("jrel")).alias("j0"), "xj")
+    mom = b.groupBy("i0", "j0").agg(
+        F.sum(
+            (F.col("xi").cast("double") * F.col("xj").cast("double")).cast(
+                "decimal(30,15)"
+            )
+        ).alias("sxy"),
+        F.count(F.lit(1)).alias("n"),
+    )
+    dims = (
+        vectors.select(F.posexplode("embedding").alias("i0", "x"))
+        .groupBy("i0")
+        .agg(F.sum(F.col("x").cast("double").cast("decimal(30,15)")).alias("sx"))
+    )
+    d1 = dims.select("i0", F.col("sx").alias("si"))
+    d2 = dims.select(F.col("i0").alias("j0"), F.col("sx").alias("sj"))
+    return (
+        mom.join(F.broadcast(d1), "i0")
+        .join(F.broadcast(d2), "j0")
+        .select(
+            (F.col("i0") + 1).cast("int").alias("i"),
+            (F.col("j0") + 1).cast("int").alias("j"),
+            F.round(
+                (
+                    F.col("sxy").cast("double")
+                    - F.col("si").cast("double") * F.col("sj").cast("double") / F.col("n")
+                )
+                / (F.col("n") - 1),
+                6,
+            ).alias("cov"),
+        )
+    )
+
+
+def _cov_cells(df):
+    # repr keeps NaN cells comparable and tells -0.0 from 0.0
+    return sorted((r["i"], r["j"], repr(r["cov"])) for r in df.collect())
+
+
+def test_covariance_matrix_equals_decimal_moments_on_unit_vectors(spark):
+    import numpy as np
+
+    for dim in (3, 16, 64):
+        for seed in (1, 2, 3):
+            rng = np.random.default_rng(seed)
+            X = rng.normal(size=(150, dim))
+            X = (X / np.linalg.norm(X, axis=1, keepdims=True)).astype("float32")
+            emb = spark.createDataFrame(
+                [(i, [float(x) for x in X[i]]) for i in range(len(X))],
+                "vec_id bigint, embedding array<float>",
+            )
+            got = _cov_cells(SIM.covariance_matrix(emb))
+            assert len(got) == dim * (dim + 1) // 2
+            assert got == _cov_cells(_decimal_moment_cov(emb)), (dim, seed)
+
+
+def test_covariance_matrix_equals_decimal_moments_on_adversarial_batches(spark):
+    nan, inf = float("nan"), float("inf")
+    batches = {
+        "signed_zero_subnormal": [
+            (1, [-0.0, 5e-324, 0.5]),
+            (2, [0.0, -2.2e-308, -0.25]),
+            (3, [-0.0, 1e-310, 0.125]),
+        ],
+        # |x| >= 64 makes |xi·xj| >= 2^12: the DECIMAL branch, alone in
+        # some cells and mixed with fixed-point products in others
+        "decimal_branch": [
+            (1, [100.0, 0.5, 1e5]),
+            (2, [-70.0, 0.25, 3.0]),
+            (3, [64.0, -0.125, 2.0]),
+            (4, [0.3, 0.7, -0.1]),
+        ],
+        "nan": [(1, [nan, 0.5]), (2, [1.0, 0.25]), (3, [2.0, 1.0])],
+        "inf": [(1, [inf, 0.5]), (2, [-inf, 0.25]), (3, [2.0, 1.0])],
+        "null_element": [(1, [None, 0.5]), (2, [1.0, 0.25]), (3, [2.0, 1.0])],
+        "null_vector": [(1, None), (2, [1.0, 0.25]), (3, [2.0, 1.0]), (4, [0.1, 0.2])],
+    }
+    for name, rows in batches.items():
+        emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+        got = _cov_cells(SIM.covariance_matrix(emb))
+        assert got == _cov_cells(_decimal_moment_cov(emb)), name
+
+
+def test_fixed_point_limbs_are_exact(spark):
+    # Spark evaluates the limbs; Python's round() is the same half-even
+    # rint, and p·2^50 is exact in double
+    import math
+
+    top = math.nextafter(2.0**12, 0.0)
+    ps = [
+        top,
+        -top,
+        -1.0,
+        -0.3,
+        -(2.0**-60),
+        0.0,
+        -0.0,
+        5e-324,
+        -5e-324,
+        0.1,
+        1234.5678,
+        # half-way ties on the 2^-50 grid round to even
+        0.5 * 2.0**-50,
+        1.5 * 2.0**-50,
+        -0.5 * 2.0**-50,
+        -1.5 * 2.0**-50,
+        3.0 + 2.5 * 2.0**-50,
+        -(3.0 + 2.5 * 2.0**-50),
+    ]
+    df = spark.createDataFrame([(p,) for p in ps], "p double")
+    hi, lo = SIM._fixed_point_limbs(F.col("p"))
+    got = df.select("p", hi.alias("hi"), lo.alias("lo")).collect()
+    for r in got:
+        assert r["hi"] * 2**25 + r["lo"] == round(r["p"] * 2.0**50), r
+        assert 0 <= r["lo"] <= 2**25, r
+    total = df.agg(SIM._exact_sum(F.col("p")).alias("s")).first()["s"]
+    assert total == float(sum(round(p * 2.0**50) for p in ps)) * 2.0**-50
+
+
+def test_covariance_matrix_ragged_cells_null_like_oracle(spark):
+    # widths 2, 3 and 4: pairs (1,4), (2,4), (3,4) and (4,4) are covered
+    # by one row only, so (n - 1) is zero — the DuckDB oracle returns NULL
+    # there; covariance_matrix raised DIVIDE_BY_ZERO under ANSI
+    import duckdb
+    import pyarrow as pa
+
+    from lab_flink_repository_analytics_spark.queries import suite
+
+    rows = [(1, [1.0, 2.0]), (2, [1.0, 2.0, 3.0]), (3, [4.0, 5.0, 6.0, 7.0])]
+    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    got = sorted(tuple(r) for r in SIM.covariance_matrix(emb).collect())
+    con = duckdb.connect()
+    con.register(
+        "embeddings",
+        pa.table({"vec_id": [r[0] for r in rows], "embedding": [r[1] for r in rows]}),
+    )
+    want = sorted(con.sql(suite.EMBEDDING_COVARIANCE_SQL).fetchall())
+    assert got == want
+    assert [(i, j) for i, j, c in got if c is None] == [(1, 4), (2, 4), (3, 4), (4, 4)]
+
+
 def test_duplicate_span_stats_merges_overlapping_intervals(spark):
     # doc 1 and 2 share the 5-token run "a b c d e": with k=3 that is
     # three duplicated gram positions (0,1,2) per doc, whose length-3
@@ -1736,3 +1888,48 @@ def test_semdedup_ragged_widths_fall_back_to_fold(spark):
     cents = spark.createDataFrame([(0, [1.0, 0.0])], "cid int, cv array<double>")
     got = {r["vec_id"]: r["keep"] for r in SIM.semdedup(emb, cents, 0.9).collect()}
     assert got == {1: True, 2: True, 3: True}
+
+
+def test_semdedup_null_vector_falls_back_to_fold(spark):
+    # a NULL vector passes the min==max width probe (min/max skip NULLs);
+    # the Arrow pair scan then crashed reshaping it.  The probe's NULL
+    # count sends the batch to the fold, where the NULL vector's pair
+    # cosines are NULL: it is kept, and the near-dup pair still resolves
+    rows = [
+        (1, [1.0, 0.0]),
+        (2, [0.99, 0.01]),
+        (3, None),
+        (4, [0.0, 1.0]),
+    ]
+    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    cents = spark.createDataFrame([(0, [1.0, 0.0])], "cid int, cv array<double>")
+    got = {r["vec_id"]: r["keep"] for r in SIM.semdedup(emb, cents, 0.9).collect()}
+    assert got == {1: True, 2: False, 3: True, 4: True}
+
+
+def test_round6_ge_cut_matches_spark_round_at_tau_boundaries(spark):
+    # thresholds and cosines one ulp either side of k·1e-6 and k·1e-6 ±
+    # 5e-7: the raw compare against _round6_ge_cut must agree with
+    # Spark's F.round(cs, 6) >= t on every pair
+    import math
+    import random
+
+    rng = random.Random(11)
+    ks = [1, 2, 5, 500_000, 899_999, 900_000, 950_000, 999_999, 1_000_000]
+    ks += [rng.randrange(1, 1_000_001) for _ in range(40)]
+
+    def ulps(x):
+        return (math.nextafter(x, -math.inf), x, math.nextafter(x, math.inf))
+
+    pairs = []
+    for k in ks:
+        for t in (u for c in (0.0, -5e-7, 5e-7) for u in ulps(k * 1e-6 + c)):
+            if t <= 0:
+                continue
+            cut = SIM._round6_ge_cut(t)
+            for kk in (k - 1, k, k + 1):
+                for c in (-5e-7, 0.0, 5e-7):
+                    pairs += [(t, cs, cs >= cut) for cs in ulps(kk * 1e-6 + c)]
+    df = spark.createDataFrame(pairs, "t double, cs double, fast boolean")
+    bad = df.where((F.round("cs", 6) >= F.col("t")) != F.col("fast")).collect()
+    assert bad == [], bad[:5]

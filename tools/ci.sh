@@ -5,7 +5,8 @@
 # contradicted (0/50 — an untested environment assumption in load_tables).
 # This script is the fix-as-habit: claims only after these three pass HERE.
 #
-#   1. pytest tests/                 (full unit/integration suite)
+#   1. pytest tests/ + perfbench/    (full unit/integration suite, then
+#                                     the benchmark's Spark-free helpers)
 #   2. tools/check_correctness.py    (driver-gate mirror, sf0.01, all queries)
 #   3. bench.py smoke                (sf0.001 — proves rc=0 end-to-end)
 #
@@ -50,6 +51,8 @@ if [[ "$QUICK" == "--quick" ]]; then
   python -m pytest tests/ -x -q -k "environment or util or plans"
 else
   python -m pytest tests/ -x -q
+  # benchmark helpers (metrics, tracing, generators): Spark-free, seconds
+  python -m pytest perfbench -q
 fi
 
 echo "=== [2/3] correctness vs DuckDB oracle (driver-mirror canon) ==="
