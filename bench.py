@@ -18,6 +18,31 @@ cluster serves a query workload — under FAIR scheduling so small queries
 aren't convoyed behind large ones.  ``value`` is suite wall-clock
 (throughput); per-query numbers are end-to-end latencies under that
 concurrency and include queueing.
+
+Every query also gets a profile record, written to ``BENCH_SUMMARY.json``
+only (``"profile": {name: {...}}``).  Each pool worker runs its query under
+the Spark job group ``name``, so every job the query causes, including the
+checkpoints and shared builds run while its DataFrame is built, is
+attributed to it even under the concurrent pool.  The group is read from
+Spark's in-process status store (``perfbench/tracing.py::StageReader``)
+after the query's clock has stopped:
+
+    build_s          the query function call: DataFrame construction and
+                     any job it runs (checkpoints, shared builds)
+    plan_s           Catalyst planning of the returned DataFrame
+                     (``queryExecution().executedPlan()``)
+    run_s            the noop write
+    jobs, stages, tasks
+                     run under the group; skipped stages do not count
+    executor_cpu_s, executor_run_s
+                     executor CPU and run time summed over those stages
+    shuffle_mb       shuffle bytes read plus written
+    spill_mb         bytes spilled to disk
+    shared_builds    {state name: sec} of the session-shared derived builds
+                     (``session.derived_state``) that ran under the group
+
+A query's latency in ``queries`` stays build plus noop write: the planning
+probe and the status-store read are outside it (suite wall includes them).
 """
 
 from __future__ import annotations
@@ -32,7 +57,51 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from lab_flink_repository_analytics_spark.queries import suite
-from lab_flink_repository_analytics_spark.session import get_spark, run_canary
+from lab_flink_repository_analytics_spark.session import (
+    derived_build_seconds,
+    derived_builds_in_group,
+    get_spark,
+    load_tables,
+    run_canary,
+)
+from perfbench.tracing import RETENTION_CONF, StageReader
+
+COUNTS = ("jobs", "stages", "tasks")
+
+
+def _phases(spark, fn, sf_dir) -> tuple[float, float, float]:
+    t0 = time.time()
+    df = fn(spark, sf_dir)
+    t1 = time.time()
+    df._jdf.queryExecution().executedPlan()
+    t2 = time.time()
+    df.write.format("noop").mode("overwrite").save()
+    return t1 - t0, t2 - t1, time.time() - t2
+
+
+def run_profiled(spark, reader: StageReader, group: str, fn, sf_dir: str):
+    """Run one registry query under the Spark job group ``group``.  Returns
+    its latency (build plus noop write) and its profile record."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    t0 = time.time()
+    try:
+        try:
+            build_s, plan_s, run_s = _phases(spark, fn, sf_dir)
+        except Exception:
+            # transient local-mode hiccup (e.g. shuffle temp file cleanup
+            # racing a concurrent job): one retry, then let it raise
+            build_s, plan_s, run_s = _phases(spark, fn, sf_dir)
+        latency = time.time() - t0 - plan_s
+    finally:
+        sc.setJobGroup(None, None)
+    rec = {"build_s": build_s, "plan_s": plan_s, "run_s": run_s}
+    rec.update(reader.group(group))
+    rec = {k: int(v) if k in COUNTS else round(v, 3) for k, v in rec.items()}
+    rec["shared_builds"] = {
+        k: round(v, 3) for k, v in derived_builds_in_group(group).items()
+    }
+    return latency, rec
 
 
 def main():
@@ -42,12 +111,11 @@ def main():
     par = int(os.environ.get("SPARK_GRAFT_BENCH_PARALLEL", "8"))
 
     spark = get_spark(
-        app_name="bench", extra_conf={"spark.scheduler.mode": "FAIR"}
+        app_name="bench",
+        extra_conf={"spark.scheduler.mode": "FAIR", **RETENTION_CONF},
     )
     # warm the JVM once so per-query numbers measure the plans, not session
     # startup: parquet footers of every table + one codegen'd shuffle
-    from lab_flink_repository_analytics_spark.session import load_tables
-
     for df in load_tables(spark, sf_dir).values():
         df.limit(1).collect()
     from pyspark.sql import functions as F
@@ -60,17 +128,11 @@ def main():
         .mode("overwrite")
         .save()
     )
+    reader = StageReader(spark)
 
     def run_one(item):
         name, fn = item
-        t0 = time.time()
-        try:
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        except Exception:
-            # transient local-mode hiccup (e.g. shuffle temp file cleanup
-            # racing a concurrent job): one retry, then let it raise
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return name, time.time() - t0
+        return (name, *run_profiled(spark, reader, name, fn, sf_dir))
 
     # host-speed canary (round-9): constant synthetic job timed before and
     # after the suite so cross-round comparisons can separate host drift
@@ -78,6 +140,7 @@ def main():
     canary_start = run_canary(spark)
     items = list(suite.queries().items())
     times: dict[str, float] = {}
+    profile: dict[str, dict] = {}
     # shared derived-state accounting (round 11): whichever query first
     # needs a session-shared build (LSH candidate pairs, doc-term tf,
     # BPE model, ...) pays it inside its own latency; report each build
@@ -86,22 +149,18 @@ def main():
     # every pre-existing field keeps its meaning, and sum_sec still sums
     # REAL query latencies (shared time is already inside them — adding
     # the pseudo-entries would double-count).
-    from lab_flink_repository_analytics_spark.session import (
-        derived_build_seconds,
-    )
-
     shared_before = derived_build_seconds()
     wall0 = time.time()
     if par <= 1:
-        for item in items:
-            name, dt = run_one(item)
-            times[name] = round(dt, 3)
+        results = [run_one(item) for item in items]
     else:
         with cf.ThreadPoolExecutor(max_workers=par) as ex:
-            for name, dt in ex.map(run_one, items):
-                times[name] = round(dt, 3)
+            results = list(ex.map(run_one, items))
     wall = time.time() - wall0
     canary_end = run_canary(spark)
+    for name, dt, rec in results:
+        times[name] = round(dt, 3)
+        profile[name] = rec
     sum_sec = round(sum(times.values()), 3)
     n_real = len(times)
     for name, dt in derived_build_seconds().items():
@@ -119,6 +178,7 @@ def main():
         "sum_sec": sum_sec,
         "canary_start": canary_start,
         "canary_end": canary_end,
+        "profile": profile,
     }
     # Output contract (round 7, single line): stdout carries EXACTLY ONE
     # JSON line, sized to fit whole inside the driver's ~2000-char tail
@@ -138,6 +198,7 @@ def main():
         pass  # read-only checkout: the stdout line still carries headlines
     budget = 1900
     compact = dict(summary)
+    del compact["profile"]
     compact["queries"] = {}
     compact["full_map"] = "BENCH_SUMMARY.json"
     compact["n_queries"] = n_real

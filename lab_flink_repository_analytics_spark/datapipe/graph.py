@@ -74,7 +74,6 @@ def connected_components(
     nodes: DataFrame | None = None,
     node_col: str = "node",
     max_iterations: int = 25,
-    instrument: list | None = None,
 ) -> DataFrame:
     """(node, component) for every node, component = min node id in its CC.
 
@@ -82,15 +81,7 @@ def connected_components(
     out as their own singleton components.  Label propagation: per round
     one join + one min-aggregation, lineage cut with localCheckpoint,
     early exit when no label changed.
-
-    ``instrument``: pass a list to receive one dict per round with
-    ``round_sec`` — the wall time of the round's SINGLE job (join +
-    min-agg + non-eager checkpoint block write + 1-row checksum, all
-    materialized by the checksum action).  Zero overhead when None;
-    used by tools/instrument_cc.py for the sf10 cost attribution.
     """
-    import time as _time
-
     # Checkpoint the bidirected edge table FIRST and derive the node set
     # FROM THE CHECKPOINT (round-10): the former order materialized
     # ``labels`` (whose edge_nodes arm contains the full upstream edge
@@ -124,7 +115,6 @@ def connected_components(
 
     prev = _checksum(labels)
     for _ in range(max_iterations):
-        t0 = _time.time()
         msgs = bid.join(
             labels, bid["a"] == labels["node"]
         ).select(F.col("b").alias("node"), "component")
@@ -140,12 +130,6 @@ def connected_components(
             .localCheckpoint(eager=False)
         )
         cur = _checksum(labels)
-        if instrument is not None:
-            instrument.append(
-                {
-                    "round_sec": round(_time.time() - t0, 3),
-                }
-            )
         if cur == prev:
             break
         prev = cur

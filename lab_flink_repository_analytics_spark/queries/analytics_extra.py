@@ -24,8 +24,6 @@ division, round(x, 6) on derived scores.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -596,22 +594,8 @@ FROM runs GROUP BY user_id
 
 #: edge-count bound below which copurchase_triangles uses the broadcast
 #: array-intersect edge-iterator; above it, the shuffled degree-ordered
-#: wedge join (module-level so tests can force the scale-out path; the
-#: env override exists so the scale rehearsal can force it through
-#: tools/time_queries.py without a code edit)
-try:
-    TRIANGLES_ARRAY_PATH_MAX_EDGES = int(
-        os.environ.get("TRIANGLES_ARRAY_PATH_MAX_EDGES", 32_000_000)
-    )
-except ValueError:  # malformed env must not break every package import
-    import warnings
-
-    warnings.warn(
-        "ignoring malformed TRIANGLES_ARRAY_PATH_MAX_EDGES="
-        f"{os.environ['TRIANGLES_ARRAY_PATH_MAX_EDGES']!r}; using default",
-        stacklevel=1,
-    )
-    TRIANGLES_ARRAY_PATH_MAX_EDGES = 32_000_000
+#: wedge join (module-level so tests can force the scale-out path)
+TRIANGLES_ARRAY_PATH_MAX_EDGES = 32_000_000
 
 #: serialized shuffle footprint of one projected wedge row (two BIGINT
 #: node ids + record overhead, pre-compression).  The wedge stream is

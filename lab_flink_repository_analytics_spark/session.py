@@ -109,7 +109,7 @@ def get_spark(
         # allow Python DataSources (ingest/github_source.py) to prune
         # their input partitions from pushed filters
         .config("spark.sql.python.filterPushdown.enabled", "true")
-        .config("spark.ui.enabled", os.environ.get("SPARK_UI_ENABLED", "false"))
+        .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     if rocksdb_state is None:
@@ -215,10 +215,11 @@ def persist_bounded(df, slot: str, storage_level=None):
 #: session-scoped derived-state memo (see derived_state)
 _DERIVED_MEMO: dict[tuple[str, str, str], "object"] = {}
 #: wall-clock seconds spent INSIDE each derived-state build(), keyed by
-#: state name — read by bench.py to charge shared builds to explicit
-#: ``_shared:<name>`` pseudo-entries (the triggering query's latency
-#: already contains this time; the pseudo-entry makes it attributable)
-_DERIVED_BUILD_SECONDS: dict[str, float] = {}
+#: (Spark job group the build ran under, state name) — read by bench.py to
+#: charge shared builds to explicit ``_shared:<name>`` pseudo-entries (the
+#: triggering query's latency already contains this time; the pseudo-entry
+#: makes it attributable) and to list them in the triggering query's profile
+_DERIVED_BUILD_SECONDS: dict[tuple[str | None, str], float] = {}
 _DERIVED_KEY_LOCKS: dict[tuple[str, str, str], "object"] = {}
 #: initialized at import — a lazily-created guard is itself a race
 _DERIVED_GUARD = threading.Lock()
@@ -272,13 +273,14 @@ def derived_state(spark: SparkSession, name: str, sf_dir: str, build):
         with _DERIVED_GUARD:
             if key in _DERIVED_MEMO:
                 return _DERIVED_MEMO[key]
+        group = spark.sparkContext.getLocalProperty("spark.jobGroup.id")
         _t0 = time.time()
         out = build()
         _dt = time.time() - _t0
         evicted = []
         with _DERIVED_GUARD:
-            _DERIVED_BUILD_SECONDS[name] = (
-                _DERIVED_BUILD_SECONDS.get(name, 0.0) + _dt
+            _DERIVED_BUILD_SECONDS[group, name] = (
+                _DERIVED_BUILD_SECONDS.get((group, name), 0.0) + _dt
             )
             while len(_DERIVED_MEMO) >= _DERIVED_MEMO_CAP:
                 oldest = next(iter(_DERIVED_MEMO))
@@ -310,8 +312,23 @@ def derived_build_seconds() -> dict[str, float]:
     pseudo-entries — the per-query latencies of the queries that SHARE a
     build regain standalone meaning (whichever query runs first pays the
     build inside its own latency; the pseudo-entry says how much)."""
+    out: dict[str, float] = {}
     with _DERIVED_GUARD:
-        return dict(_DERIVED_BUILD_SECONDS)
+        for (_, name), dt in _DERIVED_BUILD_SECONDS.items():
+            out[name] = out.get(name, 0.0) + dt
+    return out
+
+
+def derived_builds_in_group(group: str) -> dict[str, float]:
+    """Seconds spent in each derived-state build() that ran under the Spark
+    job group ``group``, keyed by state name: the shared builds a query
+    triggered, as opposed to the ones it found already built."""
+    with _DERIVED_GUARD:
+        return {
+            name: dt
+            for (g, name), dt in _DERIVED_BUILD_SECONDS.items()
+            if g == group
+        }
 
 
 def release_persist_slots() -> None:

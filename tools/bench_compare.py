@@ -34,8 +34,8 @@ MIN_SECONDS = 0.5
 
 def _canary_median(d: dict) -> float | None:
     """Pooled canary median from an artifact that carries the round-9
-    host-speed canary (``canary_start``/``canary_end`` from bench.py /
-    tools/time_queries.py, possibly nested under ``parsed``).  The mean
+    host-speed canary (``canary_start``/``canary_end`` from bench.py,
+    possibly nested under ``parsed``).  The mean
     of the two medians estimates host speed across the run."""
     for src in (d, d.get("parsed") or {}):
         cs, ce = src.get("canary_start"), src.get("canary_end")

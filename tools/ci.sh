@@ -8,7 +8,8 @@
 #   1. pytest tests/ + perfbench/    (full unit/integration suite, then
 #                                     the benchmark's Spark-free helpers)
 #   2. tools/check_correctness.py    (driver-gate mirror, sf0.01, all queries)
-#   3. bench.py smoke                (sf0.001 — proves rc=0 end-to-end)
+#   3. bench.py smoke                (sf0.001 — proves rc=0 end-to-end and
+#                                     a profile record of >= 1 job per query)
 #
 # Usage: tools/ci.sh [--quick|--extended-smoke]
 #   --quick           sf0.001 correctness, subset pytest
@@ -66,6 +67,18 @@ fi
 
 echo "=== [3/3] bench smoke (sf0.001) ==="
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 python bench.py
+# every query's profile record must hold at least its noop-write job
+python - <<'PY'
+import json
+
+s = json.load(open("BENCH_SUMMARY.json"))
+bad = [
+    n for n in s["queries"]
+    if not n.startswith("_shared:") and s["profile"].get(n, {}).get("jobs", 0) < 1
+]
+assert not bad, f"queries without a profile record of >= 1 job: {bad}"
+print(f"profile: {len(s['profile'])} records, each with >= 1 job")
+PY
 
 echo "=== [extra] bench regression gate (canary-normalized, fatal >1.5x) ==="
 # compares the two most recent driver BENCH_r*.json artifacts; a real

@@ -1,9 +1,15 @@
 #!/usr/bin/env python
-"""Regenerate PLANS.md: formatted physical plans of representative queries
-with the scale-relevant fragments (pushdown, pruning, broadcast, exchange
-count) surfaced.  Evidence artifact for plan-shape review.
+"""Print physical plans of registry queries.
+
+With no query names, regenerate PLANS.md: the plans of representative
+queries with the scale-relevant fragments (pushdown, pruning, broadcast,
+exchange count) surfaced.  Evidence artifact for plan-shape review.  With
+names, print ``explain("formatted")`` of each named query instead.  The
+package imported is the one next to this script, so running it from
+another checkout dumps that checkout's plans.
 
 Usage: python tools/dump_plans.py [sf_dir] > PLANS.md
+       python tools/dump_plans.py sf_dir QUERY [QUERY ...]
 """
 
 from __future__ import annotations
@@ -79,6 +85,11 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spark = get_spark(app_name="dump-plans")
     qs = suite.queries()
+    if len(sys.argv) > 2:
+        for name in sys.argv[2:]:
+            print(f"## {name}")
+            qs[name](spark, sf_dir).explain("formatted")
+        return
 
     print("# PLANS — physical plan evidence (generated by tools/dump_plans.py)")
     print()
