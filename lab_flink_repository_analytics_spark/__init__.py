@@ -6,7 +6,7 @@ community analytics (git commits, GitHub PRs, mailing lists).  This package
 re-expresses that capability Spark-first: schemas + a column-expression
 function library + windowed query builders, all planned by Catalyst; plus
 large-scale training-data-pipeline operators (dedup, similarity search,
-text analysis, multimodal plumbing).
+text analysis, graph and k-means loops).
 
 Layout (mirrors SURVEY.md §7):
   session.py     SparkSession factory (UTC, AQE)
@@ -14,7 +14,7 @@ Layout (mirrors SURVEY.md §7):
   patterns.py    regex pattern constants   (ref: PatternUtils.java)
   functions/     scalar / table / aggregate function library
   queries/       README query suite + driver-gradeable query inventory
-  datapipe/      dedup, similarity, text-analysis, multimodal operators
+  datapipe/      dedup, similarity, text-analysis, graph operators
   ingest/        batch ingesters (git log, mbox, GitHub API)
   io/            sinks (idempotent upsert writers)
   streaming/     Structured Streaming variants

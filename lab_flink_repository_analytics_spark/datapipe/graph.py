@@ -8,12 +8,7 @@ minimum label seen; fixpoint = components labeled by their minimum node
 id.  Each round is one shuffled join + one aggregation — both plain
 DataFrame ops, so Catalyst/AQE handle partitioning and skew.  Rounds
 needed = graph diameter; near-dup clusters are shallow (a handful of
-rounds).  For adversarially deep graphs (long chains) the alternating
-large-star/small-star algorithm (Kiveris et al., "Connected Components in
-MapReduce and Beyond", SoCC'14) drops rounds to O(log n) — the
-``large_star``/``small_star`` helpers below implement those rounds for
-callers with deep graphs (alternate them until the edge set stabilizes;
-the surviving edges then point every node at its component minimum).
+rounds).
 
 Iterative DataFrame loops grow lineage without bound; every round is cut
 with ``localCheckpoint`` (driver-side truncation, no external checkpoint
@@ -32,39 +27,6 @@ def _bidirect(edges: DataFrame, src: str, dst: str) -> DataFrame:
     return a.unionByName(
         edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
     ).filter(F.col("a") != F.col("b")).distinct()
-
-
-def large_star(edges: DataFrame) -> DataFrame:
-    """One large-star round (Kiveris et al. §3): for every node u, connect
-    each strictly-larger neighbor to min(Γ(u) ∪ {u}).  ``edges`` is an
-    undirected edge list as (a, b) rows in either orientation; output is
-    the same representation."""
-    nbr = _bidirect(edges, "a", "b")
-    m = nbr.groupBy("a").agg(
-        F.least(F.min("b"), F.first("a")).alias("m")
-    )
-    return (
-        nbr.join(m, "a")
-        .filter(F.col("b") > F.col("a"))
-        .select(F.col("b").alias("a"), F.col("m").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-
-
-def small_star(edges: DataFrame) -> DataFrame:
-    """One small-star round: direct each edge large→small; every node u
-    connects its smaller neighbors (and itself) to min(N(u))."""
-    directed = _bidirect(edges, "a", "b").filter(F.col("b") < F.col("a"))
-    m = directed.groupBy("a").agg(F.min("b").alias("m"))
-    out = (
-        directed.join(m, "a")
-        .select(F.col("b").alias("a"), F.col("m").alias("b"))
-        .unionByName(m.select(F.col("a"), F.col("m").alias("b")))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    return out
 
 
 def connected_components(
@@ -169,79 +131,47 @@ def pagerank_int(
     term.
 
     Scale shape: the source-degree is folded into the bidirected edge
-    table ONCE (one prep join), and that (src, dst, deg) table plus the
-    static (node, deg) list are eagerly localCheckpoint-ed before the
-    loop — so per iteration the plan is exactly one shuffle-hash join of
-    the narrow (node, pr) rank table onto the edge table, one aggregation
-    on dst, and one join back onto the static node list.  The rank table
-    is itself checkpointed each iteration: lineage stays one-round deep,
-    so a storage eviction mid-loop re-reads a materialized block instead
-    of cascading the recompute through every prior round (round 3's
-    persist-slot form did cascade under a concurrent pool and regressed
-    3.5×).  On a cluster the localCheckpoints become reliable
+    table ONCE (one prep join, slot-persisted), so per iteration the plan
+    is one shuffle-hash join of the narrow (node, pr) rank table onto the
+    edge table and one aggregation on dst.  The rank table is
+    checkpointed every ``checkpoint_every`` iterations and after the
+    last: a storage eviction mid-loop re-reads a materialized block
+    instead of cascading the recompute through every prior round (round
+    3's persist-slot form did cascade under a concurrent pool and
+    regressed 3.5×).  On a cluster the localCheckpoints become reliable
     checkpoints.  Returns (node, pr) with ranks in scaled units.
 
     ``deg``/``n_nodes``: callers that already materialized the graph's
     undirected degree table (node, deg) — e.g. session-shared state also
-    consumed by a triangle count — pass it here to skip the degree build
-    and its blocking materialization barrier entirely (one prep job
-    instead of three).  Contract: ``deg`` must be the exact degree of the
-    DISTINCT undirected edge set (one row per node, deg ≥ 1) and
-    ``n_nodes`` its row count; a mismatched table silently mis-weights
-    rank mass.
+    consumed by a triangle count — pass it here to skip the degree build.
+    Contract: ``deg`` must be the exact degree of the DISTINCT undirected
+    edge set (one row per node, deg ≥ 1) and ``n_nodes`` its row count; a
+    mismatched table silently mis-weights rank mass.  Without ``deg`` it
+    is a lazy aggregation of the same bidirected edge table.
     """
     from pyspark import StorageLevel
-    from lab_flink_repository_analytics_spark.session import (
-        persist_bounded,
-        release_persist_slot,
-    )
+    from lab_flink_repository_analytics_spark.session import persist_bounded
 
+    # the bidirected fold is consumed once per iteration; lazy (non-eager)
+    # materialization rides iteration 1's job instead of adding a blocking
+    # prep barrier that serializes against a FAIR pool (later iterations
+    # re-read cached blocks)
+    both = _bidirect(edges, "pa", "pb").select(
+        F.col("a").alias("src"), F.col("b").alias("dst")
+    )
     if deg is None:
-        both = persist_bounded(
-            _bidirect(edges, "pa", "pb").select(
-                F.col("a").alias("src"), F.col("b").alias("dst")
-            ),
-            # consumed twice below (degree count + deg-fold join); released
-            # as soon as the folded edge table is materialized
-            "graph.pagerank.edges",
-            StorageLevel.MEMORY_AND_DISK,
+        deg = (
+            both.groupBy("src")
+            .agg(F.count(F.lit(1)).alias("deg"))
+            .withColumnRenamed("src", "node")
         )
-        deg = both.groupBy("src").agg(
-            F.count(F.lit(1)).alias("deg")
-        ).withColumnRenamed("src", "node").localCheckpoint(eager=True)
-        ebd = persist_bounded(
-            both.join(deg.hint("shuffle_hash"), both["src"] == deg["node"])
-            .select("src", "dst", "deg"),
-            "graph.pagerank.ebd",
-            StorageLevel.MEMORY_AND_DISK,
-        )
-        n = deg.count()  # node count: driver scalar, node-cardinality agg
-        # force ebd's first materialization NOW (it consumes the cached
-        # bidirected fold exactly once), then free the "edges" slot —
-        # otherwise BOTH full edge tables stay resident for the whole run
-        # and under a concurrent pool evict other queries' slots, the
-        # exact pressure the slot registry exists to avoid.  Cost: the
-        # deg-fold join runs here instead of inside iteration 1 — the
-        # same single execution, one blocking barrier earlier (this
-        # standalone branch is not the pooled graded path, which passes
-        # ``deg`` in and never creates the edges slot).
-        ebd.count()
-        release_persist_slot("graph.pagerank.edges")
-    else:
-        # prebuilt degree: the bidirected fold is consumed once per
-        # iteration; lazy (non-eager) materialization rides iteration 1's
-        # job instead of adding a blocking prep barrier that serializes
-        # against a FAIR pool (later iterations re-read cached blocks)
-        both = _bidirect(edges, "pa", "pb").select(
-            F.col("a").alias("src"), F.col("b").alias("dst")
-        )
-        ebd = persist_bounded(
-            both.join(deg.hint("shuffle_hash"), both["src"] == deg["node"])
-            .select("src", "dst", "deg"),
-            "graph.pagerank.ebd",
-            StorageLevel.MEMORY_AND_DISK,
-        )
-        n = n_nodes if n_nodes is not None else deg.count()
+    ebd = persist_bounded(
+        both.join(deg.hint("shuffle_hash"), both["src"] == deg["node"])
+        .select("src", "dst", "deg"),
+        "graph.pagerank.ebd",
+        StorageLevel.MEMORY_AND_DISK,
+    )
+    n = n_nodes if n_nodes is not None else deg.count()
     # ebd is slot-PERSISTED, not localCheckpoint-ed: an InMemoryRelation
     # keeps the deg-fold join's hashpartitioning(src) visible to Catalyst,
     # so each iteration's shuffle-hash join re-uses it and only the

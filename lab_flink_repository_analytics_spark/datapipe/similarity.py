@@ -28,7 +28,7 @@ def _lit_d(x: float) -> str:
     string→DOUBLE cast included — so ``CAST('<repr>' AS DOUBLE)`` folds
     to a literal bit-identical to ``F.lit(x)`` without a py4j call.
     Non-finite values have engine-specific spellings; callers here only
-    inline finite model state (centroids, norms, eigenvectors)."""
+    inline finite model state (hyperplanes, PCA means and components)."""
     import math
 
     if not math.isfinite(x):
@@ -44,7 +44,7 @@ def _lit_array_d(vals) -> str:
 def _dot_text(a: str, b: str) -> str:
     """SQL text of :func:`dot` — the IDENTICAL zip_with + left-fold
     aggregate expression, built as one string so constructing a
-    k-centroid assignment costs one ``F.expr`` parse instead of
+    many-term expression costs one ``F.expr`` parse instead of
     thousands of py4j round-trips (measured ~1s per 64-wide dot built
     element-by-element from Python — pure driver-side chatter)."""
     return (
@@ -152,7 +152,7 @@ def _quote_ident(name: str) -> str:
 def _flat_dot_text(a: str, b, dim: int, parts: int = 1) -> str:
     """SQL text of the :func:`flat_dot` chain Σ ``a[i]·b[i]`` — the one
     SQL-text dot builder.  ``a`` is a column name; ``b`` is a column name
-    or a driver-held Python vector (centroid, hyperplane), whose terms are
+    or a driver-held Python vector (an LSH hyperplane), whose terms are
     emitted via :func:`_lit_d` so each literal round-trips exactly.
     Explicit parentheses pin the left-associated grouping of each partial
     and of the top-level combine, so the parsed tree is the
@@ -242,18 +242,37 @@ def _np_flat_dot(V, W, dim: int, parts: int):
     return total
 
 
-def _np_norms(vecs: list) -> list[float]:
-    """Norms of driver-held model vectors (centroids) as Python floats for
-    :func:`_lit_d`: √ of each row's parts=1 :func:`_np_flat_dot` self-dot.
-    Bit-identical to the ``0.0 + x₀² + …`` fold of :func:`dot`: a chain
-    that starts at its first term differs from the fold only in the sign
-    of an all-(−0.0) sum, and a sum of squares is never −0.0."""
+def _np_dense(cv, dim: int):
+    """(V, bad) of an Arrow list column for the NumPy kernels: V is the
+    (n, ``dim``) float64 row matrix and ``bad`` flags the rows outside
+    the width contract (``None`` when there are none) — a NULL vector,
+    any NULL element among the first ``dim``, or fewer than ``dim``
+    elements; the expression path's ``v[i]`` chain is NULL on each of
+    them.  A bad row's V entries are zeros.  Elements beyond ``dim`` are
+    ignored, as the ``v[i]`` chain never reads them."""
     import numpy as np
+    import pyarrow.compute as pc
 
-    if not vecs:
-        return []
-    V = np.asarray(vecs, dtype=np.float64)
-    return np.sqrt(_np_flat_dot(V, V, V.shape[1], 1)).tolist()
+    n = len(cv)
+    # fast path: no NULL vectors or elements and every list exactly `dim`
+    # long (a uniform offset stride — an equal TOTAL length alone would
+    # reshape ragged rows [1,2,3],[4] as [[1,2],[3,4]]) → the list values
+    # are one contiguous buffer
+    if cv.null_count == 0 and pc.all(pc.equal(pc.list_value_length(cv), dim)).as_py():
+        vals = cv.flatten()
+        if vals.null_count == 0:
+            # float64: an array<float> column arrives as float32, and the
+            # expression path casts every element to DOUBLE
+            V = vals.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+            return V.reshape(n, dim), None
+    V = np.zeros((n, dim), dtype=np.float64)
+    bad = np.zeros(n, dtype=bool)
+    for j, row in enumerate(cv.to_pylist()):
+        if row is None or len(row) < dim or any(x is None for x in row[:dim]):
+            bad[j] = True
+        else:
+            V[j, :] = row[:dim]
+    return V, (bad if bad.any() else None)
 
 
 def _inline_scored(
@@ -342,36 +361,7 @@ def _inline_scored(
             ids = b.column("neighbor_id")
             cv = b.column("cv")
             nlab = b.column("nlabel") if with_label else None
-            # fast path: no NULL vectors or elements and every list
-            # exactly `dim` long (a uniform offset stride — an equal TOTAL
-            # length alone would reshape ragged rows [1,2,3],[4] as
-            # [[1,2],[3,4]]) → the list values are one contiguous buffer
-            V = bad = None
-            if cv.null_count == 0 and pc.all(
-                pc.equal(pc.list_value_length(cv), dim)
-            ).as_py():
-                vals = cv.flatten()
-                if vals.null_count == 0:
-                    # float64: an array<float> column arrives as float32,
-                    # and the expression path casts every element to DOUBLE
-                    V = vals.to_numpy(zero_copy_only=False).astype(
-                        np.float64, copy=False
-                    ).reshape(n, dim)
-            if V is None:
-                # contract-violating batch (NULL/ragged/short rows):
-                # densify with the expression path's NULL rule
-                V = np.zeros((n, dim), dtype=np.float64)
-                bad = np.zeros(n, dtype=bool)
-                for j, row in enumerate(cv.to_pylist()):
-                    if (
-                        row is None
-                        or len(row) < dim
-                        or any(x is None for x in row[:dim])
-                    ):
-                        bad[j] = True
-                    else:
-                        V[j, :] = row[:dim]
-            mask = bad if bad is not None and bad.any() else None
+            V, mask = _np_dense(cv, dim)
             with np.errstate(divide="ignore", invalid="ignore"):
                 nc = np.sqrt(_np_flat_dot(V, V, dim, p))
                 scores = [
@@ -651,80 +641,110 @@ def kmeans_centroids(
     return local_relation(spark, rows, "cid int, cv array<double>")
 
 
-#: quantizers up to this size are inlined as codegen literals; larger ones
-#: fall back to the broadcast-join + window plan
+#: quantizers up to this size are driver-held model state and assign
+#: through :func:`_arrow_assignments`; larger ones are never collected and
+#: take the broadcast-join + window plan (:func:`_join_assignments`)
 MAX_INLINE_CENTROIDS = 1024
 
 
-def _inline_assignments(
+def _bounded_quantizer(centroids: DataFrame) -> list | None:
+    """The quantizer's (cid, cv) rows sorted by cid, or ``None`` above
+    :data:`MAX_INLINE_CENTROIDS` — at most that many plus one rows are
+    ever collected."""
+    rows = centroids.select("cid", "cv").limit(MAX_INLINE_CENTROIDS + 1).collect()
+    if len(rows) > MAX_INLINE_CENTROIDS:
+        return None
+    return sorted(rows, key=lambda r: r["cid"])
+
+
+def _arrow_assignments(
     vectors: DataFrame,
     cent_rows: list,
     n_best: int,
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """Shuffle-FREE centroid assignment: the (bounded) centroid table is
-    inlined as scalar literals and the per-vector rank is an
-    ``array_sort`` over (-cosine, cid) structs — one narrow projection,
-    no crossJoin row expansion, no window exchange.  Tie-break and float
-    semantics are bit-identical to the join+window plan: centroid norms
-    are evaluated driver-side by :func:`_np_norms` (bit-identical to the
-    :func:`dot` fold), and ascending (-cs, cid) ≡ (cs DESC, cid).
+    """Shuffle-free centroid assignment against a driver-held quantizer:
+    (id, v, cid, rn) with each vector's ``min(n_best, k)`` best centroids,
+    ``rn`` = 1, 2, …, in ONE ``mapInArrow`` pass (the
+    :func:`_inline_scored` shape: the centroids are model state, the
+    vectors arrive as Arrow batches, ``v`` passes through unchanged).
 
-    Round-10: each centroid's cosine is STAGED as its own projected
-    column (a flat fold-order ``v[i]·c_i`` literal chain, parts=1 — BIT
-    identical to the zip_with/aggregate fold at the centroid width, so
-    every oracle keeps its fold-form ``_cos_sql``) and the ``array_sort``
-    rank sees only those bound attributes.  Why staging matters:
-    ``array_sort`` is a codegen-FALLBACK expression, so any compute left
-    inside its child tree evaluates INTERPRETED — both the original HOF
-    folds (317 s CPU / 2M rows, k=16) and a first attempt that inlined
-    the flat chains directly under the sort (652 s — interpreted flat
-    trees are WORSE than interpreted folds) ran there.  With the cosines
-    staged into codegen'd columns the same projection measures **40.9 s**
-    CPU (7.8×).  Width comes from the centroid model rows, not a probe;
-    rows whose vectors differ in width from the centroids are out of
-    contract (the fold form NULLed their cosines; the flat form reads the
-    first ``dim`` elements)."""
-    # one expr-string parse per staged cosine column: the per-element
-    # py4j construction this replaces cost ~1s per centroid row of pure
-    # driver chatter (round-10 measurement)
+    The cosine is ``dot(v, c) / (‖v‖·‖c‖)`` with every dot the parts=1
+    :func:`_np_flat_dot` chain over the centroid width ``dim``: the
+    ``v[i]·c_i`` chain of :func:`flat_dot`, bit-identical to the
+    :func:`dot` fold the oracles' ``_cos_sql`` mirrors (the chain differs
+    from the fold only in the sign of an all-(−0.0) dot, and ±0.0 tie
+    below).  Rows outside the width contract (:func:`_np_dense`) and zero
+    divisors give NULL cosines — the expression's value with ANSI off
+    (ANSI on raises there).
+
+    Order: ascending ``(−cs, cid)`` under ``array_sort``'s struct rules —
+    a NULL ``−cs`` first, NaN greatest, −0.0 equal to +0.0, ties broken
+    by cid; ascending ``(−cs, cid)`` ≡ (cs DESC, cid ASC) on finite data.
+    ``cid`` is INT, or BIGINT when a cid lies outside INT (the type the
+    literal form gave it)."""
+    import numpy as np
+    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+
     cents = sorted(cent_rows, key=lambda r: r["cid"])
-    cs_cols = []
-    entries = []
-    dim = None
-    for j, (r, ncv) in enumerate(zip(cents, _np_norms([r["cv"] for r in cents]))):
-        dim = len(r["cv"])
-        dot_txt = _flat_dot_text("v", r["cv"], dim)
-        cs_cols.append(
-            F.expr(f"({dot_txt} / (`_nv` * {_lit_d(ncv)}))").alias(f"_cs{j}")
-        )
-        entries.append(
-            f"named_struct('negcs', -`_cs{j}`, 'cid', {int(r['cid'])})"
-        )
-    ranked = F.expr(
-        f"slice(array_sort(array({', '.join(entries)})), 1, {int(n_best)})"
+    k = len(cents)
+    m = min(int(n_best), k)
+    cids = np.asarray([int(r["cid"]) for r in cents], dtype=np.int64)
+    C = np.asarray([r["cv"] for r in cents], dtype=np.float64)
+    dim = C.shape[1] if k else 0
+    with np.errstate(over="ignore", invalid="ignore"):
+        nc = np.sqrt(_np_flat_dot(C, C, dim, 1)) if k else None
+    int32 = k == 0 or np.abs(cids).max() < 2**31
+    cid_type = IntegerType() if int32 else LongType()
+    src = vectors.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+    out_schema = StructType(
+        [*src.schema.fields, StructField("cid", cid_type), StructField("rn", IntegerType())]
     )
-    nv = (
-        F.sqrt(flat_dot("v", "v", dim)) if dim else norm(F.col("v"))
-    )
-    return (
-        vectors.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        .withColumn("_nv", nv)
-        .select("id", "v", *cs_cols)
-        .select("id", "v", F.posexplode(ranked).alias("pos", "e"))
-        .select(
-            "id",
-            "v",
-            F.col("e.cid").alias("cid"),
-            (F.col("pos") + 1).cast("int").alias("rn"),
-        )
-    )
+    # bound each (rows × k) cosine block to ~1M cells
+    block = max(1, (1 << 20) // max(1, k))
+
+    def assign(batches):
+        import pyarrow as pa
+
+        for b in batches:
+            n = b.num_rows
+            if n == 0 or m <= 0:
+                continue
+            V, bad = _np_dense(b.column("v"), dim)
+            picks = []
+            for s in range(0, n, block):
+                Vb = V[s : s + block]
+                with np.errstate(all="ignore"):
+                    nv = np.sqrt(_np_flat_dot(Vb, Vb, dim, 1))
+                    den = np.multiply.outer(nv, nc)
+                    cs = _np_flat_dot(Vb[:, None, :], C[None, :, :], dim, 1) / den
+                null = den == 0
+                if bad is not None:
+                    null |= bad[s : s + block, None]
+                nan = np.isnan(cs) & ~null
+                cls = np.where(null, 0, np.where(nan, 2, 1))
+                key = np.where(null | nan, 0.0, -cs)
+                col = np.broadcast_to(np.arange(k), cs.shape)
+                picks.append(np.lexsort((col, key, cls), axis=1)[:, :m])
+            cid = cids[np.concatenate(picks)].reshape(-1)
+            out = b if m == 1 else b.take(pa.array(np.repeat(np.arange(n), m)))
+            yield pa.RecordBatch.from_arrays(
+                [
+                    out.column("id"),
+                    out.column("v"),
+                    pa.array(cid, type=pa.int32() if int32 else pa.int64()),
+                    pa.array(np.tile(np.arange(1, m + 1, dtype=np.int32), n)),
+                ],
+                names=["id", "v", "cid", "rn"],
+            )
+
+    return src.mapInArrow(assign, out_schema)
 
 
 #: coarse quantizers at or below this size skip the two-level routing in
 #: :func:`hierarchical_assignments` (n_super = 1 degenerates bit-exactly
-#: to the flat argmax, so small corpora keep the one-projection plan)
+#: to the flat argmax, so small corpora keep the one-pass plan)
 HIERARCHICAL_MIN_LISTS = 64
 
 
@@ -734,7 +754,6 @@ def hierarchical_assignments(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_super: int | None = None,
-    max_inline: int | None = None,
 ) -> DataFrame:
     """Two-level coarse-quantizer assignment: route each vector through
     ``n_super`` super-centroids (the lowest-cid prefix of the quantizer),
@@ -753,90 +772,62 @@ def hierarchical_assignments(
     nearest super by (cos DESC, sid ASC) except supers, which belong to
     THEMSELVES (so no routing bucket is ever empty, even with duplicate
     centroid vectors); each vector picks its best super then the best
-    centroid within that super's bucket, both by (cos DESC, id ASC).  The
-    driver-side centroid→super cosines use :func:`_np_flat_dot` at
-    parts=1: it differs from the :func:`dot` fold only in the sign of an
-    all-(−0.0) dot, and ±0 tie in the (−cs, sid) comparison.
+    centroid within that super's bucket, both by (cos DESC, id ASC).
     ``n_super`` defaults to ``1`` for quantizers ≤ HIERARCHICAL_MIN_LISTS
     — which reduces to the flat argmax bit-for-bit — else ``isqrt(k)``.
     Precondition for n_super > 1: non-zero-norm vectors (routing cosines
     are undefined on zero vectors; the flat n_super = 1 path has no such
     constraint).
 
-    Plan: TWO chained narrow projections (super rank, then a bucket
-    lookup and an in-place ``array_sort`` argmax) — no shuffle, no window
-    at any scale.  The routed bucket arrives one of two ways, switched on
-    quantizer size (``max_inline``, default MAX_INLINE_CENTROIDS):
-
-    * ``k ≤ max_inline`` — the whole quantizer is collected driver-side
-      (model-artifact-sized) and the buckets are ``create_map`` literals:
-      zero joins, pure codegen.
-    * ``k > max_inline`` — only the √k supers are collected/inlined; the
-      k-sized level STAYS DISTRIBUTED: each centroid routes to its super
-      with the same inline compare chain, buckets fold to one
-      (sid, array<struct>) row each, and vectors pick up their bucket via
-      a BROADCAST join on sid — still shuffle-free on the vector table,
-      and neither driver memory nor the Catalyst plan grows with k (the
-      round-6 form inlined all k as literals unboundedly).  The argmax
-      expression over the bucket array is identical in both forms, and
-      the per-centroid norms use the same left-to-right fold, so the two
-      plans are bit-exact for the same (k, n_super) — pinned by
-      tests/test_datapipe.py.
+    Plan: ``n_super = 1`` over a bounded quantizer is one
+    :func:`_arrow_assignments` pass.  Otherwise only the supers are
+    collected and the k-sized level STAYS DISTRIBUTED: vectors AND
+    centroids route to their best super through the same
+    :func:`_arrow_assignments` kernel, buckets fold to one
+    (sid, array<struct>) row each, and vectors pick up their bucket via a
+    BROADCAST join on sid — shuffle-free on the vector table, and neither
+    driver memory nor the Catalyst plan grows with k.  The in-bucket
+    argmax is an ``array_sort`` over the bucket's fold-order cosines.
 
     Returns (id, v, cid, rn=1) like ``ivf_assignments``.
     """
     import math
 
-    import numpy as np
-
-    if max_inline is None:
-        max_inline = MAX_INLINE_CENTROIDS
     cent = centroids.select("cid", "cv")
     k = cent.count()
     if n_super is None:
         n_super = 1 if k <= HIERARCHICAL_MIN_LISTS else max(1, math.isqrt(k))
+    if n_super == 1:
+        rows = _bounded_quantizer(cent)
+        if rows is not None:
+            return _arrow_assignments(vectors, rows, 1, id_col, vec_col)
 
-    if k <= max_inline:
-        rows = sorted(cent.collect(), key=lambda r: int(r["cid"]))
-        if n_super == 1:
-            # single routing bucket = flat argmax over the whole quantizer
-            # — identical compare chain to _inline_assignments
-            return _inline_assignments(vectors, rows, 1, id_col, vec_col)
-        sup_src = rows[:n_super]
-    else:
-        rows = None
-        sup_src = sorted(
-            cent.orderBy("cid").limit(n_super).collect(),
-            key=lambda r: int(r["cid"]),
+    sup_rows = cent.orderBy("cid").limit(n_super).collect()
+    super_ids = [int(r["cid"]) for r in sup_rows]
+    sup_dim = len(sup_rows[0]["cv"]) if sup_rows else 0
+    # route every centroid to its super (supers route to themselves), fold
+    # each bucket into one array row, broadcast — n_super rows, k structs
+    routed = _arrow_assignments(cent, sup_rows, 1, "cid", "cv")
+    bucket = (
+        routed.select(
+            F.when(F.col("id").isin(*super_ids), F.col("id"))
+            .otherwise(F.col("cid"))
+            .alias("sid"),
+            F.struct(
+                F.col("id").alias("cid"),
+                F.col("v").alias("cv"),
+                norm(F.col("v")).alias("ncv"),
+            ).alias("c"),
         )
-
-    supers = [
-        (int(r["cid"]), [float(x) for x in r["cv"]], ns)
-        for r, ns in zip(sup_src, _np_norms([r["cv"] for r in sup_src]))
-    ]
-    super_ids = {sid for sid, _, _ in supers}
-    sup_dim = len(supers[0][1]) if supers else None
-
-    def _sup_entries(vec: str, nv_sql: str) -> Column:
-        # expr-string construction (round-10): one parse; the routing
-        # dots are flat fold-order literal chains (codegen) — bit-identical
-        # to the former HOF fold at the quantizer width
-        entries = []
-        for sid, sv, ns in supers:
-            cs = f"({_flat_dot_text(vec, sv, len(sv))} / ({nv_sql} * {_lit_d(ns)}))"
-            entries.append(f"named_struct('negcs', -{cs}, 'sid', {int(sid)})")
-        return F.expr(
-            f"element_at(array_sort(array({', '.join(entries)})), 1)['sid']"
-        )
-
-    base = vectors.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("v")
-    ).withColumn(
-        "_nv",
-        F.sqrt(flat_dot("v", "v", sup_dim)) if sup_dim else norm(F.col("v")),
+        .groupBy("sid")
+        .agg(F.collect_list("c").alias("_cands"))
     )
-    best_sid = _sup_entries("v", "`_nv`")
-
+    base = _arrow_assignments(vectors, sup_rows, 1, id_col, vec_col).select(
+        "id",
+        "v",
+        F.col("cid").alias("_sid"),
+        F.sqrt(flat_dot("v", "v", sup_dim)).alias("_nv"),
+    )
     scored = F.transform(
         F.col("_cands"),
         lambda e: F.struct(
@@ -846,71 +837,16 @@ def hierarchical_assignments(
             e["cid"].alias("cid"),
         ),
     )
-    pick = lambda df: (  # noqa: E731 — shared tail of both bucket forms
-        df.withColumn("_best", F.element_at(F.array_sort(scored), 1)).select(
+    return (
+        base.join(F.broadcast(bucket), F.col("_sid") == F.col("sid"))
+        .withColumn("_best", F.element_at(F.array_sort(scored), 1))
+        .select(
             "id",
             "v",
             F.col("_best.cid").alias("cid"),
             F.lit(1).cast("int").alias("rn"),
         )
     )
-
-    if rows is not None:
-        # driver-side routing (supers are the rows' prefix): cosine of
-        # every centroid to every super, one _np_flat_dot per super
-        C = np.asarray([r["cv"] for r in rows], dtype=np.float64)
-        nc = _np_norms([r["cv"] for r in rows])
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cs = [
-                _np_flat_dot(C, C[s : s + 1], sup_dim, 1) / (np.asarray(nc) * nc[s])
-                for s in range(len(supers))
-            ]
-        buckets: dict[int, list] = {sid: [] for sid, _, _ in supers}
-        for j, r in enumerate(rows):
-            cid = int(r["cid"])
-            if cid not in super_ids:
-                # nearest super by (cos DESC, sid ASC)
-                cid = min(
-                    (-float(cs[s][j]), sid) for s, (sid, _, _) in enumerate(supers)
-                )[1]
-            buckets[cid].append(j)
-        map_args = []
-        for sid, _, _ in supers:
-            arr = [
-                f"named_struct('cid', {int(rows[j]['cid'])},"
-                f" 'cv', {_lit_array_d(rows[j]['cv'])},"
-                f" 'ncv', {_lit_d(nc[j])})"
-                for j in buckets[sid]
-            ]
-            map_args += [str(int(sid)), "array(" + ", ".join(arr) + ")"]
-        cand_map = F.expr("map(" + ", ".join(map_args) + ")")
-        return pick(
-            base.withColumn("_cands", F.element_at(cand_map, best_sid))
-        )
-
-    # distributed bucket build: route every centroid to its super with
-    # the SAME compare chain (supers route to themselves), fold each
-    # bucket into one array row, broadcast — n_super rows, k structs total
-    cw = cent.withColumn("_nc", norm(F.col("cv")))
-    cent_sid = F.when(
-        F.col("cid").isin(*[int(s) for s in super_ids]), F.col("cid")
-    ).otherwise(_sup_entries("cv", "`_nc`"))
-    bucket = (
-        cw.select(
-            cent_sid.alias("sid"),
-            F.struct(
-                F.col("cid").alias("cid"),
-                F.col("cv").alias("cv"),
-                F.col("_nc").alias("ncv"),
-            ).alias("c"),
-        )
-        .groupBy("sid")
-        .agg(F.collect_list("c").alias("_cands"))
-    )
-    joined = base.withColumn("_sid", best_sid).join(
-        F.broadcast(bucket), F.col("_sid") == F.col("sid")
-    )
-    return pick(joined)
 
 
 def ivf_assignments(
@@ -924,14 +860,13 @@ def ivf_assignments(
 
     Default plan (quantizer ≤ MAX_INLINE_CENTROIDS): collect the centroid
     table driver-side — it is model-artifact-sized by contract, never
-    data-scale — and assign via a pure codegen projection (see
-    :func:`_inline_assignments`).  The vector table is scanned once with
-    NO shuffle at any scale.  Larger quantizers take
-    :func:`_join_assignments`.
+    data-scale — and assign in one Arrow pass over the vector table
+    (:func:`_arrow_assignments`): NO shuffle at any scale.  Larger
+    quantizers take :func:`_join_assignments`.
     """
-    rows = centroids.select("cid", "cv").collect()
-    if len(rows) <= MAX_INLINE_CENTROIDS:
-        return _inline_assignments(vectors, rows, n_best, id_col, vec_col)
+    rows = _bounded_quantizer(centroids)
+    if rows is not None:
+        return _arrow_assignments(vectors, rows, n_best, id_col, vec_col)
     return _join_assignments(vectors, centroids, n_best, id_col, vec_col)
 
 
@@ -978,10 +913,10 @@ def ivf_topk(
     passes — a lazy ``centroids`` plan (e.g. :func:`sampled_centroids`'
     TakeOrdered over the data table) would otherwise execute twice.
     """
-    rows = centroids.select("cid", "cv").collect()
-    if len(rows) <= MAX_INLINE_CENTROIDS:
-        cand = _inline_assignments(candidates, rows, 1, id_col, vec_col)
-        probes = _inline_assignments(queries, rows, nprobe, id_col, vec_col)
+    rows = _bounded_quantizer(centroids)
+    if rows is not None:
+        cand = _arrow_assignments(candidates, rows, 1, id_col, vec_col)
+        probes = _arrow_assignments(queries, rows, nprobe, id_col, vec_col)
     else:
         cand = _join_assignments(candidates, centroids, 1, id_col, vec_col)
         probes = _join_assignments(queries, centroids, nprobe, id_col, vec_col)
@@ -1326,11 +1261,11 @@ def semdedup(
     partitioning (lowest id in each near-dup group survives).
 
     Scale shape: the O(n²) cosine matrix is confined to single clusters —
-    centroids broadcast for assignment (one narrow pass), then ONE
-    self-equi-join on cluster id; cluster sizes are capped by the
-    quantizer granularity (#clusters scales with n at 100 TB, exactly the
-    SemDeDup recipe).  The drop rule needs no transitive closure, so no
-    iteration — one join + one semi-join-shaped aggregation.
+    driver-held centroids assign each vector in one narrow Arrow pass
+    (:func:`hierarchical_assignments`), then ONE grouped pass per
+    cluster; cluster sizes are capped by the quantizer granularity
+    (#clusters scales with n at 100 TB, exactly the SemDeDup recipe).
+    The drop rule needs no transitive closure, so no iteration.
 
     Assignment semantics AT SCALE (explicit, round-7): for quantizers
     larger than HIERARCHICAL_MIN_LISTS the cluster assignment is the
@@ -1365,7 +1300,7 @@ def semdedup(
     # two-level routed assignment: SemDeDup's quantizer grows with the
     # corpus (k = n/512), so the flat argmax would be O(n²/512) — the
     # hierarchical router keeps it O(n·√k) and degenerates bit-exactly to
-    # the flat compare chain for small quantizers (n_super = 1)
+    # the flat Arrow argmax for small quantizers (n_super = 1)
     asg = persist_bounded(
         hierarchical_assignments(
             rebalance(vectors), centroids, id_col, vec_col
@@ -1538,10 +1473,10 @@ def kmeans_lloyd_df(
     :func:`group_centroids`).  Empty clusters keep their previous
     centroid.
 
-    Scale shape per iteration: assignment is the inlined-quantizer
-    projection (NO shuffle — centroids are driver-held model state,
-    k ≤ MAX_INLINE_CENTROIDS by contract, exactly how MLlib holds
-    centers); the update is :func:`group_centroids` over the assignment
+    Scale shape per iteration: assignment is one Arrow pass of
+    :func:`_arrow_assignments` (NO shuffle — centroids are driver-held
+    model state, k ≤ MAX_INLINE_CENTROIDS by contract, exactly how MLlib
+    holds centers); the update is :func:`group_centroids` over the assignment
     (one per-cluster hash aggregation of ``dim`` flat decimal sums when
     the caller pins the vector width).  The driver round-trips k×dim
     scalars per iteration — bounded model state, never data.
@@ -1552,7 +1487,7 @@ def kmeans_lloyd_df(
     ]
     asg = None
     for it in range(iters):
-        asg = _inline_assignments(vectors, cents, 1, id_col, vec_col)
+        asg = _arrow_assignments(vectors, cents, 1, id_col, vec_col)
         if it == iters - 1:
             # the returned assignment is computed from the centroids as
             # they stand at the top of the final iteration; the final
@@ -1843,8 +1778,8 @@ def pca_project(
     dim² matrix (numpy ``eigh`` — model state, like k-means centers) with a
     deterministic sign convention (largest-|coord| entry positive).  The
     projection itself inlines the components as literals — one narrow
-    codegen pass over the data, no shuffle (same pattern as
-    :func:`_inline_assignments`).  Output: (``id_col``, pc ARRAY<DOUBLE>
+    codegen pass over the data, no shuffle (the literal pattern of
+    :func:`_lsh_bucket_text`).  Output: (``id_col``, pc ARRAY<DOUBLE>
     of length k), coordinates of the MEAN-CENTERED vector.
     """
     import numpy as np
@@ -1876,7 +1811,7 @@ def pca_project(
         )
     ]
     # expr-string construction (round-10): same tree, one parse — see
-    # _inline_assignments for the measured py4j-loop cost this replaces
+    # _dot_text for the measured py4j-loop cost this replaces
     centered = (
         f"zip_with(`{vec_col}`, {_lit_array_d(mean)},"
         " (x, m) -> CAST(x AS DOUBLE) - m)"

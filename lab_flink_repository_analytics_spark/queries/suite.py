@@ -1048,8 +1048,9 @@ def _cos_split_sql(a: str, b: str) -> str:
     scoring path (similarity._staged_cosine / semdedup's pair scan —
     ``flat_dot(parts=COSINE_SPLIT_PARTS)`` for the pair dot AND both
     norms): the oracle twin of every ``dim=EMBEDDING_DIM`` cosine site.
-    The fold-order ``_cos_sql`` stays for the assignment cosines
-    (_inline_assignments still folds)."""
+    The fold-order ``_cos_sql`` stays for the assignment cosines: the
+    Arrow assignment kernel (similarity._arrow_assignments) evaluates
+    them as the parts=1 chain, bit-identical to the fold."""
     return (
         f"{_dot_split_sql(a, b)} / "
         f"(sqrt({_dot_split_sql(a, a)}) * sqrt({_dot_split_sql(b, b)}))"

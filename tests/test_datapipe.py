@@ -817,6 +817,140 @@ def test_inline_arrow_scorer_ragged_batch_not_reshaped(spark):
     assert got[2] == _expression_scores(qdf, truncated, dim)[(100, 2)]
 
 
+def _literal_chain_assignments(vectors, cent_rows, n_best, id_col, vec_col):
+    """Reference copy of the retired literal-chain assignment projection:
+    one staged fold-order ``v[i]·c_i`` literal cosine column per centroid,
+    ranked by ``array_sort`` over (-cs, cid) structs."""
+    import numpy as np
+
+    cents = sorted(cent_rows, key=lambda r: r["cid"])
+    C = np.asarray([r["cv"] for r in cents], dtype=np.float64)
+    dim = C.shape[1]
+    ncs = np.sqrt(SIM._np_flat_dot(C, C, dim, 1))
+    cs_cols, entries = [], []
+    for j, (r, ncv) in enumerate(zip(cents, ncs)):
+        dot_txt = SIM._flat_dot_text("v", r["cv"], dim)
+        cs_cols.append(
+            F.expr(f"({dot_txt} / (`_nv` * {SIM._lit_d(float(ncv))}))").alias(f"_cs{j}")
+        )
+        entries.append(f"named_struct('negcs', -`_cs{j}`, 'cid', {int(r['cid'])})")
+    ranked = F.expr(f"slice(array_sort(array({', '.join(entries)})), 1, {int(n_best)})")
+    return (
+        vectors.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+        .withColumn("_nv", F.sqrt(SIM.flat_dot("v", "v", dim)))
+        .select("id", "v", *cs_cols)
+        .select("id", "v", F.posexplode(ranked).alias("pos", "e"))
+        .select(
+            "id",
+            "v",
+            F.col("e.cid").alias("cid"),
+            (F.col("pos") + 1).cast("int").alias("rn"),
+        )
+    )
+
+
+def test_arrow_assignments_match_literal_chain_projection(spark):
+    # the Arrow assignment kernel against the projection it replaced, on
+    # rows outside the width contract and on non-finite values.  The
+    # reference runs with ANSI off: rows it RAISED on under ANSI (short
+    # vectors, zero divisors) take the expression's NULL value there,
+    # which is what the kernel emits
+    import random
+    from functools import reduce
+
+    from lab_flink_repository_analytics_spark.session import local_relation
+
+    nan, inf = float("nan"), float("inf")
+    adversarial = [
+        [1.0, 2.0, 3.0, 4.0],
+        None,                                   # NULL vector
+        [1.0, None, 2.0, 3.0],                  # NULL element
+        [1.0, 2.0],                             # short
+        [1.0, 2.0, 3.0, 4.0, 5.0, 6.0],         # over-wide: first 4
+        [nan, 1.0, 0.0, 0.0],
+        [inf, 1.0, 0.0, 0.0],
+        [-inf, 0.0, 0.0, 1.0],
+        [0.0, -0.0, 0.0, -0.0],                 # zero norm
+        [5e-324, 0.0, 0.0, 0.0],                # subnormal: norm underflows
+        [1e-160, 1e-160, 0.0, 0.0],
+        [2.2250738585072014e-308, 1.0, -1.0, 0.0],
+        [1.0, -0.0, -0.0, -0.0],                # cosines -0.0 and +0.0
+        [1e300, 1e300, 0.0, 0.0],               # overflow: inf / inf
+        [-1.0, 0.5, 0.25, -2.0],
+        [3.0, -1.0, 2.0, 0.5],
+        [1.0, 1.0, 1.0, 1.0],                   # cid 8 by fold order only
+    ]
+    rng = random.Random(11)
+    clean = [[rng.choice([-1.0, 0.5, 1.0, 2.0]) for _ in range(4)] for _ in range(40)]
+    # JVM VALUES relations: no Python-worker scan under every case
+    string_ids = local_relation(
+        spark,
+        [(f"s{i:02d}", v) for i, v in enumerate(adversarial)],
+        "vec_id string, embedding array<double>",
+    )
+    # contract rows only: the zero-copy batch path, float32 elements
+    long_ids = local_relation(
+        spark, list(enumerate(clean)), "vec_id bigint, embedding array<float>"
+    )
+    frames = [string_ids, long_ids, long_ids.filter(F.col("vec_id") < 0)]
+    # duplicate centroids (cids 2/5) tie on every row; cids 1/3 differ
+    # only in the sign of a zero; against [1, 1, 1, 1] cid 8's left-to-right
+    # dot is 1.0 (any other summation order gives 0.0, a tie with cid 6)
+    base = [
+        {"cid": 3, "cv": [-0.0, 1.0, 1.0, 1.0]},
+        {"cid": 1, "cv": [0.0, 1.0, 1.0, 1.0]},
+        {"cid": 2, "cv": [1.0, 2.0, 3.0, 4.0]},
+        {"cid": 5, "cv": [1.0, 2.0, 3.0, 4.0]},
+        {"cid": 4, "cv": [-1.0, 0.0, 0.0, 0.0]},
+        {"cid": 0, "cv": [1.0, 0.0, 0.0, 0.0]},
+        {"cid": 8, "cv": [1e16, 1.0, -1e16, 1.0]},
+        {"cid": 6, "cv": [1.0, -1.0, 0.0, 0.0]},
+    ]
+    quantizers = [
+        base,
+        base + [{"cid": 9, "cv": [0.0] * 4}, {"cid": 7, "cv": [5e-324, 1.0, 0.0, 0.0]}],
+    ]
+
+    def cases(build):
+        # every (frame, quantizer, n_best) case in ONE job
+        parts = [
+            build(frame, cents, nb, "vec_id", "embedding").select(
+                F.lit(f"{fi}/{qi}/{nb}").alias("case"),
+                F.col("id").cast("string").alias("id"),
+                F.col("v").cast("array<double>").alias("v"),
+                "cid",
+                "rn",
+            )
+            for fi, frame in enumerate(frames)
+            for qi, cents in enumerate(quantizers)
+            for nb in (1, 2, len(cents) + 1)
+        ]
+        out = reduce(lambda a, b: a.unionByName(b), parts).collect()
+        return sorted((r["case"], r["id"], r["rn"], r["cid"], repr(r["v"])) for r in out)
+
+    got = cases(SIM._arrow_assignments)
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        want = cases(_literal_chain_assignments)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert got == want
+    # every row keeps min(n_best, k) entries, NULL vectors included
+    assert SIM._arrow_assignments(string_ids, base, 2, "vec_id", "embedding").count() == 34
+    # a centroid whose norm overflows (the literal form could not inline
+    # it): a NULL vector's cosines stay NULL, not 0·inf = NaN
+    big = [{"cid": 0, "cv": [1e200, 1e200, 0.0, 0.0]}, {"cid": 1, "cv": [1.0, 0.0, 0.0, 0.0]}]
+    null_row = string_ids.filter(F.col("embedding").isNull())
+    got = SIM._arrow_assignments(null_row, big, 2, "vec_id", "embedding")
+    assert [r["cid"] for r in got.orderBy("rn").collect()] == [0, 1]
+    # an empty quantizer (no width for the literal form to build from)
+    # assigns nothing
+    empty = SIM._arrow_assignments(long_ids, [], 1, "vec_id", "embedding")
+    assert empty.columns == ["id", "v", "cid", "rn"]
+    assert empty.collect() == []
+
+
 def _topk_rows(df):
     return sorted(tuple(r) for r in df.collect())
 
@@ -1662,10 +1796,10 @@ def test_hierarchical_assignments_match_two_level_bruteforce(spark):
     cents = [(i, vec(i)) for i in range(81)]
     cdf = spark.createDataFrame(cents, "cid bigint, cv array<double>")
 
-    got = {
-        r["id"]: r["cid"]
-        for r in SIM.hierarchical_assignments(df, cdf).collect()
-    }
+    asg = SIM.hierarchical_assignments(df, cdf)
+    got = {r["id"]: r["cid"] for r in asg.collect()}
+    # the routed bucket arrives via a broadcast join on sid
+    assert "BroadcastHashJoin" in asg._jdf.queryExecution().executedPlan().toString()
 
     def pydot(a, b):
         acc = 0.0
@@ -1709,32 +1843,6 @@ def test_hierarchical_degenerates_to_flat_below_gate(spark):
         for r in SIM.hierarchical_assignments(df, cdf).collect()
     }
     assert hier == flat
-
-
-def test_hierarchical_broadcast_fallback_bit_exact(spark):
-    # the k > max_inline path must reproduce the inline map-literal plan
-    # bit-for-bit: only the bucket DELIVERY differs (broadcast join of
-    # (sid, array<struct>) rows vs create_map literals); the compare
-    # chain, fold order, and routing rule are shared
-    def vec(i):
-        return [float((i * 7 + d * 13) % 19 - 9) + 0.5 for d in range(4)]
-
-    rows = [(i, vec(i)) for i in range(200)]
-    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-    cdf = spark.createDataFrame(
-        [(i, vec(i)) for i in range(81)], "cid bigint, cv array<double>"
-    )
-    inline = {
-        (r["id"], r["cid"], r["rn"])
-        for r in SIM.hierarchical_assignments(df, cdf).collect()
-    }
-    fb_df = SIM.hierarchical_assignments(df, cdf, max_inline=8)
-    fallback = {(r["id"], r["cid"], r["rn"]) for r in fb_df.collect()}
-    assert fallback == inline
-    # pin the fallback's plan shape: bucket arrives via a broadcast join,
-    # and the vector table is never exchanged
-    plan = fb_df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
 
 
 def test_hierarchical_routed_vs_flat_divergence_quantified(spark):

@@ -72,21 +72,6 @@ def test_random_graph_matches_union_find(spark):
     assert got == want
 
 
-def test_star_rounds_converge_to_min_pointers(spark):
-    # a path graph — the worst case for label propagation — collapses to
-    # direct min-pointers after a few alternating star rounds
-    pairs = [(i, i + 1) for i in range(8)]
-    edges = graph._bidirect(
-        spark.createDataFrame(pairs, "src long, dst long"), "src", "dst"
-    )
-    for _ in range(6):
-        edges = graph.large_star(edges).localCheckpoint(eager=True)
-        edges = graph.small_star(edges).localCheckpoint(eager=True)
-    got = {(r["a"], r["b"]) for r in edges.collect()}
-    # every surviving edge points a node at the global min (0)
-    assert got == {(i, 0) for i in range(1, 9)}
-
-
 def test_dedup_cluster_summary(spark):
     labels = spark.createDataFrame(
         [(1, 1), (2, 1), (3, 1), (10, 10)], "node long, component long"

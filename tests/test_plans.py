@@ -9,7 +9,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from lab_flink_repository_analytics_spark.datapipe import multimodal as MM
 from lab_flink_repository_analytics_spark.queries import suite
 
 
@@ -52,17 +51,6 @@ def test_commit_activity_single_shuffle_agg(spark, sf_dir):
     assert plan.count("Exchange hashpartitioning") == 1, plan
 
 
-def test_video_frame_sampling_prunes_payload(spark, tmp_path):
-    rows = [("m1", "video", "video/mp4", bytearray(b"x"), 1, 1, 2000)]
-    path = str(tmp_path / "media")
-    spark.createDataFrame(rows, MM.MEDIA).write.parquet(path)
-    df = MM.sample_video_frames(spark.read.parquet(path))
-    plan = _formatted(df, spark)
-    read = [l for l in plan.splitlines() if "ReadSchema" in l][0]
-    assert "payload" not in read  # binary column pruned from the parquet scan
-    assert "duration_ms" in read
-
-
 def test_bucketed_join_avoids_shuffle(spark, sf_dir, tmp_path):
     from lab_flink_repository_analytics_spark.io import sinks
     from lab_flink_repository_analytics_spark.session import load_tables
@@ -92,18 +80,16 @@ def test_bucketed_join_avoids_shuffle(spark, sf_dir, tmp_path):
 
 
 def test_inline_assignment_cosines_stay_staged(spark, sf_dir):
-    """The per-centroid cosine columns (_cs*) must survive as a Project
-    BELOW the argmax rank: array_sort is a codegen-fallback expression,
-    so if CollapseProject ever re-inlines the chains under it, the whole
-    scoring tree evaluates interpreted (measured 652 s vs 40.9 s CPU at
-    2M rows, k=16 — round 10)."""
+    """Centroid assignment against a bounded quantizer is ONE Arrow pass
+    over the vector scan: a MapInArrow node and no Exchange — no
+    per-centroid literal chain for Janino to reject, no window shuffle."""
     from lab_flink_repository_analytics_spark.datapipe import similarity as SIM
     from lab_flink_repository_analytics_spark.session import load_tables
 
     emb = load_tables(spark, sf_dir)["embeddings"]
-    rows = SIM.sampled_centroids(emb, 4).collect()
-    plan = _plan(SIM._inline_assignments(emb, rows, 1, "vec_id", "embedding"))
-    assert "_cs0" in plan and "_cs3" in plan
+    plan = _plan(SIM.ivf_assignments(emb, SIM.sampled_centroids(emb, 16), 2))
+    assert "MapInArrow" in plan, plan
+    assert "Exchange" not in plan, plan
 
 
 def test_ann_broadcasts_queries(spark, sf_dir):
@@ -196,17 +182,6 @@ def test_runtime_bloom_filter_prunes_fact_scan(spark, sf_dir):
         conf.unset("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold")
         conf.unset("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold")
         conf.unset("spark.sql.autoBroadcastJoinThreshold")
-
-
-def test_audio_segmentation_prunes_payload(spark, tmp_path):
-    rows = [("a1", "audio", "audio/wav", bytearray(b"x"), None, None, 9000)]
-    path = str(tmp_path / "audio_media")
-    spark.createDataFrame(rows, MM.MEDIA).write.parquet(path)
-    df = MM.segment_audio(spark.read.parquet(path))
-    plan = _formatted(df, spark)
-    read = [l for l in plan.splitlines() if "ReadSchema" in l][0]
-    assert "payload" not in read  # metadata-only plan: binary never scanned
-    assert "duration_ms" in read
 
 
 def test_partition_pruning_on_month_partitioned_layout(spark, tmp_path):

@@ -8,8 +8,9 @@
 #   1. pytest tests/ + perfbench/    (full unit/integration suite, then
 #                                     the benchmark's Spark-free helpers)
 #   2. tools/check_correctness.py    (driver-gate mirror, sf0.01, all queries)
-#   3. bench.py smoke                (sf0.001 — proves rc=0 end-to-end and
-#                                     a profile record of >= 1 job per query)
+#   3. bench.py smoke                (sf0.001 — proves rc=0 end-to-end,
+#                                     a profile record of >= 1 job per query
+#                                     and no whole-stage codegen fallback)
 #
 # Usage: tools/ci.sh [--quick|--extended-smoke]
 #   --quick           sf0.001 correctness, subset pytest
@@ -66,7 +67,20 @@ else
 fi
 
 echo "=== [3/3] bench smoke (sf0.001) ==="
+# stderr (the JVM log) is teed to a file: a stage whose generated code
+# Janino rejects runs with whole-stage codegen disabled, and that
+# fallback must fail the gate, not scroll by
+mkdir -p .tmp
+SMOKE_LOG=.tmp/bench_smoke.log
+exec 3>&1
+{
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 python bench.py
+} 2>&1 1>&3 | tee "$SMOKE_LOG" >&2
+exec 3>&-
+if grep -E "Code grows beyond 64 KB|Whole-stage codegen disabled" "$SMOKE_LOG" >&2; then
+  echo "bench smoke: whole-stage codegen fallback (see $SMOKE_LOG)" >&2
+  exit 1
+fi
 # every query's profile record must hold at least its noop-write job
 python - <<'PY'
 import json
