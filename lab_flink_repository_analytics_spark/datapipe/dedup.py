@@ -34,6 +34,7 @@ MINHASH_B = [95789, 41999, 779377, 317963, 212869, 127807, 509389, 683843]
 MINHASH_P = 4294967311
 N_PERMS = len(MINHASH_A)
 LSH_BANDS = 4  # 4 bands x 2 rows over the 8-perm signature
+SHINGLE_K = 3  # MinHash shingle words; the DuckDB oracles hard-code 3
 
 
 def _c(col: Column | str) -> Column:
@@ -56,7 +57,7 @@ def exact_dedup_summary(docs: DataFrame, text_col: str = "text", id_col: str = "
     )
 
 
-def shingles(text: Column | str, k: int = 3) -> Column:
+def shingles(text: Column | str, k: int = SHINGLE_K) -> Column:
     """Distinct k-word shingles; whole text when shorter than k tokens.
 
     Implementation: a lookahead-capture regex (`(?:^| )(?=(tok tok ...))`)
@@ -74,7 +75,7 @@ def shingles(text: Column | str, k: int = 3) -> Column:
     return F.when(F.size(grams) > 0, grams).otherwise(F.array(t))
 
 
-def minhash_signature(text: Column | str, k: int = 3) -> Column:
+def minhash_signature(text: Column | str) -> Column:
     """ARRAY<BIGINT> MinHash signature (N_PERMS mins over shingle hashes).
 
     Expression form — convenient for single-column use; for table-scale
@@ -83,7 +84,7 @@ def minhash_signature(text: Column | str, k: int = 3) -> Column:
     lambdas are interpreted per element and the shared shingle-hash array
     is *not* CSE'd across the permutations here).
     """
-    sh = shingles(text, k)
+    sh = shingles(text)
     return minhash_signature_from_hashes(F.transform(sh, md5_hash32))
 
 
@@ -106,7 +107,7 @@ def minhash_signature_from_hashes(hashes: Column) -> Column:
 
 
 def minhash_signatures_df(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 3
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Table-scale MinHash: one row per doc with ``sig ARRAY<BIGINT>``.
 
@@ -118,7 +119,7 @@ def minhash_signatures_df(
     from lab_flink_repository_analytics_spark.session import rebalance
 
     sh = rebalance(docs).select(
-        F.col(id_col).alias("id"), F.explode(shingles(text_col, k)).alias("s")
+        F.col(id_col).alias("id"), F.explode(shingles(text_col)).alias("s")
     )
     h = sh.select("id", md5_hash32(F.col("s")).alias("h"))
     mins = [
@@ -146,7 +147,7 @@ def minhash_band_keys(sig: Column) -> Column:
 
 
 def near_dup_candidates(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 3
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Candidate near-duplicate pairs via MinHash-LSH banding.
 
@@ -155,7 +156,7 @@ def near_dup_candidates(
     the full cross product; skew-prone giant buckets are handled by AQE
     skew-join at runtime.
     """
-    sigs = minhash_signatures_df(docs, text_col, id_col, k).select(
+    sigs = minhash_signatures_df(docs, text_col, id_col).select(
         F.col(id_col).alias("id"), "sig"
     )
     banded = sigs.select(

@@ -23,10 +23,12 @@ from pyspark.sql import functions as F
 
 
 def _bidirect(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Both orientations of every edge, self-loops dropped; no distinct:
+    callers pass distinct edges with ``src < dst``, so none can collide."""
     a = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     return a.unionByName(
         edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-    ).filter(F.col("a") != F.col("b")).distinct()
+    ).filter(F.col("a") != F.col("b"))
 
 
 def connected_components(
@@ -119,8 +121,10 @@ def pagerank_int(
     n_nodes: int | None = None,
     checkpoint_every: int = 3,
 ) -> DataFrame:
-    """Fixed-iteration PageRank over an UNDIRECTED edge list (``pa < pb``
-    once per edge), in scaled-integer arithmetic.
+    """Fixed-iteration PageRank over an UNDIRECTED edge list, in
+    scaled-integer arithmetic.  Precondition: ``edges`` is distinct with
+    ``pa < pb`` (once per edge); :func:`_bidirect` does not de-duplicate,
+    so a repeated or reversed edge would count twice.
 
     All rank mass is carried as BIGINT units of 1/``scale`` and every
     division is integer division, so the result is bit-identical on any

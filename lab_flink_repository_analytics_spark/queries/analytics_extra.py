@@ -2481,49 +2481,6 @@ BPE_FERTILITY_SQL = _bpe_fertility_sql()
 
 
 # ---------------------------------------------------------------------------
-# Cross-source near-duplicate matrix (who duplicates whom, at the DOC level)
-
-
-def near_dup_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH candidate-pair counts rolled up by (source, source) —
-    the document-level complement of ``source_gram_overlap``'s gram-set
-    view: which source pairs actually produce near-duplicate documents.
-
-    Scale shape: reuses the banded LSH candidate join (never all-pairs);
-    the source lookup is two doc-keyed equi-joins; output is
-    #source²-bounded."""
-    from lab_flink_repository_analytics_spark.datapipe import dedup as DD
-
-    t = load_tables(spark, sf_dir)
-    pairs = DD.near_dup_candidates(t["documents"])
-    src = t["documents"].select("doc_id", "source")
-    a = src.select(F.col("doc_id").alias("id_a"), F.col("source").alias("sa"))
-    b = src.select(F.col("doc_id").alias("id_b"), F.col("source").alias("sb"))
-    return (
-        pairs.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            F.least("sa", "sb").alias("source_a"),
-            F.greatest("sa", "sb").alias("source_b"),
-        )
-        .groupBy("source_a", "source_b")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_pairs"))
-    )
-
-
-NEAR_DUP_SOURCE_MATRIX_SQL = """
-WITH nd AS ({nd}),
-src AS (SELECT doc_id, source FROM documents)
-SELECT least(a.source, b.source) AS source_a,
-       greatest(a.source, b.source) AS source_b,
-       CAST(count(*) AS BIGINT) AS n_pairs
-FROM nd JOIN src a ON nd.id_a = a.doc_id
-        JOIN src b ON nd.id_b = b.doc_id
-GROUP BY 1, 2
-"""
-
-
-# ---------------------------------------------------------------------------
 # Token-budget allocation (largest-remainder rounding of mixture weights)
 
 MIX_TOKEN_BUDGET = 1_000_000
@@ -2859,7 +2816,6 @@ QUERIES = {
     "source_token_entropy": source_token_entropy,
     "source_gram_overlap": source_gram_overlap,
     "bpe_fertility_by_source": bpe_fertility_by_source,
-    "near_dup_source_matrix": near_dup_source_matrix,
     "mixture_token_quotas": mixture_token_quotas,
     "quota_fill_counts": quota_fill_counts,
     "length_bucket_stats": length_bucket_stats,
@@ -2901,8 +2857,6 @@ ORACLES = {
     "source_token_entropy": SOURCE_ENTROPY_SQL,
     "source_gram_overlap": SOURCE_OVERLAP_SQL,
     "bpe_fertility_by_source": BPE_FERTILITY_SQL,
-    # near_dup_source_matrix is registered in suite.py, where the
-    # NEAR_DUP_SQL candidate-pair CTE it reuses is defined
     "mixture_token_quotas": MIXTURE_TOKEN_QUOTAS_SQL,
     "quota_fill_counts": QUOTA_FILL_SQL.format(quotas=MIXTURE_TOKEN_QUOTAS_SQL),
     "length_bucket_stats": LENGTH_BUCKET_SQL,

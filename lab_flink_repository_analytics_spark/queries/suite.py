@@ -925,10 +925,9 @@ SELECT doc_id, to_json(sig)::VARCHAR AS sig FROM raw
 
 def _near_dup_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-shared MinHash-LSH candidate pairs over the full documents
-    table: the identical (shingle → signature → banded self-join →
-    distinct) build feeds BOTH the near_dup_pairs query and the
-    connected-components cluster family; under the bench's concurrent
-    pool each used to run its own multi-second copy (round-10).  Eagerly
+    table: the one (shingle → signature → banded self-join → distinct)
+    build of the registry, read by near_dup_pairs, near_dup_source_matrix,
+    lsh_dedup_eval and the connected-components cluster family.  Eagerly
     checkpointed — a pure function of the read-only documents table, the
     same derived_state pattern as the cluster labels it feeds."""
     from lab_flink_repository_analytics_spark.session import derived_state
@@ -945,15 +944,52 @@ def near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _near_dup_candidate_pairs(spark, sf_dir)
 
 
-NEAR_DUP_SQL = f"""
-WITH sigs AS ({_MINHASH_RAW_SQL.strip()}),
-banded AS (
+#: the banding CTE of every near-dup oracle: 4 bands x 2 rows of ``sigs``
+_BANDED_SQL = """banded AS (
   SELECT doc_id AS id, b AS band, sig[2*b+1] AS s1, sig[2*b+2] AS s2
   FROM sigs, unnest([0, 1, 2, 3]) AS u(b)
-)
+)"""
+
+NEAR_DUP_SQL = f"""
+WITH sigs AS ({_MINHASH_RAW_SQL.strip()}),
+{_BANDED_SQL}
 SELECT l.id AS id_a, r.id AS id_b
 FROM banded l JOIN banded r
   ON l.band = r.band AND l.s1 = r.s1 AND l.s2 = r.s2 AND l.id < r.id
+GROUP BY 1, 2
+"""
+
+
+def near_dup_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash-LSH candidate-pair counts rolled up by (source, source) —
+    the document-level complement of ``source_gram_overlap``'s gram-set
+    view: which source pairs actually produce near-duplicate documents.
+
+    Scale shape: reads the session-shared candidate pairs (never
+    all-pairs); the source lookup is two doc-keyed equi-joins; output is
+    #source²-bounded."""
+    pairs = _near_dup_candidate_pairs(spark, sf_dir)
+    src = load_tables(spark, sf_dir)["documents"].select("doc_id", "source")
+    return (
+        pairs.join(src.toDF("id_a", "sa"), "id_a")
+        .join(src.toDF("id_b", "sb"), "id_b")
+        .select(
+            F.least("sa", "sb").alias("source_a"),
+            F.greatest("sa", "sb").alias("source_b"),
+        )
+        .groupBy("source_a", "source_b")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_pairs"))
+    )
+
+
+NEAR_DUP_SOURCE_MATRIX_SQL = f"""
+WITH nd AS ({NEAR_DUP_SQL.strip()}),
+src AS (SELECT doc_id, source FROM documents)
+SELECT least(a.source, b.source) AS source_a,
+       greatest(a.source, b.source) AS source_b,
+       CAST(count(*) AS BIGINT) AS n_pairs
+FROM nd JOIN src a ON nd.id_a = a.doc_id
+        JOIN src b ON nd.id_b = b.doc_id
 GROUP BY 1, 2
 """
 
@@ -1629,10 +1665,10 @@ def lsh_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`ann_recall_eval`.
 
     Scale shape: the universe cap makes truth O(#blocks · cap²)
-    regardless of corpus size; candidates are index output on the same
-    universe; the evaluation is one full-outer join of the two pair sets
-    and a scalar rollup.  Output: one row (n_true, n_candidates, n_hits,
-    prec, rec)."""
+    regardless of corpus size; candidates are the session-shared index
+    output restricted to the same universe; the evaluation is one
+    full-outer join of the two pair sets and a scalar rollup.  Output:
+    one row (n_true, n_candidates, n_hits, prec, rec)."""
     docs_all = load_tables(spark, sf_dir)["documents"]
     wu = Window.partitionBy("source", "lang").orderBy("doc_id")
     docs = (
@@ -1640,28 +1676,21 @@ def lsh_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("_rn") <= DEDUP_EVAL_MAX_BLOCK)
         .drop("_rn")
         # the cap window emits one partition per (source, lang) block —
-        # spread before the per-doc shingling/minhash passes so their
+        # spread before the truth side's tokenize + block self-join so its
         # parallelism follows the session, not the block count (measured
-        # 2.7× sequential without this)
+        # at sf0.1: run_s 1.6–2.4 s with this, 3.7–4.1 s without)
         .repartition(int(spark.conf.get("spark.sql.shuffle.partitions")))
     )
     truth = DD.ngram_jaccard_pairs(
         docs, ["source", "lang"], min_jaccard=DEDUP_EVAL_TAU
     ).select("id_a", "id_b", F.lit(1).alias("t"))
     attrs = docs.select("doc_id", "source", "lang")
-    a = attrs.select(
-        F.col("doc_id").alias("id_a"),
-        F.col("source").alias("sa"),
-        F.col("lang").alias("la"),
-    )
-    b = attrs.select(
-        F.col("doc_id").alias("id_b"),
-        F.col("source").alias("sb"),
-        F.col("lang").alias("lb"),
-    )
+    a = attrs.toDF("id_a", "sa", "la")
+    b = attrs.toDF("id_b", "sb", "lb")
+    # signatures are per-document and banding is pairwise, so restricting
+    # the shared pairs to the universe gives the universe's own LSH pairs
     cand = (
-        DD.near_dup_candidates(docs)
-        .select("id_a", "id_b")
+        _near_dup_candidate_pairs(spark, sf_dir)
         .join(a, "id_a")
         .join(b, "id_b")
         .filter((F.col("sa") == F.col("sb")) & (F.col("la") == F.col("lb")))
@@ -1711,10 +1740,7 @@ WITH docs_u AS (
   ) WHERE rn <= {DEDUP_EVAL_MAX_BLOCK}
 ),
 sigs AS ({minhash_u.strip()}),
-banded AS (
-  SELECT doc_id AS id, b AS band, sig[2*b+1] AS s1, sig[2*b+2] AS s2
-  FROM sigs, unnest([0, 1, 2, 3]) AS u(b)
-),
+{_BANDED_SQL},
 cand0 AS (
   SELECT l.id AS id_a, r.id AS id_b
   FROM banded l JOIN banded r
@@ -2120,9 +2146,7 @@ def _dedup_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         from lab_flink_repository_analytics_spark.datapipe import graph
 
         docs = load_tables(spark, sf_dir)["documents"]
-        # the candidate build is itself session-shared with the
-        # near_dup_pairs query (round-10) — one LSH pass per session
-        pairs = _near_dup_candidate_pairs(spark, sf_dir).select("id_a", "id_b")
+        pairs = _near_dup_candidate_pairs(spark, sf_dir)
         labels = graph.connected_components(
             pairs,
             src="id_a",
@@ -2153,10 +2177,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _dedup_clusters_sql() -> str:
     return f"""
 WITH RECURSIVE sigs AS ({_MINHASH_RAW_SQL.strip()}),
-banded AS (
-  SELECT doc_id AS id, b AS band, sig[2*b+1] AS s1, sig[2*b+2] AS s2
-  FROM sigs, unnest([0, 1, 2, 3]) AS u(b)
-),
+{_BANDED_SQL},
 pairs AS (
   SELECT l.id AS id_a, r.id AS id_b
   FROM banded l JOIN banded r
@@ -3327,6 +3348,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_fingerprints": doc_fingerprints,
         "minhash_signatures": minhash_signatures,
         "near_dup_pairs": near_dup_pairs,
+        "near_dup_source_matrix": near_dup_source_matrix,
         "simhash_fingerprints": simhash_fingerprints,
         "jaccard_blocked_pairs": jaccard_blocked_pairs,
         "ann_cosine_topk": ann_cosine_topk,
@@ -3454,6 +3476,7 @@ def _oracle_sql_raw() -> dict[str, str]:
         "doc_fingerprints": DOC_FINGERPRINTS_SQL,
         "minhash_signatures": MINHASH_SQL,
         "near_dup_pairs": NEAR_DUP_SQL,
+        "near_dup_source_matrix": NEAR_DUP_SOURCE_MATRIX_SQL,
         "simhash_fingerprints": SIMHASH_SQL,
         "jaccard_blocked_pairs": JACCARD_SQL,
         "ann_cosine_topk": ANN_SQL,
@@ -3509,8 +3532,4 @@ def _oracle_sql_raw() -> dict[str, str]:
         "lsh_dedup_eval": _lsh_dedup_eval_sql(),
         **TPCH.ORACLES,
         **AX.ORACLES,
-        # reuses this module's NEAR_DUP_SQL candidate-pair CTE
-        "near_dup_source_matrix": AX.NEAR_DUP_SOURCE_MATRIX_SQL.format(
-            nd=NEAR_DUP_SQL.strip()
-        ),
     }

@@ -213,7 +213,7 @@ def test_near_dup_source_matrix_conserves_pairs(spark, sf_dir):
     from lab_flink_repository_analytics_spark.queries import suite
 
     total_pairs = suite.queries()["near_dup_pairs"](spark, sf_dir).count()
-    rows = AX.near_dup_source_matrix(spark, sf_dir).collect()
+    rows = suite.near_dup_source_matrix(spark, sf_dir).collect()
     assert sum(r["n_pairs"] for r in rows) == total_pairs
     assert all(r["source_a"] <= r["source_b"] for r in rows)
 

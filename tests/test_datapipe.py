@@ -1619,6 +1619,23 @@ def test_leakage_safe_split_never_straddles_near_dups(spark, sf_dir):
     assert {r["split"] for r in counts} <= {"train", "valid", "test"}
 
 
+def test_dedup_family_builds_lsh_candidates_once(spark, sf_dir, monkeypatch):
+    # every registry consumer of LSH candidate pairs reads the one
+    # session-shared build
+    from lab_flink_repository_analytics_spark.queries import suite
+    from lab_flink_repository_analytics_spark.session import reset_derived_state
+
+    calls, real = [], DD.near_dup_candidates
+    monkeypatch.setattr(
+        DD, "near_dup_candidates", lambda *a, **k: calls.append(1) or real(*a, **k)
+    )
+    reset_derived_state()
+    for name in ("near_dup_pairs", "near_dup_source_matrix", "lsh_dedup_eval",
+                 "dedup_clusters"):
+        suite.queries()[name](spark, sf_dir).collect()
+    assert len(calls) == 1
+
+
 def test_pretraining_pipeline_end_to_end(spark, sf_dir, tmp_path):
     import json as _json
 
@@ -1970,6 +1987,21 @@ def test_dedup_eval_sampled_estimate_tracks_exact_when_cap_binds(
 
     full = run(10_000)
     capped = run(50)
+    # the old candidate side, an LSH pass over the universe alone (the
+    # block's 50 lowest doc_ids) plus the same-block filter, counts the same
+    uni = df.filter(F.col("doc_id") < 50)
+    blk = uni.select("doc_id", "source", "lang")
+    old = (
+        DD.near_dup_candidates(uni)
+        .join(blk.toDF("id_a", "sa", "la"), "id_a")
+        .join(blk.toDF("id_b", "sb", "lb"), "id_b")
+        .filter("sa = sb AND la = lb")
+    )
+    truth = DD.ngram_jaccard_pairs(
+        uni, ["source", "lang"], min_jaccard=suite.DEDUP_EVAL_TAU
+    )
+    assert capped["n_candidates"] == old.count()
+    assert capped["n_hits"] == old.join(truth, ["id_a", "id_b"]).count()
     # the cap must actually bind: the sampled universe is a strict subset
     assert capped["n_true"] < full["n_true"]
     assert capped["n_candidates"] < full["n_candidates"]

@@ -1,5 +1,5 @@
 """Connected components (datapipe/graph.py) — label propagation vs known
-component structures, star-round helpers, and the dedup-cluster summary."""
+component structures, PageRank, and the dedup-cluster summary."""
 
 from __future__ import annotations
 
@@ -33,8 +33,11 @@ def test_isolated_nodes_are_singletons(spark):
 
 
 def test_duplicate_and_reversed_edges_are_harmless(spark):
-    got = _cc(spark, [(1, 2), (2, 1), (1, 2), (2, 3)])
-    assert got == {1: 1, 2: 1, 3: 1}
+    # _bidirect keeps duplicates: min-propagation must absorb duplicated,
+    # reversed and self-loop edges
+    nodes = [1, 2, 3, 7]
+    got = _cc(spark, [(1, 2), (2, 1), (1, 2), (2, 3), (3, 3), (7, 7)], nodes)
+    assert got == _cc(spark, [(1, 2), (2, 3)], nodes) == {1: 1, 2: 1, 3: 1, 7: 7}
 
 
 def test_random_graph_matches_union_find(spark):

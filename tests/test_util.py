@@ -88,7 +88,7 @@ def test_cc_groundtruth_union_find_matches_recursive_cte():
         "CREATE OR REPLACE VIEW documents AS "
         "SELECT * FROM '/root/testdata/sf0.01/documents.parquet'"
     )
-    edges = con.sql(G._PAIRS_SQL).fetchall()
+    edges = con.sql(suite.NEAR_DUP_SQL).fetchall()
     doc_ids = [r[0] for r in con.sql("SELECT doc_id FROM documents").fetchall()]
     labels = dict(G.union_find_labels(doc_ids, edges))
     ref = dict(con.sql(suite._dedup_clusters_sql()).fetchall())

@@ -13,10 +13,10 @@ MinHash signatures, the banded self-join that produces the candidate edge
 list, and all downstream aggregation SQL) and replaces ONLY the recursion
 with a driver-side union-find over the exact same edge list:
 
-1. DuckDB computes the ``pairs`` CTE (same text the oracle uses).
+1. DuckDB computes the candidate edge list with ``suite.NEAR_DUP_SQL``.
 2. A single-pass union-find (union by size + path compression) labels each
    doc with the min doc_id of its component — the same labeling contract
-   as both the Spark large/small-star implementation and the recursive CTE.
+   as both the Spark min-label propagation and the recursive CTE.
    The edge list is model-sized (bounded by the LSH candidate count, which
    the Spark side also materializes), so driver memory holds it at replica
    scale.
@@ -53,21 +53,6 @@ CC_QUERIES = (
     "cluster_representatives",
     "leakage_safe_split_counts",
 )
-
-#: the non-recursive prefix of suite._dedup_clusters_sql() verbatim —
-#: sigs + banded + the banded self-join; kept composed from the same
-#: _MINHASH_RAW_SQL constant so signature changes propagate here
-_PAIRS_SQL = f"""
-WITH sigs AS ({suite._MINHASH_RAW_SQL.strip()}),
-banded AS (
-  SELECT doc_id AS id, b AS band, sig[2*b+1] AS s1, sig[2*b+2] AS s2
-  FROM sigs, unnest([0, 1, 2, 3]) AS u(b)
-)
-SELECT l.id AS id_a, r.id AS id_b
-FROM banded l JOIN banded r
-  ON l.band = r.band AND l.s1 = r.s1 AND l.s2 = r.s2 AND l.id < r.id
-GROUP BY 1, 2
-"""
 
 
 def union_find_labels(doc_ids, edges):
@@ -125,7 +110,7 @@ def main():
 
     # 1-2: edge list (DuckDB, non-recursive) -> union-find labels
     t0 = time.time()
-    edges = con.sql(_PAIRS_SQL).fetchall()
+    edges = con.sql(suite.NEAR_DUP_SQL).fetchall()
     doc_ids = [r[0] for r in con.sql("SELECT doc_id FROM documents").fetchall()]
     labels = union_find_labels(doc_ids, edges)
     t_gt = time.time() - t0

@@ -38,6 +38,7 @@ EXTENDED_SMOKE_QUERIES=(
   quota_fill_counts length_bucket_stats source_mixture_weights
   ann_cosine_topk ann_lsh_topk ann_ivf_topk ann_recall_eval
   hard_negative_mining label_centroids label_redundancy embedding_near_dup
+  near_dup_pairs lsh_dedup_eval minhash_signatures
 )
 
 if [[ "$QUICK" == "--extended-smoke" ]]; then

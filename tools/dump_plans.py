@@ -76,7 +76,7 @@ SHOW = [
     ("training_order", "salted-hash permutation: only exchange is the shard partition, per-shard windows"),
     ("ann_recall_eval", "recall join moves only the two top-k result sets, never vectors"),
     ("leakage_safe_split_counts", "split key = CC cluster id: near-dups move between splits atomically"),
-    ("lsh_dedup_eval", "precision/recall: pair-set full-outer join + scalar counters, partial-agg first"),
+    ("lsh_dedup_eval", "precision/recall: shared LSH pairs joined onto the capped universe, pair-set full-outer join + scalar counters, partial-agg first"),
     ("event_value_drift", "PSI from histogram sketches: bounded counter grid, broadcast totals join"),
 ]
 
