@@ -1,10 +1,10 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Baseline: brute-force cosine top-k — a broadcast join of the (small) query
-set against the candidate table, scored with a JVM-side fold (no Python),
-ranked per query.  Scale path: random-hyperplane LSH bucketing — candidates
-are hash-partitioned by bucket so each query only scans its bucket, the
-standard IVF/LSH trade-off.
+The four ANN top-k operators (brute force, LSH, IVF, hard negatives) share
+one plan (:func:`_ann_topk`): a bounded query set is driver-held and
+scored in one Arrow pass over the candidates, with the LSH bucket or the
+IVF inverted list as a per-query key mask; an unbounded one is broadcast
+into a join.  Both end in one per-query ranking window (:func:`_ranked`).
 
 All float math is double-precision with a fixed left-to-right fold order so
 the DuckDB oracle can reproduce scores.
@@ -108,11 +108,10 @@ def flat_dot(a: str, b: str, dim: int, parts: int = 1) -> Column:
     return F.expr(_flat_dot_text(a, b, dim, parts))
 
 
-#: bounded-query-set gate for the inlined ANN scoring paths: a probe set
-#: this small is driver-held model state (k-means centroid precedent),
-#: and inlining it turns the non-equi broadcast join + interpreted
-#: per-pair projection into ONE codegen scan projection.  Above the gate
-#: the generic join path is kept (an unbounded query side must never be
+#: bounded-query-set gate of the ANN operators: a query set this small is
+#: driver-held model state (k-means centroid precedent) and scores in one
+#: Arrow pass over the candidates (:func:`_inline_scored`).  Above the
+#: gate the join path is kept (an unbounded query side must never be
 #: collected).
 ANN_INLINE_MAX = 64
 
@@ -120,12 +119,12 @@ ANN_INLINE_MAX = 64
 def _collect_inline_queries(
     q: DataFrame, cols: list[str], vec_col: str, dim: int
 ) -> list | None:
-    """Collect a BOUNDED query side for literal inlining, or ``None`` to
-    keep the generic join path: more than :data:`ANN_INLINE_MAX` rows, a
-    NULL / wrong-width vector (the literal mirror needs the pinned
-    width), or a non-finite component (engine literal spellings differ).
-    Rows come back sorted by the first column (the id) so expression
-    construction is deterministic."""
+    """Collect a BOUNDED query side for :func:`_inline_scored`, or
+    ``None`` to keep the join path: more than :data:`ANN_INLINE_MAX`
+    rows, a NULL id, a NULL / wrong-width vector (the scorer needs the
+    pinned width), or a non-finite component.  Rows come back sorted by
+    the first column (the id) so the scorer's query order is
+    deterministic."""
     rows = q.select(*cols).limit(ANN_INLINE_MAX + 1).collect()
     if len(rows) > ANN_INLINE_MAX or not rows:
         return None
@@ -281,10 +280,9 @@ def _inline_scored(
     dim: int,
     with_label: bool = False,
     prune_k: int | None = None,
-    prune_self: bool = False,
-    nbits: int | None = None,
+    keys=None,
 ):
-    """(query_id, neighbor_id[, nlabel], score[, qlabel]) of a BOUNDED
+    """(query_id, neighbor_id[, nlabel, qlabel], score) of a BOUNDED
     driver-held query set against the candidate frame ``c`` (columns
     ``neighbor_id``, ``cv``[, ``nlabel``]).
 
@@ -308,23 +306,24 @@ def _inline_scored(
     bit-identical, pinned by
     test_inline_arrow_scorer_bit_identical_to_expression_path.)
 
-    ``nbits``: join-on-bucket semantics inside the batch — a row emits
-    only for queries in its LSH bucket (:func:`_lsh_bucket_np`); a
-    contract-bad row has a NULL bucket in the expression form and never
-    matches.
+    ``keys``: join-on-key semantics inside the batch.  Called once with
+    the (#queries, dim) query matrix, it returns ``(key_of, allowed)``:
+    ``key_of(V, bad)`` computes each candidate row's integer key from
+    the batch's dense matrix and contract mask (:func:`_np_dense`), and
+    a row emits only for the queries ``qi`` whose key set
+    ``allowed[qi]`` holds that key.
 
-    ``prune_k``: when set, each batch emits only its local top-k rows
+    ``prune_k``: when set, each batch applies the consumer's pair filter
+    — the label inequality with ``with_label`` (NULL-safe, like
+    ``qlabel != nlabel``), else the self pair and NULL ids (like
+    ``query_id != neighbor_id``) — and emits only its local top-k rows
     per query under the consumer's exact total order (score DESC with
     NaN greatest — Spark's double ordering — then neighbor_id ASC NULLS
-    FIRST), after applying the consumer's own pair filters
-    (``prune_self`` drops the self pair and NULL ids, exactly like
-    ``query_id != neighbor_id``; ``with_label`` + ``prune_k`` drops
-    same-label pairs exactly like the NULL-safe inequality).  The global
-    top-k is a subset of the union of batch-local top-ks under the same
-    total order, and the downstream window recomputes exact ranks, so
-    results are independent of batching.  Batches carrying
-    contract-violating rows (NULL scores possible) skip pruning unless
-    the bucket mask already drops them — NULL ordering stays the
+    FIRST).  The global top-k is a subset of the union of batch-local
+    top-ks under the same total order, and the downstream window
+    recomputes exact ranks, so results are independent of batching.  A
+    query whose kept rows include a contract-violating row (a NULL
+    score) is not pruned in that batch — NULL ordering stays the
     window's job."""
     import numpy as np
     from pyspark.sql.types import DoubleType, StructField, StructType
@@ -336,7 +335,7 @@ def _inline_scored(
     qlabels = [r[2] if with_label else None for r in rows]
     Q = np.asarray([r[1] for r in rows], dtype=np.float64)
     nq = np.sqrt(_np_flat_dot(Q, Q, dim, p))
-    qbuckets = _lsh_bucket_np(Q, nbits, dim) if nbits is not None else None
+    key_of, allowed = keys(Q) if keys is not None else (None, None)
     in_schema = c.schema
     id_field = in_schema["neighbor_id"]
     out_fields = [
@@ -368,9 +367,7 @@ def _inline_scored(
                     _np_flat_dot(Q[qi : qi + 1], V, dim, p) / (nq[qi] * nc)
                     for qi in range(len(qids))
                 ]
-                buck = _lsh_bucket_np(V, nbits, dim) if nbits is not None else None
-            if buck is not None and mask is not None:
-                buck[mask] = -1
+                row_key = key_of(V, mask) if key_of is not None else None
             id_rank = None
             if prune_k is not None:
                 try:
@@ -380,27 +377,28 @@ def _inline_scored(
                     ).to_numpy()
                 except pa.ArrowNotImplementedError:
                     pass  # unorderable id type: no pruning
-            can_prune = id_rank is not None and (mask is None or buck is not None)
             for qi, (qid, qlabel, score) in enumerate(zip(qids, qlabels, scores)):
-                sel = None
-                if buck is not None or can_prune:
-                    keep = np.ones(n, dtype=bool)
-                    if buck is not None:
-                        keep &= buck == qbuckets[qi]
-                    if prune_self:
+                keep = None
+                if row_key is not None:
+                    keep = np.isin(row_key, allowed[qi])
+                if prune_k is not None:
+                    if keep is None:
+                        keep = np.ones(n, dtype=bool)
+                    if not with_label:
                         ne = pc.not_equal(ids, pa.scalar(qid, ids.type))
-                        keep &= pc.fill_null(ne, False).to_numpy(
-                            zero_copy_only=False
-                        )
-                    if with_label:
-                        if qlabel is None:
-                            keep[:] = False
-                        else:
-                            eq = pc.equal(nlab, pa.scalar(qlabel, nlab.type))
-                            ne = pc.fill_null(pc.invert(eq), False)
-                            keep &= ne.to_numpy(zero_copy_only=False)
+                    elif qlabel is None:
+                        ne = pa.nulls(n, pa.bool_())
+                    else:
+                        ne = pc.invert(pc.equal(nlab, pa.scalar(qlabel, nlab.type)))
+                    keep &= pc.fill_null(ne, False).to_numpy(zero_copy_only=False)
+                sel = None
+                if keep is not None:
                     idx = np.flatnonzero(keep)
-                    if can_prune and idx.size > prune_k:
+                    if (
+                        id_rank is not None
+                        and idx.size > prune_k
+                        and (mask is None or not mask[idx].any())
+                    ):
                         s = score[idx]
                         nan = np.isnan(s)
                         order = np.lexsort(
@@ -425,6 +423,80 @@ def _inline_scored(
     return c.mapInArrow(score_batches, out_schema)
 
 
+def _ranked(scored: DataFrame, k: int) -> DataFrame:
+    """The top-k tail of every ANN operator: per ``query_id``, a
+    ``row_number`` over (score DESC, neighbor_id), ``rank <= k``, and
+    ``cos_sim = round(score, 6)``."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("score").desc(), F.col("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.col("rank").cast("int").alias("rank"),
+            F.round("score", 6).alias("cos_sim"),
+        )
+    )
+
+
+def _ann_topk(
+    queries: DataFrame,
+    c: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    dim: int | None,
+    label_col: str | None = None,
+    keys=None,
+    join=None,
+    inline: bool = True,
+) -> DataFrame:
+    """(query_id, neighbor_id, rank, cos_sim): the one top-k plan of the
+    ANN operators, scoring ``queries`` against the candidate frame ``c``
+    (``neighbor_id``, ``cv``[, ``nlabel``]).
+
+    Bounded path — ``dim`` pinned, ``inline``, and a query side that
+    :func:`_collect_inline_queries` accepts: one :func:`_inline_scored`
+    Arrow pass over ``c`` with the key mask ``keys`` and batch-local
+    top-k pruning — no join, which would multiply rows before a per-pair
+    expression that pays the JIT's huge-method cliff (see
+    :func:`_inline_scored`).
+    Otherwise the query side (query_id, qv[, qlabel]) is broadcast into
+    a join with ``c`` scored by :func:`_staged_cosine`: ``join(q, c)``
+    returns ``(q, c, on)`` with the equi-join key columns added, and
+    without it the join is a cross join.  Either way the pairs then
+    pass the consumer's filter — ``qlabel != nlabel`` with
+    ``label_col``, else ``query_id != neighbor_id`` — and
+    :func:`_ranked`; the two paths are bit-identical on contract data."""
+    cols = [id_col, vec_col] + ([label_col] if label_col else [])
+    rows = (
+        _collect_inline_queries(queries, cols, vec_col, dim)
+        if dim is not None and inline
+        else None
+    )
+    if rows is not None:
+        scored = _inline_scored(
+            c, rows, dim, with_label=label_col is not None, prune_k=k, keys=keys
+        )
+    else:
+        q = queries.select(
+            *[F.col(a).alias(b) for a, b in zip(cols, ("query_id", "qv", "qlabel"))]
+        )
+        q, c, on = join(q, c) if join is not None else (q, c, None)
+        q, c, score = _staged_cosine(q, c, "qv", "cv", dim)
+        q = F.broadcast(q)
+        pairs = q.crossJoin(c) if on is None else q.join(c, on)
+        scored = pairs.withColumn("score", score)
+    if label_col:
+        pair = F.col("qlabel") != F.col("nlabel")
+    else:
+        pair = F.col("query_id") != F.col("neighbor_id")
+    return _ranked(scored.filter(pair).select("query_id", "neighbor_id", "score"), k)
+
+
 def brute_force_topk(
     queries: DataFrame,
     candidates: DataFrame,
@@ -433,13 +505,14 @@ def brute_force_topk(
     vec_col: str = "embedding",
     dim: int | None = None,
 ) -> DataFrame:
-    """Exact cosine top-k per query vector.
+    """Exact cosine top-k per query vector, self-matches excluded.
 
-    ``queries`` is expected to be small — Spark broadcasts it, so the scan
-    of ``candidates`` is a single pass with no shuffle of the big side;
-    ranking shuffles only (query × k-ish) rows.  Self-matches excluded.
-    With ``dim`` pinned by the caller's table contract the scoring pass
-    runs as staged-norm codegen (see :func:`_staged_cosine`).
+    ``queries`` is expected to be small: with ``dim`` pinned by the
+    caller's table contract and at most :data:`ANN_INLINE_MAX` queries
+    the scoring is one Arrow pass over ``candidates``; otherwise Spark
+    broadcasts the query side, so the scan of ``candidates`` is a single
+    pass with no shuffle of the big side (see :func:`_ann_topk`).
+    Ranking shuffles only (query × k-ish) rows.
     """
     from lab_flink_repository_analytics_spark.session import rebalance
 
@@ -448,59 +521,7 @@ def brute_force_topk(
     c = rebalance(candidates).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-
-    def ranked(scored):
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.col("rank").cast("int").alias("rank"),
-                F.round("score", 6).alias("cos_sim"),
-            )
-        )
-
-    rows = (
-        _collect_inline_queries(queries, [id_col, vec_col], vec_col, dim)
-        if dim is not None
-        else None
-    )
-    if rows is not None:
-        # Inlined bounded-query path (round-11): the cross join's
-        # BroadcastNestedLoopJoin multiplied rows before scoring and the
-        # giant per-pair expression hit the JIT's huge-method cliff on
-        # the execution a bench actually pays (see _inline_scored).
-        # With the query set driver-held, scoring is one vectorized
-        # Arrow pass over the candidate scan — no join at all — and
-        # bit-identical: the NumPy dot mirrors flat_dot's split order op
-        # for op, the query norm is the same IEEE sequence, and the self
-        # pair is filtered after scoring exactly as the join condition
-        # filtered it before.
-        scored = _inline_scored(c, rows, dim, prune_k=k, prune_self=True)
-        return ranked(
-            scored.filter(F.col("query_id") != F.col("neighbor_id")).select(
-                "query_id", "neighbor_id", "score"
-            )
-        )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-    q, c, score = _staged_cosine(q, c, "qv", "cv", dim)
-    scored = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            score.alias("score"),
-        )
-    )
-    return ranked(scored)
+    return _ann_topk(queries, c, k, id_col, vec_col, dim)
 
 
 # Fixed hyperplane seed constants for LSH bucketing (engine-portable:
@@ -657,6 +678,64 @@ def _bounded_quantizer(centroids: DataFrame) -> list | None:
     return sorted(rows, key=lambda r: r["cid"])
 
 
+def _np_quantizer(cent_rows: list):
+    """(cids, C, nc) of a driver-held quantizer in cid order: the int64
+    ids, the (k, dim) float64 centroid matrix and its parts=1
+    :func:`_np_flat_dot` norms (``nc`` is ``None`` for an empty one)."""
+    import numpy as np
+
+    cents = sorted(cent_rows, key=lambda r: r["cid"])
+    cids = np.asarray([int(r["cid"]) for r in cents], dtype=np.int64)
+    if not cents:
+        return cids, np.zeros((0, 0)), None
+    C = np.asarray([r["cv"] for r in cents], dtype=np.float64)
+    with np.errstate(over="ignore", invalid="ignore"):
+        nc = np.sqrt(_np_flat_dot(C, C, C.shape[1], 1))
+    return cids, C, nc
+
+
+def _np_top_centroids(V, bad, C, nc, m: int):
+    """(n, m) row indexes into the quantizer matrix ``C`` of each row of
+    ``V``'s ``m`` best centroids, best first — the one centroid argmax,
+    shared by :func:`_arrow_assignments` and :func:`ivf_topk`'s key
+    mask.  ``V``/``bad`` come from :func:`_np_dense` at ``C``'s width;
+    ``C``/``nc`` from :func:`_np_quantizer`.
+
+    The cosine is ``dot(v, c) / (‖v‖·‖c‖)`` with every dot the parts=1
+    :func:`_np_flat_dot` chain: the ``v[i]·c_i`` chain of
+    :func:`flat_dot`, bit-identical to the :func:`dot` fold the oracles'
+    ``_cos_sql`` mirrors (the chain differs from the fold only in the
+    sign of an all-(−0.0) dot, and ±0.0 tie below).  Rows outside the
+    width contract and zero divisors give NULL cosines — the
+    expression's value with ANSI off (ANSI on raises there).
+
+    Order: ascending ``(−cs, cid)`` under ``array_sort``'s struct rules —
+    a NULL ``−cs`` first, NaN greatest, −0.0 equal to +0.0, ties broken
+    by cid; ascending ``(−cs, cid)`` ≡ (cs DESC, cid ASC) on finite data.
+    So a contract-violating row's best centroid is the lowest cid."""
+    import numpy as np
+
+    k, dim = C.shape
+    # bound each (rows × k) cosine block to ~1M cells
+    block = max(1, (1 << 20) // max(1, k))
+    picks = [np.zeros((0, m), dtype=np.int64)]
+    for s in range(0, V.shape[0], block):
+        Vb = V[s : s + block]
+        with np.errstate(all="ignore"):
+            nv = np.sqrt(_np_flat_dot(Vb, Vb, dim, 1))
+            den = np.multiply.outer(nv, nc)
+            cs = _np_flat_dot(Vb[:, None, :], C[None, :, :], dim, 1) / den
+        null = den == 0
+        if bad is not None:
+            null |= bad[s : s + block, None]
+        nan = np.isnan(cs) & ~null
+        cls = np.where(null, 0, np.where(nan, 2, 1))
+        key = np.where(null | nan, 0.0, -cs)
+        col = np.broadcast_to(np.arange(k), cs.shape)
+        picks.append(np.lexsort((col, key, cls), axis=1)[:, :m])
+    return np.concatenate(picks)
+
+
 def _arrow_assignments(
     vectors: DataFrame,
     cent_rows: list,
@@ -665,44 +744,24 @@ def _arrow_assignments(
     vec_col: str,
 ) -> DataFrame:
     """Shuffle-free centroid assignment against a driver-held quantizer:
-    (id, v, cid, rn) with each vector's ``min(n_best, k)`` best centroids,
-    ``rn`` = 1, 2, …, in ONE ``mapInArrow`` pass (the
-    :func:`_inline_scored` shape: the centroids are model state, the
-    vectors arrive as Arrow batches, ``v`` passes through unchanged).
-
-    The cosine is ``dot(v, c) / (‖v‖·‖c‖)`` with every dot the parts=1
-    :func:`_np_flat_dot` chain over the centroid width ``dim``: the
-    ``v[i]·c_i`` chain of :func:`flat_dot`, bit-identical to the
-    :func:`dot` fold the oracles' ``_cos_sql`` mirrors (the chain differs
-    from the fold only in the sign of an all-(−0.0) dot, and ±0.0 tie
-    below).  Rows outside the width contract (:func:`_np_dense`) and zero
-    divisors give NULL cosines — the expression's value with ANSI off
-    (ANSI on raises there).
-
-    Order: ascending ``(−cs, cid)`` under ``array_sort``'s struct rules —
-    a NULL ``−cs`` first, NaN greatest, −0.0 equal to +0.0, ties broken
-    by cid; ascending ``(−cs, cid)`` ≡ (cs DESC, cid ASC) on finite data.
-    ``cid`` is INT, or BIGINT when a cid lies outside INT (the type the
-    literal form gave it)."""
+    (id, v, cid, rn) with each vector's ``min(n_best, k)`` best centroids
+    (:func:`_np_top_centroids` at the centroid width), ``rn`` = 1, 2, …,
+    in ONE ``mapInArrow`` pass (the :func:`_inline_scored` shape: the
+    centroids are model state, the vectors arrive as Arrow batches,
+    ``v`` passes through unchanged).  ``cid`` is INT, or BIGINT when a
+    cid lies outside INT (the type the literal form gave it)."""
     import numpy as np
     from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-    cents = sorted(cent_rows, key=lambda r: r["cid"])
-    k = len(cents)
+    cids, C, nc = _np_quantizer(cent_rows)
+    k, dim = C.shape
     m = min(int(n_best), k)
-    cids = np.asarray([int(r["cid"]) for r in cents], dtype=np.int64)
-    C = np.asarray([r["cv"] for r in cents], dtype=np.float64)
-    dim = C.shape[1] if k else 0
-    with np.errstate(over="ignore", invalid="ignore"):
-        nc = np.sqrt(_np_flat_dot(C, C, dim, 1)) if k else None
     int32 = k == 0 or np.abs(cids).max() < 2**31
     cid_type = IntegerType() if int32 else LongType()
     src = vectors.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     out_schema = StructType(
         [*src.schema.fields, StructField("cid", cid_type), StructField("rn", IntegerType())]
     )
-    # bound each (rows × k) cosine block to ~1M cells
-    block = max(1, (1 << 20) // max(1, k))
 
     def assign(batches):
         import pyarrow as pa
@@ -712,22 +771,7 @@ def _arrow_assignments(
             if n == 0 or m <= 0:
                 continue
             V, bad = _np_dense(b.column("v"), dim)
-            picks = []
-            for s in range(0, n, block):
-                Vb = V[s : s + block]
-                with np.errstate(all="ignore"):
-                    nv = np.sqrt(_np_flat_dot(Vb, Vb, dim, 1))
-                    den = np.multiply.outer(nv, nc)
-                    cs = _np_flat_dot(Vb[:, None, :], C[None, :, :], dim, 1) / den
-                null = den == 0
-                if bad is not None:
-                    null |= bad[s : s + block, None]
-                nan = np.isnan(cs) & ~null
-                cls = np.where(null, 0, np.where(nan, 2, 1))
-                key = np.where(null | nan, 0.0, -cs)
-                col = np.broadcast_to(np.arange(k), cs.shape)
-                picks.append(np.lexsort((col, key, cls), axis=1)[:, :m])
-            cid = cids[np.concatenate(picks)].reshape(-1)
+            cid = cids[_np_top_centroids(V, bad, C, nc, m)].reshape(-1)
             out = b if m == 1 else b.take(pa.array(np.repeat(np.arange(n), m)))
             yield pa.RecordBatch.from_arrays(
                 [
@@ -909,42 +953,44 @@ def ivf_topk(
     fraction of the data.  At scale the candidate side is written
     partitioned/bucketed by ``cid`` so a probe is a partition-pruned scan.
 
-    The quantizer is materialized ONCE and shared by both assignment
-    passes — a lazy ``centroids`` plan (e.g. :func:`sampled_centroids`'
-    TakeOrdered over the data table) would otherwise execute twice.
+    Bounded plan — a quantizer of at most :data:`MAX_INLINE_CENTROIDS`
+    centroids whose width is the pinned ``dim``, and at most
+    :data:`ANN_INLINE_MAX` queries: the driver computes each query's
+    probe lists (:func:`_np_top_centroids`), and one Arrow pass over the
+    candidates assigns each row its list with the same function and
+    scores it for the queries that probe that list — list membership is
+    :func:`_inline_scored`'s key mask, so there is no assignment pass, no
+    probe frame and no join.  Otherwise both sides are assigned and the
+    probes broadcast-join the candidates on ``cid``: through
+    :func:`_arrow_assignments` for a bounded quantizer, collected once
+    for both passes, or through :func:`_join_assignments` above the
+    bound, where the lazy ``centroids`` plan (e.g.
+    :func:`sampled_centroids`' TakeOrdered) executes once per side.
     """
-    rows = _bounded_quantizer(centroids)
-    if rows is not None:
-        cand = _arrow_assignments(candidates, rows, 1, id_col, vec_col)
-        probes = _arrow_assignments(queries, rows, nprobe, id_col, vec_col)
-    else:
-        cand = _join_assignments(candidates, centroids, 1, id_col, vec_col)
-        probes = _join_assignments(queries, centroids, nprobe, id_col, vec_col)
-    cand = cand.select(
-        F.col("id").alias("neighbor_id"), F.col("v").alias("cv2"), "cid"
+    cent = _bounded_quantizer(centroids)
+
+    def assign(df, idc, vc, n):
+        if cent is not None:
+            a = _arrow_assignments(df, cent, n, idc, vc)
+        else:
+            a = _join_assignments(df, centroids, n, idc, vc)
+        return a.select(F.col("id").alias(idc), F.col("v").alias(vc), "cid")
+
+    def join(q, c):
+        probes = assign(q, "query_id", "qv", nprobe)
+        return probes, assign(c, "neighbor_id", "cv", 1), "cid"
+
+    def keys(Q):
+        _, C, nc = _np_quantizer(cent)
+        probes = _np_top_centroids(Q, None, C, nc, max(0, min(nprobe, len(C))))
+        return (lambda V, bad: _np_top_centroids(V, bad, C, nc, 1)[:, 0]), probes
+
+    c = candidates.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
     )
-    probes = probes.select(
-        F.col("id").alias("query_id"), F.col("v").alias("qv"), "cid"
-    )
-    probes, cand, score = _staged_cosine(probes, cand, "qv", "cv2", dim)
-    scored = (
-        F.broadcast(probes)
-        .join(cand, on="cid")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", score.alias("score"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("int").alias("rank"),
-            F.round("score", 6).alias("cos_sim"),
-        )
+    inline = bool(cent) and len(cent[0]["cv"]) == dim
+    return _ann_topk(
+        queries, c, k, id_col, vec_col, dim, keys=keys, join=join, inline=inline
     )
 
 
@@ -961,69 +1007,34 @@ def lsh_topk(
 
     At scale the candidate side is pre-bucketed (partitioned/bucketed table
     on ``bucket``), so a query touches 1/2^nbits of the data.  With ``dim``
-    pinned by the caller's table contract, bucketing and scoring run as
-    codegen (see :func:`lsh_bucket` / :func:`_staged_cosine`).
+    pinned and a bounded query set, bucketing and scoring are one Arrow
+    pass: the bucket-equality join becomes :func:`_inline_scored`'s key
+    mask (:func:`_lsh_bucket_np`, Spark's NaN-greatest sign rule
+    mirrored; a contract-violating row's NULL bucket is key −1 and never
+    matches).  Otherwise the query side broadcast-joins the candidates on
+    ``bucket`` (:func:`lsh_bucket`, codegen with ``dim`` pinned).
     """
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
 
-    def ranked(scored):
+    def keys(Q):
+        def key_of(V, bad):
+            bucket = _lsh_bucket_np(V, nbits, dim)
+            if bad is not None:
+                bucket[bad] = -1
+            return bucket
+
+        return key_of, _lsh_bucket_np(Q, nbits, dim)[:, None]
+
+    def join(q, c):
         return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.col("rank").cast("int").alias("rank"),
-                F.round("score", 6).alias("cos_sim"),
-            )
+            q.withColumn("bucket", lsh_bucket("qv", nbits, dim=dim)),
+            c.withColumn("bucket", lsh_bucket("cv", nbits, dim=dim)),
+            "bucket",
         )
 
-    rows = (
-        _collect_inline_queries(queries, [id_col, vec_col], vec_col, dim)
-        if dim is not None
-        else None
-    )
-    if rows is not None:
-        # Inlined bounded-query path (round-11): candidate bucketing ran
-        # the 8-bit unrolled projection expression over EVERY candidate
-        # row — the same generated-code JIT cliff as the pair scoring
-        # (ann_recall_eval spent 60 s executor CPU here at the 100×
-        # replica's first execution).  The Arrow scorer computes buckets
-        # and scores in one vectorized pass; the bucket-equality join
-        # becomes the per-query bucket mask (bit-identical: same fold
-        # order, Spark's NaN-greatest sign rule mirrored, NULL-bucket
-        # rows never match).
-        c = candidates.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-        )
-        scored = _inline_scored(
-            c, rows, dim, prune_k=k, prune_self=True, nbits=nbits
-        )
-        return ranked(
-            scored.filter(F.col("query_id") != F.col("neighbor_id")).select(
-                "query_id", "neighbor_id", "score"
-            )
-        )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        lsh_bucket(vec_col, nbits, dim=dim).alias("bucket"),
-    )
     c = candidates.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        lsh_bucket(vec_col, nbits, dim=dim).alias("bucket"),
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
     )
-    q, c, score = _staged_cosine(q, c, "qv", "cv", dim)
-    scored = (
-        F.broadcast(q)
-        .join(c, on="bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", score.alias("score"))
-    )
-    return ranked(scored)
+    return _ann_topk(queries, c, k, id_col, vec_col, dim, keys=keys, join=join)
 
 
 def group_centroids(
@@ -1379,79 +1390,23 @@ def hard_negatives(
 ) -> DataFrame:
     """Hard-negative mining for contrastive training: per query, the top-k
     most cosine-similar candidates with a DIFFERENT label — the negatives
-    closest to the decision boundary.
+    closest to the decision boundary.  Output (query_id, neg_id, rank,
+    cos_sim).
 
-    Same plan as :func:`brute_force_topk` (broadcast the small query set,
-    one pass over candidates, per-query window top-k) plus the label
-    inequality pushed into the join condition so same-label pairs are
-    never scored.  At scale, swap the candidate scan for the IVF/LSH
-    bucketed variants exactly as with ANN.
+    Same plan as :func:`brute_force_topk` with the label inequality as
+    the pair filter (NULL labels never pair).  At scale, swap the
+    candidate scan for the IVF/LSH bucketed variants exactly as with ANN.
     """
     from lab_flink_repository_analytics_spark.session import rebalance
 
     c = rebalance(candidates).select(
-        F.col(id_col).alias("neg_id"),
+        F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
         F.col(label_col).alias("nlabel"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neg_id"))
-
-    def ranked(scored):
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(
-                "query_id",
-                "neg_id",
-                F.col("rank").cast("int").alias("rank"),
-                F.round("score", 6).alias("cos_sim"),
-            )
-        )
-
-    rows = (
-        _collect_inline_queries(
-            queries, [id_col, vec_col, label_col], vec_col, dim
-        )
-        if dim is not None
-        else None
-    )
-    if rows is not None:
-        # Inlined bounded-query path (round-11): the label-inequality
-        # join is a BroadcastNestedLoopJoin that multiplied rows before
-        # the giant per-pair score expression, which pays the JIT
-        # huge-method cliff on first execution (measured at the 10×
-        # replica: 4.14 s r9 fold → 9.34 s r10 flat executor CPU).  The
-        # vectorized Arrow scorer (see _inline_scored) is bit-identical
-        # and stable; the label filter applies after scoring with
-        # identical null semantics (NOT(NULL = x) dropped the pair in
-        # the join; NULL qlabel != x drops it here).
-        scored = _inline_scored(
-            c.withColumnRenamed("neg_id", "neighbor_id"),
-            rows,
-            dim,
-            with_label=True,
-            prune_k=k,
-        )
-        return ranked(
-            scored.filter(F.col("qlabel") != F.col("nlabel"))
-            .select(
-                "query_id",
-                F.col("neighbor_id").alias("neg_id"),
-                "score",
-            )
-        )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        F.col(label_col).alias("qlabel"),
-    )
-    q, c, score = _staged_cosine(q, c, "qv", "cv", dim)
-    scored = (
-        F.broadcast(q)
-        .join(c, F.col("qlabel") != F.col("nlabel"))
-        .select("query_id", "neg_id", score.alias("score"))
-    )
-    return ranked(scored)
+    return _ann_topk(
+        queries, c, k, id_col, vec_col, dim, label_col=label_col
+    ).withColumnRenamed("neighbor_id", "neg_id")
 
 
 def kmeans_lloyd_df(

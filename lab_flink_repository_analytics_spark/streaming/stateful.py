@@ -21,7 +21,6 @@ from __future__ import annotations
 
 import re
 from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -117,64 +116,6 @@ def email_profiles_stream(emails: DataFrame) -> DataFrame:
             _STATE_SCHEMA,
             "update",
             GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-try:  # Spark 4+ (SPARK-49564); keep the module importable on older Sparks
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-except ImportError:  # pragma: no cover
-    StatefulProcessor = object  # type: ignore[assignment,misc]
-
-
-class _EmailProfileProcessor(StatefulProcessor):
-    """``transformWithState`` twin of ``_update_profile`` — Spark 4's
-    successor API: explicit named state slots on the handle, optional
-    per-state TTL, timers for eviction.  Requires the RocksDB state-store
-    provider (the API is implemented only there).
-    """
-
-    def init(self, handle) -> None:
-        # TTL (ttlDurationMs) is the scale story for abandoned keys: the
-        # reference keeps accumulator state forever; at 100 TB stream scale
-        # pass a TTL so dormant people age out of RocksDB.
-        self._profile = handle.getValueState("profile", _STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        prior = self._profile.get()
-        if prior is not None:
-            aliases, company, since = list(prior[0]), prior[1], prior[2]
-        else:
-            aliases, company, since = [], None, None
-        aliases, company, since = _fold_profile(aliases, company, since, rows)
-        self._profile.update((aliases, company, since))
-        yield _profile_row(key, aliases, company, since)
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        return iter(())
-
-    def handleInitialState(self, key, initialState, timerValues) -> None:
-        pass
-
-    def close(self) -> None:
-        pass
-
-
-def email_profiles_stream_v2(emails: DataFrame) -> DataFrame:
-    """``email_profiles_stream`` on ``transformWithStateInPandas``.
-
-    Same semantics and output schema as the ``applyInPandasWithState``
-    version; run it with the RocksDB provider
-    (``get_spark(rocksdb_state=True)`` or per-query conf).
-    """
-    return (
-        emails.select("person", "email", "ts")
-        .groupBy("person")
-        .transformWithStateInPandas(
-            statefulProcessor=_EmailProfileProcessor(),
-            outputStructType=PROFILE_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
         )
     )
 

@@ -246,6 +246,85 @@ def test_ivf_topk_recall_vs_brute(spark):
             assert abs(bs[key] - r["cos_sim"]) < 1e-9
 
 
+def _ivf_probe_join(queries, candidates, centroids, k, nprobe, dim):
+    """Reference copy of the probes ⋈ candidates plan the bounded
+    ivf_topk replaced: both sides assigned by the Arrow kernel, the
+    probe set broadcast-joined onto the inverted lists on cid, scored
+    by the staged cosine and ranked per query."""
+    from pyspark.sql import Window
+
+    rows = SIM._bounded_quantizer(centroids)
+    cand = SIM._arrow_assignments(candidates, rows, 1, "vec_id", "embedding").select(
+        F.col("id").alias("neighbor_id"), F.col("v").alias("cv2"), "cid"
+    )
+    probes = SIM._arrow_assignments(queries, rows, nprobe, "vec_id", "embedding").select(
+        F.col("id").alias("query_id"), F.col("v").alias("qv"), "cid"
+    )
+    probes, cand, score = SIM._staged_cosine(probes, cand, "qv", "cv2", dim)
+    scored = (
+        F.broadcast(probes)
+        .join(cand, on="cid")
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id", score.alias("score"))
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("score").desc(), F.col("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.col("rank").cast("int").alias("rank"),
+            F.round("score", 6).alias("cos_sim"),
+        )
+    )
+
+
+def test_ivf_topk_bounded_matches_probe_join(spark):
+    # the bounded ivf_topk scores inverted lists through the Arrow
+    # scorer's key mask; its rows must equal the probe join's
+    dim = 4
+    cents = spark.createDataFrame(
+        [
+            (0, [1.0, 0.0, 0.0, 0.0]),
+            (1, [0.0, 1.0, 0.0, 0.0]),
+            (2, [1.0, 0.0, 0.0, 0.0]),  # = cid 0: every cosine ties; list stays empty
+            (3, [0.0, 0.0, 1.0, 0.0]),
+            (4, [0.0, 0.0, 0.0, -1.0]),  # no query probes it below nprobe 3
+        ],
+        "cid int, cv array<double>",
+    )
+    vecs = [
+        [1.0, 0.1, 0.0, 0.0],
+        [1.0, 0.2, 0.05, 0.0],
+        [0.9, 0.0, 0.3, 0.0],
+        [0.0, 1.0, 1.0, 0.0],  # ties across cids 1 and 3
+        [0.0, 2.0, 2.0, 0.0],  # same cosines as the row above
+        [0.1, 1.0, 0.0, 0.2],
+        [0.0, 0.3, 1.0, 0.1],
+        [0.2, 0.0, 0.9, 0.0],
+        [0.0, 0.0, 0.1, -1.0],
+        [0.1, 0.1, 0.0, -0.8],
+        [1.0, 0.1, 0.0, 0.0],  # duplicate of row 0: score ties on id
+        [0.5, 0.5, 0.5, 0.5],
+    ]
+    rows = [(f"v{i:02d}", v) for i, v in enumerate(vecs)]
+    rows += [("v90", None), ("v91", [1.0, None, 0.0, 0.0])]  # NULL scores, list 0
+    emb = spark.createDataFrame(
+        rows, "vec_id string, embedding array<double>"
+    ).repartition(2)
+    # v00 and v03 are candidates too: each query sits inside its own list
+    q = emb.filter(F.col("vec_id").isin("v00", "v03", "v07"))
+    for nprobe in (1, 2, 5, 7):
+        for k in (3, 20):
+            got = SIM.ivf_topk(q, emb, cents, k=k, nprobe=nprobe, dim=dim)
+            assert "Join" not in got._jdf.queryExecution().executedPlan().toString()
+            want = _ivf_probe_join(q, emb, cents, k, nprobe, dim)
+            assert _topk_rows(got) == _topk_rows(want), (nprobe, k)
+
+
 def test_kmeans_centroids_trainer(spark):
     try:
         import pyspark.ml  # noqa: F401

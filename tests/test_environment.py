@@ -83,14 +83,14 @@ def test_python_datasource_api_present():
 
 
 def test_transform_with_state_available(spark):
-    """streaming/stateful.py uses transformWithStateInPandas; assert the
-    handle API exists on this runtime."""
+    """Spark 4's named-state streaming API (``transformWithStateInPandas``,
+    the successor of the ``applyInPandasWithState`` that
+    streaming/stateful.py uses) exists on this runtime."""
     try:
         from pyspark.sql.streaming.stateful_processor import (  # noqa: F401
             StatefulProcessor,
         )
     except ImportError:
         pytest.fail(
-            "pyspark.sql.streaming.stateful_processor gone — "
-            "streaming/stateful.py needs a port to this runtime"
+            "pyspark.sql.streaming.stateful_processor gone on this runtime"
         )

@@ -102,6 +102,15 @@ def test_ann_broadcasts_queries(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" in _plan(df) or "BroadcastHashJoin" in _plan(df)
 
 
+def test_bounded_ivf_topk_scores_probes_in_one_arrow_pass(spark, sf_dir):
+    """A bounded quantizer and query set at the pinned width: the probe
+    lists are the scorer's key mask, so the candidates are assigned and
+    scored in one MapInArrow pass, with no probes⋈candidates join."""
+    plan = _plan(suite.ann_ivf_topk(spark, sf_dir))
+    assert "MapInArrow" in plan, plan
+    assert "BroadcastHashJoin" not in plan, plan
+
+
 def test_top_n_per_group_has_partial_window_limit(spark, sf_dir):
     # rank-limit pushdown: a Partial WindowGroupLimit BEFORE the exchange
     # prunes each map partition to N rows per key — the difference between

@@ -5,7 +5,6 @@ from __future__ import annotations
 
 from datetime import datetime
 
-import pytest
 from pyspark.sql import functions as F
 
 from lab_flink_repository_analytics_spark import schemas
@@ -352,136 +351,6 @@ def test_stream_stream_interval_join(spark, tmp_path):
         for r in spark.read.parquet(out).collect()
     }
     assert got == {(100, 1), (101, 3)}
-
-
-def test_transform_with_state_profiles_across_batches(spark, tmp_path):
-    # the Spark 4 transformWithStateInPandas twin must match the
-    # applyInPandasWithState semantics exactly; it only runs on RocksDB.
-    # Its Python state-server protocol needs the protobuf runtime, which
-    # this container doesn't ship — skip (not fail) where it's absent; the
-    # operator itself is plain Spark-4 API and runs wherever pyspark's
-    # optional protobuf dependency is installed.
-    pytest.importorskip("google.protobuf")
-    from lab_flink_repository_analytics_spark.session import ROCKSDB_PROVIDER
-    from lab_flink_repository_analytics_spark.streaming import stateful
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, ROCKSDB_PROVIDER)
-    src = str(tmp_path / "emails")
-    out = str(tmp_path / "profiles")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "person string, email string, ts timestamp"
-
-    def run():
-        emails = (
-            spark.readStream.schema(schema).parquet(src).withWatermark("ts", "1 day")
-        )
-        profiles = stateful.email_profiles_stream_v2(emails)
-
-        def _upsert(batch_df, batch_id):
-            if not batch_df.isEmpty():
-                sinks.upsert_by_key(
-                    batch_df.sparkSession, batch_df, out, ["person"]
-                )
-
-        q = (
-            profiles.writeStream.outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(_upsert)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    try:
-        batch1 = [
-            ("john", "john@test.com", datetime(2021, 1, 1)),
-            ("john", "john@gmail.com", datetime(2021, 1, 2)),
-            ("jane", "jane@data-artisans.com", datetime(2021, 1, 1)),
-        ]
-        spark.createDataFrame(batch1, schema).write.mode("append").parquet(src)
-        run()
-        got = {r["person"]: r for r in spark.read.parquet(out).collect()}
-        assert got["john"]["company"] == "test.com"
-        assert got["john"]["aliases"] == ["john@test.com", "john@gmail.com"]
-        assert got["jane"]["company"] == "ververica.com"
-
-        batch2 = [("john", "john@new.io", datetime(2021, 2, 1))]
-        spark.createDataFrame(batch2, schema).write.mode("append").parquet(src)
-        run()
-        got2 = {r["person"]: r for r in spark.read.parquet(out).collect()}
-        assert got2["john"]["company"] == "new.io"
-        assert got2["john"]["companySince"] == datetime(2021, 2, 1)
-        assert got2["john"]["aliases"] == [
-            "john@test.com",
-            "john@gmail.com",
-            "john@new.io",
-        ]
-        assert got2["jane"]["company"] == "ververica.com"
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-
-def test_transform_with_state_processor_parity_in_process():
-    # drive the StatefulProcessor directly with a fake handle: the fold
-    # must match the applyInPandasWithState twin across two "batches"
-    import pandas as pd
-
-    from lab_flink_repository_analytics_spark.streaming.stateful import (
-        _EmailProfileProcessor,
-    )
-
-    class FakeValueState:
-        def __init__(self):
-            self._v = None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    class FakeHandle:
-        def __init__(self):
-            self.state = FakeValueState()
-
-        def getValueState(self, name, schema, ttlDurationMs=None):
-            return self.state
-
-    proc = _EmailProfileProcessor()
-    handle = FakeHandle()
-    proc.init(handle)
-
-    b1 = pd.DataFrame(
-        {
-            "person": ["john", "john"],
-            "email": ["john@test.com", "john@gmail.com"],
-            "ts": [datetime(2021, 1, 1), datetime(2021, 1, 2)],
-        }
-    )
-    (out1,) = list(proc.handleInputRows(("john",), iter([b1]), None))
-    assert out1.iloc[0]["company"] == "test.com"  # freemail excluded
-
-    b2 = pd.DataFrame(
-        {
-            "person": ["john"],
-            "email": ["john@new.io"],
-            "ts": [datetime(2021, 2, 1)],
-        }
-    )
-    (out2,) = list(proc.handleInputRows(("john",), iter([b2]), None))
-    assert out2.iloc[0]["company"] == "new.io"
-    assert out2.iloc[0]["companySince"] == datetime(2021, 2, 1)
-    assert out2.iloc[0]["aliases"] == [
-        "john@test.com",
-        "john@gmail.com",
-        "john@new.io",
-    ]
-    proc.close()
 
 
 def test_stateful_profiles_on_rocksdb_state_store(spark, tmp_path):

@@ -7,7 +7,7 @@ reintroduce one:
 * ``CartesianProduct`` — never acceptable;
 * ``BroadcastNestedLoopJoin`` — acceptable ONLY for the one-row scalar
   broadcast pattern (``crossJoin(broadcast(<global agg>))`` — N, avgdl,
-  thresholds, the ANN query set); anything else is an unkeyed join;
+  thresholds); anything else is an unkeyed join;
 * ``Exchange SinglePartition`` — acceptable ONLY for queries whose final
   output is a single (or bounded) row set reduced by partial aggregation
   first, or whose windowed input is domain-bounded (documented per entry).
@@ -28,20 +28,14 @@ SF_DIR = "/root/testdata/sf0.001"
 #: broadcast ONE-ROW aggregate (scalar-subquery pattern); the loop side is
 #: a single row, so "nested loop" degenerates to a map-side constant join
 BNLJ_OK = {
-    "ann_cosine_topk",  # broadcast query set (bounded, ≪ corpus)
-    "ann_ivf_topk",  # broadcast probe set + centroids
     "q22_idle_accounts",  # broadcast scalar avg(acctbal)
     "tfidf_top_terms",  # broadcast scalar N
     "bm25_top_terms",  # broadcast scalar (N, avgdl)
     "dq_checks",  # broadcast scalar totals per rule
     "copurchase_triangles",  # broadcast scalar wedge/triangle counts
-    "hard_negative_mining",  # broadcast query set (bounded, ≪ corpus)
-    "semantic_dedup",  # broadcast 16-centroid quantizer (as ann_ivf_topk)
     "bigram_lm_scores",  # broadcast scalar vocab size V
     "source_mixture_weights",  # broadcast one-row (tot_tokens, tot_sqrt) normalizer
-    "ann_recall_eval",  # broadcast query set on BOTH sides (as ann_cosine_topk/ann_lsh_topk)
     "mixture_token_quotas",  # broadcast one-row normalizer + one-row leftover count
-    "quota_fill_counts",  # embeds mixture_token_quotas (same one-row broadcasts)
 }
 
 #: queries allowed an Exchange SinglePartition — every one is a
@@ -59,14 +53,10 @@ SINGLE_PARTITION_OK = {
     "dq_checks",  # fixed 4-rule summary rows
     "copurchase_triangles",  # scalar triangle/wedge/edge counts
     "monthly_revenue_growth",  # month-cardinality window (bounded ~100s)
-    "mixture_sample_counts",  # #groups quota rows
     "bigram_lm_scores",  # scalar vocab-size reduction (partial-agg first)
     "source_mixture_weights",  # scalar normalizer over #sources pre-aggregated rows
     "lsh_dedup_eval",  # one-row precision/recall counters (partial-agg first)
     "mixture_token_quotas",  # global remainder-rank window over #sources rows (bounded by contract)
-    "quota_fill_counts",  # embeds the same bounded remainder-rank window
-    "bpe_fertility_by_source",  # BPE argmax reduction (as bpe_merges/bpe_token_counts)
-    "length_bucket_stats",  # log2-bounded bucket count (≤ ~30 groups)
 }
 
 

@@ -27,9 +27,9 @@ SHOW = [
     ("q5_local_supplier_volume", "star join: all four dims broadcast onto the lineitem⋈orders backbone"),
     ("commit_activity", "explode pipelined into the scan stage; single hash exchange for the window agg"),
     ("minhash_signatures", "explode→hash in codegen; one aggregation computes all permutation minima"),
-    ("near_dup_pairs", "banded self-join on band keys; signature exchange reused on both sides"),
+    ("near_dup_pairs", "reads the session-shared LSH candidate build (eagerly checkpointed): one Scan ExistingRDD, no join of its own"),
     ("winnowing_fingerprints", "posexplode→hash-once→sliding window min; groupBy reuses the window partitioning"),
-    ("ann_ivf_topk", "centroids broadcast; probes broadcast onto inverted lists"),
+    ("ann_ivf_topk", "driver-held quantizer and probe lists: one MapInArrow pass assigns and scores the candidates, no join; window top-k"),
     ("embedding_near_dup", "small side broadcast; per-row norms computed pre-join"),
     ("asof_purchase_view", "as-of join as union + carry-forward window: ONE hash exchange, no nested-loop"),
     ("interval_click_context", "interval join as bucketed equi-join; left-outer count with no dedup pass"),
@@ -62,7 +62,7 @@ SHOW = [
     ("quantization_error_by_label", "int8 quantize: row-local transform + exact-DECIMAL fold, one label rollup"),
     ("mixture_sample_counts", "mixture quota: hash-filter scan, zero data shuffles before the rollup"),
     ("semantic_dedup", "SemDeDup: inlined-quantizer assignment (no shuffle), cosine confined to one cluster join"),
-    ("hard_negative_mining", "broadcast query set with label inequality in the join; per-query window top-k"),
+    ("hard_negative_mining", "driver-held query set: one MapInArrow scoring pass with the label inequality, no join; per-query window top-k"),
     ("boilerplate_gram_frac", "positions pre-aggregated to doc-gram multiplicities; frequent-gram join back"),
     ("bigram_lm_scores", "doc-bigram multiplicities feed both the model rollup and the scoring join"),
     ("kmeans_clusters", "Lloyd iteration: inlined-centroid assignment (no shuffle) + one (cluster,dim) agg"),
