@@ -306,8 +306,8 @@ def embedding_near_dup_pairs(
     threshold: float = 0.3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
-    dot_parts: int = 8,
+    *,
+    dim: int,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs within a blocking key.
 
@@ -317,23 +317,22 @@ def embedding_near_dup_pairs(
     any partition column).  The join is hash-partitioned on the block key,
     never all-pairs; norms are computed once per row before the join.
 
-    ``dim``: pass the (constant) embedding width to keep the call a LAZY
-    plan — with ``dim=None`` a full min/max-width probe over ``emb`` runs
-    eagerly to prove the width uniform, an extra full input pass at every
-    scale (round-9 advisor fix).  The width contract is enforced by a
-    cheap PRE-join row filter (``size(v) == dim``, pushed toward the
-    scan): a mismatched-width row drops with all its pairs — the fate
-    ragged pairs meet under the fold form — and every surviving row is
-    exactly ``dim`` wide, so the unrolled ``flat_dot`` (GetArrayItem,
-    which throws on out-of-bounds under ANSI) can never see a short
-    array.  On probe-proven or contract-conforming data the filter is a
-    no-op: values and hashes unchanged.
+    ``dim`` is the (constant) embedding width of the caller's table
+    contract, so building the call is a LAZY plan with no width probe.
+    The contract is enforced by a cheap PRE-join row filter
+    (``size(v) == dim``, pushed toward the scan): a mismatched-width row
+    drops with all its pairs, and every surviving row is exactly ``dim``
+    wide, so the unrolled ``flat_dot`` (GetArrayItem, which throws on
+    out-of-bounds under ANSI) can never see a short array.  On
+    contract-conforming data the filter is a no-op: values and hashes
+    unchanged.
 
     Plan notes, measured at the /tmp/scale replicas (round 9):
 
     * The pair cosine is the codegen-unrolled ``similarity.flat_dot``
-      with ``parts=dot_parts`` (default 8): the split-partials order —
-      8 left-associated partial sums combined left-associatively.  This
+      with ``parts=similarity.COSINE_SPLIT_PARTS`` (8): the
+      split-partials order — 8 left-associated partial sums combined
+      left-associatively.  This
       is a deterministic but DIFFERENT IEEE order from the fold, so the
       oracle mirrors it with explicit per-term SQL
       (``suite._dot_split_sql``).  Round-10 cold fresh-JVM measurements
@@ -341,9 +340,10 @@ def embedding_near_dup_pairs(
       broadcast, ~4% faster under sort-merge at sf1, ~14% faster at
       sf0.1, never slower — and the Add spine drops from dim-deep to
       ~dim/8-deep, which keeps driver planning flat if dim grows.  The
-      fold form evaluates through the interpreted HigherOrderFunction
-      path (ZipWith.eval) wherever it lands in a join condition and
-      never finished a rep at the 100× replica (round 8).
+      zip_with/aggregate fold evaluated through the interpreted
+      HigherOrderFunction path (ZipWith.eval) wherever it landed in a
+      join condition and never finished a rep at the 100× replica
+      (round 8).
     * The threshold filter must NOT reach the join: under the
       sort-merge regime (build side above the broadcast threshold —
       the 100-TB regime) a pushed predicate becomes ONE generated
@@ -364,23 +364,9 @@ def embedding_near_dup_pairs(
     from lab_flink_repository_analytics_spark.datapipe import similarity as SIM
     from lab_flink_repository_analytics_spark.session import rebalance
 
-    if dim is None:
-        dim_row = emb.agg(
-            F.min(F.size(vec_col)).alias("lo"),
-            F.max(F.size(vec_col)).alias("hi"),
-        ).first()
-        dim = (
-            int(dim_row["lo"])
-            if dim_row is not None
-            and dim_row["lo"] is not None
-            and dim_row["lo"] == dim_row["hi"]
-            else None
-        )
-    if dim is not None:
-        emb = emb.filter(F.size(vec_col) == F.lit(dim))  # width contract
-        nrm = F.sqrt(SIM.flat_dot(vec_col, vec_col, dim, parts=dot_parts))
-    else:  # empty input or probe-found ragged widths: fold norm
-        nrm = SIM.norm(vec_col)
+    p = SIM.COSINE_SPLIT_PARTS
+    emb = emb.filter(F.size(vec_col) == F.lit(dim))  # width contract
+    nrm = F.sqrt(SIM.flat_dot(vec_col, vec_col, dim, parts=p))
     sel = rebalance(emb).select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
@@ -391,11 +377,8 @@ def embedding_near_dup_pairs(
     cond = [F.col(f"l.{c}") == F.col(f"r.{c}") for c in block_cols] + [
         F.col("l.id") < F.col("r.id")
     ]
-    if dim is not None:
-        # string names → flat_dot's one-parse expr construction path
-        dot_lr = SIM.flat_dot("l.v", "r.v", dim, parts=dot_parts)
-    else:
-        dot_lr = SIM.dot(F.col("l.v"), F.col("r.v"))
+    # string names → flat_dot's one-parse expr construction path
+    dot_lr = SIM.flat_dot("l.v", "r.v", dim, parts=p)
     cos = dot_lr / (F.col("l.nrm") * F.col("r.nrm"))
     # additive nondeterministic-zero pin — see the docstring's plan notes
     pin = F.when(F.monotonically_increasing_id() >= 0, F.lit(0.0))

@@ -6,6 +6,17 @@ scored in one Arrow pass over the candidates, with the LSH bucket or the
 IVF inverted list as a per-query key mask; an unbounded one is broadcast
 into a join.  Both end in one per-query ranking window (:func:`_ranked`).
 
+Width contract: every vector kernel takes the embedding width as a
+required ``dim`` (the caller's table contract) or measures it from the
+model state it already holds (:func:`kmeans_lloyd_df`'s initial
+centroids), so each kernel has one width-pinned plan — codegen
+:func:`flat_dot` chains, flat per-dimension aggregates, or the NumPy
+Arrow scorers.  The width-agnostic :func:`dot` fold remains only where a
+plan must score vectors of unknown width (:func:`semdedup`'s ragged
+fallback, :func:`_join_assignments`, the routed level of
+:func:`hierarchical_assignments`) and for :func:`mean_pairwise_cosine`'s
+norms and self-dots.
+
 All float math is double-precision with a fixed left-to-right fold order so
 the DuckDB oracle can reproduce scores.
 """
@@ -28,7 +39,7 @@ def _lit_d(x: float) -> str:
     string→DOUBLE cast included — so ``CAST('<repr>' AS DOUBLE)`` folds
     to a literal bit-identical to ``F.lit(x)`` without a py4j call.
     Non-finite values have engine-specific spellings; callers here only
-    inline finite model state (hyperplanes, PCA means and components)."""
+    inline finite model state (hyperplanes, sketch matrices)."""
     import math
 
     if not math.isfinite(x):
@@ -84,9 +95,8 @@ def flat_dot(a: str, b: str, dim: int, parts: int = 1) -> Column:
     IEEE double sequence as the fold's ``((0.0 + x0·y0) + x1·y1) + …``
     because ``0.0 + x == x`` for every non-NaN double — so swapping it in
     changes no result hash, and the DuckDB oracles keep their
-    ``list_sum`` form.  Requires the physical array width; callers probe
-    it from the data (``F.size``) and fall back to :func:`dot` when
-    unknown.
+    ``list_sum`` form.  Requires the physical array width: every caller
+    passes its table contract's ``dim`` (see the module docstring).
 
     ``parts>1`` — split-partials order: the terms are grouped into
     ``parts`` consecutive left-associated partial sums, combined
@@ -193,7 +203,7 @@ COSINE_SPLIT_PARTS = 8
 
 
 def _staged_cosine(
-    q: DataFrame, c: DataFrame, qv: str, cv: str, dim: int | None
+    q: DataFrame, c: DataFrame, qv: str, cv: str, dim: int
 ) -> tuple:
     """(q', c', score) for a pair-scoring join: with the vector width
     pinned by the caller's table contract, each side's norm is staged
@@ -204,10 +214,7 @@ def _staged_cosine(
     zip_with/aggregate fold (round-10, guide §4 — the same staged shape
     :func:`semdedup`'s pair scan uses).  The split summation order is a
     DIFFERENT (fully deterministic) IEEE sequence from the fold, so
-    oracles of width-pinned callers mirror it via ``_dot_split_sql``.
-    ``dim=None`` keeps the fold form for generic/ragged callers."""
-    if dim is None:
-        return q, c, cosine(qv, cv)
+    oracles mirror it via ``_dot_split_sql``."""
     p = COSINE_SPLIT_PARTS
     qs = q.withColumn("_nq", F.sqrt(flat_dot(qv, qv, dim, parts=p)))
     cs = c.withColumn("_nc", F.sqrt(flat_dot(cv, cv, dim, parts=p)))
@@ -448,7 +455,7 @@ def _ann_topk(
     k: int,
     id_col: str,
     vec_col: str,
-    dim: int | None,
+    dim: int,
     label_col: str | None = None,
     keys=None,
     join=None,
@@ -458,7 +465,7 @@ def _ann_topk(
     ANN operators, scoring ``queries`` against the candidate frame ``c``
     (``neighbor_id``, ``cv``[, ``nlabel``]).
 
-    Bounded path — ``dim`` pinned, ``inline``, and a query side that
+    Bounded path — ``inline`` and a query side that
     :func:`_collect_inline_queries` accepts: one :func:`_inline_scored`
     Arrow pass over ``c`` with the key mask ``keys`` and batch-local
     top-k pruning — no join, which would multiply rows before a per-pair
@@ -472,11 +479,7 @@ def _ann_topk(
     ``label_col``, else ``query_id != neighbor_id`` — and
     :func:`_ranked`; the two paths are bit-identical on contract data."""
     cols = [id_col, vec_col] + ([label_col] if label_col else [])
-    rows = (
-        _collect_inline_queries(queries, cols, vec_col, dim)
-        if dim is not None and inline
-        else None
-    )
+    rows = _collect_inline_queries(queries, cols, vec_col, dim) if inline else None
     if rows is not None:
         scored = _inline_scored(
             c, rows, dim, with_label=label_col is not None, prune_k=k, keys=keys
@@ -503,15 +506,16 @@ def brute_force_topk(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
+    *,
+    dim: int,
 ) -> DataFrame:
     """Exact cosine top-k per query vector, self-matches excluded.
 
-    ``queries`` is expected to be small: with ``dim`` pinned by the
-    caller's table contract and at most :data:`ANN_INLINE_MAX` queries
-    the scoring is one Arrow pass over ``candidates``; otherwise Spark
-    broadcasts the query side, so the scan of ``candidates`` is a single
-    pass with no shuffle of the big side (see :func:`_ann_topk`).
+    ``queries`` is expected to be small: with at most
+    :data:`ANN_INLINE_MAX` queries the scoring is one Arrow pass over
+    ``candidates``; otherwise Spark broadcasts the query side, so the
+    scan of ``candidates`` is a single pass with no shuffle of the big
+    side (see :func:`_ann_topk`).
     Ranking shuffles only (query × k-ish) rows.
     """
     from lab_flink_repository_analytics_spark.session import rebalance
@@ -530,13 +534,6 @@ def brute_force_topk(
 LSH_NBITS = 8
 
 
-def _hyperplane_sign(bit: int, dim_index: Column) -> Column:
-    """Column form of :func:`_hyperplane_signs` for a width-unknown
-    vector (``dim_index`` is the element position)."""
-    v = (dim_index * (2 * bit + 3) + bit * 7) % 4
-    return F.when(v < 2, F.lit(1.0)).otherwise(F.lit(-1.0))
-
-
 def _hyperplane_signs(nbits: int, dim: int) -> list[list[float]]:
     """The ±1.0 components of LSH hyperplanes ``0..nbits-1`` at width
     ``dim``, shared by the SQL-text and NumPy bucket paths.
@@ -551,58 +548,24 @@ def _hyperplane_signs(nbits: int, dim: int) -> list[list[float]]:
     ]
 
 
-def lsh_bucket(
-    vec: Column | str, nbits: int = LSH_NBITS, dim: int | None = None
-) -> Column:
-    """Random-hyperplane LSH bucket id (0..2^nbits-1) for a vector.
-
-    With ``dim`` pinned by the caller's table contract, each bit's
-    projection unrolls to a flat codegen sum (one ``F.expr`` parse)
-    instead of ``nbits`` interpreted zip_with/aggregate folds per row
-    (round-10, guide §4).  Value-identical: the fold's ``0.0 + x₀``
-    equals ``x₀`` for every non-NaN double, ±1.0 multiplication is
-    exact, and the only +0.0/−0.0 divergence a dropped leading zero can
-    introduce is erased by the ``proj > 0`` comparison (−0.0 > 0 and
-    +0.0 > 0 are both false)."""
-    if dim is not None and isinstance(vec, str):
-        return F.expr(_lsh_bucket_text(vec, nbits, dim))
-    v = _c(vec)
-    idx = F.sequence(F.lit(0), F.size(v) - 1)
-    bits = []
-    for b in range(nbits):
-        proj = F.aggregate(
-            F.zip_with(
-                v,
-                idx,
-                lambda x, i: x.cast("double") * _hyperplane_sign(b, i),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(proj > 0, F.lit(1 << b)).otherwise(F.lit(0)))
-    out = bits[0]
-    for bcol in bits[1:]:
-        out = out + bcol
-    return out.cast("int")
-
-
-def _lsh_bucket_text(v: str, nbits: int, dim: int) -> str:
-    """SQL text of :func:`lsh_bucket` for a fixed-width vector column:
-    per bit the parts=1 :func:`_flat_dot_text` chain against the ±1.0
-    hyperplane, then the same CASE/add/cast chain."""
+def lsh_bucket(vec: str, nbits: int = LSH_NBITS, *, dim: int) -> Column:
+    """Random-hyperplane LSH bucket id (0..2^nbits-1) of the ``dim``-wide
+    vector column ``vec``: per bit the parts=1 :func:`_flat_dot_text`
+    chain against the ±1.0 hyperplane (one codegen ``F.expr`` parse),
+    its sign as the bit, the bits summed into an INT."""
     bits = [
-        f"(CASE WHEN ({_flat_dot_text(v, signs, dim)}) > CAST(0.0 AS DOUBLE)"
+        f"(CASE WHEN ({_flat_dot_text(vec, signs, dim)}) > CAST(0.0 AS DOUBLE)"
         f" THEN {1 << b} ELSE 0 END)"
         for b, signs in enumerate(_hyperplane_signs(nbits, dim))
     ]
     total = bits[0]
     for t in bits[1:]:
         total = f"({total} + {t})"
-    return f"CAST(({total}) AS INT)"
+    return F.expr(f"CAST(({total}) AS INT)")
 
 
 def _lsh_bucket_np(V, nbits: int, dim: int):
-    """NumPy evaluation of :func:`_lsh_bucket_text` over a float64 row
+    """NumPy evaluation of :func:`lsh_bucket` over a float64 row
     matrix: per bit the parts=1 :func:`_np_flat_dot` against the
     hyperplane row, bit-identical to the expression for every row —
     the sign test follows Spark's comparison, where NaN is greater than
@@ -628,38 +591,14 @@ def sampled_centroids(
 
     The IVF recall/speed trade-off only depends on centroid *quality*;
     sampling keeps the whole pipeline engine-portable (a DuckDB oracle can
-    reproduce it).  For production recall, train with
-    :func:`kmeans_centroids` instead — the query plan is identical.
+    reproduce it).  Any other (cid, cv) quantizer table slots into the
+    same plans.
     """
     return (
         vectors.orderBy(id_col)
         .limit(n_lists)
         .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cv"))
     )
-
-
-def kmeans_centroids(
-    vectors: DataFrame,
-    n_lists: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> DataFrame:
-    """Trained coarse quantizer via Spark MLlib k-means (JVM-side Lloyd)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    feats = vectors.select(array_to_vector(F.col(vec_col)).alias("features"))
-    model = KMeans(k=n_lists, seed=seed).fit(feats)
-    spark = vectors.sparkSession
-    rows = [(i, list(map(float, c))) for i, c in enumerate(model.clusterCenters())]
-    # JVM LocalRelation, not createDataFrame: k×dim driver-held floats —
-    # a Python-worker-backed ExistingRDD scan pays defaultParallelism
-    # worker spin-ups per materialization (see session.local_relation);
-    # repr→string→double round-trips each centroid coordinate bit-exactly
-    from lab_flink_repository_analytics_spark.session import local_relation
-
-    return local_relation(spark, rows, "cid int, cv array<double>")
 
 
 #: quantizers up to this size are driver-held model state and assign
@@ -945,7 +884,8 @@ def ivf_topk(
     nprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
+    *,
+    dim: int,
 ) -> DataFrame:
     """IVF approximate top-k: candidates live in exactly one inverted list
     (their nearest centroid); each query probes its ``nprobe`` nearest
@@ -1001,18 +941,19 @@ def lsh_topk(
     nbits: int = LSH_NBITS,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
+    *,
+    dim: int,
 ) -> DataFrame:
     """Approximate top-k: score only candidates in the query's LSH bucket.
 
     At scale the candidate side is pre-bucketed (partitioned/bucketed table
-    on ``bucket``), so a query touches 1/2^nbits of the data.  With ``dim``
-    pinned and a bounded query set, bucketing and scoring are one Arrow
+    on ``bucket``), so a query touches 1/2^nbits of the data.  With a
+    bounded query set, bucketing and scoring are one Arrow
     pass: the bucket-equality join becomes :func:`_inline_scored`'s key
     mask (:func:`_lsh_bucket_np`, Spark's NaN-greatest sign rule
     mirrored; a contract-violating row's NULL bucket is key −1 and never
     matches).  Otherwise the query side broadcast-joins the candidates on
-    ``bucket`` (:func:`lsh_bucket`, codegen with ``dim`` pinned).
+    ``bucket`` (:func:`lsh_bucket`).
     """
 
     def keys(Q):
@@ -1041,69 +982,42 @@ def group_centroids(
     vectors: DataFrame,
     group_cols: list[str],
     vec_col: str = "embedding",
-    dim: int | None = None,
+    *,
+    dim: int,
 ) -> DataFrame:
     """Mean-pool vector aggregation: the per-group centroid of an embedding
     column (class prototypes, per-language anchors, cluster summaries).
 
-    Plan shape for 100 TB: posexplode the vector (row-local, no shuffle),
-    then ONE hash aggregation on (group, dim) with map-side partials —
-    shuffle volume is dims × groups, independent of row count.  Sums run
-    in DECIMAL(30,15) so they are order-independent (exact) across any
-    partitioning; the final per-dim mean is rounded to 6 decimals.  The
-    sorted-struct collect rebuilds the ARRAY<DOUBLE> centroid without a
-    second exchange (same grouping key prefix).
-
-    With ``dim`` pinned by the caller's table contract (round-10, same
-    shape as mean_pairwise_cosine's fixed-width path): ``dim`` flat
-    decimal SUMs + one COUNT in a SINGLE per-group HashAggregate — no
-    Generate multiplying rows ×dim before the partial agg, no second
-    aggregation.  Bit-identical within the contract (decimal sums are
-    grouping-exact; per-(group, pos) count ≡ per-group non-null row count
-    at uniform width; same division/round).  NULL vectors are excluded in
-    both forms; empty/ragged vectors are out of contract.
+    Plan shape for 100 TB: ``dim`` flat DECIMAL(30,15) SUMs + one COUNT
+    in a SINGLE per-group HashAggregate with map-side partials — shuffle
+    volume is dims × groups, independent of row count, and no Generate
+    multiplies rows ×dim.  Decimal sums are order-independent (exact)
+    across any partitioning; the final per-dim mean is rounded to 6
+    decimals.  NULL vectors are excluded; vectors of another width than
+    ``dim`` are out of contract.
     """
-    gs = [F.col(g) for g in group_cols]
-    if dim is not None:
-        g = (
-            vectors.where(F.col(vec_col).isNotNull())
-            .groupBy(*group_cols)
-            .agg(
-                F.count(F.lit(1)).alias("_n"),
-                *[
-                    F.sum(
-                        F.get(vec_col, d).cast("double").cast("decimal(30,15)")
-                    ).alias(f"_s{d}")
-                    for d in range(dim)
-                ],
-            )
+    g = (
+        vectors.where(F.col(vec_col).isNotNull())
+        .groupBy(*group_cols)
+        .agg(
+            F.count(F.lit(1)).alias("_n"),
+            *[
+                F.sum(
+                    F.get(vec_col, d).cast("double").cast("decimal(30,15)")
+                ).alias(f"_s{d}")
+                for d in range(dim)
+            ],
         )
-        return g.select(
-            *group_cols,
-            F.array(
-                *[
-                    F.round(F.col(f"_s{d}").cast("double") / F.col("_n"), 6)
-                    for d in range(dim)
-                ]
-            ).alias("centroid"),
-            F.col("_n").alias("n_vectors"),
-        )
-    ex = vectors.select(
-        *gs, F.posexplode(F.col(vec_col)).alias("pos", "x")
     )
-    per_dim = ex.groupBy(*group_cols, "pos").agg(
-        F.round(
-            F.sum(F.col("x").cast("double").cast("decimal(30,15)")).cast("double")
-            / F.count(F.lit(1)),
-            6,
-        ).alias("v"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    return per_dim.groupBy(*group_cols).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "v"))), lambda s: s["v"]
+    return g.select(
+        *group_cols,
+        F.array(
+            *[
+                F.round(F.col(f"_s{d}").cast("double") / F.col("_n"), 6)
+                for d in range(dim)
+            ]
         ).alias("centroid"),
-        F.max("n").alias("n_vectors"),
+        F.col("_n").alias("n_vectors"),
     )
 
 
@@ -1386,7 +1300,8 @@ def hard_negatives(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     label_col: str = "label",
-    dim: int | None = None,
+    *,
+    dim: int,
 ) -> DataFrame:
     """Hard-negative mining for contrastive training: per query, the top-k
     most cosine-similar candidates with a DIFFERENT label — the negatives
@@ -1415,7 +1330,6 @@ def kmeans_lloyd_df(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Distributed Lloyd k-means in pure DataFrame ops, engine-exact:
     returns the final (``id_col``, cluster_id) assignment.
@@ -1432,14 +1346,15 @@ def kmeans_lloyd_df(
     :func:`_arrow_assignments` (NO shuffle — centroids are driver-held
     model state, k ≤ MAX_INLINE_CENTROIDS by contract, exactly how MLlib
     holds centers); the update is :func:`group_centroids` over the assignment
-    (one per-cluster hash aggregation of ``dim`` flat decimal sums when
-    the caller pins the vector width).  The driver round-trips k×dim
-    scalars per iteration — bounded model state, never data.
+    (one per-cluster hash aggregation of ``dim`` flat decimal sums, with
+    ``dim`` the width of the initial centroids).  The driver round-trips
+    k×dim scalars per iteration — bounded model state, never data.
     """
     cents = [
         {"cid": r["cid"], "cv": [float(x) for x in r["cv"]]}
         for r in sampled_centroids(vectors, k, id_col, vec_col).collect()
     ]
+    dim = len(cents[0]["cv"]) if cents else 0
     asg = None
     for it in range(iters):
         asg = _arrow_assignments(vectors, cents, 1, id_col, vec_col)
@@ -1463,7 +1378,8 @@ def mean_pairwise_cosine(
     vectors: DataFrame,
     group_col: str = "label",
     vec_col: str = "embedding",
-    dim: int | None = None,
+    *,
+    dim: int,
 ) -> DataFrame:
     """Mean pairwise cosine similarity WITHIN each group — the corpus
     redundancy/diversity signal a SemDeDup-style curation pass reads per
@@ -1475,11 +1391,11 @@ def mean_pairwise_cosine(
     Both are DECIMAL sums of deterministic doubles
     (order-independent under any partitioning — the
     :func:`covariance_matrix` float policy), so the result is bit-stable
-    across shuffle layouts and has an exact DuckDB twin.  Plan: one
-    posexplode meets a map-side partial agg (shuffle volume #groups·dim
-    rows), one per-group rollup of row-local self-dots, and a broadcast
-    join of the two model-sized tables.  Groups with a single vector
-    report NULL (no pairs).  Output: (``group_col``, n_vectors, mean_cos).
+    across shuffle layouts and has an exact DuckDB twin.  Plan: ONE
+    per-group HashAggregate with map-side partials holds the count, the
+    self-dot sum and ``dim`` flat per-dimension SUMs (shuffle volume
+    #groups rows per map partition).  Groups with a single vector report
+    NULL (no pairs).  Output: (``group_col``, n_vectors, mean_cos).
 
     Preconditions enforced up front (not silently skewed into the mean):
     rows with a NULL embedding or a zero-norm embedding cannot contribute
@@ -1516,85 +1432,47 @@ def mean_pairwise_cosine(
         )
     )
     n = F.col("n_vectors")
-    if dim is not None:
-        # Fixed-width single-aggregation path (round-10, guide §2.3/§2.4):
-        # with the vector width pinned by the caller's table contract, the
-        # per-dim component sums become ``dim`` flat SUM aggregates in the
-        # SAME HashAggregate as n_vectors/ssum — no posexplode (which
-        # multiplied rows ×dim through a Generate before the exchange: 20 s
-        # of the 23 s executor time at sf0.1 lived in that stage), no
-        # second pass over ``rows`` (the un-persisted projection used to
-        # run once for dims and once for rowagg), no dims exchange and no
-        # broadcast join.  Bit-identical to the explode form: DECIMAL sums
-        # are exact, hence order- and grouping-independent; ``F.get``
-        # yields NULL past a row's width exactly as posexplode generates
-        # no row there (SUM skips both), and the NULL-sum dims that the
-        # old sumsq aggregate skipped enter the ``+`` chain as exact
-        # decimal zeros via coalesce.  Rows WIDER than ``dim`` would lose
-        # their tail dims — out of contract, same stance as
-        # embedding_near_dup's width contract.
-        g = rows.groupBy("grp").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_vectors"),
-            F.sum(dot("u", "u").cast("decimal(30,15)")).alias("ssum"),
-            *[
-                F.sum(F.get("u", d).cast("decimal(30,15)")).alias(f"_s{d}")
-                for d in range(dim)
-            ],
-        )
-        sq = [
-            F.coalesce(
-                (F.col(f"_s{d}").cast("double") * F.col(f"_s{d}").cast("double")).cast(
-                    "decimal(38,10)"
-                ),
-                F.lit(0).cast("decimal(38,10)"),
-            )
-            for d in range(dim)
-        ]
-        sumsq = sq[0]
-        for term in sq[1:]:
-            sumsq = sumsq + term
-        return g.select(
-            F.col("grp").alias(group_col),
-            n,
-            F.when(
-                n > 1,
-                F.round(
-                    (sumsq.cast("double") - F.col("ssum").cast("double"))
-                    / (n * (n - 1)),
-                    6,
-                ),
-            ).alias("mean_cos"),
-        )
-    dims = (
-        rows.select("grp", F.posexplode("u").alias("d", "x"))
-        .groupBy("grp", "d")
-        .agg(F.sum(F.col("x").cast("decimal(30,15)")).alias("s"))
-    )
-    gsum = dims.groupBy("grp").agg(
-        F.sum(
-            (F.col("s").cast("double") * F.col("s").cast("double")).cast(
-                "decimal(38,10)"
-            )
-        ).alias("sumsq")
-    )
-    rowagg = rows.groupBy("grp").agg(
+    # ``dim`` flat SUM aggregates in the SAME HashAggregate as
+    # n_vectors/ssum (round-10): no posexplode multiplying rows ×dim
+    # through a Generate before the exchange, one pass over ``rows`` and
+    # no join.  DECIMAL sums are exact, hence order- and
+    # grouping-independent; ``F.get`` yields NULL past a narrow row's
+    # width (SUM skips it, like the oracle's unnest generates no row
+    # there), and a dim no row reaches enters the ``+`` chain as an exact
+    # decimal zero via coalesce.  Rows WIDER than ``dim`` would lose
+    # their tail dims — out of contract, same stance as
+    # embedding_near_dup's width contract.
+    g = rows.groupBy("grp").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_vectors"),
         F.sum(dot("u", "u").cast("decimal(30,15)")).alias("ssum"),
+        *[
+            F.sum(F.get("u", d).cast("decimal(30,15)")).alias(f"_s{d}")
+            for d in range(dim)
+        ],
     )
-    return (
-        rowagg.join(F.broadcast(gsum), "grp")
-        .select(
-            F.col("grp").alias(group_col),
-            n,
-            F.when(
-                n > 1,
-                F.round(
-                    (F.col("sumsq").cast("double") - F.col("ssum").cast("double"))
-                    / (n * (n - 1)),
-                    6,
-                ),
-            ).alias("mean_cos"),
+    sq = [
+        F.coalesce(
+            (F.col(f"_s{d}").cast("double") * F.col(f"_s{d}").cast("double")).cast(
+                "decimal(38,10)"
+            ),
+            F.lit(0).cast("decimal(38,10)"),
         )
+        for d in range(dim)
+    ]
+    sumsq = sq[0]
+    for term in sq[1:]:
+        sumsq = sumsq + term
+    return g.select(
+        F.col("grp").alias(group_col),
+        n,
+        F.when(
+            n > 1,
+            F.round(
+                (sumsq.cast("double") - F.col("ssum").cast("double"))
+                / (n * (n - 1)),
+                6,
+            ),
+        ).alias("mean_cos"),
     )
 
 
@@ -1637,10 +1515,9 @@ def _exact_sum(p: Column) -> Column:
 def covariance_matrix(
     vectors: DataFrame,
     vec_col: str = "embedding",
-    upper_only: bool = True,
 ) -> DataFrame:
     """Sample covariance matrix of the embedding column: (i, j, cov) with
-    1-based dims, upper triangle by default.
+    1-based dims, upper triangle (i ≤ j).
 
     Engine-exact two-pass moments: Σ x_i·x_j is an :func:`_exact_sum`
     of the double products and Σ x_i a DECIMAL sum of the doubles (both
@@ -1654,7 +1531,7 @@ def covariance_matrix(
     partial aggregation immediately — shuffle volume is dim²·#partitions
     rows (model-sized), never data-scale; the dim-level sums rollup
     reuses the same scan.  This is the X^T X building block of
-    distributed PCA (:func:`pca_project`).
+    distributed PCA.
     """
     from lab_flink_repository_analytics_spark.session import rebalance
 
@@ -1667,23 +1544,19 @@ def covariance_matrix(
     a = vectors.select(F.col(vec_col).alias("v")).select(
         F.posexplode(v).alias("i0", "xi"), v.alias("v2")
     )
-    if upper_only:
-        # generate ONLY the upper triangle (round-10, guide §2.3): slicing
-        # v2 to its j ≥ i tail before the second posexplode halves the
-        # Generate's output (dim² → dim(dim+1)/2 rows per input row)
-        # instead of discarding the lower triangle with a post-filter;
-        # j recovers from the slice-relative position.  Same (i0, j0,
-        # xi, xj) row set as explode-then-filter — measured value-equal
-        # (sxy and n) at sf0.1.
-        b = a.select(
-            "i0",
-            "xi",
-            F.posexplode(F.expr("slice(v2, i0 + 1, size(v2) - i0)")).alias(
-                "jrel", "xj"
-            ),
-        ).select("i0", "xi", (F.col("i0") + F.col("jrel")).alias("j0"), "xj")
-    else:
-        b = a.select("i0", "xi", F.posexplode("v2").alias("j0", "xj"))
+    # generate ONLY the upper triangle (round-10, guide §2.3): slicing v2
+    # to its j ≥ i tail before the second posexplode halves the
+    # Generate's output (dim² → dim(dim+1)/2 rows per input row) instead
+    # of discarding the lower triangle with a post-filter; j recovers
+    # from the slice-relative position.  Same (i0, j0, xi, xj) row set as
+    # explode-then-filter — measured value-equal (sxy and n) at sf0.1.
+    b = a.select(
+        "i0",
+        "xi",
+        F.posexplode(F.expr("slice(v2, i0 + 1, size(v2) - i0)")).alias(
+            "jrel", "xj"
+        ),
+    ).select("i0", "xi", (F.col("i0") + F.col("jrel")).alias("j0"), "xj")
     mom = b.groupBy("i0", "j0").agg(
         _exact_sum(F.col("xi").cast("double") * F.col("xj").cast("double")).alias(
             "sxy"
@@ -1718,63 +1591,3 @@ def covariance_matrix(
             ).alias("cov"),
         )
     )
-
-
-def pca_project(
-    vectors: DataFrame,
-    k: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Project embeddings onto their top-k principal components.
-
-    Distributed part: :func:`covariance_matrix` (exact fixed-point
-    moments, model-sized shuffle).  Driver part: eigendecomposition of the
-    dim² matrix (numpy ``eigh`` — model state, like k-means centers) with a
-    deterministic sign convention (largest-|coord| entry positive).  The
-    projection itself inlines the components as literals — one narrow
-    codegen pass over the data, no shuffle (the literal pattern of
-    :func:`_lsh_bucket_text`).  Output: (``id_col``, pc ARRAY<DOUBLE>
-    of length k), coordinates of the MEAN-CENTERED vector.
-    """
-    import numpy as np
-
-    cov_rows = covariance_matrix(vectors, vec_col, upper_only=True).collect()
-    dim = max(r["j"] for r in cov_rows)
-    cov = np.zeros((dim, dim))
-    for r in cov_rows:
-        cov[r["i"] - 1, r["j"] - 1] = r["cov"]
-        cov[r["j"] - 1, r["i"] - 1] = r["cov"]
-    vals, vecs = np.linalg.eigh(cov)
-    comps = []
-    for c in range(1, k + 1):
-        comp = vecs[:, -c]
-        # deterministic sign: the largest-magnitude coordinate is positive
-        pivot = int(np.argmax(np.abs(comp)))
-        if comp[pivot] < 0:
-            comp = -comp
-        comps.append([float(x) for x in comp])
-    mean = [
-        float(x)
-        for x in np.array(
-            vectors.agg(
-                *[
-                    F.avg(F.col(vec_col)[i].cast("double")).alias(f"m{i}")
-                    for i in range(dim)
-                ]
-            ).collect()[0]
-        )
-    ]
-    # expr-string construction (round-10): same tree, one parse — see
-    # _dot_text for the measured py4j-loop cost this replaces
-    centered = (
-        f"zip_with(`{vec_col}`, {_lit_array_d(mean)},"
-        " (x, m) -> CAST(x AS DOUBLE) - m)"
-    )
-    coord_texts = [
-        f"aggregate(zip_with({centered}, {_lit_array_d(comp)},"
-        " (x, w) -> x * w), CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-        for comp in comps
-    ]
-    coords = F.expr("array(" + ", ".join(coord_texts) + ")")
-    return vectors.select(F.col(id_col).alias(id_col), coords.alias("pc"))

@@ -1048,9 +1048,9 @@ def _dot_sql(a: str, b: str) -> str:
 # embeddings.parquet (sf0.001 → sf10 and the /tmp/scale replicas) carries
 # uniform 64-wide vectors.  Queries take the width from this contract so
 # building their DataFrame stays pure plan construction (no probe job);
-# rows violating the contract are dropped by the pre-join width filter in
-# `dedup.embedding_near_dup_pairs` — the same fate ragged pairs meet under
-# the fold form.
+# every vector kernel takes it as a required `dim`, and rows violating it
+# are dropped by the pre-join width filter in
+# `dedup.embedding_near_dup_pairs`.
 EMBEDDING_DIM = 64
 
 
@@ -1787,9 +1787,7 @@ def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     lowest-id init, exact-decimal centroid means — deterministic enough
     that the DuckDB oracle unrolls the same two iterations in SQL."""
     emb = load_tables(spark, sf_dir)["embeddings"]
-    return SIM.kmeans_lloyd_df(
-        emb, k=KMEANS_K, iters=KMEANS_ITERS, dim=EMBEDDING_DIM
-    )
+    return SIM.kmeans_lloyd_df(emb, k=KMEANS_K, iters=KMEANS_ITERS)
 
 
 def _kmeans_sql() -> str:

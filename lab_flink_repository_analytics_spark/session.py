@@ -18,6 +18,7 @@ environment and default to cluster-appropriate behavior when unset.
 
 from __future__ import annotations
 
+import gc
 import os
 import threading
 import time
@@ -80,9 +81,9 @@ def get_spark(
     ``shuffle_partitions`` should be ~2-3x total cores on a cluster; for
     local mode it defaults to the core count.
     """
-    # Python workers spawned by the JVM (incl. the transformWithState
-    # driver worker, a fresh process) must be able to import this package;
-    # locally that means the repo root on PYTHONPATH before the JVM starts.
+    # Python workers spawned by the JVM must be able to import this
+    # package; locally that means the repo root on PYTHONPATH before the
+    # JVM starts.
     # On a real cluster the equivalent is shipping the wheel (--py-files).
     pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     pp = os.environ.get("PYTHONPATH", "")
@@ -294,7 +295,14 @@ def derived_state(spark: SparkSession, name: str, sf_dir: str, build):
 def reset_derived_state() -> None:
     """Drop ALL session-shared derived state (bench cold-runs, teardown),
     with best-effort unpersist of cached/checkpointed values.  Safe under
-    concurrency: a build in flight re-inserts its own entry when done."""
+    concurrency: a build in flight re-inserts its own entry when done.
+
+    Ends with a cyclic garbage collection, so the py4j proxies of the
+    dropped state release their JVM objects now rather than whenever
+    Python's collector next runs, possibly inside the next query.
+    Without it, ``source_mixture_weights`` run after a reset planned an
+    extra AQE stage job more often (its job count varies from run to
+    run either way)."""
     with _DERIVED_GUARD:
         values = list(_DERIVED_MEMO.values())
         _DERIVED_MEMO.clear()
@@ -303,6 +311,7 @@ def reset_derived_state() -> None:
         # (app, name, sf_dir) triples) so there is nothing to reclaim
     for v in values:
         _maybe_release(v)
+    gc.collect()
 
 
 def derived_build_seconds() -> dict[str, float]:

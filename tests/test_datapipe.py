@@ -133,7 +133,7 @@ def test_jaccard_arithmetic_union_matches_array_union(spark):
 def test_cosine_and_topk(spark):
     rows = [(0, [1.0, 0.0]), (1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [0.7, 0.7])]
     emb = spark.createDataFrame(rows, "vec_id: int, embedding: array<float>")
-    out = SIM.brute_force_topk(emb.filter(F.col("vec_id") == 0), emb, k=3)
+    out = SIM.brute_force_topk(emb.filter(F.col("vec_id") == 0), emb, k=3, dim=2)
     got = [(r["rank"], r["neighbor_id"], r["cos_sim"]) for r in out.collect()]
     assert got[0][:2] == (1, 1) and math.isclose(got[0][2], 1.0)
     assert got[1][1] == 3  # 45° before orthogonal
@@ -141,26 +141,49 @@ def test_cosine_and_topk(spark):
 
 
 def test_lsh_bucket_deterministic_and_bounded(spark):
+    from lab_flink_repository_analytics_spark.queries import suite
+
     rows = [(i, [float((i * 7 + j) % 5 - 2) for j in range(8)]) for i in range(20)]
     emb = spark.createDataFrame(rows, "vec_id: int, embedding: array<float>")
-    a = {r["vec_id"]: r["b"] for r in emb.select("vec_id", SIM.lsh_bucket("embedding").alias("b")).collect()}
-    b = {r["vec_id"]: r["b"] for r in emb.select("vec_id", SIM.lsh_bucket("embedding").alias("b")).collect()}
-    assert a == b
+
+    def buckets():
+        b = SIM.lsh_bucket("embedding", dim=8).alias("b")
+        return {r["vec_id"]: r["b"] for r in emb.select("vec_id", b).collect()}
+
+    a = buckets()
+    assert a == buckets()
     assert all(0 <= v < 2**SIM.LSH_NBITS for v in a.values())
-    # the dim-pinned unrolled codegen form must bucket identically to the
-    # interpreted fold form
-    c = {
-        r["vec_id"]: r["b"]
-        for r in emb.select(
-            "vec_id", SIM.lsh_bucket("embedding", dim=8).alias("b")
-        ).collect()
-    }
-    assert c == a
+    # the codegen bucket must equal the oracles' DuckDB bucket expression
+    bucket = suite._lsh_bucket_sql("v", SIM.LSH_NBITS)
+    sql = f"SELECT vec_id, {bucket} FROM embeddings"
+    assert a == dict(_duckdb_embeddings(sql, rows, ["vec_id", "v"]))
+
+
+def _join_path_rows(topk, q):
+    """``topk(queries)``'s rows for the queries of ``q`` on the
+    broadcast-join path: padding the query side past ANN_INLINE_MAX with
+    copies of its first row under new ids keeps it from being collected
+    for the bounded Arrow scorer."""
+    first = q.first().asDict()
+    string_ids = q.schema["vec_id"].dataType.simpleString() == "string"
+    pad = [
+        {**first, "vec_id": f"pad{i}" if string_ids else 10**6 + i}
+        for i in range(SIM.ANN_INLINE_MAX)
+    ]
+    df = topk(q.unionByName(q.sparkSession.createDataFrame(pad, q.schema)))
+    assert "Join" in df._jdf.queryExecution().executedPlan().toString()
+    qids = {r["vec_id"] for r in q.collect()}
+    return sorted(tuple(r) for r in df.collect() if r["query_id"] in qids)
+
+
+def _bounded_rows(df):
+    assert "Join" not in df._jdf.queryExecution().executedPlan().toString()
+    return _topk_rows(df)
 
 
 def test_topk_dim_pinned_matches_fold_form(spark):
-    # staged-norm + flat_dot scoring (dim pinned) must reproduce the
-    # fold-form cosine output exactly for every topk variant
+    # the bounded Arrow scorer must reproduce the broadcast-join path's
+    # staged-cosine rows exactly for every topk variant
     rows = [
         (i, [((i * 13 + j * 5) % 9) / 4.0 - 1.0 for j in range(6)], f"l{i % 3}")
         for i in range(30)
@@ -169,23 +192,15 @@ def test_topk_dim_pinned_matches_fold_form(spark):
         rows, "vec_id: int, embedding: array<float>, label: string"
     )
     q = emb.filter(F.col("vec_id") < 4)
-
-    def rows_of(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    assert rows_of(SIM.brute_force_topk(q, emb, k=5, dim=6)) == rows_of(
-        SIM.brute_force_topk(q, emb, k=5)
-    )
-    assert rows_of(SIM.lsh_topk(q, emb, k=5, dim=6)) == rows_of(
-        SIM.lsh_topk(q, emb, k=5)
-    )
     cents = SIM.sampled_centroids(emb, 4)
-    assert rows_of(SIM.ivf_topk(q, emb, cents, k=5, dim=6)) == rows_of(
-        SIM.ivf_topk(q, emb, cents, k=5)
-    )
-    assert rows_of(SIM.hard_negatives(q, emb, k=5, dim=6)) == rows_of(
-        SIM.hard_negatives(q, emb, k=5)
-    )
+    for topk in (
+        lambda qs: SIM.brute_force_topk(qs, emb, k=5, dim=6),
+        lambda qs: SIM.lsh_topk(qs, emb, k=5, dim=6),
+        lambda qs: SIM.ivf_topk(qs, emb, cents, k=5, dim=6),
+        lambda qs: SIM.hard_negatives(qs, emb, k=5, dim=6),
+    ):
+        bounded = _bounded_rows(topk(q))
+        assert bounded and bounded == _join_path_rows(topk, q)
 
 
 def test_text_metrics(spark):
@@ -232,8 +247,8 @@ def test_ivf_topk_recall_vs_brute(spark):
     emb = _emb(spark)
     q = emb.filter(F.col("vec_id") < 3)
     cents = SIM.sampled_centroids(emb, 8)
-    ivf = SIM.ivf_topk(q, emb, cents, k=5, nprobe=3)
-    brute = SIM.brute_force_topk(q, emb, k=5)
+    ivf = SIM.ivf_topk(q, emb, cents, k=5, nprobe=3, dim=8)
+    brute = SIM.brute_force_topk(q, emb, k=5, dim=8)
     top1_ivf = {r["query_id"]: r["neighbor_id"] for r in ivf.filter("rank = 1").collect()}
     top1_brute = {r["query_id"]: r["neighbor_id"] for r in brute.filter("rank = 1").collect()}
     # each query's true nearest neighbor sits in a probed list here
@@ -325,22 +340,6 @@ def test_ivf_topk_bounded_matches_probe_join(spark):
             assert _topk_rows(got) == _topk_rows(want), (nprobe, k)
 
 
-def test_kmeans_centroids_trainer(spark):
-    try:
-        import pyspark.ml  # noqa: F401
-    except ImportError:
-        import pytest
-        pytest.skip("pyspark.ml unavailable")
-    emb = _emb(spark)
-    cents = SIM.kmeans_centroids(emb, n_lists=4)
-    rows = cents.collect()
-    assert len(rows) == 4
-    assert all(len(r["cv"]) == 8 for r in rows)
-    # trained quantizer slots into the identical query plan
-    out = SIM.ivf_topk(emb.filter(F.col("vec_id") < 2), emb, cents, k=3, nprobe=2)
-    assert out.filter("rank = 1").count() == 2
-
-
 def test_bpe_ish_tokens(spark):
     df = spark.createDataFrame([("Hello, world42! x",)], "text: string")
     out = df.select(TX.bpe_ish_tokens("text").alias("t")).collect()[0]["t"]
@@ -389,7 +388,7 @@ def test_embedding_near_dup_pairs(spark):
     emb = spark.createDataFrame(
         rows, "vec_id: int, embedding: array<double>, label: string"
     )
-    out = DD.embedding_near_dup_pairs(emb, ["label"], threshold=0.8).collect()
+    out = DD.embedding_near_dup_pairs(emb, ["label"], threshold=0.8, dim=3).collect()
     pairs = {(r["id_a"], r["id_b"]): r["cos_sim"] for r in out}
     assert set(pairs) == {(1, 2)}  # blocking excludes (1,4); threshold drops (1,3)
     assert pairs[(1, 2)] > 0.99
@@ -523,7 +522,7 @@ def test_group_centroids_mean_pool(spark):
         (3, [5.0, 5.0, 5.0], "b"),
     ]
     emb = spark.createDataFrame(rows, "vec_id: int, embedding: array<float>, label: string")
-    out = {r["label"]: r for r in SIM.group_centroids(emb, ["label"]).collect()}
+    out = {r["label"]: r for r in SIM.group_centroids(emb, ["label"], dim=3).collect()}
     assert out["a"]["centroid"] == [2.0, 1.0, 2.0]
     assert out["a"]["n_vectors"] == 2
     assert out["b"]["centroid"] == [5.0, 5.0, 5.0] and out["b"]["n_vectors"] == 1
@@ -672,7 +671,7 @@ def test_mean_pairwise_cosine_matches_bruteforce(spark):
     )
     got = {
         r["label"]: (r["n_vectors"], r["mean_cos"])
-        for r in SIM.mean_pairwise_cosine(emb).collect()
+        for r in SIM.mean_pairwise_cosine(emb, dim=3).collect()
     }
 
     def brute(vs):
@@ -692,11 +691,25 @@ def test_mean_pairwise_cosine_matches_bruteforce(spark):
         assert mc == pytest.approx(brute(vs), abs=2e-6)
 
 
+def _duckdb_embeddings(sql, rows, names):
+    """Rows of the DuckDB oracle ``sql`` over an ``embeddings`` table."""
+    import duckdb
+    import pyarrow as pa
+
+    con = duckdb.connect()
+    con.register(
+        "embeddings", pa.table({n: [r[i] for r in rows] for i, n in enumerate(names)})
+    )
+    return con.sql(sql).fetchall()
+
+
 def test_mean_pairwise_cosine_fixed_width_path_matches_generic(spark):
-    """The dim-pinned single-aggregation path (no posexplode, no join)
-    must land bit-identical rows to the width-agnostic explode path —
-    including narrow rows (F.get's NULL past a row's width ≡ posexplode
-    generating no row) and singleton/bad-row handling."""
+    """The single-aggregation plan must land the label_redundancy
+    oracle's rows — including narrow rows (F.get's NULL past a row's
+    width ≡ the oracle's unnest generating no row) and singleton/bad-row
+    handling."""
+    from lab_flink_repository_analytics_spark.queries import suite
+
     rows = [
         (1, [1.0, 0.0, 0.0], 0),
         (2, [1.0, 1.0, 0.0], 0),
@@ -710,11 +723,11 @@ def test_mean_pairwise_cosine_fixed_width_path_matches_generic(spark):
     emb = spark.createDataFrame(
         rows, "vec_id bigint, embedding array<double>, label int"
     )
-    generic = sorted(tuple(r) for r in SIM.mean_pairwise_cosine(emb).collect())
-    fixed = sorted(
-        tuple(r) for r in SIM.mean_pairwise_cosine(emb, dim=3).collect()
+    got = sorted(tuple(r) for r in SIM.mean_pairwise_cosine(emb, dim=3).collect())
+    want = _duckdb_embeddings(
+        suite.LABEL_REDUNDANCY_SQL, rows, ["vec_id", "embedding", "label"]
     )
-    assert fixed == generic
+    assert got == sorted(want)
 
 
 def test_mean_pairwise_cosine_singleton_and_bad_rows(spark):
@@ -729,7 +742,7 @@ def test_mean_pairwise_cosine_singleton_and_bad_rows(spark):
     emb = spark.createDataFrame(
         rows, "vec_id bigint, embedding array<double>, label int"
     )
-    out = SIM.mean_pairwise_cosine(emb).collect()
+    out = SIM.mean_pairwise_cosine(emb, dim=2).collect()
     assert len(out) == 1
     assert out[0]["label"] == 0
     assert out[0]["n_vectors"] == 1
@@ -745,7 +758,7 @@ def test_hard_negatives_excludes_same_label_and_ranks(spark):
         (4, [0.0, 1.0], 2),
     ]
     emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>, label int")
-    got = SIM.hard_negatives(emb.filter(F.col("vec_id") == 0), emb, k=2).collect()
+    got = SIM.hard_negatives(emb.filter(F.col("vec_id") == 0), emb, k=2, dim=2).collect()
     assert [(r["neg_id"], r["rank"]) for r in sorted(got, key=lambda r: r["rank"])] == [
         (2, 1),
         (3, 2),
@@ -1050,8 +1063,12 @@ def test_brute_force_topk_null_candidate_id_keeps_k_rows(spark):
         rows, "vec_id bigint, embedding array<double>"
     ).repartition(1)
     q = emb.filter(F.col("vec_id") == 0)
-    fast = _topk_rows(SIM.brute_force_topk(q, emb, k=2, dim=3))
-    assert fast == _topk_rows(SIM.brute_force_topk(q, emb, k=2))
+
+    def topk(qs):
+        return SIM.brute_force_topk(qs, emb, k=2, dim=3)
+
+    fast = _bounded_rows(topk(q))
+    assert fast == _join_path_rows(topk, q)
     assert [r[1] for r in fast] == [1, 2]
 
 
@@ -1064,8 +1081,12 @@ def test_brute_force_topk_string_ids(spark):
         rows, "vec_id string, embedding array<double>"
     ).repartition(1)
     q = emb.filter(F.col("vec_id").isin("v0", "v1"))
-    fast = _topk_rows(SIM.brute_force_topk(q, emb, k=3, dim=5))
-    assert fast == _topk_rows(SIM.brute_force_topk(q, emb, k=3))
+
+    def topk(qs):
+        return SIM.brute_force_topk(qs, emb, k=3, dim=5)
+
+    fast = _bounded_rows(topk(q))
+    assert fast == _join_path_rows(topk, q)
     assert len(fast) == 6
 
 
@@ -1245,42 +1266,28 @@ def test_kmeans_lloyd_separates_directions_and_is_deterministic(spark):
 
 
 def test_group_centroids_fixed_dim_matches_explode_form(spark):
+    # the flat per-dimension sums must land the label_centroids oracle's
+    # (posexplode-form) centroids; a NULL vector counts in neither
+    from lab_flink_repository_analytics_spark.queries import suite
+
     rows = [
         (i, f"l{i % 3}", [((i * 11 + d * 7) % 13) / 6.0 - 1.0 for d in range(5)])
         for i in range(30)
-    ]
+    ] + [(30, "l0", None)]
     emb = spark.createDataFrame(
         rows, "vec_id bigint, label string, embedding array<double>"
     )
-    generic = {
-        r["label"]: (list(r["centroid"]), r["n_vectors"])
-        for r in SIM.group_centroids(emb, ["label"]).collect()
-    }
     pinned = {
         r["label"]: (list(r["centroid"]), r["n_vectors"])
         for r in SIM.group_centroids(emb, ["label"], dim=5).collect()
     }
-    assert pinned == generic
-
-
-def test_kmeans_fixed_dim_update_matches_explode_form(spark):
-    # the dim-pinned flat-sum centroid update must assign identically to
-    # the generic posexplode update — decimal sums are grouping-exact and
-    # the division/round expressions are the same
-    rows = [
-        (i, [((i * 7 + d * 3) % 11) / 10.0 + 0.1 for d in range(5)])
-        for i in range(40)
-    ]
-    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-    generic = {
-        r["vec_id"]: r["cluster_id"]
-        for r in SIM.kmeans_lloyd_df(emb, k=3, iters=2).collect()
+    want = {
+        label: ([float(x) for x in centroid.split(",")], n)
+        for label, centroid, n in _duckdb_embeddings(
+            suite.LABEL_CENTROIDS_SQL, rows, ["vec_id", "label", "embedding"]
+        )
     }
-    pinned = {
-        r["vec_id"]: r["cluster_id"]
-        for r in SIM.kmeans_lloyd_df(emb, k=3, iters=2, dim=5).collect()
-    }
-    assert pinned == generic
+    assert pinned == want
 
 
 def test_windowed_dedup_keeps_first_per_window(spark):
@@ -1302,33 +1309,6 @@ def test_windowed_dedup_keeps_first_per_window(spark):
         ).collect()
     )
     assert kept == [1, 3, 4, 5]
-
-
-def test_pca_project_matches_numpy(spark):
-    import numpy as np
-
-    rng = np.random.default_rng(9)
-    X = rng.normal(size=(80, 6))
-    X[:, 0] *= 5.0  # dominant direction
-    rows = [(i, [float(x) for x in X[i]]) for i in range(80)]
-    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-    got = {r["vec_id"]: r["pc"] for r in SIM.pca_project(emb, k=2).collect()}
-
-    Xc = X - X.mean(axis=0)
-    cov = np.round(np.cov(X, rowvar=False), 6)  # operator rounds cov to 6
-    vals, vecs = np.linalg.eigh(cov)
-    expect_cols = []
-    for c in (1, 2):
-        comp = vecs[:, -c]
-        pivot = int(np.argmax(np.abs(comp)))
-        if comp[pivot] < 0:
-            comp = -comp
-        expect_cols.append(Xc @ comp)
-    for i in range(80):
-        for c in range(2):
-            assert abs(got[i][c] - expect_cols[c][i]) < 1e-6, (i, c)
-    # first PC captures the dominant axis: far larger variance than second
-    assert np.var(expect_cols[0]) > 5 * np.var(expect_cols[1])
 
 
 def _decimal_moment_cov(vectors):

@@ -9,7 +9,6 @@ Spark, so a runtime change breaks here first, with a readable message.
 
 import os
 
-import pytest
 from pyspark.sql import types as T
 
 from lab_flink_repository_analytics_spark import session as S
@@ -80,17 +79,3 @@ def test_python_datasource_api_present():
         DataSourceReader,
         InputPartition,
     )
-
-
-def test_transform_with_state_available(spark):
-    """Spark 4's named-state streaming API (``transformWithStateInPandas``,
-    the successor of the ``applyInPandasWithState`` that
-    streaming/stateful.py uses) exists on this runtime."""
-    try:
-        from pyspark.sql.streaming.stateful_processor import (  # noqa: F401
-            StatefulProcessor,
-        )
-    except ImportError:
-        pytest.fail(
-            "pyspark.sql.streaming.stateful_processor gone on this runtime"
-        )

@@ -93,13 +93,23 @@ def test_inline_assignment_cosines_stay_staged(spark, sf_dir):
 
 
 def test_ann_broadcasts_queries(spark, sf_dir):
+    """Above ANN_INLINE_MAX queries the query side is broadcast into the
+    join with the candidates; a bounded query set scores in one
+    MapInArrow pass with no join at all."""
     from lab_flink_repository_analytics_spark.datapipe import similarity as SIM
     from lab_flink_repository_analytics_spark.session import load_tables
 
     t = load_tables(spark, sf_dir)
     emb = t["embeddings"]
-    df = SIM.brute_force_topk(emb.filter(F.col("vec_id") < 2), emb, k=3)
-    assert "BroadcastNestedLoopJoin" in _plan(df) or "BroadcastHashJoin" in _plan(df)
+    dim = suite.EMBEDDING_DIM
+    many = emb.orderBy("vec_id").limit(SIM.ANN_INLINE_MAX + 1)
+    plan = _plan(SIM.brute_force_topk(many, emb, k=3, dim=dim))
+    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan, plan
+    assert "MapInArrow" not in plan, plan
+    two = emb.filter(F.col("vec_id") < 2)
+    plan = _plan(SIM.brute_force_topk(two, emb, k=3, dim=dim))
+    assert "MapInArrow" in plan, plan
+    assert "Join" not in plan, plan
 
 
 def test_bounded_ivf_topk_scores_probes_in_one_arrow_pass(spark, sf_dir):

@@ -10,7 +10,12 @@ reintroduce one:
   thresholds); anything else is an unkeyed join;
 * ``Exchange SinglePartition`` — acceptable ONLY for queries whose final
   output is a single (or bounded) row set reduced by partial aggregation
-  first, or whose windowed input is domain-bounded (documented per entry).
+  first, or whose windowed input is domain-bounded (documented per entry);
+* ``aggregate(zip_with(`` — the interpreted higher-order-function fold
+  runs outside whole-stage codegen, per element; the vector kernels take
+  a pinned width and plan codegen chains or Arrow passes instead, so a
+  fold is acceptable ONLY where it runs once per row, never per pair
+  (documented per entry).
 
 If an addition legitimately needs one of these, it must be added to the
 whitelist here WITH the justification.
@@ -60,6 +65,22 @@ SINGLE_PARTITION_OK = {
 }
 
 
+#: queries allowed an interpreted ``aggregate(zip_with(...))`` fold
+HOF_DOT_OK = {
+    # mean_pairwise_cosine: the row norm and the unit vector's self-dot
+    # (5 fold sites), once per row, fed to DECIMAL sums; their plan waits
+    # for the _exact_sum move (ROADMAP item 1)
+    "label_redundancy",
+    # quantization_error: one DECIMAL(28,12) fold of |x - q·scale| per
+    # row; the per-step re-cast has no flat-sum form
+    "quantization_error_by_label",
+    # the SRP sketch's 8 projections per row against a literal ±1 matrix:
+    # the unrolled 8×64 chain costs ~3 s of codegen compile and a 1 MB
+    # task binary for the same bits (analytics_extra.random_projection_sketch)
+    "random_projection_sketch",
+}
+
+
 @pytest.fixture(scope="module")
 def plans(spark):
     out = {}
@@ -97,6 +118,18 @@ def test_single_partition_only_bounded_reductions(plans):
         f"unexpected SinglePartition exchange in: {bad} — data-scale rows "
         "on one partition; distribute (datapipe/ranking.py) or whitelist "
         "with justification"
+    )
+
+
+def test_vector_folds_only_where_allowed(plans):
+    bad = [
+        n
+        for n, p in plans.items()
+        if "aggregate(zip_with(" in p and n not in HOF_DOT_OK
+    ]
+    assert not bad, (
+        f"interpreted zip_with/aggregate fold in: {bad} — pin the vector "
+        "width (flat_dot, the Arrow scorers) or allowlist with justification"
     )
 
 

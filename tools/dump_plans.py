@@ -40,7 +40,7 @@ SHOW = [
     ("sliding_window_activity", "HOP windows: Expand (4 copies/row) below one partial+final aggregation"),
     ("benchmark_contamination", "eval grams broadcast; training side never shuffles its exploded size"),
     ("small_quantity_revenue", "decorrelated Q17: pre-agg self-join on l_partkey, part dim broadcast"),
-    ("label_centroids", "posexplode → one (group,dim) hash agg; DECIMAL sums exact at any partitioning"),
+    ("label_centroids", "dim flat DECIMAL sums + count in ONE per-group hash agg (no Generate); exact at any partitioning"),
     ("doc_chunks", "row-local chunking: start grid + slice/join in the scan stage, zero exchanges"),
     ("sequence_packing", "per-shard window cumsum; the bin rollup reuses the window's partitioning"),
     ("curation_summary", "four curation rules composed: per-doc reductions meet in broadcast id-joins"),
@@ -61,11 +61,11 @@ SHOW = [
     ("random_projection_sketch", "SRP signature: literal-matrix zip_with/aggregate fold, zero pre-rollup exchanges"),
     ("quantization_error_by_label", "int8 quantize: row-local transform + exact-DECIMAL fold, one label rollup"),
     ("mixture_sample_counts", "mixture quota: hash-filter scan, zero data shuffles before the rollup"),
-    ("semantic_dedup", "SemDeDup: inlined-quantizer assignment (no shuffle), cosine confined to one cluster join"),
+    ("semantic_dedup", "SemDeDup: driver-held quantizer, one MapInArrow assignment pass (no shuffle); pair cosines confined to one grouped Arrow pass per cluster"),
     ("hard_negative_mining", "driver-held query set: one MapInArrow scoring pass with the label inequality, no join; per-query window top-k"),
     ("boilerplate_gram_frac", "positions pre-aggregated to doc-gram multiplicities; frequent-gram join back"),
     ("bigram_lm_scores", "doc-bigram multiplicities feed both the model rollup and the scoring join"),
-    ("kmeans_clusters", "Lloyd iteration: inlined-centroid assignment (no shuffle) + one (cluster,dim) agg"),
+    ("kmeans_clusters", "Lloyd: final assignment is one MapInArrow pass against driver-held centroids (no shuffle); each update, one per-cluster agg of dim flat sums, runs before it"),
     ("embedding_covariance", "dim² pair expansion meets map-side partials; shuffle is model-sized"),
     ("user_value_ewma", "per-key sorted-array fold: ONE exchange, recurrence in codegen aggregate"),
     ("windowed_event_dedup", "first-per-(key,window): partial WindowGroupLimit below the single shuffle"),
