@@ -22,8 +22,8 @@ classic scale-safe construction used here:
 
 Cache lifetime: the ranged intermediate for each helper is persisted in
 a single module slot — call N+1 releases call N's handle, and
-``release_caches()`` drops everything (long-lived sessions / bench
-loops).  If blocks are evicted before the caller materializes, the
+``session.release_persist_slots()`` drops everything (long-lived
+sessions / bench loops).  If blocks are evicted before the caller materializes, the
 recompute is safe: the range sampler is fixed-seed over deterministic
 input, so partition ids, sort order, and record positions reproduce
 exactly.
@@ -45,13 +45,6 @@ def _persist_bounded(df: DataFrame, slot: str) -> DataFrame:
     from lab_flink_repository_analytics_spark.session import persist_bounded
 
     return persist_bounded(df, f"ranking.{slot}")
-
-
-def release_caches() -> None:
-    """Drop every slot-cached intermediate (bench loops, teardown)."""
-    from lab_flink_repository_analytics_spark.session import release_persist_slots
-
-    release_persist_slots()
 
 
 def with_global_row_number(

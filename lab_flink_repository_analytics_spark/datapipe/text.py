@@ -786,47 +786,3 @@ def duplicate_span_stats_df(
             .alias("dup_frac"),
         )
     )
-
-
-def token_entropy_df(
-    docs,
-    group_cols: list[str],
-    text_col: str = "text",
-):
-    """Per-group unigram Shannon entropy of the token distribution (nats)
-    — the corpus-diversity signal data-mixing reads next to raw token
-    counts: low-entropy sources are templated/repetitive regardless of
-    volume.
-
-    Scale shape: one (group, word) hash aggregate (map-side partials over
-    the corpus scan), per-group totals broadcast back, entropy terms
-    summed as exact DECIMALs (ln is evaluated on identical doubles in
-    both engines; only the SUM order would differ — decimals remove
-    that).  Output: (group_cols…, n_tokens, vocab, entropy).
-    """
-    from lab_flink_repository_analytics_spark.session import (
-        persist_bounded,
-        rebalance,
-    )
-
-    # consumed twice (per-group totals + the entropy-term join) — persist
-    # so the corpus explode runs once
-    counts = persist_bounded(
-        rebalance(docs)
-        .select(*group_cols, F.explode(tokens(text_col)).alias("w"))
-        .groupBy(*group_cols, "w")
-        .agg(F.count(F.lit(1)).alias("c")),
-        "text.entropy.counts",
-    )
-    totals = counts.groupBy(*group_cols).agg(
-        F.sum("c").cast("bigint").alias("n_tokens"),
-        F.count(F.lit(1)).cast("bigint").alias("vocab"),
-    )
-    p = F.col("c").cast("double") / F.col("n_tokens")
-    term = (-(p * F.log(p))).cast("decimal(25,18)")
-    return (
-        counts.join(F.broadcast(totals), group_cols)
-        .select(*group_cols, "n_tokens", "vocab", term.alias("t"))
-        .groupBy(*group_cols, "n_tokens", "vocab")
-        .agg(F.round(F.sum("t").cast("double"), 6).alias("entropy"))
-    )

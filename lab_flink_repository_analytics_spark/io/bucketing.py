@@ -47,10 +47,6 @@ def write_bucketed(
     w.saveAsTable(table)
 
 
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
-
-
 def cobucketed_join(
     spark: SparkSession,
     left_table: str,

@@ -11,13 +11,20 @@ The reference's sinks:
   actual Kafka delivery needs the kafka connector package at runtime.
 * Multi-sink statement set (FlinkMailingListToKafka.java:169-174) —
   Spark-side: ``fan_out`` writes one cached source to N sinks.
+
+Every dataset the engine replaces in place — the upsert, the changelog
+refresh (``apply_changelog``), the streaming counter stores
+(``streaming/jobs.py``) — goes through ``rewrite``: crash recovery, a
+lazy read of the live copy, the caller's merge, and one write swapped in
+by checked renames (``_swap_in``).  Compaction (``compact_parquet``)
+runs the same recovery and the same swap.
 """
 
 from __future__ import annotations
 
 import logging
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 _LOG = logging.getLogger(__name__)
@@ -31,6 +38,41 @@ def _rename_or_raise(fs, src, dst) -> None:
     committed ``._tmp`` — so any ``false`` is fatal."""
     if not fs.rename(src, dst):
         raise RuntimeError(f"rename failed (returned false): {src} -> {dst}")
+
+
+def rewrite(spark: SparkSession, path: str, merge) -> None:
+    """Replace the parquet dataset at ``path`` with
+    ``merge(existing)``; the one in-place rewrite every sink here uses.
+
+    ``existing`` is the live dataset as a lazy read, or ``None`` when
+    nothing has been written yet.  The steps: salvage a crashed earlier
+    swap (:func:`_recover_swap`), read what is live, build the merged
+    frame, and swap it in with :func:`_swap_in`'s checked renames.  Every
+    crash window leaves a complete copy that the next call's recovery
+    puts back in place.
+    """
+    _recover_swap(spark, path)
+    existing = spark.read.parquet(path) if _exists(spark, path) else None
+    _swap_in(spark, merge(existing), path)
+
+
+def _keep_updates(
+    existing: DataFrame | None, updates: DataFrame, key_cols: list[str]
+) -> DataFrame:
+    """``existing`` ∪ ``updates`` with one row per key, the update row
+    winning a collision; with no ``existing``, one row per key of
+    ``updates`` alone."""
+    merged = updates.withColumn("_is_update", F.lit(1))
+    if existing is not None:
+        merged = existing.withColumn("_is_update", F.lit(0)).unionByName(merged)
+    w = Window.partitionBy(*[F.col(c) for c in key_cols]).orderBy(
+        F.col("_is_update").desc()
+    )
+    return (
+        merged.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn", "_is_update")
+    )
 
 
 def upsert_by_key(
@@ -59,35 +101,13 @@ def upsert_by_key(
     ~1 GB prefer :func:`apply_changelog` (delta-driven) with
     partition-aligned overwrite, or a transactional MERGE.
 
-    Crash safety (round-8 rework): the merged result is written ONCE to
-    ``path._tmp`` while the live dataset is still being read, then swapped
-    in by two FileSystem renames (``path``→``path._old``,
-    ``path._tmp``→``path``).  Every crash window leaves a complete copy
-    recoverable by :func:`_recover_swap`, which both merge entry points
-    run first — a crash between the renames leaves ``._tmp`` (complete,
-    ``_SUCCESS``-marked) as the new state; a crash during the tmp write
-    leaves ``path`` untouched.  Renames are atomic on HDFS/local file
-    systems; on S3-style object stores (copy-based rename) use a
-    transactional table format instead — same advice as the scale note
-    above.
+    Crash safety is :func:`rewrite`'s: one data write and two renames,
+    with every crash window recoverable.  Renames are atomic on
+    HDFS/local file systems; on S3-style object stores (copy-based
+    rename) use a transactional table format instead — same advice as
+    the scale note above.
     """
-    _recover_swap(spark, path)
-    updates = updates.withColumn("_is_update", F.lit(1))
-    if _exists(spark, path):
-        existing = spark.read.parquet(path).withColumn("_is_update", F.lit(0))
-        merged = existing.unionByName(updates)
-    else:
-        merged = updates
-    w_cols = [F.col(c) for c in key_cols]
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*w_cols).orderBy(F.col("_is_update").desc())
-    result = (
-        merged.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_is_update")
-    )
-    _swap_in(spark, result, path)
+    rewrite(spark, path, lambda existing: _keep_updates(existing, updates, key_cols))
 
 
 def apply_changelog(
@@ -108,36 +128,28 @@ def apply_changelog(
     materialization against today's (one full-outer join) and rewrite only
     through the delta set instead of recomputing consumers downstream.
     Delta/Iceberg ``MERGE WHEN MATCHED [AND kind='-D'] THEN DELETE`` is the
-    transactional equivalent.
+    transactional equivalent.  The swap is :func:`rewrite`'s.
     """
     kc = F.col(kind_col)
-    _recover_swap(spark, path)
     ups = deltas.filter(kc.isin("+I", "+U")).drop(kind_col)
     dels = deltas.filter(kc == "-D").select(*key_cols).distinct()
-    if _exists(spark, path):
-        existing = spark.read.parquet(path)
+
+    def merge(existing: DataFrame | None) -> DataFrame:
+        if existing is None:
+            return ups
         survivors = existing.join(dels, on=list(key_cols), how="left_anti")
-        merged = survivors.withColumn("_is_update", F.lit(0)).unionByName(
-            ups.withColumn("_is_update", F.lit(1))
-        )
-        from pyspark.sql import Window
+        return _keep_updates(survivors, ups, key_cols)
 
-        w = Window.partitionBy(*[F.col(c) for c in key_cols]).orderBy(
-            F.col("_is_update").desc()
-        )
-        result = (
-            merged.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "_is_update")
-        )
-    else:
-        result = ups
-    _swap_in(spark, result, path)
+    rewrite(spark, path, merge)
 
 
-def _swap_in(spark: SparkSession, result: DataFrame, path: str) -> None:
+def _swap_in(
+    spark: SparkSession, result: DataFrame, path: str, partition_cols=()
+) -> None:
     """Materialize ``result`` (which may lazily read from ``path``) and
     swap it into place via renames, never a second data write.
+    ``partition_cols`` lays the written copy out Hive-style
+    (:func:`compact_parquet`).
 
     Order of operations and the crash window each step leaves:
 
@@ -154,14 +166,16 @@ def _swap_in(spark: SparkSession, result: DataFrame, path: str) -> None:
        ``._old`` to garbage-collect
 
     The two renames are metadata-only on HDFS and local file systems;
-    total data written per merge is exactly one copy of the result (the
-    pre-round-8 version wrote it twice: tmp, then read-tmp-write-path).
+    total data written per rewrite is exactly one copy of the result.
     """
     base = path.rstrip("/")
     tmp_s, old_s = base + "._tmp", base + "._old"
     _rm(spark, tmp_s)
     _rm(spark, old_s)
-    result.write.mode("overwrite").parquet(tmp_s)
+    writer = result.write.mode("overwrite")
+    if partition_cols:
+        writer = writer.partitionBy(*partition_cols)
+    writer.parquet(tmp_s)
     fs, hpath = _hadoop_fs(spark, path)
     jvm = spark._jvm
     tmp = jvm.org.apache.hadoop.fs.Path(tmp_s)
@@ -248,28 +262,6 @@ def to_kafka_json(df: DataFrame, key_cols: list[str] | None = None) -> DataFrame
     return df.select(key.alias("key"), value.alias("value"))
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    num_buckets: int = 32,
-    sort_cols: list[str] | None = None,
-) -> None:
-    """Persist a table bucketed (and optionally sorted) on its join key.
-
-    The 100 TB co-location strategy: two tables bucketed on the same key
-    with the same bucket count join with **no shuffle of either side** (and
-    no sort when ``sort_cols`` matches) — the per-bucket files are read
-    pre-partitioned.  Worth it for any fact table joined repeatedly on the
-    same key (e.g. lineitem ⋈ orders on orderkey); bucket count should be
-    sized so one bucket of the largest table fits an executor's memory.
-    """
-    writer = df.write.mode("overwrite").bucketBy(num_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table, format="parquet")
-
-
 def fan_out(df: DataFrame, writers: list) -> None:
     """One source, N sinks (≙ the reference's StatementSet multi-insert,
     FlinkMailingListToKafka.java:169-174).  Caches the source once."""
@@ -315,8 +307,9 @@ def compact_parquet(
     tax on every scan.  Compaction reads once, repartitions to
     ``ceil(rows/target)`` output files (range-partitioned + sorted on
     ``sort_cols`` when given, so per-file min/max statistics become
-    selective and row-group skipping works), and atomically swaps via a
-    temp directory + rename.  The Delta/Iceberg equivalent is OPTIMIZE
+    selective and row-group skipping works), and swaps the result in
+    through :func:`_swap_in`'s checked renames, after the same crash
+    recovery :func:`rewrite` runs.  The Delta/Iceberg equivalent is OPTIMIZE
     [ZORDER]; this is the plain-parquet fallback with the same contract.
 
     Hive-partitioned datasets (``split=.../part-*.parquet``) keep their
@@ -326,8 +319,7 @@ def compact_parquet(
     columns first, so each output task holds ~one partition value and the
     file-count target survives the partitioned write.
     """
-    from pyspark.sql import functions as F  # noqa: F401 (parity w/ module style)
-
+    _recover_swap(spark, path)
     if partition_cols is None:
         partition_cols = _detect_partition_cols(spark, path)
     # Partition values must round-trip VERBATIM: with type inference on,
@@ -360,17 +352,7 @@ def compact_parquet(
             out = out.sortWithinPartitions(*sort_cols)
     else:
         out = df.repartition(n_files)
-    tmp = path.rstrip("/") + "__compact_tmp"
-    writer = out.write.mode("overwrite")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(tmp)
-    fs, jpath = _hadoop_fs(spark, path)
-    _rm(spark, path)
-    fs.rename(
-        spark._jvm.org.apache.hadoop.fs.Path(tmp),
-        jpath,
-    )
+    _swap_in(spark, out, path, partition_cols)
     return n_files
 
 
@@ -391,6 +373,7 @@ def compact_parquet_to_size(
     truth the 128 MB-to-1 GB file-sizing guidance is stated in.  The size
     probe is one namenode listing — no data read.
     """
+    _recover_swap(spark, path)
     fs, jpath = _hadoop_fs(spark, path)
     total = 0
     # recursive listing: partitioned datasets (split=.../part-*.parquet)

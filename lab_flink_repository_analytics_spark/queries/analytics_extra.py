@@ -2095,9 +2095,13 @@ def source_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup (:func:`_source_word_counts` — shared with
     source_token_entropy, so the corpus text scan runs once per session);
     doc counts are a text-free scan of the pruned ``source`` column.  The
-    Σ sqrt normalizer is an exact DECIMAL sum over #source rows (summation
-    order across groups is engine-dependent for doubles, never for
-    decimals); the weight division is double with pinned operand order.
+    two normalizers are one window over the #sources joined rows, so the
+    plan holds that join once: a broadcast one-row aggregate would plan
+    it twice, pruned differently, and AQE does not always reuse the copy,
+    which makes the job count vary between runs.  The Σ sqrt
+    normalizer is an exact DECIMAL sum (summation order across groups is
+    engine-dependent for doubles, never for decimals); the weight
+    division is double with pinned operand order.
     Output: (source, n_docs, n_tokens, token_share, sample_weight)."""
     docs = load_tables(spark, sf_dir)["documents"]
     per_docs = docs.groupBy("source").agg(
@@ -2108,15 +2112,14 @@ def source_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source")
         .agg(F.sum("c").cast("bigint").alias("n_tokens"))
     )
-    per = per_docs.join(per_tokens, "source")
-    tot = per.agg(
-        F.sum("n_tokens").cast("bigint").alias("tot_tokens"),
-        F.sum(F.sqrt(F.col("n_tokens").cast("double")).cast("decimal(28,12)")).alias(
-            "tot_sqrt"
-        ),
-    )
+    everything = Window.partitionBy()
+    tot_tokens = F.sum("n_tokens").over(everything).cast("bigint")
+    tot_sqrt = F.sum(
+        F.sqrt(F.col("n_tokens").cast("double")).cast("decimal(28,12)")
+    ).over(everything)
     return (
-        per.crossJoin(F.broadcast(tot))
+        per_docs.join(per_tokens, "source")
+        .select("*", tot_tokens.alias("tot_tokens"), tot_sqrt.alias("tot_sqrt"))
         .select(
             "source",
             "n_docs",
@@ -2269,11 +2272,11 @@ EVENT_DRIFT_SQL = _event_drift_sql()
 def source_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source unigram Shannon entropy + vocab size: the diversity
     signal read next to source_mixture_weights when composing a training
-    blend.  Same math as datapipe/text.py::token_entropy_df, but fed from
-    the session-shared (source, w, c) rollup (:func:`_source_word_counts`)
-    so the corpus scan + explode is paid once per session, not once per
-    query (round-4 regression fix: this query and the mixture weights
-    each re-ran the identical unigram pass)."""
+    blend.  Fed from the session-shared (source, w, c) rollup
+    (:func:`_source_word_counts`) so the corpus scan + explode is paid
+    once per session, not once per query: this query and the mixture
+    weights read the same unigram pass.  Per-source totals are broadcast
+    back; the entropy terms are summed as exact DECIMALs."""
     counts = _source_word_counts(spark, sf_dir)
     totals = counts.groupBy("source").agg(
         F.sum("c").cast("bigint").alias("n_tokens"),

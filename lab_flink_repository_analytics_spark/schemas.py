@@ -8,13 +8,13 @@ PullRequest.java:36-60, Email.java:29-46) and as Kafka-table SQL DDL
 inference anywhere.
 
 Timestamps: the reference uses ``TIMESTAMP(3)`` (ms precision, UTC-naive).
-Spark timestamps are µs; ingesters truncate to ms (``truncate_to_millis``)
-so hash-equality with ms-precision oracles holds.
+Spark timestamps are µs; the ingesters truncate parsed dates to ms in
+Python before they build a DataFrame (``ingest/gitlog.py``, ``mbox.py``,
+``github.py``), so hash-equality with ms-precision oracles holds.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -108,14 +108,3 @@ WATERMARKS = {
     "flink_pulls": ("createdAt", "7 days"),
     "flink_ml": ("date", "1 day"),
 }
-
-
-def truncate_to_millis(col):
-    """Truncate a µs-precision Spark timestamp column to ms (TIMESTAMP(3)).
-
-    Integer floor division (``div``), not float ``/``: float division
-    truncates toward zero, which is 1 ms late for pre-1970 timestamps and
-    routes an exact integer computation through a double.
-    """
-    c = col if not isinstance(col, str) else F.col(col)
-    return F.timestamp_micros(F.unix_micros(c).cast("long") - (F.pmod(F.unix_micros(c), F.lit(1000))))

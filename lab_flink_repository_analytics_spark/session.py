@@ -463,8 +463,8 @@ def local_relation(spark, rows, schema: str):
     )
 
 
-def rebalance(df, factor: int = 1, expected_splits: int | None = None):
-    """Ensure at least ``defaultParallelism × factor`` partitions before a
+def rebalance(df):
+    """Ensure at least ``defaultParallelism`` partitions before a
     data-amplifying stage (explode of shingles/files, quadratic block join).
 
     Narrow sources (one small parquet file, a single kafka partition) would
@@ -474,8 +474,6 @@ def rebalance(df, factor: int = 1, expected_splits: int | None = None):
     the extra shuffle is never paid; it only fires when the source is
     narrower than the cluster.
 
-    ``expected_splits``: callers that KNOW their source's split count (e.g.
-    a pre-bucketed table) can pass it to skip the plan probe entirely.
     Only the plan-SHAPE probe (physical planning → "does the input contain
     a shuffle exchange") is memoized on the analyzed plan's
     ``semanticHash`` — that part is a pure function of the query.  The
@@ -484,10 +482,7 @@ def rebalance(df, factor: int = 1, expected_splits: int | None = None):
     every call rather than cached with the plan.
     """
     sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism * factor
-    if expected_splits is not None:
-        return df.repartition(target) if expected_splits < target else df
-
+    target = sc.defaultParallelism
     key = (df._jdf.queryExecution().analyzed().semanticHash(), target)
     has_exchange = _REBALANCE_MEMO.get(key)
     if has_exchange is None:

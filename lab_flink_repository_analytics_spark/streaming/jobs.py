@@ -220,62 +220,44 @@ def value_histogram_stream(
     events: DataFrame,
     store_path: str,
     checkpoint: str,
-    keys: list[str] | None = None,
-    value_col: str = "value",
     lo: float = 0.0,
     hi: float = 600.0,
     bins: int = 128,
-    available_now: bool = True,
 ):
-    """Incremental sketch maintenance: every micro-batch's value histogram
-    merges into a persistent counter store — quantile estimates over the
-    full history are always one read away, without ever re-scanning raw
-    events (the streaming face of ``datapipe.sketches``' mergeability:
-    per-batch grids sum, exactly like per-period rollups).
+    """Incremental sketch maintenance: every micro-batch's per-event_type
+    histogram of ``value`` merges into a persistent counter store —
+    quantile estimates over the full history are always one read away,
+    without ever re-scanning raw events (the streaming face of
+    ``datapipe.sketches``' mergeability: per-batch grids sum, exactly like
+    per-period rollups).
 
-    The store stays ≤ |keys|×bins rows no matter how much data streams
-    through.  Checkpoint + overwrite-swap keeps the update idempotent per
-    batch on restart."""
+    The store stays ≤ |event types|×bins rows no matter how much data
+    streams through.  Checkpoint + ``sinks.rewrite`` keeps the update
+    idempotent per batch on restart and crash-safe mid-swap."""
     from lab_flink_repository_analytics_spark.datapipe import sketches as SK
-    from lab_flink_repository_analytics_spark.io import sinks
-
-    keys = keys or ["event_type"]
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        # crash-safe merge via the upsert sink's rename swap (round 9 —
-        # the pre-r9 form double-wrote tmp→store with a corruption window
-        # between the two overwrites): one data write + two atomic
-        # renames, with recovery salvaging any crashed predecessor
-        spark = batch_df.sparkSession
-        sinks._recover_swap(spark, store_path)
-        h = SK.value_histogram(batch_df, value_col, keys, lo, hi, bins)
-        if sinks._exists(spark, store_path):
-            existing = spark.read.parquet(store_path)
-            h = SK.merge_histograms(existing, h)
-        sinks._swap_in(spark, h, store_path)
+        h = SK.value_histogram(batch_df, "value", ["event_type"], lo, hi, bins)
+        sinks.rewrite(
+            batch_df.sparkSession,
+            store_path,
+            lambda existing: h if existing is None else SK.merge_histograms(existing, h),
+        )
 
-    writer = (
+    return (
         events.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint)
         .foreachBatch(_merge)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
-def word_topk_stream(
-    docs: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    k: int = 10,
-    text_col: str = "text",
-    available_now: bool = True,
-):
-    """Incremental top-k maintenance: per micro-batch word counts merge
-    into a persistent counter store; the CURRENT global top-k is one tiny
-    read away at any moment (``read_topk``), with raw documents never
-    re-scanned.
+def word_topk_stream(docs: DataFrame, store_path: str, checkpoint: str):
+    """Incremental top-k maintenance: per micro-batch counts of the words
+    in ``text`` merge into a persistent counter store; the CURRENT global
+    top-k is one tiny read away at any moment (``read_topk``), with raw
+    documents never re-scanned.
 
     Counter-store size is vocabulary-bounded, not stream-bounded — the
     same state contract as ``value_histogram_stream``.  For an unbounded
@@ -283,43 +265,36 @@ def word_topk_stream(
     count-min sketch (datapipe/sketches.py::cms_*) can't answer — exact
     heads + sketched tail is the standard split; the merge shape here is
     identical either way."""
-    from pyspark.sql import functions as F
-
-    from lab_flink_repository_analytics_spark.io import sinks
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        # crash-safe merge via the upsert sink's rename swap (round 9;
-        # see value_histogram_stream._merge)
-        spark = batch_df.sparkSession
-        sinks._recover_swap(spark, store_path)
         counts = (
-            batch_df.select(F.explode(F.split(text_col, " ")).alias("word"))
+            batch_df.select(F.explode(F.split("text", " ")).alias("word"))
             .groupBy("word")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        if sinks._exists(spark, store_path):
-            counts = (
-                spark.read.parquet(store_path)
-                .unionByName(counts)
+
+        def merge(existing: DataFrame | None) -> DataFrame:
+            if existing is None:
+                return counts
+            return (
+                existing.unionByName(counts)
                 .groupBy("word")
                 .agg(F.sum("cnt").alias("cnt"))
             )
-        sinks._swap_in(spark, counts, store_path)
 
-    writer = (
+        sinks.rewrite(batch_df.sparkSession, store_path, merge)
+
+    return (
         docs.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint)
         .foreachBatch(_merge)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_topk(spark, store_path: str, k: int = 10) -> DataFrame:
     """Current top-k from the counter store (deterministic tie-break)."""
-    from pyspark.sql import functions as F
-
     return (
         spark.read.parquet(store_path)
         .orderBy(F.col("cnt").desc(), "word")

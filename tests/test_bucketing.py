@@ -66,7 +66,7 @@ def test_unbucketed_join_shuffles_both_sides(spark, sf_dir):
 def test_bucketed_groupby_key_skips_exchange(spark, bucketed_tables):
     _, rt = bucketed_tables
     agg = (
-        B.read_table(spark, rt)
+        spark.table(rt)
         .groupBy("o_orderkey")
         .agg(F.sum("l_quantity").alias("q"))
     )

@@ -95,6 +95,50 @@ def test_gitlog_df(spark, git_repo):
     assert sum(r[0] for r in exploded.collect()) == 2 + 3 + 1
 
 
+
+def _month_dirs(path, col):
+    import os
+
+    return sorted(d for d in os.listdir(path) if d.startswith(f"{col}="))
+
+
+def test_gitlog_ingest_resumes_from_returned_sha(spark, git_repo, tmp_path):
+    # the checkpointed-source contract: each ingest appends what follows
+    # the mark it is given and returns the new last SHA
+    import shutil
+
+    d = str(tmp_path / "repo")
+    shutil.copytree(git_repo, d)
+    out = str(tmp_path / "commits")
+    shas = [c["sha1"] for c in gitlog.read_commits(d)]
+    mark = gitlog.ingest_to_parquet(spark, d, out)
+    assert mark == shas[-1]
+    assert gitlog.ingest_to_parquet(spark, d, out, after_sha=mark) == mark
+    assert spark.read.parquet(out).count() == 2
+    env = {
+        "GIT_AUTHOR_NAME": "Carol",
+        "GIT_AUTHOR_EMAIL": "carol@corp.io",
+        "GIT_COMMITTER_NAME": "Carol",
+        "GIT_COMMITTER_EMAIL": "carol@corp.io",
+        "GIT_AUTHOR_DATE": "2021-02-03T10:00:00+00:00",
+        "GIT_COMMITTER_DATE": "2021-02-03T10:00:00+00:00",
+    }
+    (__import__("pathlib").Path(d) / "c.txt").write_text("z\n")
+    subprocess.run(["git", "-C", d, "add", "c.txt"], check=True, capture_output=True, env=env)
+    subprocess.run(
+        ["git", "-C", d, "commit", "-q", "-m", "third commit"],
+        check=True, capture_output=True, env=env,
+    )
+    new_mark = gitlog.ingest_to_parquet(spark, d, out, after_sha=mark)
+    assert new_mark == gitlog.read_commits(d)[-1]["sha1"] != mark
+    got = sorted(r["sha1"] for r in spark.read.parquet(out).select("sha1").collect())
+    assert got == sorted([*shas, new_mark])
+    assert _month_dirs(out, "commit_month") == [
+        "commit_month=2021-01",
+        "commit_month=2021-02",
+    ]
+
+
 MBOX_CONTENT = """From alice@corp.io Mon Jan  4 09:00:00 2021
 From: Alice <alice@corp.io>
 To: dev@list.org
@@ -157,6 +201,34 @@ def test_mbox_parse(mbox_file):
     # FROM -> SENDER fallback (:302-319)
     assert s["fromRaw"].startswith("Fallback")
     assert s["fromEmail"] == "fb@corp.io"
+
+
+def test_mbox_ingest_resumes_from_returned_date(spark, mbox_file, tmp_path):
+    # same contract keyed on the last email date (strictly-after resume)
+    import shutil
+
+    p = tmp_path / "list.mbox"
+    shutil.copy(mbox_file, p)
+    out = str(tmp_path / "emails")
+    mark = mbox.ingest_to_parquet(spark, str(p), out)
+    assert mark == datetime(2021, 1, 4, 13, 0)
+    assert mbox.ingest_to_parquet(spark, str(p), out, after=mark) == mark
+    assert spark.read.parquet(out).count() == 3
+    with open(p, "a") as f:
+        f.write(
+            "\nFrom carol@corp.io Tue Feb  2 10:00:00 2021\n"
+            "From: Carol <carol@corp.io>\n"
+            "Subject: later\n"
+            "Date: Tue, 2 Feb 2021 10:00:00 +0000\n"
+            "Content-Type: text/plain\n\nnew month\n"
+        )
+    new_mark = mbox.ingest_to_parquet(spark, str(p), out, after=mark)
+    assert new_mark == datetime(2021, 2, 2, 10, 0)
+    got = spark.read.parquet(out).select("fromEmail").collect()
+    assert sorted(r["fromEmail"] for r in got) == [
+        "alice@corp.io", "carol@corp.io", "fb@corp.io", "jira@apache.org",
+    ]
+    assert _month_dirs(out, "month") == ["month=2021-01", "month=2021-02"]
 
 
 def test_mbox_incremental_filter(mbox_file):

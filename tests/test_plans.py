@@ -52,19 +52,18 @@ def test_commit_activity_single_shuffle_agg(spark, sf_dir):
 
 
 def test_bucketed_join_avoids_shuffle(spark, sf_dir, tmp_path):
-    from lab_flink_repository_analytics_spark.io import sinks
+    from lab_flink_repository_analytics_spark.io import bucketing
     from lab_flink_repository_analytics_spark.session import load_tables
 
     t = load_tables(spark, sf_dir)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force non-broadcast
     try:
-        sinks.write_bucketed(t["orders"], "b_orders", ["o_orderkey"], 8, ["o_orderkey"])
-        sinks.write_bucketed(
+        bucketing.write_bucketed(t["orders"], "b_orders", ["o_orderkey"], 8)
+        bucketing.write_bucketed(
             t["lineitem"].select("l_orderkey", "l_quantity"),
             "b_lineitem",
             ["l_orderkey"],
             8,
-            ["l_orderkey"],
         )
         joined = spark.table("b_lineitem").join(
             spark.table("b_orders"),

@@ -580,6 +580,84 @@ def test_compact_parquet_reduces_files_and_preserves_rows(spark, tmp_path):
     assert spans[0][-1] < spans[1][0]
 
 
+class _RenameIntoFs:
+    """A real Hadoop FileSystem whose rename onto a path named ``live``
+    returns ``result``, or raises it when it is an exception; every other
+    call goes through."""
+
+    def __init__(self, fs, live, result):
+        self._fs, self._live, self._result = fs, live, result
+
+    def rename(self, src, dst):
+        if dst.getName() == self._live:
+            if isinstance(self._result, Exception):
+                raise self._result
+            return self._result
+        return self._fs.rename(src, dst)
+
+    def __getattr__(self, name):
+        return getattr(self._fs, name)
+
+
+def _fragmented_100(spark, path):
+    for i in range(4):
+        spark.range(i * 25, (i + 1) * 25).select(
+            F.col("id").alias("k"), (F.col("id") * 10).alias("v")
+        ).coalesce(1).write.mode("append").parquet(path)
+
+
+def _fail_renames_into(monkeypatch, path, result):
+    """Route every FileSystem the sinks open through :class:`_RenameIntoFs`."""
+    real = sinks._hadoop_fs
+
+    def wrapped(spark, p):
+        fs, hpath = real(spark, p)
+        return _RenameIntoFs(fs, path.rstrip("/").rsplit("/", 1)[-1], result), hpath
+
+    monkeypatch.setattr(sinks, "_hadoop_fs", wrapped)
+
+
+def test_compact_parquet_crash_before_swap_keeps_data_for_next_upsert(
+    spark, tmp_path, monkeypatch
+):
+    # compaction dies after the live copy is moved aside and before the
+    # compacted copy is renamed into place; the next upsert must find a
+    # complete copy to merge into, not start over from its own rows
+    import pytest
+
+    path = str(tmp_path / "ds")
+    _fragmented_100(spark, path)
+
+    class _Crash(Exception):
+        pass
+
+    with monkeypatch.context() as m:
+        _fail_renames_into(m, path, _Crash())
+        with pytest.raises(_Crash):
+            sinks.compact_parquet(spark, path, target_rows_per_file=60)
+    upd = spark.createDataFrame([(100, 1000)], "k: long, v: long")
+    sinks.upsert_by_key(spark, upd, path, ["k"])
+    got = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
+    assert got == {k: k * 10 for k in range(101)}
+
+
+def test_compact_parquet_raises_on_false_rename(spark, tmp_path, monkeypatch):
+    # Hadoop reports a failed rename by returning false; compaction must
+    # raise, not report success with the live path gone, and the next
+    # rewrite must recover every row
+    import pytest
+
+    path = str(tmp_path / "ds")
+    _fragmented_100(spark, path)
+    with monkeypatch.context() as m:
+        _fail_renames_into(m, path, False)
+        with pytest.raises(RuntimeError, match="rename failed"):
+            sinks.compact_parquet(spark, path, target_rows_per_file=60)
+    assert sinks.compact_parquet(spark, path, target_rows_per_file=60) == 2
+    got = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
+    assert got == {k: k * 10 for k in range(100)}
+
+
 def test_streaming_sliding_windows_emit_on_watermark(spark, tmp_path):
     # sliding (HOP) windows in streaming append mode: an event at 03:00
     # lands in the four 1-day/6h windows covering it; all four emit once

@@ -39,7 +39,6 @@ BNLJ_OK = {
     "dq_checks",  # broadcast scalar totals per rule
     "copurchase_triangles",  # broadcast scalar wedge/triangle counts
     "bigram_lm_scores",  # broadcast scalar vocab size V
-    "source_mixture_weights",  # broadcast one-row (tot_tokens, tot_sqrt) normalizer
     "mixture_token_quotas",  # broadcast one-row normalizer + one-row leftover count
 }
 
@@ -59,7 +58,7 @@ SINGLE_PARTITION_OK = {
     "copurchase_triangles",  # scalar triangle/wedge/edge counts
     "monthly_revenue_growth",  # month-cardinality window (bounded ~100s)
     "bigram_lm_scores",  # scalar vocab-size reduction (partial-agg first)
-    "source_mixture_weights",  # scalar normalizer over #sources pre-aggregated rows
+    "source_mixture_weights",  # normalizer window over #sources pre-aggregated rows
     "lsh_dedup_eval",  # one-row precision/recall counters (partial-agg first)
     "mixture_token_quotas",  # global remainder-rank window over #sources rows (bounded by contract)
 }

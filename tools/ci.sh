@@ -13,7 +13,8 @@
 #                                     and no whole-stage codegen fallback)
 #
 # Usage: tools/ci.sh [--quick|--extended-smoke]
-#   --quick           sf0.001 correctness, subset pytest
+#   --quick           sf0.001 correctness, subset pytest (incl. the sink
+#                     rewrite path: upsert, compaction, swap recovery)
 #   --extended-smoke  NO pytest — just a <5 min driver-mirror oracle pass
 #                     over a fixed spot-check list spanning every extension
 #                     module (graph, BPE, dup-span, similarity, sketches,
@@ -51,7 +52,7 @@ fi
 
 echo "=== [1/3] pytest ==="
 if [[ "$QUICK" == "--quick" ]]; then
-  python -m pytest tests/ -x -q -k "environment or util or plans"
+  python -m pytest tests/ -x -q -k "environment or util or plans or upsert or compact or swap"
 else
   python -m pytest tests/ -x -q
   # benchmark helpers (metrics, tracing, generators): Spark-free, seconds

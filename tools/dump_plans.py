@@ -72,7 +72,7 @@ SHOW = [
     ("event_value_zscores", "group moments broadcast back; fact table never shuffles"),
     ("duplicate_text_spans", "positions pre-agg to (doc,gram,positions[]); lead window only over duplicated positions"),
     ("bpe_token_counts", "segmentation per DISTINCT word; corpus side only explodes + equi-joins the vocab table"),
-    ("source_mixture_weights", "one #sources rollup; one-row normalizer broadcast back (scalar pattern)"),
+    ("source_mixture_weights", "one #sources rollup joined once; both normalizers are one window over its #sources rows"),
     ("training_order", "salted-hash permutation: only exchange is the shard partition, per-shard windows"),
     ("ann_recall_eval", "recall join moves only the two top-k result sets, never vectors"),
     ("leakage_safe_split_counts", "split key = CC cluster id: near-dups move between splits atomically"),
