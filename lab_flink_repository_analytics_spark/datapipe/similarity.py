@@ -8,14 +8,18 @@ into a join.  Both end in one per-query ranking window (:func:`_ranked`).
 
 Width contract: every vector kernel takes the embedding width as a
 required ``dim`` (the caller's table contract) or measures it from the
-model state it already holds (:func:`kmeans_lloyd_df`'s initial
-centroids), so each kernel has one width-pinned plan — codegen
-:func:`flat_dot` chains, flat per-dimension aggregates, or the NumPy
-Arrow scorers.  The width-agnostic :func:`dot` fold remains only where a
-plan must score vectors of unknown width (:func:`semdedup`'s ragged
-fallback, :func:`_join_assignments`, the routed level of
+model state it already holds (a quantizer's widest centroid), so each
+kernel has one width-pinned plan — codegen :func:`flat_dot` chains, flat
+per-dimension aggregates, or the NumPy Arrow scorers.  The width-agnostic
+:func:`dot` fold remains only where a plan must score vectors of unknown
+width (:func:`_join_assignments`, the routed level of
 :func:`hierarchical_assignments`) and for :func:`mean_pairwise_cosine`'s
 norms and self-dots.
+
+NULL contract, the DuckDB oracles' (``x/0`` and an out-of-range ``v[i]``
+are NULL there): a zero divisor or a row outside the width contract
+gives a NULL cosine (:func:`_np_cosine`, or a guarded divide), and every
+ranking is ``ORDER BY cs DESC, id`` with NaN first and NULL last.
 
 All float math is double-precision with a fixed left-to-right fold order so
 the DuckDB oracle can reproduce scores.
@@ -189,7 +193,8 @@ def _flat_dot_text(a: str, b, dim: int, parts: int = 1) -> str:
 
 
 def cosine(a: Column | str, b: Column | str) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+    """Fold-order cosine; NULL on a zero divisor, as with ANSI off."""
+    return dot(a, b) / F.nullif(norm(a) * norm(b), F.lit(0.0))
 
 
 #: summation split of every width-pinned cosine (scoring dots AND norms):
@@ -214,11 +219,20 @@ def _staged_cosine(
     zip_with/aggregate fold (round-10, guide §4 — the same staged shape
     :func:`semdedup`'s pair scan uses).  The split summation order is a
     DIFFERENT (fully deterministic) IEEE sequence from the fold, so
-    oracles mirror it via ``_dot_split_sql``."""
+    oracles mirror it via ``_dot_split_sql``.
+
+    A row narrower than ``dim`` stages a NULL norm, so neither its norm
+    nor any pair dot reads past its end; with a zero divisor that makes
+    the score NULL (:func:`_np_cosine`'s rule) instead of raising."""
     p = COSINE_SPLIT_PARTS
-    qs = q.withColumn("_nq", F.sqrt(flat_dot(qv, qv, dim, parts=p)))
-    cs = c.withColumn("_nc", F.sqrt(flat_dot(cv, cv, dim, parts=p)))
-    score = flat_dot(qv, cv, dim, parts=p) / (F.col("_nq") * F.col("_nc"))
+
+    def staged_norm(v):
+        return F.when(F.size(v) >= dim, F.sqrt(flat_dot(v, v, dim, parts=p)))
+
+    qs = q.withColumn("_nq", staged_norm(qv))
+    cs = c.withColumn("_nc", staged_norm(cv))
+    den = F.col("_nq") * F.col("_nc")
+    score = F.when(den != 0, flat_dot(qv, cv, dim, parts=p) / den)
     return qs, cs, score
 
 
@@ -234,6 +248,10 @@ def _np_flat_dot(V, W, dim: int, parts: int):
     bit-identical to the JVM evaluation.  (Deliberately NOT np.dot /
     np.add.reduce — both use pairwise/SIMD summation with a different,
     version-dependent order.)"""
+    if dim <= 0:  # flat_dot's literal 0.0
+        import numpy as np
+
+        return np.zeros(np.broadcast_shapes(V.shape[:-1], W.shape[:-1]))
     chunk = -(-dim // parts)
     partials = []
     for start in range(0, dim, chunk):
@@ -281,6 +299,41 @@ def _np_dense(cv, dim: int):
     return V, (bad if bad.any() else None)
 
 
+def _np_cosine(A, a_bad, B, b_bad, dim: int, parts: int):
+    """(cs, null): the (a, b) cosine cells of the float64 row matrices
+    ``A`` (a, dim) and ``B`` (b, dim), every dot and norm in
+    :func:`_np_flat_dot`'s ``parts`` order, and the mask of the NULL
+    cells — the one cosine rule of the NumPy kernels.  A cell is NULL
+    when its divisor is zero or either row is outside the width contract
+    (``a_bad``/``b_bad`` from :func:`_np_dense`, or ``None``); a NaN from
+    non-finite input stays NaN."""
+    import numpy as np
+
+    with np.errstate(all="ignore"):
+        na = np.sqrt(_np_flat_dot(A, A, dim, parts))
+        nb = np.sqrt(_np_flat_dot(B, B, dim, parts))
+        den = np.multiply.outer(na, nb)
+        cs = _np_flat_dot(A[:, None, :], B[None, :, :], dim, parts) / den
+    null = den == 0
+    if a_bad is not None:
+        null |= a_bad[:, None]
+    if b_bad is not None:
+        null |= b_bad[None, :]
+    return cs, null
+
+
+def _np_desc_order(cs, null, tie):
+    """Indexes that sort cosines ``cs`` along the last axis like the
+    oracles' ``ORDER BY cs DESC, tie``: NaN first (greatest), NULL cells
+    (``null``) last, −0.0 equal to +0.0."""
+    import numpy as np
+
+    nan = np.isnan(cs) & ~null
+    cls = np.where(nan, 0, np.where(null, 2, 1))
+    key = np.where(nan | null, 0.0, -cs)
+    return np.lexsort((tie, key, cls))
+
+
 def _inline_scored(
     c,
     rows,
@@ -303,15 +356,13 @@ def _inline_scored(
     JITs them or JITs them only after several executions — measured at
     the 100× replica: 38-75 s executor CPU on the execution a bench
     actually pays, vs ~a second of NumPy loops for the identical
-    arithmetic.  Rows violating the width contract degrade instead of
-    erroring: NULL vector, any NULL element among the first ``dim``, or
-    fewer than ``dim`` elements → NULL score; a zero-norm vector → NaN;
-    extra elements beyond ``dim`` are ignored.  (The ANSI expression
-    path this replaces RAISED on short and zero-norm vectors —
-    INVALID_ARRAY_INDEX / DIVIDE_BY_ZERO — so none of these rows were
-    inside its contract either; on contract data the two paths are
-    bit-identical, pinned by
-    test_inline_arrow_scorer_bit_identical_to_expression_path.)
+    arithmetic.  Scores follow :func:`_np_cosine`'s rule: a row outside
+    the width contract (NULL vector, any NULL element among the first
+    ``dim``, or fewer than ``dim`` elements) and a zero divisor give a
+    NULL score, as on the guarded join path (:func:`_staged_cosine`);
+    extra elements beyond ``dim`` are ignored.  On contract data the
+    two paths are bit-identical, pinned by
+    test_inline_arrow_scorer_bit_identical_to_expression_path.
 
     ``keys``: join-on-key semantics inside the batch.  Called once with
     the (#queries, dim) query matrix, it returns ``(key_of, allowed)``:
@@ -325,13 +376,11 @@ def _inline_scored(
     ``qlabel != nlabel``), else the self pair and NULL ids (like
     ``query_id != neighbor_id``) — and emits only its local top-k rows
     per query under the consumer's exact total order (score DESC with
-    NaN greatest — Spark's double ordering — then neighbor_id ASC NULLS
-    FIRST).  The global top-k is a subset of the union of batch-local
-    top-ks under the same total order, and the downstream window
-    recomputes exact ranks, so results are independent of batching.  A
-    query whose kept rows include a contract-violating row (a NULL
-    score) is not pruned in that batch — NULL ordering stays the
-    window's job."""
+    NaN greatest — Spark's double ordering — and NULL last, then
+    neighbor_id ASC NULLS FIRST; :func:`_np_desc_order`).  The global
+    top-k is a subset of the union of batch-local top-ks under the same
+    total order, and the downstream window recomputes exact ranks, so
+    results are independent of batching."""
     import numpy as np
     from pyspark.sql.types import DoubleType, StructField, StructType
 
@@ -341,7 +390,6 @@ def _inline_scored(
     qids = [r[0] for r in rows]
     qlabels = [r[2] if with_label else None for r in rows]
     Q = np.asarray([r[1] for r in rows], dtype=np.float64)
-    nq = np.sqrt(_np_flat_dot(Q, Q, dim, p))
     key_of, allowed = keys(Q) if keys is not None else (None, None)
     in_schema = c.schema
     id_field = in_schema["neighbor_id"]
@@ -368,13 +416,8 @@ def _inline_scored(
             cv = b.column("cv")
             nlab = b.column("nlabel") if with_label else None
             V, mask = _np_dense(cv, dim)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                nc = np.sqrt(_np_flat_dot(V, V, dim, p))
-                scores = [
-                    _np_flat_dot(Q[qi : qi + 1], V, dim, p) / (nq[qi] * nc)
-                    for qi in range(len(qids))
-                ]
-                row_key = key_of(V, mask) if key_of is not None else None
+            scores, nulls = _np_cosine(Q, None, V, mask, dim, p)
+            row_key = key_of(V, mask) if key_of is not None else None
             id_rank = None
             if prune_k is not None:
                 try:
@@ -384,7 +427,9 @@ def _inline_scored(
                     ).to_numpy()
                 except pa.ArrowNotImplementedError:
                     pass  # unorderable id type: no pruning
-            for qi, (qid, qlabel, score) in enumerate(zip(qids, qlabels, scores)):
+            for qi, (qid, qlabel, score, null) in enumerate(
+                zip(qids, qlabels, scores, nulls)
+            ):
                 keep = None
                 if row_key is not None:
                     keep = np.isin(row_key, allowed[qi])
@@ -401,16 +446,8 @@ def _inline_scored(
                 sel = None
                 if keep is not None:
                     idx = np.flatnonzero(keep)
-                    if (
-                        id_rank is not None
-                        and idx.size > prune_k
-                        and (mask is None or not mask[idx].any())
-                    ):
-                        s = score[idx]
-                        nan = np.isnan(s)
-                        order = np.lexsort(
-                            (id_rank[idx], np.where(nan, 0.0, -s), ~nan)
-                        )
+                    if id_rank is not None and idx.size > prune_k:
+                        order = _np_desc_order(score[idx], null[idx], id_rank[idx])
                         idx = idx[order[:prune_k]]
                     sel = pa.array(idx)
                 take = (lambda a: a) if sel is None else (lambda a: a.take(sel))
@@ -422,7 +459,7 @@ def _inline_scored(
                         take(nlab),
                         pa.repeat(pa.scalar(qlabel, nlab.type), m),
                     ]
-                cols.append(take(pa.array(score, mask=mask)))
+                cols.append(take(pa.array(score, mask=null)))
                 yield pa.RecordBatch.from_arrays(
                     cols, names=[f.name for f in out_fields]
                 )
@@ -617,41 +654,45 @@ def _bounded_quantizer(centroids: DataFrame) -> list | None:
     return sorted(rows, key=lambda r: r["cid"])
 
 
+def _quantizer_width(cent_rows: list) -> int:
+    """Width of a driver-held quantizer: its widest centroid (0 when
+    every centroid is NULL or there is none)."""
+    return max((len(r["cv"]) for r in cent_rows if r["cv"] is not None), default=0)
+
+
 def _np_quantizer(cent_rows: list):
-    """(cids, C, nc) of a driver-held quantizer in cid order: the int64
-    ids, the (k, dim) float64 centroid matrix and its parts=1
-    :func:`_np_flat_dot` norms (``nc`` is ``None`` for an empty one)."""
+    """(cids, C, cbad) of a driver-held quantizer in cid order: the int64
+    ids, the (k, dim) float64 centroid matrix at :func:`_quantizer_width`
+    and the mask of centroids outside that width contract
+    (:func:`_np_dense`'s rule) — each such centroid, a NULL one included,
+    is a column of NULL cosines."""
     import numpy as np
+    import pyarrow as pa
 
     cents = sorted(cent_rows, key=lambda r: r["cid"])
     cids = np.asarray([int(r["cid"]) for r in cents], dtype=np.int64)
-    if not cents:
-        return cids, np.zeros((0, 0)), None
-    C = np.asarray([r["cv"] for r in cents], dtype=np.float64)
-    with np.errstate(over="ignore", invalid="ignore"):
-        nc = np.sqrt(_np_flat_dot(C, C, C.shape[1], 1))
-    return cids, C, nc
+    cv = pa.array([r["cv"] for r in cents], type=pa.list_(pa.float64()))
+    C, cbad = _np_dense(cv, _quantizer_width(cents))
+    return cids, C, cbad
 
 
-def _np_top_centroids(V, bad, C, nc, m: int):
+def _np_top_centroids(V, bad, C, cbad, m: int):
     """(n, m) row indexes into the quantizer matrix ``C`` of each row of
     ``V``'s ``m`` best centroids, best first — the one centroid argmax,
     shared by :func:`_arrow_assignments` and :func:`ivf_topk`'s key
     mask.  ``V``/``bad`` come from :func:`_np_dense` at ``C``'s width;
-    ``C``/``nc`` from :func:`_np_quantizer`.
+    ``C``/``cbad`` from :func:`_np_quantizer`.
 
-    The cosine is ``dot(v, c) / (‖v‖·‖c‖)`` with every dot the parts=1
+    The cosine is :func:`_np_cosine` with every dot the parts=1
     :func:`_np_flat_dot` chain: the ``v[i]·c_i`` chain of
     :func:`flat_dot`, bit-identical to the :func:`dot` fold the oracles'
     ``_cos_sql`` mirrors (the chain differs from the fold only in the
-    sign of an all-(−0.0) dot, and ±0.0 tie below).  Rows outside the
-    width contract and zero divisors give NULL cosines — the
-    expression's value with ANSI off (ANSI on raises there).
+    sign of an all-(−0.0) dot, and ±0.0 tie below).  Rows and centroids
+    outside the width contract and zero divisors give NULL cosines.
 
-    Order: ascending ``(−cs, cid)`` under ``array_sort``'s struct rules —
-    a NULL ``−cs`` first, NaN greatest, −0.0 equal to +0.0, ties broken
-    by cid; ascending ``(−cs, cid)`` ≡ (cs DESC, cid ASC) on finite data.
-    So a contract-violating row's best centroid is the lowest cid."""
+    Order: the oracles' ``ORDER BY cs DESC, cid`` (:func:`_np_desc_order`)
+    — NaN first, NULL last, −0.0 equal to +0.0, ties broken by cid.  So
+    a row whose cosines are all NULL gets the lowest cid."""
     import numpy as np
 
     k, dim = C.shape
@@ -659,19 +700,10 @@ def _np_top_centroids(V, bad, C, nc, m: int):
     block = max(1, (1 << 20) // max(1, k))
     picks = [np.zeros((0, m), dtype=np.int64)]
     for s in range(0, V.shape[0], block):
-        Vb = V[s : s + block]
-        with np.errstate(all="ignore"):
-            nv = np.sqrt(_np_flat_dot(Vb, Vb, dim, 1))
-            den = np.multiply.outer(nv, nc)
-            cs = _np_flat_dot(Vb[:, None, :], C[None, :, :], dim, 1) / den
-        null = den == 0
-        if bad is not None:
-            null |= bad[s : s + block, None]
-        nan = np.isnan(cs) & ~null
-        cls = np.where(null, 0, np.where(nan, 2, 1))
-        key = np.where(null | nan, 0.0, -cs)
+        vbad = None if bad is None else bad[s : s + block]
+        cs, null = _np_cosine(V[s : s + block], vbad, C, cbad, dim, 1)
         col = np.broadcast_to(np.arange(k), cs.shape)
-        picks.append(np.lexsort((col, key, cls), axis=1)[:, :m])
+        picks.append(_np_desc_order(cs, null, col)[:, :m])
     return np.concatenate(picks)
 
 
@@ -692,7 +724,7 @@ def _arrow_assignments(
     import numpy as np
     from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-    cids, C, nc = _np_quantizer(cent_rows)
+    cids, C, cbad = _np_quantizer(cent_rows)
     k, dim = C.shape
     m = min(int(n_best), k)
     int32 = k == 0 or np.abs(cids).max() < 2**31
@@ -710,7 +742,7 @@ def _arrow_assignments(
             if n == 0 or m <= 0:
                 continue
             V, bad = _np_dense(b.column("v"), dim)
-            cid = cids[_np_top_centroids(V, bad, C, nc, m)].reshape(-1)
+            cid = cids[_np_top_centroids(V, bad, C, cbad, m)].reshape(-1)
             out = b if m == 1 else b.take(pa.array(np.repeat(np.arange(n), m)))
             yield pa.RecordBatch.from_arrays(
                 [
@@ -758,9 +790,8 @@ def hierarchical_assignments(
     centroid within that super's bucket, both by (cos DESC, id ASC).
     ``n_super`` defaults to ``1`` for quantizers ≤ HIERARCHICAL_MIN_LISTS
     — which reduces to the flat argmax bit-for-bit — else ``isqrt(k)``.
-    Precondition for n_super > 1: non-zero-norm vectors (routing cosines
-    are undefined on zero vectors; the flat n_super = 1 path has no such
-    constraint).
+    Both levels follow the module's NULL contract: a zero divisor or a
+    vector narrower than the supers gives NULL cosines, ranked last.
 
     Plan: ``n_super = 1`` over a bounded quantizer is one
     :func:`_arrow_assignments` pass.  Otherwise only the supers are
@@ -770,7 +801,8 @@ def hierarchical_assignments(
     (sid, array<struct>) row each, and vectors pick up their bucket via a
     BROADCAST join on sid — shuffle-free on the vector table, and neither
     driver memory nor the Catalyst plan grows with k.  The in-bucket
-    argmax is an ``array_sort`` over the bucket's fold-order cosines.
+    argmax is an ``array_sort`` over the bucket's fold-order cosines in
+    the oracles' ``ORDER BY cs DESC, cid`` (NaN first, NULL last).
 
     Returns (id, v, cid, rn=1) like ``ivf_assignments``.
     """
@@ -787,7 +819,7 @@ def hierarchical_assignments(
 
     sup_rows = cent.orderBy("cid").limit(n_super).collect()
     super_ids = [int(r["cid"]) for r in sup_rows]
-    sup_dim = len(sup_rows[0]["cv"]) if sup_rows else 0
+    sup_dim = _quantizer_width(sup_rows)
     # route every centroid to its super (supers route to themselves), fold
     # each bucket into one array row, broadcast — n_super rows, k structs
     routed = _arrow_assignments(cent, sup_rows, 1, "cid", "cv")
@@ -809,14 +841,29 @@ def hierarchical_assignments(
         "id",
         "v",
         F.col("cid").alias("_sid"),
-        F.sqrt(flat_dot("v", "v", sup_dim)).alias("_nv"),
+        F.when(F.size("v") >= sup_dim, F.sqrt(flat_dot("v", "v", sup_dim))).alias(
+            "_nv"
+        ),
     )
     scored = F.transform(
         F.col("_cands"),
         lambda e: F.struct(
-            (-(dot(F.col("v"), e["cv"]) / (F.col("_nv") * e["ncv"]))).alias(
-                "negcs"
-            ),
+            (
+                dot(F.col("v"), e["cv"]) / F.nullif(F.col("_nv") * e["ncv"], F.lit(0.0))
+            ).alias("cs"),
+            e["cid"].alias("cid"),
+        ),
+    )
+    # ascending (class, −cs, cid) ≡ ORDER BY cs DESC, cid with NaN first
+    # (class 0) and NULL last (class 2)
+    scored = F.transform(
+        scored,
+        lambda e: F.struct(
+            F.when(F.isnan(e["cs"]), 0)
+            .when(e["cs"].isNull(), 2)
+            .otherwise(1)
+            .alias("cls"),
+            (-e["cs"]).alias("negcs"),
             e["cid"].alias("cid"),
         ),
     )
@@ -921,14 +968,14 @@ def ivf_topk(
         return probes, assign(c, "neighbor_id", "cv", 1), "cid"
 
     def keys(Q):
-        _, C, nc = _np_quantizer(cent)
-        probes = _np_top_centroids(Q, None, C, nc, max(0, min(nprobe, len(C))))
-        return (lambda V, bad: _np_top_centroids(V, bad, C, nc, 1)[:, 0]), probes
+        _, C, cbad = _np_quantizer(cent)
+        probes = _np_top_centroids(Q, None, C, cbad, max(0, min(nprobe, len(C))))
+        return (lambda V, bad: _np_top_centroids(V, bad, C, cbad, 1)[:, 0]), probes
 
     c = candidates.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
     )
-    inline = bool(cent) and len(cent[0]["cv"]) == dim
+    inline = bool(cent) and _quantizer_width(cent) == dim
     return _ann_topk(
         queries, c, k, id_col, vec_col, dim, keys=keys, join=join, inline=inline
     )
@@ -953,7 +1000,7 @@ def lsh_topk(
     mask (:func:`_lsh_bucket_np`, Spark's NaN-greatest sign rule
     mirrored; a contract-violating row's NULL bucket is key −1 and never
     matches).  Otherwise the query side broadcast-joins the candidates on
-    ``bucket`` (:func:`lsh_bucket`).
+    ``bucket`` (:func:`lsh_bucket`), NULL for the same rows.
     """
 
     def keys(Q):
@@ -965,12 +1012,16 @@ def lsh_topk(
 
         return key_of, _lsh_bucket_np(Q, nbits, dim)[:, None]
 
-    def join(q, c):
-        return (
-            q.withColumn("bucket", lsh_bucket("qv", nbits, dim=dim)),
-            c.withColumn("bucket", lsh_bucket("cv", nbits, dim=dim)),
-            "bucket",
+    def bucketed(df, v):
+        # nested so no v[i] is read past a short row's end
+        bucket = F.when(
+            F.size(v) >= dim,
+            F.when(flat_dot(v, v, dim).isNotNull(), lsh_bucket(v, nbits, dim=dim)),
         )
+        return df.withColumn("bucket", bucket)
+
+    def join(q, c):
+        return bucketed(q, "qv"), bucketed(c, "cv"), "bucket"
 
     c = candidates.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
@@ -1101,26 +1152,22 @@ def _round6_ge_cut(threshold: float) -> float:
     return float(Decimal(k) / Decimal(10**6) - Decimal("0.0000005"))
 
 
-def _semdedup_dropped_arrow(asg, dim: int, threshold: float, id_col: str):
-    """Within-cluster SemDeDup drop set as ONE grouped Arrow pass
-    (guide §4.2): per cluster, the pairwise split-partials cosine matrix
-    evaluates as ~dim elementwise outer-product accumulations in NumPy —
-    bit-identical order to the staged expression the cluster self-join
-    evaluated per pair — and a vector is dropped when any LOWER-id row
-    clears the threshold (the exact ``F.round(cs,6) >= threshold``
-    predicate via :func:`_round6_ge_cut`, with Spark's NaN-greatest
-    comparison mirrored).  Ships each vector ONCE (the self-join shipped
-    every pair) and replaces the generated per-pair expression that paid
-    the huge-method JIT cliff on first execution (measured 24.7 s
-    executor CPU at sf0.1, ~12 s steady, for ~13M pairs).
-
-    Caller contract (the ``dim`` gate): every vector non-NULL and
-    exactly ``dim`` wide — semdedup only takes this path after its
-    min==max width and NULL-count probe."""
+def _semdedup_dropped_arrow(asg, dim: int, cut: float):
+    """Within-cluster SemDeDup drop set as ONE grouped Arrow pass: per
+    cluster, the pairwise split-partials cosine matrix
+    (:func:`_np_cosine`) evaluates as ~dim elementwise outer-product
+    accumulations in NumPy, in the IEEE order of the oracle's
+    ``_cos_split_sql``, and a vector is dropped when any LOWER-id row
+    clears the cut (``cs >= cut`` with ``cut`` from :func:`_round6_ge_cut`
+    ≡ ``round(cs, 6) >= threshold``, with Spark's NaN-greatest
+    comparison mirrored).  A NULL cosine is no hit.  Each vector ships
+    ONCE, where a cluster self-join ships every pair, and no generated
+    per-pair expression pays the huge-method JIT cliff on first
+    execution (measured 24.7 s executor CPU at sf0.1, ~12 s steady, for
+    ~13M pairs)."""
     from pyspark.sql.types import StructField, StructType
 
     p = COSINE_SPLIT_PARTS
-    cut = _round6_ge_cut(threshold)
     out_schema = StructType([StructField("id", asg.schema["id"].dataType)])
 
     def dropped_of_group(table):
@@ -1135,34 +1182,25 @@ def _semdedup_dropped_arrow(asg, dim: int, threshold: float, id_col: str):
             return pa.table({"id": pa.array([], type=id_type)})
         order = np.argsort(ids, kind="stable")
         ids = ids[order]
-        # float64 like the expression path's CAST(x AS DOUBLE): an
-        # array<float> column arrives as float32
-        V = (
-            tbl.column("v").chunk(0).flatten()
-            .to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
-            .reshape(m, dim)
-        )[order]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            norm = np.sqrt(_np_flat_dot(V, V, dim, p))
-            dropped = np.zeros(m, dtype=bool)
-            # row blocks bound the (block × m) pair matrix; a (block, 1,
-            # dim) × (1, m, dim) broadcast evaluates every pair's dot
-            # in flat_dot's split-partials order
-            bs = max(1, min(m, 4_194_304 // m))
-            for s in range(0, m - 1, bs):
-                e = min(s + bs, m)
-                P = _np_flat_dot(V[s:e, None, :], V[None, :, :], dim, p)
-                cs = P / np.multiply.outer(norm[s:e], norm)
-                hit = (cs >= cut) | np.isnan(cs)  # Spark: NaN >= t
-                # pair rule: lo strictly below hi in ascending-id order
-                lo_rank = np.arange(s, e)[:, None]
-                hi_rank = np.arange(m)[None, :]
-                dropped |= (hit & (lo_rank < hi_rank)).any(axis=0)
+        V, bad = _np_dense(tbl.column("v").chunk(0), dim)
+        V = V[order]
+        bad = None if bad is None else bad[order]
+        dropped = np.zeros(m, dtype=bool)
+        # row blocks bound the (block × m) pair matrix
+        bs = max(1, min(m, 4_194_304 // m))
+        for s in range(0, m - 1, bs):
+            e = min(s + bs, m)
+            lo_bad = None if bad is None else bad[s:e]
+            cs, null = _np_cosine(V[s:e], lo_bad, V, bad, dim, p)
+            hit = ((cs >= cut) | np.isnan(cs)) & ~null  # Spark: NaN >= t
+            # pair rule: lo strictly below hi in ascending-id order
+            lo_rank = np.arange(s, e)[:, None]
+            hi_rank = np.arange(m)[None, :]
+            dropped |= (hit & (lo_rank < hi_rank)).any(axis=0)
         return pa.table({"id": pa.array(ids[dropped]).cast(id_type)})
 
     # no .distinct(): each id lives in exactly one cluster group and the
-    # group function emits it at most once (the old pair join needed the
-    # dedup because id_hi matched many id_lo rows)
+    # group function emits it at most once
     return (
         asg.select("cluster_id", "id", "v")
         .groupBy("cluster_id")
@@ -1176,10 +1214,13 @@ def semdedup(
     threshold: float = 0.9,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    *,
+    dim: int,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023): cluster
     with a coarse quantizer, then drop any vector whose cluster contains a
-    LOWER-id vector with cosine ≥ ``threshold``.
+    LOWER-id vector with cosine ≥ ``threshold`` (positive, else
+    ``ValueError``).
 
     Returns (``id_col``, cluster_id, keep) for every input vector — the
     keep-filter is the dedup decision, deterministic under any
@@ -1187,10 +1228,11 @@ def semdedup(
 
     Scale shape: the O(n²) cosine matrix is confined to single clusters —
     driver-held centroids assign each vector in one narrow Arrow pass
-    (:func:`hierarchical_assignments`), then ONE grouped pass per
-    cluster; cluster sizes are capped by the quantizer granularity
-    (#clusters scales with n at 100 TB, exactly the SemDeDup recipe).
-    The drop rule needs no transitive closure, so no iteration.
+    (:func:`hierarchical_assignments`), then ONE grouped Arrow pass per
+    cluster (:func:`_semdedup_dropped_arrow`); cluster sizes are capped
+    by the quantizer granularity (#clusters scales with n at 100 TB,
+    exactly the SemDeDup recipe).  The drop rule needs no transitive
+    closure, so no iteration.
 
     Assignment semantics AT SCALE (explicit, round-7): for quantizers
     larger than HIERARCHICAL_MIN_LISTS the cluster assignment is the
@@ -1208,20 +1250,23 @@ def semdedup(
     Below the gate (≤ 64 lists) the assignment is bit-exactly the flat
     argmax.
 
-    Ragged embedding widths: pair cosines NULL out (zip_with pads the
-    shorter array), so differing-width vectors are never near-dups; the
-    Arrow fast path is only taken when all widths match and no vector is
-    NULL (a NULL vector is never a near-dup and is kept).
+    Width contract: ``dim`` is the embedding width, the table contract
+    every vector kernel takes.  A vector outside it (NULL, a NULL element
+    among the first ``dim``, fewer than ``dim`` elements) and a zero-norm
+    vector have a NULL cosine against every row (:func:`_np_cosine`):
+    they are kept and drop nothing, as in the oracle, where DuckDB's
+    out-of-range ``v[i]`` and ``x/0`` are NULL.
     """
     from lab_flink_repository_analytics_spark.session import (
         persist_bounded,
         rebalance,
     )
 
-    # assignments feed three consumers (both sides of the cluster join +
-    # the final keep join) — persist so the quantizer pass runs once, and
-    # rebalance so a narrow local scan spreads before the per-vector
-    # centroid scoring (no-op on a many-split cluster scan)
+    cut = _round6_ge_cut(threshold)
+    # assignments feed two consumers (the grouped pair scan and the final
+    # keep join) — persist so the quantizer pass runs once, and rebalance
+    # so a narrow local scan spreads before the per-vector centroid
+    # scoring (no-op on a many-split cluster scan).
     # two-level routed assignment: SemDeDup's quantizer grows with the
     # corpus (k = n/512), so the flat argmax would be O(n²/512) — the
     # hierarchical router keeps it O(n·√k) and degenerates bit-exactly to
@@ -1232,57 +1277,7 @@ def semdedup(
         ).select("id", "v", F.col("cid").alias("cluster_id")),
         "similarity.semdedup.asg",
     )
-    # pair-scan arithmetic: the cluster join emits ~(cluster_size/2)
-    # cosines PER VECTOR, so the per-pair expression must live inside
-    # whole-stage codegen — probe the physical dim once and unroll
-    # (HOF lambdas measured 70× the join's own cost at the 100×
-    # rehearsal).  Each row's norm is computed once here, not once per
-    # pair — same value for every pair the row joins into.
-    # The probe runs on the PERSISTED asg frame (materializing the cache
-    # the query needs anyway — no extra pass over the source plan) and
-    # checks min==max width: a ragged embedding column falls back to the
-    # fold-based cosine instead of silently NULLing short rows' norms /
-    # truncating long rows' dots at a width sampled from one arbitrary row.
-    # min/max skip NULLs, so a NULL vector is counted and takes the fold.
-    dim_row = asg.agg(
-        F.min(F.size("v")).alias("lo"),
-        F.max(F.size("v")).alias("hi"),
-        (F.count("v") == F.count(F.lit(1))).alias("all_set"),
-    ).first()
-    dim = (
-        int(dim_row["lo"])
-        if dim_row is not None
-        and dim_row["lo"] is not None
-        and dim_row["lo"] == dim_row["hi"]
-        and dim_row["all_set"]
-        else None
-    )
-    if dim is not None and threshold > 0:
-        # round-11 (guide §4.2): the within-cluster pair scan runs as ONE
-        # grouped Arrow pass — each vector ships once instead of once per
-        # pair, the split-partials cosine evaluates as vectorized NumPy
-        # in the identical IEEE order, and the generated per-pair
-        # expression that paid the huge-method JIT cliff on first
-        # execution (24.7 s executor CPU at sf0.1; ~12 s steady) is out
-        # of the plan.  The r10 staged-expression join remains below as
-        # the ragged-width fallback; the oracle (_dot_split_sql mirror)
-        # is unchanged because the values are bit-identical.
-        dropped = _semdedup_dropped_arrow(asg, dim, threshold, id_col)
-    else:  # empty input, ragged widths or a NULL vector: fold cosine
-        a = asg.select(
-            F.col("id").alias("id_lo"), F.col("v").alias("v_lo"), "cluster_id"
-        )
-        b = asg.select(
-            F.col("id").alias("id_hi"), F.col("v").alias("v_hi"), "cluster_id"
-        )
-        cs = cosine("v_lo", "v_hi")
-        dropped = (
-            a.join(b, "cluster_id")
-            .filter(F.col("id_lo") < F.col("id_hi"))
-            .filter(F.round(cs, 6) >= F.lit(threshold))
-            .select(F.col("id_hi").alias("id"))
-            .distinct()
-        )
+    dropped = _semdedup_dropped_arrow(asg, dim, cut)
     return (
         asg.join(dropped.withColumn("dropped", F.lit(True)), "id", "left")
         .select(
@@ -1336,8 +1331,9 @@ def kmeans_lloyd_df(
 
     Determinism contract (what makes a DuckDB oracle possible where
     MLlib's float k-means is not): init = the k lowest-id vectors
-    (:func:`sampled_centroids`); assignment = cosine argmax with
-    (cs DESC, cid) tie-break; update = per-dimension EXACT-decimal mean
+    (:func:`sampled_centroids`); assignment = cosine argmax in the
+    oracle's ``ORDER BY cs DESC, cid`` (a NULL initial centroid is a
+    column of NULL cosines, ranked last); update = per-dimension EXACT-decimal mean
     rounded to 6 places (order-independent across partitions, same as
     :func:`group_centroids`).  Empty clusters keep their previous
     centroid.
@@ -1347,14 +1343,11 @@ def kmeans_lloyd_df(
     model state, k ≤ MAX_INLINE_CENTROIDS by contract, exactly how MLlib
     holds centers); the update is :func:`group_centroids` over the assignment
     (one per-cluster hash aggregation of ``dim`` flat decimal sums, with
-    ``dim`` the width of the initial centroids).  The driver round-trips
+    ``dim`` the widest initial centroid's width).  The driver round-trips
     k×dim scalars per iteration — bounded model state, never data.
     """
-    cents = [
-        {"cid": r["cid"], "cv": [float(x) for x in r["cv"]]}
-        for r in sampled_centroids(vectors, k, id_col, vec_col).collect()
-    ]
-    dim = len(cents[0]["cv"]) if cents else 0
+    cents = sampled_centroids(vectors, k, id_col, vec_col).collect()
+    dim = _quantizer_width(cents)
     asg = None
     for it in range(iters):
         asg = _arrow_assignments(vectors, cents, 1, id_col, vec_col)

@@ -1367,7 +1367,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_tables(spark, sf_dir)["embeddings"]
     n_lists = max(IVF_NLISTS, emb.count() // SEMDEDUP_TARGET_CLUSTER)
     cents = SIM.sampled_centroids(emb, n_lists)
-    return SIM.semdedup(emb, cents, SEMDEDUP_TAU)
+    return SIM.semdedup(emb, cents, SEMDEDUP_TAU, dim=EMBEDDING_DIM)
 
 
 #: the oracle twin of datapipe/similarity.py::hierarchical_assignments —

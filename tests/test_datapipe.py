@@ -639,7 +639,7 @@ def test_semdedup_keeps_lowest_id_per_near_dup_group(spark):
     ]
     emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>, label int")
     cents = SIM.sampled_centroids(emb, 2)
-    got = {r["vec_id"]: r["keep"] for r in SIM.semdedup(emb, cents, 0.9).collect()}
+    got = {r["vec_id"]: r["keep"] for r in SIM.semdedup(emb, cents, 0.9, dim=2).collect()}
     assert got == {1: True, 2: False, 3: False, 4: True}
 
 
@@ -647,7 +647,7 @@ def test_semdedup_below_threshold_keeps_all(spark):
     rows = [(1, [1.0, 0.0], 0), (2, [0.0, 1.0], 0)]
     emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>, label int")
     cents = SIM.sampled_centroids(emb, 1)
-    got = SIM.semdedup(emb, cents, 0.9).collect()
+    got = SIM.semdedup(emb, cents, 0.9, dim=2).collect()
     assert all(r["keep"] for r in got)
 
 
@@ -782,16 +782,18 @@ def test_inline_arrow_scorer_bit_identical_to_expression_path(spark):
     # round-11: the bounded-query ANN scorer moved from the staged-cosine
     # expression join to a vectorized Arrow pass (SIM._inline_scored).
     # Pin BIT-identical scores against the expression form on adversarial
-    # candidates: normal rows, a short vector (NULL score), a NULL
-    # vector, a NULL element, a zero vector (inf/NaN division), and an
-    # over-wide vector (extra elements ignored).
+    # candidates: normal rows, a short vector, a NULL vector, a NULL
+    # element and a zero vector (all four a NULL score on both paths),
+    # and an over-wide vector (extra elements ignored).
     dim = 8
     cands = [
         (10, [0.125, -3.0, 2.5, 0.1, 7.0, -0.25, 1.0, 0.5]),
         (11, [1e-150] * 8),
         (12, [0.3, 0.7, 0.9, 1.1, 1.3, 1.5, 1.7, 1.9]),
+        (13, [1.0, 2.0, 3.0]),                      # short
         (14, None),                                 # NULL vector
         (15, [1.0, None, 3.0, 4.0, 5.0, 6.0, 7.0, 8.0]),  # NULL element
+        (16, [0.0] * 8),                            # zero norm: 0/0
         (17, [0.5] * 10),                           # over-wide: first 8
     ]
     c = spark.createDataFrame(cands, "neighbor_id bigint, cv array<double>")
@@ -813,25 +815,9 @@ def test_inline_arrow_scorer_bit_identical_to_expression_path(spark):
             assert (a is None) == (b is None), (key, a, b)
         else:
             assert a == b, (key, a, b)  # bit-identical doubles
-
-    # contract-violating rows the ANSI expression path RAISES on
-    # (DIVIDE_BY_ZERO for a zero norm, INVALID_ARRAY_INDEX for a short
-    # vector): the Arrow path degrades to NaN / NULL score instead of
-    # erroring — strictly more tolerant, asserted so the divergence is
-    # documented
-    zc = spark.createDataFrame(
-        [(16, [0.0] * 8), (13, [1.0, 2.0, 3.0])],
-        "neighbor_id bigint, cv array<double>",
-    )
-    zgot = {
-        (r["query_id"], r["neighbor_id"]): r["score"]
-        for r in SIM._inline_scored(zc, rows, dim).collect()
+    assert {k for k, v in got.items() if v is None} == {
+        (q, n) for q in (1, 2) for n in (13, 14, 15, 16)
     }
-    for (qid, nid), s in zgot.items():
-        if nid == 16:
-            assert math.isnan(s), (qid, nid, s)
-        else:
-            assert s is None, (qid, nid, s)
 
     # LSH bucket: the NumPy path == the expression on every row, including
     # non-finite and -0.0 ones (Spark's comparison has NaN > 0)
@@ -912,7 +898,9 @@ def test_inline_arrow_scorer_ragged_batch_not_reshaped(spark):
 def _literal_chain_assignments(vectors, cent_rows, n_best, id_col, vec_col):
     """Reference copy of the retired literal-chain assignment projection:
     one staged fold-order ``v[i]·c_i`` literal cosine column per centroid,
-    ranked by ``array_sort`` over (-cs, cid) structs."""
+    ranked by ``array_sort`` over (class, -cs, cid) structs — the oracles'
+    ``ORDER BY cs DESC, cid``, with NaN (class 0) first and NULL (class 2)
+    last."""
     import numpy as np
 
     cents = sorted(cent_rows, key=lambda r: r["cid"])
@@ -925,7 +913,11 @@ def _literal_chain_assignments(vectors, cent_rows, n_best, id_col, vec_col):
         cs_cols.append(
             F.expr(f"({dot_txt} / (`_nv` * {SIM._lit_d(float(ncv))}))").alias(f"_cs{j}")
         )
-        entries.append(f"named_struct('negcs', -`_cs{j}`, 'cid', {int(r['cid'])})")
+        cs = f"`_cs{j}`"
+        cls = f"CASE WHEN isnan({cs}) THEN 0 WHEN {cs} IS NULL THEN 2 ELSE 1 END"
+        entries.append(
+            f"named_struct('cls', {cls}, 'negcs', -{cs}, 'cid', {int(r['cid'])})"
+        )
     ranked = F.expr(f"slice(array_sort(array({', '.join(entries)})), 1, {int(n_best)})")
     return (
         vectors.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
@@ -1041,6 +1033,178 @@ def test_arrow_assignments_match_literal_chain_projection(spark):
     empty = SIM._arrow_assignments(long_ids, [], 1, "vec_id", "embedding")
     assert empty.columns == ["id", "v", "cid", "rn"]
     assert empty.collect() == []
+
+
+def test_assignments_rank_nan_first_and_null_last_like_the_oracles(spark, monkeypatch):
+    # the oracles rank centroids by ORDER BY cs DESC, cid: a zero-norm
+    # centroid's x/0 cosine is NULL and last, a NaN cosine first.  The
+    # Arrow kernel and the broadcast-join path above MAX_INLINE_CENTROIDS
+    # must agree on it
+    nan = float("nan")
+    vectors = spark.createDataFrame(
+        [
+            (0, [1.0, 0.0]),
+            (1, [0.0, 1.0]),
+            (2, [0.6, 0.8]),
+            (3, [0.0, 0.0]),
+            (4, None),
+            (5, [nan, 1.0]),
+        ],
+        "vec_id bigint, embedding array<double>",
+    )
+    cents = spark.createDataFrame(
+        [(0, [0.0, 0.0]), (1, [1.0, 0.0]), (2, [0.0, 1.0])], "cid int, cv array<double>"
+    )
+
+    def rows(df):
+        return sorted((r["id"], r["rn"], r["cid"]) for r in df.collect())
+
+    for n_best in (1, 2, 3):
+        arrow = rows(SIM.ivf_assignments(vectors, cents, n_best))
+        with monkeypatch.context() as m:
+            m.setattr(SIM, "MAX_INLINE_CENTROIDS", 0)
+            df = SIM.ivf_assignments(vectors, cents, n_best)
+            assert "Join" in df._jdf.queryExecution().executedPlan().toString()
+            joined = rows(df)
+        assert arrow == joined, n_best
+    best = {i: cid for i, rn, cid in arrow if rn == 1}
+    assert best == {0: 1, 1: 2, 2: 2, 3: 0, 4: 0, 5: 0}
+    assert [cid for i, rn, cid in arrow if i == 0] == [1, 2, 0]
+
+
+def test_kmeans_null_initial_centroid_matches_oracle(spark, monkeypatch):
+    # a NULL vector among the k lowest ids is a NULL initial centroid: a
+    # column of NULL cosines, ranked last, like KMEANS_SQL
+    from lab_flink_repository_analytics_spark.queries import suite
+
+    rows = [(0, None), (1, [1.0, 0.0]), (2, [0.0, 1.0])]
+    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    got = {
+        r["vec_id"]: r["cluster_id"]
+        for r in SIM.kmeans_lloyd_df(emb, k=2, iters=suite.KMEANS_ITERS).collect()
+    }
+    monkeypatch.setattr(suite, "KMEANS_K", 2)
+    want = dict(_duckdb_embeddings(suite._kmeans_sql(), rows, ["vec_id", "embedding"]))
+    assert got == want == {0: 0, 1: 1, 2: 1}
+    # k=1: an all-NULL quantizer (width 0) assigns every row its one cid
+    got = {r["vec_id"]: r["cluster_id"] for r in SIM.kmeans_lloyd_df(emb, k=1).collect()}
+    monkeypatch.setattr(suite, "KMEANS_K", 1)
+    want = dict(_duckdb_embeddings(suite._kmeans_sql(), rows, ["vec_id", "embedding"]))
+    assert got == want == {0: 0, 1: 0, 2: 0}
+
+
+def test_hierarchical_routed_level_ranks_null_cosines_last(spark):
+    # n_super = 2: centroid 2 is NULL and routes into super 0's bucket;
+    # its NULL cosines rank last in the bucket, and a zero vector (NULL
+    # cosines everywhere) takes the lowest cid instead of raising
+    vectors = spark.createDataFrame(
+        [(10, [1.0, 0.05]), (11, [0.05, 1.0]), (12, [0.0, 0.0])],
+        "vec_id bigint, embedding array<double>",
+    )
+    cents = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, None), (3, [1.0, 0.1])],
+        "cid int, cv array<double>",
+    )
+    routed = SIM.hierarchical_assignments(vectors, cents, n_super=2)
+    got = {r["id"]: r["cid"] for r in routed.collect()}
+    flat = {r["id"]: r["cid"] for r in SIM.ivf_assignments(vectors, cents).collect()}
+    assert got == flat == {10: 3, 11: 1, 12: 0}
+
+
+def test_ann_zero_norm_and_narrow_rows_score_null_on_both_paths(spark):
+    # a zero-norm candidate (0/0) and one narrower than dim score NULL
+    # and rank last on the bounded Arrow path and on the broadcast-join
+    # path alike; a query narrower than dim (join path only) scores NULL
+    # against every candidate instead of raising
+    rows = [
+        (1, [1.0, 0.0], "q"),
+        (2, [1.0], "n"),
+        (10, [0.0, 0.0], "n"),
+        (11, [1.0, 0.0], "n"),
+        (12, [0.6, 0.8], "n"),
+    ]
+    emb = spark.createDataFrame(
+        rows, "vec_id bigint, embedding array<double>, label string"
+    ).repartition(1)
+    q = emb.filter(F.col("vec_id") == 1)
+    narrow = emb.filter(F.col("vec_id").isin(1, 2))
+    cents = SIM.sampled_centroids(emb, 2)
+    for topk in (
+        lambda qs: SIM.brute_force_topk(qs, emb, k=10, dim=2),
+        lambda qs: SIM.lsh_topk(qs, emb, k=10, dim=2),
+        lambda qs: SIM.ivf_topk(qs, emb, cents, k=10, dim=2),
+        lambda qs: SIM.hard_negatives(qs, emb, k=10, dim=2),
+    ):
+        bounded = _bounded_rows(topk(q))
+        assert bounded == _join_path_rows(topk, q)
+        both = _join_path_rows(topk, narrow)
+        assert [r for r in both if r[0] == 1] == bounded
+        assert all(r[3] is None for r in both if r[0] == 2)
+    assert _bounded_rows(SIM.brute_force_topk(q, emb, k=10, dim=2)) == [
+        (1, 2, 3, None),
+        (1, 10, 4, None),
+        (1, 11, 1, 1.0),
+        (1, 12, 2, 0.6),
+    ]
+
+
+def _semdedup_vs_oracle(spark, rows):
+    """(Spark, oracle) {vec_id: (cluster_id, keep)} of ``semantic_dedup``'s
+    plan over an embeddings table of ``rows``."""
+    from lab_flink_repository_analytics_spark.queries import suite
+
+    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    n_lists = max(suite.IVF_NLISTS, len(rows) // suite.SEMDEDUP_TARGET_CLUSTER)
+    got = SIM.semdedup(
+        emb,
+        SIM.sampled_centroids(emb, n_lists),
+        suite.SEMDEDUP_TAU,
+        dim=suite.EMBEDDING_DIM,
+    ).collect()
+    want = _duckdb_embeddings(suite.SEMDEDUP_SQL, rows, ["vec_id", "embedding"])
+    return (
+        {r["vec_id"]: (r["cluster_id"], r["keep"]) for r in got},
+        {i: (c, k) for i, c, k in want},
+    )
+
+
+def test_semdedup_pair_scan_matches_oracle(spark):
+    # the Arrow pair scan against SEMDEDUP_SQL on 64-wide vectors with
+    # planted near-dups, and above the 16 lowest ids (the quantizer) the
+    # rows outside the width contract plus zero-norm rows
+    import random
+
+    rng = random.Random(5)
+    rows = [(i, [rng.uniform(-1.0, 1.0) for _ in range(64)]) for i in range(48)]
+    for j, src in enumerate((3, 7, 20, 33, 33)):
+        rows.append((100 + j, [x * 1.5 + 0.01 * j for x in rows[src][1]]))
+    null_elem = list(rows[3][1])
+    null_elem[5] = None
+    off_contract = {
+        200: None,
+        201: null_elem,            # row 3's near-dup but for one NULL element
+        202: rows[7][1][:10],      # short: row 7's first 10 elements
+    }
+    zero = {203: [0.0] * 64, 204: [-0.0] * 64}
+    rows += list(off_contract.items()) + list(zero.items())
+    got, want = _semdedup_vs_oracle(spark, rows)
+    assert got.keys() == want.keys()
+    # the assignment oracle _cos_sql folds a short or NULL-element row
+    # over its own length, so their cluster_id is out of scope: keep only
+    for i in off_contract:
+        assert got.pop(i)[1] is want.pop(i)[1] is True, i
+    assert got == want
+    assert not all(k for _, k in got.values())  # the planted dups drop
+    assert got[203] == got[204] == (0, True)
+
+
+def test_semdedup_zero_vector_does_not_capture_assignments(spark):
+    # every vector is a centroid; the zero vector's NULL cosines rank
+    # last, so e1 and e2 keep their own clusters and nothing drops
+    e = [[0.0] * 64 for _ in range(3)]
+    e[1][0] = e[2][1] = 1.0
+    got, want = _semdedup_vs_oracle(spark, [(i + 1, v) for i, v in enumerate(e)])
+    assert got == want == {1: (1, True), 2: (2, True), 3: (3, True)}
 
 
 def _topk_rows(df):
@@ -2071,13 +2235,10 @@ def test_dedup_eval_sampled_estimate_tracks_exact_when_cap_binds(
     assert abs(capped["rec"] - full["rec"]) <= 0.15, (capped, full)
 
 
-def test_semdedup_ragged_widths_fall_back_to_fold(spark):
-    # mixed embedding widths: the unrolled flat_dot path's behavior would
-    # depend on WHICH row the width probe sampled (a shorter vector gets a
-    # NULL norm, a longer one a truncated dot) — the uniformity guard must
-    # route to the fold-based cosine, whose semantics are deterministic:
-    # zip_with NULL-pads the shorter array, the fold propagates NULL, and
-    # a ragged pair is therefore never a near-dup regardless of row order
+def test_semdedup_rows_narrower_than_dim_are_kept(spark):
+    # mixed embedding widths: against dim=3 the two 2-wide rows are
+    # outside the width contract — their cosine against every row is
+    # NULL, so they are kept and drop nothing, whichever row comes first
     rows = [
         (1, [1.0, 0.0]),
         (2, [1.0, 0.0, 0.0]),
@@ -2085,15 +2246,18 @@ def test_semdedup_ragged_widths_fall_back_to_fold(spark):
     ]
     emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
     cents = spark.createDataFrame([(0, [1.0, 0.0])], "cid int, cv array<double>")
-    got = {r["vec_id"]: r["keep"] for r in SIM.semdedup(emb, cents, 0.9).collect()}
+    got = {r["vec_id"]: r["keep"] for r in SIM.semdedup(emb, cents, 0.9, dim=3).collect()}
     assert got == {1: True, 2: True, 3: True}
+    # against dim=2 every row is in contract and the 3-wide row's third
+    # element is never read (the oracle's fixed-width chain reads no
+    # further either): it is row 1's near-dup
+    got = {r["vec_id"]: r["keep"] for r in SIM.semdedup(emb, cents, 0.9, dim=2).collect()}
+    assert got == {1: True, 2: False, 3: True}
 
 
-def test_semdedup_null_vector_falls_back_to_fold(spark):
-    # a NULL vector passes the min==max width probe (min/max skip NULLs);
-    # the Arrow pair scan then crashed reshaping it.  The probe's NULL
-    # count sends the batch to the fold, where the NULL vector's pair
-    # cosines are NULL: it is kept, and the near-dup pair still resolves
+def test_semdedup_null_vector_is_kept(spark):
+    # a NULL vector's pair cosines are NULL: it is kept, and the
+    # near-dup pair beside it still resolves
     rows = [
         (1, [1.0, 0.0]),
         (2, [0.99, 0.01]),
@@ -2102,8 +2266,22 @@ def test_semdedup_null_vector_falls_back_to_fold(spark):
     ]
     emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
     cents = spark.createDataFrame([(0, [1.0, 0.0])], "cid int, cv array<double>")
-    got = {r["vec_id"]: r["keep"] for r in SIM.semdedup(emb, cents, 0.9).collect()}
+    got = {r["vec_id"]: r["keep"] for r in SIM.semdedup(emb, cents, 0.9, dim=2).collect()}
     assert got == {1: True, 2: False, 3: True, 4: True}
+
+
+def test_semdedup_zero_vector_is_kept_and_drops_nothing(spark):
+    # a zero vector's cosines are 0/0: NULL, as DuckDB's x/0 in the
+    # oracle, not a NaN hit that drops its whole cluster
+    import pytest
+
+    rows = [(1, [0.0, 0.0]), (2, [1.0, 0.0]), (3, [0.0, 1.0])]
+    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    cents = spark.createDataFrame([(0, [1.0, 1.0])], "cid int, cv array<double>")
+    got = {r["vec_id"]: r["keep"] for r in SIM.semdedup(emb, cents, 0.9, dim=2).collect()}
+    assert got == {1: True, 2: True, 3: True}
+    with pytest.raises(ValueError):
+        SIM.semdedup(emb, cents, 0.0, dim=2)
 
 
 def test_round6_ge_cut_matches_spark_round_at_tau_boundaries(spark):

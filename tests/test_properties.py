@@ -467,7 +467,7 @@ def test_semdedup_keep_rule_invariant(spark):
             rows.append((len(rows) + 1000, [x * 2.0 for x in v], 0))
     emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>, label int")
     cents = SIM.sampled_centroids(emb, 4)
-    got = {r["vec_id"]: (r["cluster_id"], r["keep"]) for r in SIM.semdedup(emb, cents, 0.8).collect()}
+    got = {r["vec_id"]: (r["cluster_id"], r["keep"]) for r in SIM.semdedup(emb, cents, 0.8, dim=8).collect()}
 
     def cos(a, b):
         d = sum(x * y for x, y in zip(a, b))
