@@ -208,10 +208,14 @@ def pagerank_int(
             )
             .withColumnRenamed("dst", "node")
         )
-        # non-eager: the single final action materializes each round
-        # once and truncates its lineage as it goes — same
-        # eviction-cascade protection as an eager checkpoint without
-        # adding a blocking driver job per iteration.
+        # non-eager, yet not free of driver jobs: checkpointing an
+        # adaptive plan materializes its shuffle stages here, so the
+        # rounds run while the caller builds its DataFrame, not in its
+        # final action (at sf0.001 on local[4], pagerank_int itself runs
+        # 7 jobs in 0.6-1.1 s, the caller's noop write 1 job in
+        # ~0.05 s).  Each round still runs once and the checkpoint
+        # truncates the lineage behind it: the eviction-cascade
+        # protection of an eager checkpoint.
         # ``checkpoint_every`` fuses that many Jacobi steps per
         # checkpointed round (round-11, VERDICT item 5).  A checkpoint
         # is NOT free mid-loop: the checkpointed rank table reports

@@ -14,7 +14,10 @@ per-dimension aggregates, or the NumPy Arrow scorers.  The width-agnostic
 :func:`dot` fold remains only where a plan must score vectors of unknown
 width (:func:`_join_assignments`, the routed level of
 :func:`hierarchical_assignments`) and for :func:`mean_pairwise_cosine`'s
-norms and self-dots.
+norms and self-dots.  :func:`covariance_matrix` needs no width: its one
+Arrow pass groups each batch's rows by width and sums their products as
+exact int64 fixed-point limbs (:func:`_np_limbs`, the one limb rule), so
+no plan expands a row into its dim² pairs.
 
 NULL contract, the DuckDB oracles' (``x/0`` and an out-of-range ``v[i]``
 are NULL there): a zero divisor or a row outside the width contract
@@ -1469,40 +1472,105 @@ def mean_pairwise_cosine(
     )
 
 
-#: fixed-point limb base: values sum on the 2^-50 = 1/_LIMB² grid
+#: fixed-point limb base: products sum on the 2^-50 = 1/_LIMB² grid
 _LIMB = 1 << 25
+#: rows per limb partial: |hi| < 2^37 per product, so a partial's Σhi
+#: stays below 2^57 and its int64 sums cannot wrap at any Arrow batch size
+_LIMB_ROWS = 1 << 20
+#: products per NumPy block of :func:`_np_moment_partials` (bounds the
+#: Python worker's temporaries, not the result)
+_MOMENT_BLOCK = 1 << 19
 
 
-def _fixed_point_limbs(p: Column) -> tuple[Column, Column]:
-    """BIGINT limbs ``hi = floor(p·2^25)``, ``lo = rint(p·2^50) − hi·2^25``
-    of a double ``|p| < 2^12``: ``hi·2^25 + lo == rint(p·2^50)`` exactly,
+def _np_limbs(P):
+    """int64 limbs ``hi = floor(p·2^25)``, ``lo = rint(p·2^50) − hi·2^25``
+    of float64 ``|p| < 2^12``: ``hi·2^25 + lo == rint(p·2^50)`` exactly,
     since every scaling is by a power of two, ``floor``/``rint``
-    (half-even) of a double below 2^62 cast to BIGINT unchanged, and
+    (half-even) of a double below 2^62 convert to int64 unchanged, and
     ``lo`` lies in [0, 2^25]."""
-    hi = F.floor(p * float(_LIMB))
-    lo = F.rint(p * float(_LIMB * _LIMB)).cast("bigint") - hi * _LIMB
+    import numpy as np
+
+    hi = np.floor(P * float(_LIMB)).astype(np.int64)
+    lo = np.rint(P * float(_LIMB * _LIMB)).astype(np.int64) - hi * _LIMB
     return hi, lo
 
 
-def _exact_sum(p: Column) -> Column:
-    """Aggregate: the double nearest Σ ``p``, each value rounded to the
-    2^-50 grid (≤ 2^-51 ≈ 4.4e-16 per value); NULL if every ``p`` is.
+#: rows of :func:`_np_moment_partials`: a limb partial (``p`` NULL) or one
+#: product outside the fixed-point range (``hi``/``lo``/``n`` NULL)
+_MOMENT_SCHEMA = "i0 int, j0 int, hi bigint, lo bigint, n bigint, p double"
 
-    Values with ``|p| < 2^12`` add their :func:`_fixed_point_limbs` as
-    two exact BIGINT sums (order-independent at any partitioning; ANSI
-    raises past 2^26 values instead of wrapping), joined per group as
-    one DECIMAL(38,0) integer and rounded to double once.  The others
-    keep a ``CAST(p AS DECIMAL(30,15))`` sum in the same aggregate —
-    NaN/±inf cast to NULL and |p| ≥ 1e15 raises, as a plain DECIMAL sum
-    does — added in double (one more rounding)."""
-    hi, lo = _fixed_point_limbs(p)
-    small = F.abs(p) < 2.0**12
-    fixed = (
-        F.sum(F.when(small, hi)).cast("decimal(38,0)") * _LIMB
-        + F.sum(F.when(small, lo))
-    ).cast("double") * 2.0**-50
-    wide = F.sum(F.when(~small, p.cast("decimal(30,15)"))).cast("double")
-    return F.coalesce(wide + fixed, wide, fixed)
+
+def _np_moment_partials(cv):
+    """Record batches (:data:`_MOMENT_SCHEMA`) of Σx_i·x_j partials of an
+    Arrow ``list<double>`` column, upper triangle ``i0 ≤ j0`` (0-based),
+    under the row contract of a double ``posexplode``: a NULL or empty
+    vector adds nothing, a row of width ``w`` covers only its ``j0 < w``
+    cells (rows group by width), and a NULL element counts in ``n`` and
+    in neither sum.
+
+    Per width group and per ≤ :data:`_LIMB_ROWS` rows, one row per cell
+    carries the int64 sums of the :func:`_np_limbs` of the products with
+    ``|p| < 2^12`` (NULL when the cell has none) and the row count
+    ``n``.  Every other non-NULL product (``|p| ≥ 2^12``, NaN, ±inf)
+    goes out as its own ``p`` row, for the DECIMAL(30,15) sum."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    names = [f.split()[0] for f in _MOMENT_SCHEMA.split(", ")]
+    lens = pc.fill_null(pc.list_value_length(cv), 0).to_numpy(zero_copy_only=False)
+    starts = cv.offsets.to_numpy()[:-1]
+    x = cv.values.to_numpy(zero_copy_only=False)
+    valid = None
+    if cv.values.null_count:
+        valid = cv.values.is_valid().to_numpy(zero_copy_only=False)
+    for w in np.unique(lens[lens > 0]):
+        at = starts[lens == w][:, None] + np.arange(w)
+        X, ok_x = x[at], None if valid is None else valid[at]
+        iu, ju = np.triu_indices(w)
+        i0, j0 = pa.array(iu, pa.int32()), pa.array(ju, pa.int32())
+        cells = len(iu)
+        step = max(1, _MOMENT_BLOCK // cells)
+        for c0 in range(0, len(X), _LIMB_ROWS):
+            c1 = min(len(X), c0 + _LIMB_ROWS)
+            hi_s = np.zeros(cells, dtype=np.int64)
+            lo_s = np.zeros(cells, dtype=np.int64)
+            k = np.zeros(cells, dtype=np.int64)
+            for b0 in range(c0, c1, step):
+                b1 = min(c1, b0 + step)
+                with np.errstate(all="ignore"):
+                    P = X[b0:b1, iu] * X[b0:b1, ju]
+                    small = np.abs(P) < 2.0**12  # NaN: False, as in Spark
+                if ok_x is None:
+                    wide = ~small
+                else:
+                    ok = ok_x[b0:b1, iu] & ok_x[b0:b1, ju]
+                    small &= ok
+                    wide = ~small & ok
+                hi, lo = _np_limbs(np.where(small, P, 0.0))
+                hi_s += hi.sum(axis=0)
+                lo_s += lo.sum(axis=0)
+                k += small.sum(axis=0)
+                wr, wc = np.nonzero(wide)
+                if wr.size:
+                    cell = pa.array(wc)
+                    nul = pa.nulls(len(wr), pa.int64())
+                    cols = [i0.take(cell), j0.take(cell), nul, nul, nul]
+                    yield pa.RecordBatch.from_arrays(
+                        [*cols, pa.array(P[wr, wc])], names=names
+                    )
+            none = k == 0
+            yield pa.RecordBatch.from_arrays(
+                [
+                    i0,
+                    j0,
+                    pa.array(hi_s, mask=none),
+                    pa.array(lo_s, mask=none),
+                    pa.repeat(pa.scalar(c1 - c0, pa.int64()), cells),
+                    pa.nulls(cells, pa.float64()),
+                ],
+                names=names,
+            )
 
 
 def covariance_matrix(
@@ -1512,73 +1580,70 @@ def covariance_matrix(
     """Sample covariance matrix of the embedding column: (i, j, cov) with
     1-based dims, upper triangle (i ≤ j).
 
-    Engine-exact two-pass moments: Σ x_i·x_j is an :func:`_exact_sum`
-    of the double products and Σ x_i a DECIMAL sum of the doubles (both
-    order-independent at any partitioning), combined as
-    (Σxy − Σx·Σy/n)/(n−1) in double, rounded to 6; NULL where fewer than
-    two rows cover the pair (ragged widths).  Only the products' rounding
-    grid differs from the DuckDB oracle's: 2^-50 half-even (≤ 4.4e-16 per
-    product) instead of 1e-15 HALF_UP (≤ 5e-16); both sums are exact, and
-    ``cov`` is pinned cell-for-cell to the DECIMAL form in the tests.
-    Plan: the dim² pair expansion happens per row and meets a map-side
-    partial aggregation immediately — shuffle volume is dim²·#partitions
-    rows (model-sized), never data-scale; the dim-level sums rollup
-    reuses the same scan.  This is the X^T X building block of
-    distributed PCA.
+    Engine-exact two-pass moments, (Σxy − Σx·Σy/n)/(n−1) in double,
+    rounded to 6; NULL where fewer than two rows cover the pair (ragged
+    widths).  Σ x_i·x_j: one ``mapInArrow`` pass evaluates the double
+    products per batch in NumPy and emits per-cell partials
+    (:func:`_np_moment_partials`) — exact BIGINT limb sums of the
+    products below 2^12 on the 2^-50 half-even grid (Spark's BIGINT
+    sums of the partials raise under ANSI past ~2^26 rows per cell
+    instead of wrapping), joined per cell as one DECIMAL(38,0) integer
+    and rounded to double once, plus a
+    DECIMAL(30,15) sum of the others (NaN/±inf cast to NULL, |p| ≥ 1e15
+    raises), added in double.  Σ x_i: a DECIMAL(30,15) sum of the
+    doubles, the oracle's HALF_UP rounding, built once and broadcast to
+    both sides.  Every sum is exact, hence order-independent at any
+    partitioning and batch size; only the products' rounding grid
+    differs from the DuckDB oracle's (2^-50 half-even, ≤ 4.4e-16 per
+    product, instead of 1e-15 HALF_UP, ≤ 5e-16), and ``cov`` is pinned
+    cell-for-cell to the per-product DECIMAL form in the tests.  Plan:
+    no row expansion — the Python worker sends dim(dim+1)/2 partial rows
+    per batch plus the rare wide products, so the shuffle is
+    model-sized.  This is the X^T X building block of distributed PCA.
     """
-    from lab_flink_repository_analytics_spark.session import rebalance
 
-    # the dim² expansion is the data-amplifying map stage — spread a
-    # narrow local scan across the executors first (no-op on a
-    # many-split cluster scan); both moment passes reuse the rebalanced
-    # frame
-    vectors = rebalance(vectors.select(F.col(vec_col).alias(vec_col)))
-    v = F.col("v")
-    a = vectors.select(F.col(vec_col).alias("v")).select(
-        F.posexplode(v).alias("i0", "xi"), v.alias("v2")
-    )
-    # generate ONLY the upper triangle (round-10, guide §2.3): slicing v2
-    # to its j ≥ i tail before the second posexplode halves the
-    # Generate's output (dim² → dim(dim+1)/2 rows per input row) instead
-    # of discarding the lower triangle with a post-filter; j recovers
-    # from the slice-relative position.  Same (i0, j0, xi, xj) row set as
-    # explode-then-filter — measured value-equal (sxy and n) at sf0.1.
-    b = a.select(
-        "i0",
-        "xi",
-        F.posexplode(F.expr("slice(v2, i0 + 1, size(v2) - i0)")).alias(
-            "jrel", "xj"
-        ),
-    ).select("i0", "xi", (F.col("i0") + F.col("jrel")).alias("j0"), "xj")
-    mom = b.groupBy("i0", "j0").agg(
-        _exact_sum(F.col("xi").cast("double") * F.col("xj").cast("double")).alias(
-            "sxy"
-        ),
-        F.count(F.lit(1)).alias("n"),
+    def moment_batches(batches):
+        for b in batches:
+            yield from _np_moment_partials(b.column(0))
+
+    v = vectors.select(F.col(vec_col).cast("array<double>").alias("v"))
+    fixed = (
+        F.sum("hi").cast("decimal(38,0)") * _LIMB + F.sum("lo")
+    ).cast("double") * 2.0**-50
+    wide = F.sum(F.col("p").cast("decimal(30,15)")).cast("double")
+    mom = (
+        v.mapInArrow(moment_batches, _MOMENT_SCHEMA)
+        .groupBy("i0", "j0")
+        .agg(
+            F.coalesce(wide + fixed, wide, fixed).alias("sxy"),
+            F.sum("n").alias("n"),
+        )
     )
     dims = (
-        vectors.select(F.posexplode(F.col(vec_col)).alias("i0", "x"))
+        v.select(F.posexplode("v").alias("i0", "x"))
         .groupBy("i0")
-        .agg(F.sum(F.col("x").cast("double").cast("decimal(30,15)")).alias("sx"))
+        .agg(F.sum(F.col("x").cast("decimal(30,15)")).alias("sx"))
     )
-    d1 = dims.select(F.col("i0").alias("i0"), F.col("sx").alias("si"))
-    d2 = dims.select(F.col("i0").alias("j0"), F.col("sx").alias("sj"))
+    # the same dims plan on both sides of the pair, so AQE reuses its
+    # broadcast for the j side instead of a second scan and aggregate
+    d1, d2 = F.broadcast(dims.alias("d1")), F.broadcast(dims.alias("d2"))
+    n = F.col("n")
     return (
-        mom.join(F.broadcast(d1), "i0")
-        .join(F.broadcast(d2), "j0")
+        mom.join(d1, mom["i0"] == F.col("d1.i0"))
+        .join(d2, mom["j0"] == F.col("d2.i0"))
         .select(
-            (F.col("i0") + 1).cast("int").alias("i"),
-            (F.col("j0") + 1).cast("int").alias("j"),
+            (mom["i0"] + 1).cast("int").alias("i"),
+            (mom["j0"] + 1).cast("int").alias("j"),
             F.when(
-                F.col("n") > 1,
+                n > 1,
                 F.round(
                     (
                         F.col("sxy")
-                        - F.col("si").cast("double")
-                        * F.col("sj").cast("double")
-                        / F.col("n")
+                        - F.col("d1.sx").cast("double")
+                        * F.col("d2.sx").cast("double")
+                        / n
                     )
-                    / (F.col("n") - 1),
+                    / (n - 1),
                     6,
                 ),
             ).alias("cov"),

@@ -1169,8 +1169,10 @@ def copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lab_flink_repository_analytics_spark.datapipe.graph import pagerank_int
 
     # the distinct edge list AND the materialized degree table are the
-    # session-shared checkpoints also consumed by copurchase_triangles —
-    # the whole PageRank prep collapses to one ebd-fold job
+    # session-shared checkpoints also consumed by copurchase_triangles,
+    # so neither is rebuilt here when the triangle count built it;
+    # pagerank_int's rank checkpoint then runs the iterations' shuffle
+    # stages before this returns (graph.py)
     edges = _copurchase_edges(spark, sf_dir)
     shared = _copurchase_deg(spark, sf_dir)
     return (

@@ -1424,7 +1424,8 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Upper-triangle sample covariance of the embedding dims
     (datapipe/similarity.py::covariance_matrix) — the X^T X building
     block of distributed PCA, exact fixed-point moments (BIGINT limbs on
-    a 2^-50 grid); NULL where fewer than two rows cover a pair."""
+    a 2^-50 grid, summed per Arrow batch in one ``mapInArrow`` pass, no
+    dim² row expansion); NULL where fewer than two rows cover a pair."""
     emb = load_tables(spark, sf_dir)["embeddings"]
     return SIM.covariance_matrix(emb)
 

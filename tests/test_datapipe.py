@@ -1569,10 +1569,55 @@ def test_covariance_matrix_equals_decimal_moments_on_adversarial_batches(spark):
         assert got == _cov_cells(_decimal_moment_cov(emb)), name
 
 
-def test_fixed_point_limbs_are_exact(spark):
-    # Spark evaluates the limbs; Python's round() is the same half-even
-    # rint, and p·2^50 is exact in double
+def test_covariance_matrix_equals_decimal_moments_across_arrow_batches(spark):
+    # two rows per Arrow batch: every cell sums partials of several
+    # batches, and single batches mix widths, NULL and empty vectors, NULL
+    # elements, NaN, ±inf and |x| >= 64 (the DECIMAL branch); every cell
+    # is covered by at least two rows
+    nan, inf = float("nan"), float("inf")
+    rows = [
+        (1, [0.5, -0.25, 0.125]),
+        (2, None),
+        (3, [1.0, 2.0]),
+        (4, []),
+        (5, [None, 0.75, 3.0]),
+        (6, [nan, 1.0, 0.5]),
+        (7, [inf, -0.5, 2.0]),
+        (8, [-inf, 0.25]),
+        (9, [100.0, -70.0, 0.3]),
+        (10, [64.0, 0.1, -0.2]),
+        (11, [0.3, None]),
+        (12, [-0.0, 5e-324, 1e5]),
+        (13, [0.7, -0.7, 0.9]),
+        (14, [-3.5]),
+    ]
+    # no fixed-point product in any cell, and none but NULL, NaN and inf
+    # in cell (1, 2): a NULL Σxy there, as in the DECIMAL form
+    wide_only = [(1, [1e3, None]), (2, [None, 2e3]), (3, [nan, 3e3]), (4, [2e3, inf])]
+    schema = "vec_id bigint, embedding array<double>"
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        for fixture in (rows, wide_only):
+            emb = spark.createDataFrame(fixture, schema)
+            want = _cov_cells(_decimal_moment_cov(emb))
+            assert len(want) == (6 if fixture is rows else 3)
+            for df in (emb.coalesce(1), emb.repartition(3)):
+                assert _cov_cells(SIM.covariance_matrix(df)) == want
+        nulls = spark.createDataFrame([(1, None), (2, None), (3, [])], schema)
+        assert SIM.covariance_matrix(nulls).collect() == []
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_fixed_point_limbs_are_exact(monkeypatch):
+    # Python's round() is the same half-even rint, and p·2^50 is exact in
+    # double
     import math
+
+    import numpy as np
+    import pyarrow as pa
 
     top = math.nextafter(2.0**12, 0.0)
     ps = [
@@ -1595,14 +1640,34 @@ def test_fixed_point_limbs_are_exact(spark):
         3.0 + 2.5 * 2.0**-50,
         -(3.0 + 2.5 * 2.0**-50),
     ]
-    df = spark.createDataFrame([(p,) for p in ps], "p double")
-    hi, lo = SIM._fixed_point_limbs(F.col("p"))
-    got = df.select("p", hi.alias("hi"), lo.alias("lo")).collect()
-    for r in got:
-        assert r["hi"] * 2**25 + r["lo"] == round(r["p"] * 2.0**50), r
-        assert 0 <= r["lo"] <= 2**25, r
-    total = df.agg(SIM._exact_sum(F.col("p")).alias("s")).first()["s"]
-    assert total == float(sum(round(p * 2.0**50) for p in ps)) * 2.0**-50
+    hi, lo = SIM._np_limbs(np.array(ps))
+    for p, h, low in zip(ps, hi.tolist(), lo.tolist()):
+        assert h * 2**25 + low == round(p * 2.0**50), p
+        assert 0 <= low <= 2**25, p
+
+    def cell01(values):
+        # the kernel's partials of cell (0, 1) over the rows [1.0, p]
+        # (product exactly p), summed as Python ints: (Σ limbs, #partials)
+        cv = pa.array([[1.0, p] for p in values], pa.list_(pa.float64()))
+        total, parts, n = 0, 0, 0
+        for b in SIM._np_moment_partials(cv):
+            for r in b.to_pylist():
+                if (r["i0"], r["j0"]) == (0, 1) and r["p"] is None:
+                    total += r["hi"] * 2**25 + r["lo"]
+                    parts += 1
+                    n += r["n"]
+        assert n == len(values)
+        return total, parts
+
+    assert cell01(ps) == (sum(round(p * 2.0**50) for p in ps), 1)
+    # more rows than a partial may cover, near 2^12: each partial spans
+    # several NumPy blocks (3 cells × 2 rows) and the cell sums 7 partials
+    monkeypatch.setattr(SIM, "_LIMB_ROWS", 5)
+    monkeypatch.setattr(SIM, "_MOMENT_BLOCK", 6)
+    near = [top * (1 - k * 2.0**-45) for k in range(33)]
+    total, parts = cell01(near)
+    assert parts == 7
+    assert total == sum(round(p * 2.0**50) for p in near)
 
 
 def test_covariance_matrix_ragged_cells_null_like_oracle(spark):

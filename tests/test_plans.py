@@ -7,6 +7,8 @@ payload pruning for metadata-only media queries.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from lab_flink_repository_analytics_spark.queries import suite
@@ -293,3 +295,17 @@ def test_embedding_near_dup_cosine_stays_post_join(spark, sf_dir):
     proj = [ln for ln in plan.splitlines() if "Project" in ln and "cos_sim" in ln]
     assert proj, plan
     assert "THEN 0.0" in proj[0] and "WHEN (monotonically_increasing_id" in proj[0], proj[0]
+
+
+def test_embedding_covariance_one_arrow_pass_and_one_dims_build(spark, sf_dir):
+    # no dim² pair Generate and no round-robin rebalance: the products
+    # are summed per batch in one MapInArrow pass; the only Generate is
+    # the Σx_i posexplode, and AQE runs its broadcast once for both sides
+    df = suite.embedding_covariance(spark, sf_dir)
+    plan = _plan(df)
+    assert "MapInArrow" in plan, plan
+    assert "RoundRobinPartitioning" not in plan, plan
+    df.collect()
+    final = _plan(df).split("Initial Plan")[0]
+    assert final.count("Generate posexplode") == 1, final
+    assert re.search(r"ReusedExchange \[.*\], BroadcastExchange", final), final

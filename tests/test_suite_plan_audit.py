@@ -68,7 +68,7 @@ SINGLE_PARTITION_OK = {
 HOF_DOT_OK = {
     # mean_pairwise_cosine: the row norm and the unit vector's self-dot
     # (5 fold sites), once per row, fed to DECIMAL sums; their plan waits
-    # for the _exact_sum move (ROADMAP item 1)
+    # for the move onto the NumPy limb rule (ROADMAP item 1)
     "label_redundancy",
     # quantization_error: one DECIMAL(28,12) fold of |x - q·scale| per
     # row; the per-step re-cast has no flat-sum form

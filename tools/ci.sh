@@ -54,7 +54,7 @@ fi
 
 echo "=== [1/3] pytest ==="
 if [[ "$QUICK" == "--quick" ]]; then
-  python -m pytest tests/ -x -q -k "environment or util or plans or upsert or compact or swap or semdedup or kmeans or assignments or brute_force"
+  python -m pytest tests/ -x -q -k "environment or util or plans or upsert or compact or swap or semdedup or kmeans or assignments or brute_force or covariance or limbs"
 else
   python -m pytest tests/ -x -q
   # benchmark helpers (metrics, tracing, generators): Spark-free, seconds

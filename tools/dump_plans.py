@@ -66,7 +66,7 @@ SHOW = [
     ("boilerplate_gram_frac", "positions pre-aggregated to doc-gram multiplicities; frequent-gram join back"),
     ("bigram_lm_scores", "doc-bigram multiplicities feed both the model rollup and the scoring join"),
     ("kmeans_clusters", "Lloyd: final assignment is one MapInArrow pass against driver-held centroids (no shuffle); each update, one per-cluster agg of dim flat sums, runs before it"),
-    ("embedding_covariance", "dim² pair expansion meets map-side partials; shuffle is model-sized"),
+    ("embedding_covariance", "one MapInArrow pass of per-batch limb partials, no pair Generate or rebalance; one Σx_i plan on both join sides, so AQE runs its broadcast once (ReusedExchange on the j side)"),
     ("user_value_ewma", "per-key sorted-array fold: ONE exchange, recurrence in codegen aggregate"),
     ("windowed_event_dedup", "first-per-(key,window): partial WindowGroupLimit below the single shuffle"),
     ("event_value_zscores", "group moments broadcast back; fact table never shuffles"),
