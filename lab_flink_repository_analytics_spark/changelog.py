@@ -19,10 +19,11 @@ Two materializations cover the reference's two source declarations:
   last row per key in changelog order wins; keys whose last kind is D
   disappear.  ``max_by`` per key — O(1) state per key.
 
-Streaming note: the live equivalents are output-mode ``update``/``complete``
-(Spark emits upserts, not retractions) and ``streaming/stateful.py`` for
-keyed state; these batch materializations exist so changelog-shaped inputs
-can be replayed and cross-checked against final-state oracles.
+Streaming note: the live equivalent is output-mode ``update``/``complete``
+(Spark emits upserts, not retractions; ``streaming/jobs.py`` upserts its
+windowed state by key); these batch materializations exist so
+changelog-shaped inputs can be replayed and cross-checked against
+final-state oracles.
 """
 
 from __future__ import annotations

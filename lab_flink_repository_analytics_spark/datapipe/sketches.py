@@ -191,16 +191,6 @@ def value_histogram(
     return df.groupBy(*keys, bin_.alias("bin")).agg(F.count(F.lit(1)).alias("c"))
 
 
-def merge_histograms(*hists: DataFrame) -> DataFrame:
-    """Sum counter rows — per-shard/per-period histograms roll up without
-    re-scanning raw data."""
-    out = hists[0]
-    for h in hists[1:]:
-        out = out.unionByName(h)
-    keys = [c for c in out.columns if c not in ("c",)]
-    return out.groupBy(*keys).agg(F.sum("c").alias("c"))
-
-
 def histogram_quantiles(
     hist: DataFrame,
     keys: Sequence[str],

@@ -12,12 +12,12 @@ The reference's sinks:
 * Multi-sink statement set (FlinkMailingListToKafka.java:169-174) —
   Spark-side: ``fan_out`` writes one cached source to N sinks.
 
-Every dataset the engine replaces in place — the upsert, the changelog
-refresh (``apply_changelog``), the streaming counter stores
-(``streaming/jobs.py``) — goes through ``rewrite``: crash recovery, a
-lazy read of the live copy, the caller's merge, and one write swapped in
-by checked renames (``_swap_in``).  Compaction (``compact_parquet``)
-runs the same recovery and the same swap.
+Every dataset the engine replaces in place — the upsert (also the
+streaming commit job's per-batch sink, ``streaming/jobs.py``) and the
+changelog refresh (``apply_changelog``) — goes through ``rewrite``: crash
+recovery, a lazy read of the live copy, the caller's merge, and one write
+swapped in by checked renames (``_swap_in``).  Compaction
+(``compact_parquet``) runs the same recovery and the same swap.
 """
 
 from __future__ import annotations

@@ -2616,10 +2616,8 @@ def quota_fill_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def quota_fill(docs: DataFrame, quotas: DataFrame | None) -> DataFrame:
     """Batch quota-fill core over ``docs (source, doc_id, text, …)`` and
-    ``quotas (source, token_quota)`` — shared by the suite query above and
-    the batch side of the streaming-parity test
-    (streaming/stateful.py::quota_fill_stream is the incremental twin).
-    ``quotas=None`` derives the Hamilton quotas from the prefix-sum pass's
+    ``quotas (source, token_quota)`` — the suite query above passes
+    ``quotas=None``, tests pass explicit quotas.  ``quotas=None`` derives the Hamilton quotas from the prefix-sum pass's
     own per-source totals — no second corpus scan."""
     from lab_flink_repository_analytics_spark.datapipe.ranking import (
         with_grouped_running_sum,

@@ -67,6 +67,28 @@ def unanswered_threads(
     )
 
 
+def quiet_sessions(events: DataFrame, gap: str = "12 hours") -> DataFrame:
+    """Per-user session windows with a single event: the unanswered-threads
+    shape (README.md:227-236: SESSION + HAVING COUNT < 2) over ``events``.
+
+    The same builder serves batch and streaming input: over a watermarked
+    stream a session emits (append mode) once the watermark passes its end,
+    and the HAVING filter is final only then.
+    """
+    sess = F.session_window("ts", gap)
+    return (
+        events.groupBy(sess.alias("s"), F.col("user_id"))
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .filter(F.col("cnt") < 2)
+        .select(
+            "user_id",
+            F.col("s.start").alias("session_start"),
+            F.col("s.end").alias("session_end"),
+            "cnt",
+        )
+    )
+
+
 def _early_return_prefix(arr: Column) -> Column:
     """The reference ComponentExtractor's quirk, faithfully: iteration over
     a commit's files ``return``s (not ``continue``s) on the first filename

@@ -254,20 +254,7 @@ FROM events GROUP BY 1, 2
 def quiet_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows (12h gap) per user, HAVING count < 2 — the
     unanswered-threads shape (README.md:227-236: SESSION + HAVING COUNT<2)."""
-    t = load_tables(spark, sf_dir)
-    sess = F.session_window("ts", "12 hours")
-    return (
-        t["events"]
-        .groupBy(sess.alias("s"), F.col("user_id"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .filter(F.col("cnt") < 2)
-        .select(
-            "user_id",
-            F.col("s.start").alias("session_start"),
-            F.col("s.end").alias("session_end"),
-            "cnt",
-        )
-    )
+    return CQ.quiet_sessions(load_tables(spark, sf_dir)["events"])
 
 
 QUIET_SESSIONS_SQL = """
@@ -604,17 +591,9 @@ def expanded_ticket_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _expanded_sql_components_case() -> str:
-    cases = []
-    for i, comps in enumerate(_JIRA_COMPONENT_LISTS):
-        lit = "[" + ", ".join("'" + c.replace("'", "''") + "'" for c in comps) + "]"
-        cases.append(f"WHEN {i} THEN {lit}::VARCHAR[]")
-    return "CASE (doc_id % 5) " + " ".join(cases) + " END"
-
-
 EXPANDED_TICKET_COMPONENTS_SQL = f"""
 WITH mails AS (
-  SELECT {_expanded_sql_components_case()} AS comps FROM documents
+  SELECT {_jira_sql_components_case()} AS comps FROM documents
 ), expanded AS (
   -- LEFT JOIN LATERAL ON TRUE: empty list still yields one NULL row
   SELECT unnest(CASE WHEN len(comps) = 0 THEN [NULL]::VARCHAR[] ELSE comps END) AS component,

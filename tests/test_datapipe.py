@@ -1924,75 +1924,6 @@ def test_dedup_family_builds_lsh_candidates_once(spark, sf_dir, monkeypatch):
     assert len(calls) == 1
 
 
-def test_pretraining_pipeline_end_to_end(spark, sf_dir, tmp_path):
-    import json as _json
-
-    from lab_flink_repository_analytics_spark.datapipe import pipeline
-    from lab_flink_repository_analytics_spark.session import load_tables
-
-    docs = load_tables(spark, sf_dir)["documents"]
-    eval_set = docs.filter(F.col("doc_id") % 97 == 0).select("doc_id", "text")
-    out = str(tmp_path / "pipe")
-    manifest = pipeline.run_pretraining_pipeline(
-        spark, docs, eval_set, out, chunk_tokens=32, overlap=4, capacity=128
-    )
-    # attribution partitions the corpus
-    assert manifest["input_docs"] == docs.count()
-    assert manifest["kept_docs"] + sum(manifest["dropped"].values()) == manifest["input_docs"]
-    assert manifest["kept_docs"] > 0
-    # the written dataset agrees with the manifest and is split-partitioned
-    written = spark.read.parquet(manifest["chunks_dir"])
-    got = {r["split"]: r["n"] for r in written.groupBy("split").agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert {s: c["chunks"] for s, c in manifest["splits"].items()} == got
-    # bins respect capacity up to one overhanging chunk (concat-then-split)
-    per_bin = written.groupBy("split", "shard", "bin").agg(F.sum("n_chunk_tokens").alias("t")).collect()
-    assert all(r["t"] <= 128 + 32 for r in per_bin)
-    # manifest round-trips from disk
-    on_disk = _json.load(open(out + "/manifest.json"))
-    assert on_disk["kept_docs"] == manifest["kept_docs"]
-    # every chunk's doc carries exactly one split (no doc straddles)
-    ndocs = written.select("doc_id").distinct().count()
-    nds = written.select("doc_id", "split").distinct().count()
-    assert ndocs == nds
-
-
-def test_incremental_ingest_ledger_idempotent(spark, tmp_path):
-    from lab_flink_repository_analytics_spark.datapipe import pipeline
-
-    ledger = str(tmp_path / "ledger")
-    b1 = spark.createDataFrame(
-        [(1, "alpha beta"), (2, "gamma delta"), (3, "alpha beta")],
-        "doc_id bigint, text string",
-    )
-    r1 = pipeline.incremental_ingest(spark, b1, ledger)
-    assert r1 == {"batch": 3, "admitted": 2, "dup_in_batch": 1, "dup_vs_ledger": 0}
-    # second batch: one brand-new doc, one exact dup of batch 1
-    b2 = spark.createDataFrame(
-        [(10, "epsilon zeta"), (11, "alpha beta")], "doc_id bigint, text string"
-    )
-    r2 = pipeline.incremental_ingest(spark, b2, ledger)
-    assert r2 == {"batch": 2, "admitted": 1, "dup_in_batch": 0, "dup_vs_ledger": 1}
-    # replaying batch 2 admits nothing (idempotent per content)
-    r3 = pipeline.incremental_ingest(spark, b2, ledger)
-    assert r3["admitted"] == 0 and r3["dup_vs_ledger"] == 2
-    # ledger holds one row per distinct content ever admitted
-    assert spark.read.parquet(ledger).count() == 3
-
-
-def test_incremental_ingest_null_text_not_dropped(spark, tmp_path):
-    from lab_flink_repository_analytics_spark.datapipe import pipeline
-
-    ledger = str(tmp_path / "nl")
-    b = spark.createDataFrame(
-        [(1, None), (2, "x y z")], "doc_id bigint, text string"
-    )
-    r = pipeline.incremental_ingest(spark, b, ledger)
-    # the NULL-text doc is admitted (sentinel fingerprint), not silently
-    # dropped or misreported as a duplicate
-    assert r == {"batch": 2, "admitted": 2, "dup_in_batch": 0, "dup_vs_ledger": 0}
-    assert spark.read.parquet(ledger).count() == 2
-
-
 def test_duplicate_span_stats_matches_bruteforce_on_random_corpus(spark):
     # seeded random corpus with injected shared spans; the operator's
     # closed-form interval math must equal a brute-force union of

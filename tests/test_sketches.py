@@ -113,12 +113,13 @@ def test_histogram_quantiles_merge_and_accuracy(spark):
     # uniform 0..999 → true p50=499.5, p90=899.1; bin width 10 bounds error
     assert abs(est["p50_est"] - 500.0) <= 10.0
     assert abs(est["p90_est"] - 900.0) <= 10.0
-    # merging two half-histograms == histogram of the whole stream
-    h1 = SK.value_histogram(df.filter("v < 500"), "v", ["g"], 0.0, 1000.0, bins=100)
-    h2 = SK.value_histogram(df.filter("v >= 500"), "v", ["g"], 0.0, 1000.0, bins=100)
-    merged = SK.merge_histograms(h1, h2)
-    est_m = SK.histogram_quantiles(merged, ["g"], [0.5, 0.9], 0.0, 1000.0, bins=100).collect()[0]
-    assert est_m["p50_est"] == est["p50_est"] and est_m["p90_est"] == est["p90_est"]
+    # mergeable: the bin counts of two half-histograms sum to the
+    # histogram of the whole stream (a fixed bin grid, unlike percentiles)
+    halves = {}
+    for part in (df.filter("v < 500"), df.filter("v >= 500")):
+        for r in SK.value_histogram(part, "v", ["g"], 0.0, 1000.0, bins=100).collect():
+            halves[r["bin"]] = halves.get(r["bin"], 0) + r["c"]
+    assert halves == {r["bin"]: r["c"] for r in hist.collect()}
     # out-of-range values clamp into edge bins instead of vanishing
     oob = spark.createDataFrame([("k", -5.0), ("k", 5000.0)], "g: string, v: double")
     hb = SK.value_histogram(oob, "v", ["g"], 0.0, 1000.0, bins=100)

@@ -80,65 +80,6 @@ def test_streaming_users_per_window(spark, tmp_path):
     assert len(out) == 1 and out[0]["cnt"] == 2
 
 
-def _run_profiles(spark, src, out, ckpt):
-    from lab_flink_repository_analytics_spark.streaming import stateful
-
-    emails = (
-        spark.readStream.schema("person string, email string, ts timestamp")
-        .parquet(src)
-        .withWatermark("ts", "1 day")
-    )
-    profiles = stateful.email_profiles_stream(emails)
-
-    def _upsert(batch_df, batch_id):
-        if not batch_df.isEmpty():
-            sinks.upsert_by_key(batch_df.sparkSession, batch_df, out, ["person"])
-
-    q = (
-        profiles.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(_upsert)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-
-def test_stateful_email_profiles_across_batches(spark, tmp_path):
-    src = str(tmp_path / "emails")
-    out = str(tmp_path / "profiles")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "person string, email string, ts timestamp"
-
-    batch1 = [
-        ("john", "john@test.com", datetime(2021, 1, 1)),
-        ("john", "john@gmail.com", datetime(2021, 1, 2)),  # freemail: no company change
-        ("jane", "jane@data-artisans.com", datetime(2021, 1, 1)),
-    ]
-    spark.createDataFrame(batch1, schema).write.mode("append").parquet(src)
-    _run_profiles(spark, src, out, ckpt)
-    got = {r["person"]: r for r in spark.read.parquet(out).collect()}
-    assert got["john"]["company"] == "test.com"
-    assert got["john"]["companySince"] == datetime(2021, 1, 1)
-    assert got["john"]["aliases"] == ["john@test.com", "john@gmail.com"]
-    assert got["jane"]["company"] == "ververica.com"  # historic-domain rewrite
-
-    # second batch: company change for john — state must carry across the
-    # restart (checkpointed state store), since must re-stamp
-    batch2 = [("john", "john@new.io", datetime(2021, 2, 1))]
-    spark.createDataFrame(batch2, schema).write.mode("append").parquet(src)
-    _run_profiles(spark, src, out, ckpt)
-    got2 = {r["person"]: r for r in spark.read.parquet(out).collect()}
-    assert got2["john"]["company"] == "new.io"
-    assert got2["john"]["companySince"] == datetime(2021, 2, 1)
-    assert got2["john"]["aliases"] == [
-        "john@test.com",
-        "john@gmail.com",
-        "john@new.io",
-    ]
-    assert got2["jane"]["company"] == "ververica.com"  # untouched key survives
-
-
 def test_watermark_drops_late_rows_append_mode(spark, tmp_path):
     # reference watermark semantics (DDL delays, README.md:88/120/145):
     # rows older than the watermark are dropped, finalized windows emit once
@@ -308,150 +249,40 @@ def test_streaming_session_multi_batch_watermark_finalization_order(spark, tmp_p
     assert emitted() == {"[X] one": 1, "[Z] three": 1}
 
 
-def test_stream_stream_interval_join(spark, tmp_path):
-    # watermarked stream-stream join: clicks within 10 min before an error
-    # pair up; clicks outside the window don't; state is watermark-bounded
-    src_e = str(tmp_path / "errors")
-    src_c = str(tmp_path / "clicks")
-    out = str(tmp_path / "pairs")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "event_id long, user_id long, ts timestamp"
-
-    spark.createDataFrame(
-        [(100, 1, datetime(2021, 1, 1, 10, 0, 0)), (101, 2, datetime(2021, 1, 1, 10, 0, 0))],
-        schema,
-    ).write.parquet(src_e)
-    spark.createDataFrame(
-        [
-            (1, 1, datetime(2021, 1, 1, 9, 51, 0)),   # in window for error 100
-            (2, 1, datetime(2021, 1, 1, 9, 49, 0)),   # 11 min before → out
-            (3, 2, datetime(2021, 1, 1, 9, 59, 0)),   # in window for error 101
-            (4, 3, datetime(2021, 1, 1, 9, 59, 0)),   # other user → out
-        ],
-        schema,
-    ).write.parquet(src_c)
-
-    errors = jobs.stream_source(spark, src_e, schema, "ts", "1 hour")
-    clicks = jobs.stream_source(spark, src_c, schema, "ts", "1 hour")
-    joined = jobs.clicks_before_errors_stream(errors, clicks, 600.0)
-    q = (
-        joined.writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(
-            lambda b, _: None
-            if b.isEmpty()
-            else b.write.mode("append").parquet(out)
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["error_id"], r["click_id"])
-        for r in spark.read.parquet(out).collect()
-    }
-    assert got == {(100, 1), (101, 3)}
-
-
-def test_stateful_profiles_on_rocksdb_state_store(spark, tmp_path):
+def test_stateful_commit_activity_on_rocksdb_state_store(spark, tmp_path):
     # the reference runs RocksDB state backends in every ITCase
-    # (SURVEY.md §4); prove the stateful operator runs on Spark's RocksDB
-    # provider (conf applies per started query)
+    # (SURVEY.md §4); prove the windowed commit job keeps its window state
+    # in Spark's RocksDB provider across a restart (the conf applies per
+    # started query and is pinned in the checkpoint's offset log)
+    import glob
+
     from lab_flink_repository_analytics_spark.session import ROCKSDB_PROVIDER
 
     key = "spark.sql.streaming.stateStore.providerClass"
     prev = spark.conf.get(key, None)
     spark.conf.set(key, ROCKSDB_PROVIDER)
     try:
-        src = str(tmp_path / "emails")
-        out = str(tmp_path / "profiles")
+        src = str(tmp_path / "commits")
+        out = str(tmp_path / "summaries")
         ckpt = str(tmp_path / "ckpt")
-        schema = "person string, email string, ts timestamp"
-        spark.createDataFrame(
-            [("ada", "ada@corp.com", datetime(2022, 3, 1))], schema
-        ).write.parquet(src)
-        _run_profiles(spark, src, out, ckpt)
-        got = {r["person"]: r for r in spark.read.parquet(out).collect()}
-        assert got["ada"]["company"] == "corp.com"
+        for minute, name, lines in ((10, "A", 4), (40, "B", 6)):
+            files = [(f"flink-core/src/{name}.java", 0, lines, 0)]
+            _write_commits(spark, src, [_commit(datetime(2022, 3, 1, 9, minute), files)])
+            q = jobs.run_commit_activity_job(spark, src, out, ckpt, available_now=True)
+            q.awaitTermination(120)
+        got = {
+            (r["componentName"], r["windowStart"]): r["linesChanged"]
+            for r in spark.read.parquet(out).collect()
+        }
+        # 4 + 6: the restart added onto the window sum restored from state
+        assert got == {("flink-core", datetime(2022, 3, 1, 9, 0)): 10}
+        offsets = glob.glob(ckpt + "/offsets/*")
+        assert offsets and all(ROCKSDB_PROVIDER in open(f).read() for f in offsets)
     finally:
         if prev is None:
             spark.conf.unset(key)
         else:
             spark.conf.set(key, prev)
-
-
-def test_minhash_dedup_stream_across_batches(spark, tmp_path):
-    from lab_flink_repository_analytics_spark.streaming import stateful
-
-    src = str(tmp_path / "docs")
-    out = str(tmp_path / "pairs")
-    ckpt = str(tmp_path / "ckpt")
-    text = "the quick brown fox jumps over the lazy dog again and again"
-
-    def run():
-        stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-        q = (
-            stateful.minhash_dedup_stream(stream)
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(
-                lambda b, _: None
-                if b.isEmpty()
-                else b.write.mode("append").parquet(out)
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    def pairs():
-        import os
-
-        if not os.path.exists(out):
-            return set()
-        return {
-            (r["id_a"], r["id_b"]) for r in spark.read.parquet(out).collect()
-        }
-
-    spark.createDataFrame(
-        [(1, text), (2, "completely unrelated content about query engines")],
-        "doc_id long, text string",
-    ).write.mode("append").parquet(src)
-    run()
-    assert pairs() == set()  # no dups yet
-
-    # batch 2 contains a near-dup of doc 1 — must pair against the STATE
-    spark.createDataFrame(
-        [(3, text + " tail")], "doc_id long, text string"
-    ).write.mode("append").parquet(src)
-    run()
-    got = pairs()
-    assert (1, 3) in got
-    assert all(p == (1, 3) for p in got)  # no (2, x) noise
-
-
-def test_exact_dedup_stream(spark, tmp_path):
-    from lab_flink_repository_analytics_spark.streaming import stateful
-
-    src = str(tmp_path / "docs")
-    rows = [
-        (1, "aaa", datetime(2021, 1, 1, 10)),
-        (2, "aaa", datetime(2021, 1, 1, 11)),  # dup fingerprint within watermark
-        (3, "bbb", datetime(2021, 1, 1, 12)),
-    ]
-    spark.createDataFrame(rows, "doc_id int, fp string, ts timestamp").write.parquet(src)
-    stream = spark.readStream.schema("doc_id int, fp string, ts timestamp").parquet(src)
-    deduped = stateful.exact_dedup_stream(stream)
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("dedup_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted(r["fp"] for r in spark.sql("SELECT * FROM dedup_stream").collect())
-    assert got == ["aaa", "bbb"]
 
 
 def test_upsert_by_key_converges(spark, tmp_path):
@@ -734,42 +565,10 @@ def test_zorder_clusters_both_dimensions(spark, tmp_path):
     assert all(r["ys"] == 31 for r in xspans)  # x-sort leaves y unclustered
 
 
-def test_streaming_histogram_store_matches_batch(spark, tmp_path):
-    # two micro-batches merged incrementally == one batch histogram of all
-    # rows; the store never exceeds keys×bins rows
-    from lab_flink_repository_analytics_spark.datapipe import sketches as SK
-
-    src = str(tmp_path / "vals")
-    store = str(tmp_path / "hist_store")
-    rows1 = [("a", float(v)) for v in range(0, 50)]
-    rows2 = [("a", float(v)) for v in range(50, 100)] + [("b", 10.0)]
-    schema = "event_type string, value double"
-    spark.createDataFrame(rows1, schema).write.mode("append").parquet(src)
-
-    def run():
-        stream = spark.readStream.schema(schema).parquet(src)
-        q = jobs.value_histogram_stream(
-            stream, store, str(tmp_path / "ckpt_hist"), lo=0.0, hi=100.0, bins=10
-        )
-        q.awaitTermination(120)
-
-    run()
-    spark.createDataFrame(rows2, schema).write.mode("append").parquet(src)
-    run()
-    got = spark.read.parquet(store)
-    expected = SK.value_histogram(
-        spark.createDataFrame(rows1 + rows2, schema), "value", ["event_type"], 0.0, 100.0, bins=10
-    )
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, expected.collect()))
-    est = SK.histogram_quantiles(got, ["event_type"], [0.5], 0.0, 100.0, bins=10)
-    m = {r["event_type"]: r["p50_est"] for r in est.collect()}
-    assert abs(m["a"] - 50.0) <= 10.0  # uniform 0..99 → p50 within one bin
-
-
 def test_drop_duplicates_within_watermark_builtin(spark, tmp_path):
-    # Spark 3.5+ built-in bounded-state dedup: same semantic as
-    # stateful.exact_dedup_stream but with engine-managed state eviction —
-    # the zero-custom-code path for streaming dedup at scale.
+    # Spark 3.5+ built-in bounded-state dedup (first row per key while the
+    # watermark holds it, engine-managed state eviction): the
+    # zero-custom-code path for streaming dedup at scale.
     src = str(tmp_path / "docs")
     rows = [
         (1, "aaa", datetime(2021, 1, 1, 10)),
@@ -789,150 +588,6 @@ def test_drop_duplicates_within_watermark_builtin(spark, tmp_path):
     q.awaitTermination(120)
     got = sorted(r["fp"] for r in spark.sql("SELECT * FROM ddww_stream").collect())
     assert got == ["aaa", "bbb"]
-
-
-def test_streaming_word_topk_matches_batch(spark, tmp_path):
-    # incremental top-k: two micro-batches of docs merge into the counter
-    # store; the store's top-k equals a batch recount over ALL docs
-    src = str(tmp_path / "docs")
-    store = str(tmp_path / "store")
-    ck = str(tmp_path / "ck")
-    from lab_flink_repository_analytics_spark.streaming import jobs
-
-    b1 = [(1, "a b a"), (2, "b c")]
-    b2 = [(3, "a d d d")]
-    spark.createDataFrame(b1, "doc_id long, text string").write.parquet(src)
-    q = jobs.word_topk_stream(
-        spark.readStream.schema("doc_id long, text string").parquet(src),
-        store, ck,
-    )
-    q.awaitTermination(120)
-    spark.createDataFrame(b2, "doc_id long, text string").write.mode("append").parquet(src)
-    q = jobs.word_topk_stream(
-        spark.readStream.schema("doc_id long, text string").parquet(src),
-        store, ck,
-    )
-    q.awaitTermination(120)
-    got = [(r["word"], r["cnt"]) for r in jobs.read_topk(spark, store, 3).collect()]
-    assert got == [("a", 3), ("d", 3), ("b", 2)]  # tie a/d broken by word
-
-
-def test_stream_stream_outer_interval_join_emits_on_watermark(spark, tmp_path):
-    # left-outer: error 101 has no in-window click; its NULL-click row may
-    # only surface after the watermark passes its window — i.e. on a LATER
-    # run whose input advances event time (Flink outer interval semantics)
-    src_e = str(tmp_path / "errors")
-    src_c = str(tmp_path / "clicks")
-    out = str(tmp_path / "pairs")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "event_id long, user_id long, ts timestamp"
-
-    def run_once():
-        errors = jobs.stream_source(spark, src_e, schema, "ts", "10 minutes")
-        clicks = jobs.stream_source(spark, src_c, schema, "ts", "10 minutes")
-        joined = jobs.clicks_before_errors_stream(
-            errors, clicks, 600.0, how="left_outer"
-        )
-        q = (
-            joined.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(
-                lambda b, _: None
-                if b.isEmpty()
-                else b.write.mode("append").parquet(out)
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    spark.createDataFrame(
-        [(100, 1, datetime(2021, 1, 1, 10, 0, 0)), (101, 2, datetime(2021, 1, 1, 10, 0, 0))],
-        schema,
-    ).write.parquet(src_e)
-    spark.createDataFrame(
-        [(1, 1, datetime(2021, 1, 1, 9, 55, 0))],  # match for 100 only
-        schema,
-    ).write.parquet(src_c)
-    run_once()
-    matched = {
-        (r["error_id"], r["click_id"]) for r in spark.read.parquet(out).collect()
-    }
-    assert (100, 1) in matched
-    assert not any(e == 101 for e, _ in matched)  # unmatched not yet flushed
-
-    # later traffic pushes the watermark far past error 101's window
-    spark.createDataFrame(
-        [(999, 9, datetime(2021, 1, 1, 13, 0, 0))], schema
-    ).write.mode("append").parquet(src_c)
-    spark.createDataFrame(
-        [(998, 9, datetime(2021, 1, 1, 13, 0, 0))], schema
-    ).write.mode("append").parquet(src_e)
-    run_once()
-    run_once()  # one more cycle: outer flush uses the PREVIOUS run's watermark
-    got = {
-        (r["error_id"], r["click_id"]) for r in spark.read.parquet(out).collect()
-    }
-    assert (101, None) in got, got
-
-
-def test_streaming_ewma_matches_batch_operator(spark, tmp_path):
-    # two micro-batches (batch 2 strictly later in event time so stream
-    # arrival order == the batch operator's global (ts, event_id) order);
-    # final streamed state must equal the batch integer fold exactly
-    from lab_flink_repository_analytics_spark.datapipe import timeseries as TS
-    from lab_flink_repository_analytics_spark.streaming import stateful
-
-    src = str(tmp_path / "events")
-    out = str(tmp_path / "ewma")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "event_id long, user_id long, ts timestamp, value double"
-
-    def run_once():
-        events = (
-            spark.readStream.schema(schema).parquet(src).withWatermark("ts", "1 day")
-        )
-        def _upsert(batch_df, _):
-            if not batch_df.isEmpty():
-                sinks.upsert_by_key(
-                    batch_df.sparkSession, batch_df, out, ["user_id"]
-                )
-        q = (
-            stateful.ewma_stream(events)
-            .writeStream.outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(_upsert)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    batch1 = [
-        (1, 1, datetime(2021, 1, 1, 10), 10.0),
-        (2, 1, datetime(2021, 1, 1, 11), 20.0),
-        (3, 2, datetime(2021, 1, 1, 10), 7.25),
-    ]
-    batch2 = [
-        (4, 1, datetime(2021, 1, 2, 10), 5.5),
-        (5, 3, datetime(2021, 1, 2, 10), 1.0),
-    ]
-    spark.createDataFrame(batch1, schema).write.mode("append").parquet(src)
-    run_once()
-    spark.createDataFrame(batch2, schema).write.mode("append").parquet(src)
-    run_once()
-
-    streamed = {
-        r["user_id"]: (r["n_events"], r["ewma_scaled"])
-        for r in spark.read.parquet(out).collect()
-    }
-    batch_df = spark.createDataFrame(batch1 + batch2, schema)
-    expect = {
-        r["user_id"]: (r["n_events"], r["ewma_scaled"])
-        for r in TS.ewma_int_df(
-            batch_df, ["user_id"], ["ts", "event_id"], "value"
-        ).collect()
-    }
-    assert streamed == expect
 
 
 def test_compact_parquet_to_size_targets_bytes(spark, tmp_path):
@@ -987,117 +642,6 @@ def test_compact_parquet_to_size_sees_partitioned_bytes(spark, tmp_path):
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [isnotnull(split" in plan
     assert pruned.count() == sum(1 for i in range(8_000) if i % 3 == 1)
-
-
-def test_streaming_histogram_store_feeds_psi_drift(spark, tmp_path):
-    # the live drift gate: a streamed histogram store compared against a
-    # frozen reference sketch via psi_drift must equal the all-batch PSI
-    from lab_flink_repository_analytics_spark.datapipe import drift
-    from lab_flink_repository_analytics_spark.datapipe import sketches as SK
-
-    schema = "event_type string, value double"
-    ref_rows = [("a", float(v % 10)) for v in range(100)]
-    live_rows1 = [("a", float(v % 10 + 3)) for v in range(40)]
-    live_rows2 = [("a", float(v % 10 + 3)) for v in range(40, 90)]
-
-    src = str(tmp_path / "live")
-    store = str(tmp_path / "live_hist")
-    spark.createDataFrame(live_rows1, schema).write.mode("append").parquet(src)
-
-    def run():
-        stream = spark.readStream.schema(schema).parquet(src)
-        q = jobs.value_histogram_stream(
-            stream, store, str(tmp_path / "ckpt_drift"), lo=0.0, hi=20.0, bins=10
-        )
-        q.awaitTermination(120)
-
-    run()
-    spark.createDataFrame(live_rows2, schema).write.mode("append").parquet(src)
-    run()
-
-    ref = SK.value_histogram(
-        spark.createDataFrame(ref_rows, schema), "value", ["event_type"], 0.0, 20.0, bins=10
-    )
-    live = spark.read.parquet(store)
-    got = drift.psi_drift(ref, live, ["event_type"], 10).collect()[0]
-    batch_live = SK.value_histogram(
-        spark.createDataFrame(live_rows1 + live_rows2, schema),
-        "value", ["event_type"], 0.0, 20.0, bins=10,
-    )
-    want = drift.psi_drift(ref, batch_live, ["event_type"], 10).collect()[0]
-    assert got["psi"] == want["psi"] and got["psi"] > 0.1  # real shift detected
-    assert got["n_b"] == 90
-
-
-def test_streaming_quota_fill_matches_batch_operator(spark, tmp_path):
-    # per-source token-budget fill: the final streamed state over two
-    # micro-batches (arrival order == the batch operator's salted-md5
-    # order, per source) must equal the batch quota_fill exactly
-    import hashlib
-
-    from lab_flink_repository_analytics_spark.queries import analytics_extra as AX
-    from lab_flink_repository_analytics_spark.streaming import stateful
-
-    src = str(tmp_path / "docs")
-    out = str(tmp_path / "fill")
-    ckpt = str(tmp_path / "ckpt_fill")
-    schema = "source string, doc_id long, text string"
-
-    rows = [
-        ("web" if i % 2 == 0 else "book", i, " ".join(["w"] * (3 + i % 5)))
-        for i in range(1, 13)
-    ]
-
-    def h(doc_id):
-        return int(hashlib.md5(f"quota{doc_id}".encode()).hexdigest()[:8], 16)
-
-    # per-source md5 fill order, split into a prefix batch and the rest —
-    # so stream arrival order equals the batch operator's window order
-    by_source: dict[str, list] = {}
-    for r in sorted(rows, key=lambda r: (h(r[1]), r[1])):
-        by_source.setdefault(r[0], []).append(r)
-    batch1 = [r for rs in by_source.values() for r in rs[:2]]
-    batch2 = [r for rs in by_source.values() for r in rs[2:]]
-
-    quotas = {"web": 11, "book": 9}  # partial fills w/ boundary crossings
-
-    def run_once():
-        docs = spark.readStream.schema(schema).parquet(src)
-
-        def _upsert(batch_df, _):
-            if not batch_df.isEmpty():
-                sinks.upsert_by_key(
-                    batch_df.sparkSession, batch_df, out, ["source"]
-                )
-
-        q = (
-            stateful.quota_fill_stream(docs, quotas)
-            .writeStream.outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(_upsert)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    spark.createDataFrame(batch1, schema).write.mode("append").parquet(src)
-    run_once()
-    spark.createDataFrame(batch2, schema).write.mode("append").parquet(src)
-    run_once()
-
-    streamed = {
-        r["source"]: (r["token_quota"], r["n_docs_selected"], r["n_tokens_selected"])
-        for r in spark.read.parquet(out).collect()
-    }
-    quotas_df = spark.createDataFrame(
-        list(quotas.items()), "source string, token_quota bigint"
-    )
-    batch_df = spark.createDataFrame(batch1 + batch2, schema)
-    expect = {
-        r["source"]: (r["token_quota"], r["n_docs_selected"], r["n_tokens_selected"])
-        for r in AX.quota_fill(batch_df, quotas_df).collect()
-    }
-    assert streamed == expect
 
 
 def test_streaming_commit_activity_restart_resume_sf001(spark, tmp_path):
@@ -1185,6 +729,7 @@ def test_streaming_quiet_sessions_restart_resume_sf001(spark, tmp_path):
     # complete, then must equal the graded batch query exactly.
     from datetime import timedelta
 
+    from lab_flink_repository_analytics_spark.queries import community as CQ
     from lab_flink_repository_analytics_spark.queries import suite
     from lab_flink_repository_analytics_spark.session import load_tables
 
@@ -1211,7 +756,7 @@ def test_streaming_quiet_sessions_restart_resume_sf001(spark, tmp_path):
                 batch_df.write.mode("append").parquet(out)
 
         q = (
-            jobs.quiet_sessions_stream(stream)
+            CQ.quiet_sessions(stream)
             .writeStream.outputMode("append")
             .option("checkpointLocation", ckpt)
             .foreachBatch(_sink)
@@ -1252,148 +797,6 @@ def test_streaming_quiet_sessions_restart_resume_sf001(spark, tmp_path):
         and (r["ts"] - left_last[r["user_id"]]) < timedelta(hours=12)
     )
     assert straddled > 0, boundary
-
-
-def test_streaming_windowed_dedup_restart_resume_sf001(spark, tmp_path):
-    # the graded windowed-dedup surface under REAL micro-batching at
-    # sf0.01: file-drop readStream + checkpoint dir, two availableNow
-    # runs (the second is a restart that must resume from the source
-    # offsets + dedup state in the checkpoint), final emitted set equals
-    # the batch twin on the full table.  Events are dropped in
-    # (ts, event_id) order — the keyed-stream parity contract — with one
-    # file per drop so within-batch arrival order is the file order.
-    from lab_flink_repository_analytics_spark.datapipe import dedup as DD
-    from lab_flink_repository_analytics_spark.streaming import stateful
-
-    ev = (
-        spark.read.parquet("/root/testdata/sf0.01/events.parquet")
-        .select("event_id", "user_id", "event_type", "ts")
-    )
-    rows_sorted = ev.orderBy("ts", "event_id").collect()
-    half = len(rows_sorted) // 2
-    src = str(tmp_path / "ev")
-    out = str(tmp_path / "dedup_out")
-    ckpt = str(tmp_path / "dedup_ckpt")
-    schema = "event_id bigint, user_id bigint, event_type string, ts timestamp"
-
-    def run_once():
-        stream = spark.readStream.schema(schema).parquet(src)
-        dd = stateful.windowed_dedup_stream(
-            stream, ["user_id", "event_type"], "ts", "1 hour", "2 hours"
-        )
-
-        def _sink(batch_df, _):
-            if not batch_df.isEmpty():
-                batch_df.write.mode("append").parquet(out)
-
-        q = (
-            dd.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(_sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
-    spark.createDataFrame(rows_sorted[:half], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    run_once()
-    spark.createDataFrame(rows_sorted[half:], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    run_once()
-
-    got = {r["event_id"] for r in spark.read.parquet(out).collect()}
-    want = {
-        r["event_id"]
-        for r in DD.windowed_dedup(
-            ev, ["user_id", "event_type"], "ts", "1 hour", order_col="event_id"
-        ).collect()
-    }
-    assert got == want and len(want) > 0
-
-
-def test_streaming_quota_fill_restart_resume_sf001(spark, tmp_path):
-    # quota_fill_stream at sf0.01 under real micro-batching: per-source
-    # quotas sized so the budget boundary is crossed in the SECOND drop —
-    # the counters that survive the restart via the checkpointed state
-    # are what decide the crossing doc, mirroring the reference's source
-    # checkpoint contract (GithubCommitSource.java:148-166)
-    import hashlib
-
-    from lab_flink_repository_analytics_spark.queries import analytics_extra as AX
-    from lab_flink_repository_analytics_spark.streaming import stateful
-
-    docs = (
-        spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-        .select("source", "doc_id", "text")
-        .collect()
-    )
-
-    def h(doc_id):
-        return int(hashlib.md5(f"quota{doc_id}".encode()).hexdigest()[:8], 16)
-
-    by_source: dict[str, list] = {}
-    for r in sorted(docs, key=lambda r: (h(r["doc_id"]), r["doc_id"])):
-        by_source.setdefault(r["source"], []).append(r)
-    drop1 = [r for rs in by_source.values() for r in rs[:10]]
-    drop2 = [r for rs in by_source.values() for r in rs[10:]]
-    quotas = {
-        s: int(0.6 * sum(len(r["text"].split(" ")) for r in rs))
-        for s, rs in by_source.items()
-    }
-
-    src = str(tmp_path / "docs")
-    out = str(tmp_path / "fill_out")
-    ckpt = str(tmp_path / "fill_ckpt")
-    schema = "source string, doc_id bigint, text string"
-
-    def run_once():
-        stream = spark.readStream.schema(schema).parquet(src)
-
-        def _upsert(batch_df, _):
-            if not batch_df.isEmpty():
-                sinks.upsert_by_key(
-                    batch_df.sparkSession, batch_df, out, ["source"]
-                )
-
-        q = (
-            stateful.quota_fill_stream(stream, quotas)
-            .writeStream.outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(_upsert)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
-    spark.createDataFrame(drop1, schema).coalesce(1).write.mode("append").parquet(src)
-    run_once()
-    spark.createDataFrame(drop2, schema).coalesce(1).write.mode("append").parquet(src)
-    run_once()
-
-    streamed = {
-        r["source"]: (r["token_quota"], r["n_docs_selected"], r["n_tokens_selected"])
-        for r in spark.read.parquet(out).collect()
-    }
-    quotas_df = spark.createDataFrame(
-        list(quotas.items()), "source string, token_quota bigint"
-    )
-    batch_df = spark.createDataFrame(drop1 + drop2, schema)
-    expect = {
-        r["source"]: (r["token_quota"], r["n_docs_selected"], r["n_tokens_selected"])
-        for r in AX.quota_fill(batch_df, quotas_df).collect()
-    }
-    assert streamed == expect
-    # the crossing really happened after the restart for most sources:
-    # each source's first 10 docs must NOT already exhaust its quota
-    crossed_late = sum(
-        1
-        for s, rs in by_source.items()
-        if sum(len(r["text"].split(" ")) for r in rs[:10]) < quotas[s]
-    )
-    assert crossed_late >= len(by_source) // 2
 
 
 def test_rename_or_raise_rejects_false_return():
@@ -1593,213 +996,3 @@ def test_streaming_session_threads_restart_resume_sf001(spark, tmp_path):
         and (d - last_left[s]) < timedelta(days=30)
     )
     assert straddled > 0
-
-
-def test_streaming_minhash_dedup_restart_resume_sf001(spark, tmp_path):
-    # stateful MinHash-LSH banding at sf0.01 (the full documents table):
-    # the SAME doc stream run (a) in one availableNow pass and (b) split
-    # into two passes sharing a checkpoint must emit the IDENTICAL
-    # candidate-pair set — the band-bucket state restored on restart
-    # pairs batch-2 docs against batch-1 members exactly as the single
-    # run's in-memory state did.  Drops respect doc_id order, matching
-    # _update_band's per-batch id sort, so the fold order is identical.
-    from lab_flink_repository_analytics_spark.streaming import stateful
-
-    docs = (
-        spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-        .select("doc_id", "text")
-        .orderBy("doc_id")
-    )
-    rows = [tuple(r) for r in docs.collect()]
-    half_id = rows[len(rows) // 2][0]
-    schema = "doc_id long, text string"
-
-    def run(src, out, ckpt):
-        stream = spark.readStream.schema(schema).parquet(src)
-        q = (
-            stateful.minhash_dedup_stream(stream)
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(
-                lambda b, _: None
-                if b.isEmpty()
-                else b.write.mode("append").parquet(out)
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
-    def pairs(out):
-        import os
-
-        if not os.path.exists(out):
-            return set()
-        return {
-            (r["id_a"], r["id_b"], r["band_key"], round(r["est_jaccard"], 9))
-            for r in spark.read.parquet(out).collect()
-        }
-
-    # (a) single run, all docs
-    src_a, out_a, ck_a = (str(tmp_path / p) for p in ("da", "pa", "ca"))
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(src_a)
-    run(src_a, out_a, ck_a)
-    # (b) two runs, split at the median doc_id, shared checkpoint
-    src_b, out_b, ck_b = (str(tmp_path / p) for p in ("db", "pb", "cb"))
-    spark.createDataFrame(
-        [r for r in rows if r[0] < half_id], schema
-    ).coalesce(1).write.mode("append").parquet(src_b)
-    run(src_b, out_b, ck_b)
-    spark.createDataFrame(
-        [r for r in rows if r[0] >= half_id], schema
-    ).coalesce(1).write.mode("append").parquet(src_b)
-    run(src_b, out_b, ck_b)
-
-    single, split_run = pairs(out_a), pairs(out_b)
-    assert single == split_run and len(single) > 0
-    # the restart found CROSS-BOUNDARY candidates (batch-2 doc paired
-    # against restored batch-1 state), not just within-batch ones
-    assert any(a < half_id <= b for a, b, _, _ in split_run)
-
-
-def test_streaming_ewma_restart_resume_sf001(spark, tmp_path):
-    # per-user integer EWMA at sf0.01 (full events table): split at the
-    # median ts, two availableNow runs sharing one checkpoint; the
-    # restart must resume each user's (n, y) state, and the final
-    # upserted state must equal the batch integer fold over the global
-    # (ts, event_id) order — bit-exact, scaled-int recurrence.
-    from lab_flink_repository_analytics_spark.datapipe import timeseries as TS
-    from lab_flink_repository_analytics_spark.session import load_tables
-
-    ev = load_tables(spark, "/root/testdata/sf0.01")["events"].select(
-        "event_id", "user_id", "ts", "value"
-    )
-    rows = [tuple(r) for r in ev.collect()]
-    split = sorted(r[2] for r in rows)[len(rows) // 2]
-    src = str(tmp_path / "ev")
-    out = str(tmp_path / "ewma")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "event_id long, user_id long, ts timestamp, value double"
-
-    def run_once():
-        from lab_flink_repository_analytics_spark.streaming import stateful
-
-        events = (
-            spark.readStream.schema(schema)
-            .parquet(src)
-            .withWatermark("ts", "1 day")
-        )
-
-        def _upsert(batch_df, _):
-            if not batch_df.isEmpty():
-                sinks.upsert_by_key(
-                    batch_df.sparkSession, batch_df, out, ["user_id"]
-                )
-
-        q = (
-            stateful.ewma_stream(events)
-            .writeStream.outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(_upsert)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
-    spark.createDataFrame(
-        [r for r in rows if r[2] < split], schema
-    ).coalesce(1).write.mode("append").parquet(src)
-    run_once()
-    mid = {
-        r["user_id"]: (r["n_events"], r["ewma_scaled"])
-        for r in spark.read.parquet(out).collect()
-    }
-    spark.createDataFrame(
-        [r for r in rows if r[2] >= split], schema
-    ).coalesce(1).write.mode("append").parquet(src)
-    run_once()
-
-    streamed = {
-        r["user_id"]: (r["n_events"], r["ewma_scaled"])
-        for r in spark.read.parquet(out).collect()
-    }
-    expect = {
-        r["user_id"]: (r["n_events"], r["ewma_scaled"])
-        for r in TS.ewma_int_df(
-            ev, ["user_id"], ["ts", "event_id"], "value"
-        ).collect()
-    }
-    assert streamed == expect and len(expect) > 0
-    # the restart continued from restored state: counts strictly grew
-    assert any(
-        mid.get(u, (0, None))[0] < n for u, (n, _) in streamed.items()
-    ) and len(mid) > 0
-
-
-def test_word_topk_store_recovers_from_mid_swap_crash(spark, tmp_path):
-    # round 9: the counter-store merge now rides the upsert sink's
-    # crash-safe rename swap (the old form double-wrote tmp→store with a
-    # corruption window between the overwrites).  Simulate a crash
-    # BETWEEN the two renames — store displaced to ._old, committed merge
-    # complete in ._tmp — and verify the next run salvages the committed
-    # copy and keeps counting on top of it.
-    import shutil
-
-    src = str(tmp_path / "docs")
-    store = str(tmp_path / "store")
-    ck = str(tmp_path / "ck")
-
-    def run():
-        q = jobs.word_topk_stream(
-            spark.readStream.schema("doc_id long, text string").parquet(src),
-            store, ck,
-        )
-        q.awaitTermination(120)
-
-    spark.createDataFrame([(1, "a b a"), (2, "b c")], "doc_id long, text string").write.parquet(src)
-    run()
-    # mid-swap crash state: ._old = pre-merge garbage, ._tmp = the
-    # committed post-batch-1 store
-    shutil.move(store, store + "._tmp")
-    spark.createDataFrame([("stale", 99)], "word string, cnt long").write.parquet(store + "._old")
-    spark.createDataFrame([(3, "a d d d")], "doc_id long, text string").write.mode("append").parquet(src)
-    run()
-    got = {(r["word"], r["cnt"]) for r in jobs.read_topk(spark, store, 10).collect()}
-    assert got == {("a", 3), ("d", 3), ("b", 2), ("c", 1)}
-    import os
-
-    assert not os.path.exists(store + "._tmp") and not os.path.exists(store + "._old")
-
-
-def test_value_histogram_store_ignores_aborted_tmp(spark, tmp_path):
-    # aborted tmp write (no _SUCCESS): the histogram merge must leave the
-    # healthy store alone and not read the garbage
-    import os
-
-    import lab_flink_repository_analytics_spark.datapipe.sketches as SK
-
-    src = str(tmp_path / "vals")
-    store = str(tmp_path / "hist")
-    schema = "event_type string, value double"
-    spark.createDataFrame([("a", 5.0), ("a", 15.0)], schema).write.parquet(src)
-
-    def run():
-        q = jobs.value_histogram_stream(
-            spark.readStream.schema(schema).parquet(src),
-            store, str(tmp_path / "ck"), lo=0.0, hi=100.0, bins=10,
-        )
-        q.awaitTermination(120)
-
-    run()
-    os.makedirs(store + "._tmp")
-    with open(store + "._tmp/part-garbage.parquet", "wb") as f:
-        f.write(b"not parquet")
-    spark.createDataFrame([("a", 25.0)], schema).write.mode("append").parquet(src)
-    run()
-    got = spark.read.parquet(store)
-    expected = SK.value_histogram(
-        spark.createDataFrame([("a", 5.0), ("a", 15.0), ("a", 25.0)], schema),
-        "value", ["event_type"], 0.0, 100.0, bins=10,
-    )
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, expected.collect()))
-    assert not os.path.exists(store + "._tmp")

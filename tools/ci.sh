@@ -16,7 +16,8 @@
 #   --quick           sf0.001 correctness, subset pytest (incl. the sink
 #                     rewrite path: upsert, compaction, swap recovery, and
 #                     the vector kernels: semdedup, k-means, centroid
-#                     assignment, brute-force top-k)
+#                     assignment, brute-force top-k, and the dead-code
+#                     audit of the package)
 #   --extended-smoke  NO pytest — just a <5 min driver-mirror oracle pass
 #                     over a fixed spot-check list spanning every extension
 #                     module (graph, BPE, dup-span, similarity, sketches,
@@ -54,7 +55,7 @@ fi
 
 echo "=== [1/3] pytest ==="
 if [[ "$QUICK" == "--quick" ]]; then
-  python -m pytest tests/ -x -q -k "environment or util or plans or upsert or compact or swap or semdedup or kmeans or assignments or brute_force or covariance or limbs"
+  python -m pytest tests/ -x -q -k "environment or util or plans or upsert or compact or swap or semdedup or kmeans or assignments or brute_force or covariance or limbs or dead_code"
 else
   python -m pytest tests/ -x -q
   # benchmark helpers (metrics, tracing, generators): Spark-free, seconds
