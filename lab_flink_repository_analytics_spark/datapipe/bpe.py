@@ -34,7 +34,7 @@ framing) — pinned identically in the DuckDB oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from lab_flink_repository_analytics_spark.datapipe.text import tokens
@@ -166,65 +166,8 @@ def train_state(
     return merges, cur
 
 
-def train_merges(
-    spark: SparkSession,
-    docs: DataFrame,
-    n_merges: int = 3,
-    text_col: str = "text",
-) -> DataFrame:
-    """Learn ``n_merges`` BPE merges; returns the model as a DataFrame
-    (step, lft, rgt, merged, pair_freq), step 1-based."""
-    from lab_flink_repository_analytics_spark.session import local_relation
-
-    merges, _ = train_state(docs, n_merges, text_col)
-    # JVM LocalRelation, not createDataFrame: the model is driver-held
-    # scalars and a Python-worker-backed ExistingRDD scan costs a fleet
-    # of worker spin-ups per materialization (see session.local_relation)
-    return local_relation(
-        spark, merges, "step int, lft string, rgt string, merged string, pair_freq bigint"
-    )
-
-
-def doc_token_counts(
-    docs: DataFrame,
-    n_merges: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Corpus-scale tokenizer APPLICATION: per-doc subword token count
-    under the ``n_merges``-merge model trained on the same corpus.
-
-    Scale shape: segmentation happens once per DISTINCT word (the word
-    table), never per occurrence — each doc's count is then one
-    token-explode + an equi-join on the word key + a per-doc rollup.  The
-    word table is vocabulary-sized (Heaps' law), so AQE broadcasts it
-    against the corpus-scale exploded side.  Output: (doc_id, n_words,
-    n_bpe_tokens).
-    """
-    _, merged = train_state(docs, n_merges, text_col)
-    per_word = merged.select(
-        "w",
-        F.size(
-            F.split(F.expr("substring(rep, 2, length(rep) - 2)"), SEP + SEP)
-        ).alias("n_sub"),
-    )
-    return (
-        docs.select(F.col(id_col).alias("doc_id"), F.explode(tokens(text_col)).alias("w"))
-        .join(per_word, "w")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_words"),
-            F.sum("n_sub").cast("bigint").alias("n_bpe_tokens"),
-        )
-    )
-
-
-def segment_words(words_rep: DataFrame) -> DataFrame:
-    """(word, subwords[]) under the current merge state — tokenizer
-    application, row-local."""
-    return words_rep.select(
-        "w",
-        F.split(F.expr("substring(rep, 2, length(rep) - 2)"), SEP + SEP).alias(
-            "subwords"
-        ),
-    )
+def subwords() -> Column:
+    """ARRAY<STRING> of a word's symbols under the merges applied so far:
+    the ``rep`` column with its outer separators stripped, split on the
+    doubled one — the one reader of the representation format."""
+    return F.split(F.expr("substring(rep, 2, length(rep) - 2)"), SEP + SEP)

@@ -59,20 +59,3 @@ def ngram_overlap(
         "n_contaminated",
         "contamination_ratio",
     )
-
-
-def decontaminated(
-    train: DataFrame,
-    eval_set: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 5,
-    max_ratio: float = 0.0,
-) -> DataFrame:
-    """The filter form: training rows whose contamination ratio is at or
-    below ``max_ratio`` (default: drop any overlap at all)."""
-    overlap = ngram_overlap(train, eval_set, text_col, id_col, n)
-    keep = overlap.filter(F.col("contamination_ratio") <= F.lit(max_ratio)).select(
-        id_col
-    )
-    return train.join(keep, id_col, "left_semi")

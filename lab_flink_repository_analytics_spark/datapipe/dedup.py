@@ -4,13 +4,14 @@ Scale design (the point of these at 100 TB):
 
 * **exact** — one hash-groupBy shuffle on the 32-hex fingerprint; map-side
   partial aggregation keeps shuffle volume ∝ distinct docs.
-* **MinHash + LSH** — signatures are per-row expressions (no shuffle);
+* **MinHash + LSH** — signatures are one shingle explode and one
+  doc-keyed hash aggregation (N_PERMS longs shuffled per doc);
   candidate generation explodes each doc into ``n_bands`` band keys and
   self-joins on the band key, so the join is hash-partitioned by band
   bucket and never all-pairs.  Verification (exact Jaccard) runs only on
   candidates.
-* **SimHash** — per-row 32-bit signature; near-dup = same signature (or
-  banded by signature prefix).
+* **SimHash** — 32-bit signature from the same explode-and-aggregate
+  plan; near-dup = same signature (or banded by signature prefix).
 * **n-gram Jaccard** — exact verification metric; only ever applied to a
   blocked/candidate pair set, never the full cross product.
 
@@ -73,37 +74,6 @@ def shingles(text: Column | str, k: int = SHINGLE_K) -> Column:
     pat = "(?:^| )(?=(" + " ".join(["[^ ]+"] * k) + "))"
     grams = F.array_distinct(F.regexp_extract_all(t, F.lit(pat), 1))
     return F.when(F.size(grams) > 0, grams).otherwise(F.array(t))
-
-
-def minhash_signature(text: Column | str) -> Column:
-    """ARRAY<BIGINT> MinHash signature (N_PERMS mins over shingle hashes).
-
-    Expression form — convenient for single-column use; for table-scale
-    signature computation prefer :func:`minhash_signatures_df`, whose
-    explode→codegen→groupBy plan is ~10× faster (higher-order-function
-    lambdas are interpreted per element and the shared shingle-hash array
-    is *not* CSE'd across the permutations here).
-    """
-    sh = shingles(text)
-    return minhash_signature_from_hashes(F.transform(sh, md5_hash32))
-
-
-def minhash_signature_from_hashes(hashes: Column) -> Column:
-    """Signature from a precomputed shingle-hash array.
-
-    Callers that CAN stage the hash array into a column first (e.g. the
-    streaming twin) should: ``transform``'s input expression is evaluated
-    per *call*, so the inline form re-shingles and re-hashes the document
-    once per permutation (N_PERMS×); a bound column reference makes that
-    an O(1) attribute read per permutation.
-    """
-    mins = [
-        F.array_min(
-            F.transform(hashes, lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_P))
-        )
-        for a, b in zip(MINHASH_A, MINHASH_B)
-    ]
-    return F.array(*mins)
 
 
 def minhash_signatures_df(
@@ -172,36 +142,16 @@ def near_dup_candidates(
     )
 
 
-def simhash32(text: Column | str, k: int = 1) -> Column:
-    """32-bit SimHash over (k-)shingle hashes, as BIGINT.
-
-    bit_i(simhash) = majority sign of sum over shingles of ±1 depending on
-    bit_i of the shingle hash (>0 → 1, ties → 0).
-    """
-    sh = shingles(text, k) if k > 1 else F.array_distinct(tokens(text))
-    hashes = F.transform(sh, md5_hash32)
-    def _bit_step(i: int):
-        # nb: plain two-arg lambda — extra defaulted params would be seen
-        # as lambda variables by PySpark's arity inspection
-        return lambda acc, h: acc + F.when(
-            (F.shiftright(h, i) % 2) == 1, F.lit(1)
-        ).otherwise(F.lit(-1))
-
-    out = F.lit(0).cast("bigint")
-    for i in range(32):
-        bit_sum = F.aggregate(hashes, F.lit(0).cast("bigint"), _bit_step(i))
-        out = out + F.when(bit_sum > 0, F.lit(1 << i).cast("bigint")).otherwise(
-            F.lit(0).cast("bigint")
-        )
-    return out
-
-
 def simhash_signatures_df(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Table-scale SimHash: explode tokens → codegen'd hash → one
     hash-aggregation with 32 per-bit sums (same plan family as
-    :func:`minhash_signatures_df`; ~3× faster than the expression form)."""
+    :func:`minhash_signatures_df`).
+
+    bit_i(simhash) = majority of ±1 votes over the distinct tokens'
+    hashes (bit i set → +1), set when the vote sum is > 0, so ties
+    give 0."""
     from lab_flink_repository_analytics_spark.session import rebalance
 
     toks = rebalance(docs).select(
@@ -227,14 +177,6 @@ def simhash_signatures_df(
         F.col("id").alias(id_col),
         F.expr(f"CAST(0 AS BIGINT) + {sim_text}").alias("simhash"),
     )
-
-
-def jaccard_tokens(a: Column | str, b: Column | str) -> Column:
-    """Exact Jaccard similarity of the distinct-token sets of two texts."""
-    ta, tb = F.array_distinct(tokens(a)), F.array_distinct(tokens(b))
-    inter = F.size(F.array_intersect(ta, tb))
-    union = F.size(F.array_union(ta, tb))
-    return inter.cast("double") / union
 
 
 def ngram_jaccard_pairs(

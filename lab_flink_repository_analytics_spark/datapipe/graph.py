@@ -100,17 +100,6 @@ def connected_components(
     return labels
 
 
-def dedup_cluster_summary(
-    labels: DataFrame, id_col: str = "node", comp_col: str = "component"
-) -> DataFrame:
-    """(component, size, keep) per cluster — ``keep`` is the canonical
-    (minimum-id) member, everything else in the cluster is droppable."""
-    return labels.groupBy(comp_col).agg(
-        F.count(F.lit(1)).alias("size"),
-        F.min(id_col).alias("keep"),
-    )
-
-
 #: PageRank rank mass is carried as BIGINT units of 1/PR_SCALE; damping
 #: is the rational PR_D_NUM/PR_D_DEN (0.85)
 PR_SCALE = 10**12

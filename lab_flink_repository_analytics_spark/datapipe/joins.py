@@ -11,7 +11,7 @@ scale.  Both operators here reduce to ONE hash exchange on the join key:
   skewed key degrades to an external sort within its partition, never a
   cross product.  This is the standard log-structured as-of strategy
   (kdb/Pandas ``merge_asof`` semantics, DuckDB ``ASOF JOIN`` semantics).
-- ``interval_join``: bucketize time; the probe side explodes to the
+- ``interval_count``: bucketize time; the probe side explodes to the
   ceil(window/bucket)+1 buckets its interval covers, the build side keeps
   its single home bucket, and the join becomes an equi-join on
   (key, bucket) + an exact residual filter.  Each qualifying (probe, build)
@@ -139,18 +139,27 @@ def asof_join(
     )
 
 
-def _bucketed_pairs(
+def interval_count(
     left: DataFrame,
     right: DataFrame,
-    keys: list[str],
-    left_time: str,
-    right_time: str,
-    lower_seconds: float,
-    upper_seconds: float,
-    bucket_seconds: float,
-    payload: list[str],
-    how: str,
+    on: str | Sequence[str],
+    left_time: str = "ts",
+    right_time: str = "ts",
+    lower_seconds: float = 0.0,
+    upper_seconds: float = 0.0,
+    bucket_seconds: float = 600.0,
+    count_alias: str = "matches",
 ) -> DataFrame:
+    """Per LEFT row, the number of right rows with
+    ``left.t + lower <= right.t <= left.t + upper`` and equal key(s) —
+    left-outer semantics (rows with no match keep count 0).
+
+    A bucketed left equi-join + ``count(right_time)`` grouped by the left
+    row: exploded copies that miss contribute NULLs which ``count``
+    ignores, so no collapse pass is needed and every original left row
+    yields exactly one output row.
+    """
+    keys = [on] if isinstance(on, str) else list(on)
     lt = F.col(left_time).cast("double")
     l2 = left.withColumn(
         "__lb",
@@ -167,82 +176,13 @@ def _bucketed_pairs(
             "__rb"
         ),
         F.col(right_time).alias("__rt"),
-        *[F.col(c).alias(f"__p_{c}") for c in payload],
     )
     cond = F.col("__lb") == F.col("__rb")
     for k in keys:
         cond = cond & (F.col(k) == F.col(f"__k_{k}"))
     rt = F.col("__rt").cast("double")
-    lt2 = F.col(left_time).cast("double")
-    residual = (rt >= lt2 + F.lit(lower_seconds)) & (
-        rt <= lt2 + F.lit(upper_seconds)
-    )
-    return l2.join(r2, cond & residual, how)
-
-
-def interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str | Sequence[str],
-    left_time: str = "ts",
-    right_time: str = "ts",
-    lower_seconds: float = 0.0,
-    upper_seconds: float = 0.0,
-    bucket_seconds: float = 600.0,
-    payload: Sequence[str] | None = None,
-    suffix: str = "r_",
-) -> DataFrame:
-    """Inner join of right rows with
-    ``left.t + lower <= right.t <= left.t + upper`` and equal key(s) —
-    Flink's interval join, as a bucketed equi-join (one row per
-    qualifying pair, no duplicates by construction).
-
-    Scale: the left side is amplified by ``(upper-lower)/bucket + 1``
-    exploded copies — pick ``bucket_seconds`` on the order of the interval
-    width to keep that a small constant.  The join itself is a plain
-    shuffled hash join on (key, bucket); AQE skew-split applies as usual.
-    """
-    if upper_seconds < lower_seconds:
-        raise ValueError("upper_seconds must be >= lower_seconds")
-    keys = [on] if isinstance(on, str) else list(on)
-    payload = list(payload) if payload is not None else [
-        c for c in right.columns if c not in keys and c != right_time
-    ]
-    pairs = _bucketed_pairs(
-        left, right, keys, left_time, right_time,
-        lower_seconds, upper_seconds, bucket_seconds, payload, "inner",
-    )
-    return pairs.select(
-        *[F.col(c) for c in left.columns],
-        F.col("__rt").alias(f"{suffix}{right_time}"),
-        *[F.col(f"__p_{c}").alias(f"{suffix}{c}") for c in payload],
-    )
-
-
-def interval_count(
-    left: DataFrame,
-    right: DataFrame,
-    on: str | Sequence[str],
-    left_time: str = "ts",
-    right_time: str = "ts",
-    lower_seconds: float = 0.0,
-    upper_seconds: float = 0.0,
-    bucket_seconds: float = 600.0,
-    count_alias: str = "matches",
-) -> DataFrame:
-    """Per LEFT row, the number of right rows inside its interval —
-    left-outer semantics (rows with no match keep count 0).
-
-    Implemented as the bucketed left join + ``count(right_time)`` grouped
-    by the left row: exploded copies that miss contribute NULLs which
-    ``count`` ignores, so no collapse pass is needed and every original
-    left row yields exactly one output row.
-    """
-    keys = [on] if isinstance(on, str) else list(on)
-    pairs = _bucketed_pairs(
-        left, right, keys, left_time, right_time,
-        lower_seconds, upper_seconds, bucket_seconds, [], "left",
-    )
+    residual = (rt >= lt + F.lit(lower_seconds)) & (rt <= lt + F.lit(upper_seconds))
+    pairs = l2.join(r2, cond & residual, "left")
     return pairs.groupBy(*[F.col(c) for c in left.columns]).agg(
         F.count(F.col("__rt")).alias(count_alias)
     )

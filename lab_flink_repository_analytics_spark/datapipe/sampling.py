@@ -7,10 +7,6 @@ is the repo's engine-portable md5 convention
 (``conv(substr(md5(id),1,8),16,10)``), so a DuckDB oracle reproduces the
 assignment bit-for-bit and downstream engines (or a plain SQL warehouse)
 can recompute membership without Spark.
-
-``stratified_sample`` wraps ``sampleBy`` (per-stratum Bernoulli rates,
-one scan, no shuffle) for quota-style downsampling such as language
-rebalancing.
 """
 
 from __future__ import annotations
@@ -57,18 +53,6 @@ def deterministic_split(
     last = splits[-1][0]
     expr = F.lit(last) if expr is None else expr.otherwise(last)
     return df.withColumn(split_alias, expr)
-
-
-def stratified_sample(
-    df: DataFrame,
-    stratum_col: str,
-    fractions: Mapping[str, float],
-    seed: int = 42,
-) -> DataFrame:
-    """Per-stratum Bernoulli sampling (``sampleBy``): one scan, no
-    shuffle; strata absent from ``fractions`` are dropped (rate 0) — the
-    quota-rebalancing primitive (e.g. cap dominant languages)."""
-    return df.sampleBy(stratum_col, dict(fractions), seed=seed)
 
 
 def weighted_sample(

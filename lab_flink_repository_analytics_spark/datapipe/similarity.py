@@ -807,7 +807,7 @@ def hierarchical_assignments(
     argmax is an ``array_sort`` over the bucket's fold-order cosines in
     the oracles' ``ORDER BY cs DESC, cid`` (NaN first, NULL last).
 
-    Returns (id, v, cid, rn=1) like ``ivf_assignments``.
+    Returns (id, v, cid, rn=1) like :func:`_arrow_assignments`.
     """
     import math
 
@@ -882,27 +882,6 @@ def hierarchical_assignments(
     )
 
 
-def ivf_assignments(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    n_best: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Rank each vector's centroids by cosine; keep the best ``n_best``.
-
-    Default plan (quantizer ≤ MAX_INLINE_CENTROIDS): collect the centroid
-    table driver-side — it is model-artifact-sized by contract, never
-    data-scale — and assign in one Arrow pass over the vector table
-    (:func:`_arrow_assignments`): NO shuffle at any scale.  Larger
-    quantizers take :func:`_join_assignments`.
-    """
-    rows = _bounded_quantizer(centroids)
-    if rows is not None:
-        return _arrow_assignments(vectors, rows, n_best, id_col, vec_col)
-    return _join_assignments(vectors, centroids, n_best, id_col, vec_col)
-
-
 def _join_assignments(
     vectors: DataFrame,
     centroids: DataFrame,
@@ -910,10 +889,11 @@ def _join_assignments(
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """:func:`ivf_assignments` for quantizers above MAX_INLINE_CENTROIDS:
-    centroids broadcast into a crossJoin, per-vector rank via a window
-    partitioned by vector id — one hash exchange of the
-    #centroids-expanded pair table."""
+    """Centroid assignment for quantizers above MAX_INLINE_CENTROIDS,
+    (id, v, cid, rn) like :func:`_arrow_assignments`: centroids
+    broadcast into a crossJoin, per-vector rank via a window partitioned
+    by vector id — one hash exchange of the #centroids-expanded pair
+    table."""
     v = vectors.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     pairs = v.crossJoin(F.broadcast(centroids)).select(
         "id", "v", "cid", cosine("v", "cv").alias("cs")

@@ -1,18 +1,10 @@
-"""Mergeable distinct-count sketches (Apache DataSketches HLL, built into
-Spark 3.5+ as ``hll_sketch_agg`` / ``hll_union_agg``).
+"""Mergeable sketches with deterministic, engine-portable estimates.
 
-Why this exists: exact COUNT(DISTINCT) re-shuffles raw values every time a
-rollup is recomputed, and cannot be maintained incrementally — at 100 TB
-the daily-to-monthly-to-total distinct-user rollup either re-scans history
-or keeps sketches.  An HLL sketch is a few KB per group, mergeable
-map-side (partial aggregation works), unions in O(registers), and lands in
-a parquet BINARY column, so coarser periods are computed from the stored
-fine-period sketches without touching raw data again.
-
-No DuckDB oracle: sketch binaries are implementation-defined (DataSketches
-vs DuckDB's own HLL), so parity is pinned by pytest invariants instead —
-merge-consistency (union of daily sketches == sketch of the union) and
-estimate accuracy vs exact counts.
+A sketch summarizes a stream in a small table whose cells SUM across
+shards and periods, so coarser rollups come from the stored fine-period
+sketches without re-scanning raw data: a count-min frequency grid and
+fixed-bin histogram quantiles.  Both hash or bin by the engine-wide
+rules, so a DuckDB oracle reproduces every estimate bit-exactly.
 """
 
 from __future__ import annotations
@@ -22,53 +14,14 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: log2(registers) — 12 ⇒ 4096 registers ≈ 1.6% relative standard error,
-#: the DataSketches default trade-off for KB-scale state per group.
-DEFAULT_LG_K = 12
-
-
-def distinct_sketches(
-    df: DataFrame,
-    keys: Sequence[str],
-    col: str,
-    lg_k: int = DEFAULT_LG_K,
-    sketch_alias: str = "sketch",
-) -> DataFrame:
-    """Per-key HLL sketch of ``col`` — the storable/mergeable unit.  One
-    hash exchange with map-side partial sketches (hll_sketch_agg is an
-    algebraic aggregate)."""
-    return df.groupBy(*keys).agg(
-        F.hll_sketch_agg(F.col(col), F.lit(lg_k)).alias(sketch_alias)
-    )
-
-
-def rollup_sketches(
-    sketches: DataFrame,
-    keys: Sequence[str],
-    sketch_col: str = "sketch",
-    estimate_alias: str = "distinct_est",
-) -> DataFrame:
-    """Merge finer-grained sketches up to ``keys`` and estimate — no
-    re-scan of raw data; input is the (tiny) sketch table."""
-    grouped = (
-        sketches.groupBy(*keys) if keys else sketches.groupBy()
-    )
-    return grouped.agg(
-        F.hll_sketch_estimate(F.hll_union_agg(F.col(sketch_col))).alias(
-            estimate_alias
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # Count-min sketch: mergeable frequency estimation (Cormode & Muthukrishnan,
 # "An improved data stream summary: the count-min sketch", J.Alg. 2005).
 # depth×width counter grid, item counted at one hashed bucket per row;
 # estimate = min over rows.  The grid is a tiny DataFrame of (d, bucket, c)
 # cells — mergeable by summing cells, so per-period sketches roll up
-# without re-scanning raw data, exactly like the HLL path above.  Hashes
-# are the engine-wide md5 rule, so a DuckDB oracle reproduces estimates
-# bit-exactly.
+# without re-scanning raw data.  Hashes are the engine-wide md5 rule, so
+# a DuckDB oracle reproduces estimates bit-exactly.
 
 CMS_DEPTH = 4
 CMS_WIDTH = 256
@@ -81,39 +34,15 @@ def _cms_bucket(col: Column | str, d: int) -> Column:
     return md5_hash32(F.concat(F.lit(str(d)), F.lit(":"), c)) % CMS_WIDTH
 
 
-def cms_build(items: DataFrame, col: str = "item") -> DataFrame:
-    """(d, bucket, c) counter cells from an item stream.  One explode to
-    depth copies + one hash aggregation; the result has at most
-    depth × width rows regardless of input size."""
-    rows = items.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(d).alias("d"), _cms_bucket(col, d).alias("bucket")
-                    )
-                    for d in range(CMS_DEPTH)
-                ]
-            )
-        ).alias("cell")
-    )
-    return rows.groupBy("cell.d", "cell.bucket").agg(
-        F.count(F.lit(1)).alias("c")
-    )
-
-
 def cms_build_weighted(
     counts: DataFrame, col: str = "item", weight: str = "c"
 ) -> DataFrame:
     """(d, bucket, c) counter cells from PRE-AGGREGATED (item, count)
-    rows — algebraically identical to :func:`cms_build` on the expanded
-    stream (every cell is a sum, so summing per-item counts at each
-    hashed bucket lands the same totals), but each DISTINCT item is
-    md5-hashed once per depth instead of once per occurrence: the hash
-    work drops from depth×corpus to depth×vocabulary (sublinear in the
-    corpus by Heaps' law), which is what the hot path should pay when a
-    (item, count) rollup already exists.  ``c`` is cast to the same
-    non-null BIGINT ``cms_build`` produces."""
+    rows: each cell is the sum of the counts of the items hashing to it —
+    the grid the per-occurrence stream would build, but each DISTINCT
+    item is md5-hashed once per depth instead of once per occurrence, so
+    the hash work is depth×vocabulary (sublinear in the corpus by Heaps'
+    law).  ``c`` is a non-null BIGINT."""
     rows = counts.select(
         F.col(weight).alias("_w"),
         F.explode(
@@ -130,14 +59,6 @@ def cms_build_weighted(
     return rows.groupBy("cell.d", "cell.bucket").agg(
         F.coalesce(F.sum("_w"), F.lit(0)).cast("bigint").alias("c")
     )
-
-
-def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Union counter grids by summing cells (the mergeability property)."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("d", "bucket").agg(F.sum("c").alias("c"))
 
 
 def cms_estimate(sketch: DataFrame, queries: DataFrame, col: str = "item") -> DataFrame:

@@ -85,30 +85,6 @@ def salted_count_sum(
     )
 
 
-def salted_count_distinct(
-    df: DataFrame,
-    keys: Sequence[str],
-    distinct_col: str,
-    salt_buckets: int = 32,
-    alias: str = "distinct_n",
-) -> DataFrame:
-    """Exact count-distinct per hot key without one-reducer collapse.
-
-    Salting by row hash does NOT decompose count-distinct (the same value
-    could land in two buckets), so salt by the VALUE instead: group by
-    (key, hash(value) % buckets), dedup values inside each bucket, then
-    sum per-bucket distinct counts — each distinct value counts exactly
-    once because it belongs to exactly one bucket.
-    """
-    bucketed = df.withColumn(
-        "__salt", F.pmod(F.hash(F.col(distinct_col)), F.lit(salt_buckets))
-    )
-    per_bucket = bucketed.groupBy(*keys, "__salt").agg(
-        F.count_distinct(F.col(distinct_col)).alias("__pd")
-    )
-    return per_bucket.groupBy(*keys).agg(F.sum("__pd").alias(alias))
-
-
 def salted_join(
     facts: DataFrame,
     dim: DataFrame,

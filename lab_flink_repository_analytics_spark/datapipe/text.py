@@ -183,46 +183,6 @@ def fingerprint(text: Column | str) -> Column:
     return F.md5(normalize_text(text))
 
 
-def winnow_fingerprints(
-    text: Column | str, k: int = 3, w: int = 4
-) -> Column:
-    """Winnowing fingerprint set (Schleimer/Wilkerson/Aiken): hash every
-    k-token shingle, slide a window of ``w`` hashes, keep each window's
-    minimum — the classic rolling-hash document fingerprint whose selected
-    set is robust to local edits.  Returns a sorted distinct ARRAY<BIGINT>.
-
-    Pure per-row expressions (no shuffle, runs in the scan stage); the
-    guarantee that any shared run of ``w+k-1`` tokens yields a shared
-    fingerprint is what makes this usable for partial-overlap detection at
-    corpus scale (join on exploded fingerprints).
-
-    Expression form — fine for a handful of rows; for table scale use
-    :func:`winnow_fingerprints_df`: HOF lambdas are interpreted and the
-    shingle-hash array is re-evaluated per window position here (O(n²)
-    hashing), while the DataFrame form hashes each shingle once.
-    """
-    t = _c(text)
-    toks = tokens(t)
-    n = F.size(toks)
-    grams = F.transform(
-        F.sequence(F.lit(0), n - k),
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(toks, (i + j + 1).cast("int")) for j in range(k)]
-        ),
-    )
-    hs = F.transform(grams, md5_hash32)
-    wins = F.transform(
-        F.sequence(F.lit(0), F.size(hs) - w),
-        lambda i: F.array_min(F.slice(hs, i + 1, w)),
-    )
-    # short docs: fewer than w shingles → single global min; fewer than k
-    # tokens → hash of the whole text
-    short = F.array(F.array_min(hs))
-    tiny = F.array(md5_hash32(t))
-    sel = F.when(n < k, tiny).when(F.size(hs) < w, short).otherwise(wins)
-    return F.array_sort(F.array_distinct(sel))
-
-
 def repetition_metrics_df(
     docs,
     text_col: str = "text",
@@ -322,7 +282,10 @@ def winnow_fingerprints_df(
     k: int = 3,
     w: int = 4,
 ):
-    """Table-scale winnowing: one row per doc with ``fps ARRAY<BIGINT>``.
+    """Winnowing fingerprint set (Schleimer/Wilkerson/Aiken), one row per
+    doc with ``fps ARRAY<BIGINT>``: every window of ``w`` consecutive
+    k-shingle hashes keeps its minimum, so two docs sharing a run of
+    ``w+k-1`` tokens share a fingerprint.
 
     Plan: posexplode ordered shingles (tiny docs contribute the whole text
     as their one shingle) → hash each once in codegen → per-doc sliding

@@ -16,8 +16,7 @@ Every dataset the engine replaces in place — the upsert (also the
 streaming commit job's per-batch sink, ``streaming/jobs.py``) and the
 changelog refresh (``apply_changelog``) — goes through ``rewrite``: crash
 recovery, a lazy read of the live copy, the caller's merge, and one write
-swapped in by checked renames (``_swap_in``).  Compaction
-(``compact_parquet``) runs the same recovery and the same swap.
+swapped in by checked renames (``_swap_in``).
 """
 
 from __future__ import annotations
@@ -143,13 +142,9 @@ def apply_changelog(
     rewrite(spark, path, merge)
 
 
-def _swap_in(
-    spark: SparkSession, result: DataFrame, path: str, partition_cols=()
-) -> None:
+def _swap_in(spark: SparkSession, result: DataFrame, path: str) -> None:
     """Materialize ``result`` (which may lazily read from ``path``) and
     swap it into place via renames, never a second data write.
-    ``partition_cols`` lays the written copy out Hive-style
-    (:func:`compact_parquet`).
 
     Order of operations and the crash window each step leaves:
 
@@ -172,10 +167,7 @@ def _swap_in(
     tmp_s, old_s = base + "._tmp", base + "._old"
     _rm(spark, tmp_s)
     _rm(spark, old_s)
-    writer = result.write.mode("overwrite")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(tmp_s)
+    result.write.mode("overwrite").parquet(tmp_s)
     fs, hpath = _hadoop_fs(spark, path)
     jvm = spark._jvm
     tmp = jvm.org.apache.hadoop.fs.Path(tmp_s)
@@ -271,159 +263,3 @@ def fan_out(df: DataFrame, writers: list) -> None:
             write(df)
     finally:
         df.unpersist()
-
-
-def _detect_partition_cols(spark: SparkSession, path: str) -> list[str]:
-    """Hive-style partition columns of a parquet directory, outermost
-    first — read off the ``k=v`` directory chain, not the schema (the
-    schema doesn't say which columns are layout)."""
-    fs, jpath = _hadoop_fs(spark, path)
-    cols: list[str] = []
-    cur = jpath
-    while True:
-        sub = [
-            st.getPath()
-            for st in fs.listStatus(cur)
-            if st.isDirectory() and "=" in st.getPath().getName()
-        ]
-        if not sub:
-            return cols
-        cols.append(sub[0].getName().split("=", 1)[0])
-        cur = sub[0]
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_rows_per_file: int = 1_000_000,
-    sort_cols: list[str] | None = None,
-    partition_cols: list[str] | None = None,
-) -> int:
-    """Rewrite a parquet directory into right-sized files; returns the new
-    file (task) count.
-
-    Streaming ``foreachBatch`` upserts and frequent small appends leave
-    thousands of tiny files — at 100 TB that's a listing/footer-overhead
-    tax on every scan.  Compaction reads once, repartitions to
-    ``ceil(rows/target)`` output files (range-partitioned + sorted on
-    ``sort_cols`` when given, so per-file min/max statistics become
-    selective and row-group skipping works), and swaps the result in
-    through :func:`_swap_in`'s checked renames, after the same crash
-    recovery :func:`rewrite` runs.  The Delta/Iceberg equivalent is OPTIMIZE
-    [ZORDER]; this is the plain-parquet fallback with the same contract.
-
-    Hive-partitioned datasets (``split=.../part-*.parquet``) keep their
-    layout: partition columns are auto-detected from the directory chain
-    (or passed explicitly) and the rewrite goes through
-    ``partitionBy(...)`` with the range-shuffle keyed on the partition
-    columns first, so each output task holds ~one partition value and the
-    file-count target survives the partitioned write.
-    """
-    _recover_swap(spark, path)
-    if partition_cols is None:
-        partition_cols = _detect_partition_cols(spark, path)
-    # Partition values must round-trip VERBATIM: with type inference on,
-    # a string partition value that parses as a number/date (split=01,
-    # day=2021-1-5) would be re-typed on read and written back under a
-    # RENAMED directory (split=1), silently mutating the layout and the
-    # downstream partition-column types.  Read with inference off so
-    # partition columns stay strings and directory names are preserved.
-    infer_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    prev_infer = spark.conf.get(infer_key, "true")
-    spark.conf.set(infer_key, "false")
-    try:
-        # partition discovery happens eagerly at load(), so the conf can
-        # be restored as soon as the DataFrame exists
-        df = spark.read.parquet(path)
-    finally:
-        spark.conf.set(infer_key, prev_infer)
-    if partition_cols and not all(c in df.columns for c in partition_cols):
-        # detected layout disagrees with the actual read schema (stray
-        # k=v-named directory, mixed-depth layout): partitionBy on a
-        # missing column would fail the rewrite mid-flight — fall back
-        # to the flat path, which preserves all data
-        partition_cols = []
-    rows = df.count()
-    n_files = max(1, -(-rows // target_rows_per_file))
-    range_cols = [*(partition_cols or []), *(sort_cols or [])]
-    if range_cols:
-        out = df.repartitionByRange(n_files, *range_cols)
-        if sort_cols:
-            out = out.sortWithinPartitions(*sort_cols)
-    else:
-        out = df.repartition(n_files)
-    _swap_in(spark, out, path, partition_cols)
-    return n_files
-
-
-def compact_parquet_to_size(
-    spark: SparkSession,
-    path: str,
-    target_bytes: int = 512 * 1024 * 1024,
-    sort_cols: list[str] | None = None,
-    partition_cols: list[str] | None = None,
-) -> int:
-    """Byte-targeted compaction: choose the output file count from the
-    directory's ACTUAL parquet bytes (post-encoding, post-compression),
-    then delegate to :func:`compact_parquet`.
-
-    Row-count targets drift as row width changes between tables (a
-    10-column metrics table and a documents table with 100 KB text rows
-    need very different rows-per-file); bytes on disk are the ground
-    truth the 128 MB-to-1 GB file-sizing guidance is stated in.  The size
-    probe is one namenode listing — no data read.
-    """
-    _recover_swap(spark, path)
-    fs, jpath = _hadoop_fs(spark, path)
-    total = 0
-    # recursive listing: partitioned datasets (split=.../part-*.parquet)
-    # keep their data files in subdirectories — a flat listStatus would
-    # see only directories, total 0 bytes, and compact everything to ONE file
-    it = fs.listFiles(jpath, True)
-    while it.hasNext():
-        st = it.next()
-        if st.getPath().getName().endswith(".parquet"):
-            total += st.getLen()
-    rows = spark.read.parquet(path).count()
-    n_files = max(1, -(-total // max(1, target_bytes)))
-    target_rows = max(1, -(-rows // n_files))
-    return compact_parquet(
-        spark,
-        path,
-        target_rows_per_file=target_rows,
-        sort_cols=sort_cols,
-        partition_cols=partition_cols,
-    )
-
-
-def zorder_value(*cols, bits: int = 16):
-    """Z-order (Morton) curve value: interleave the top ``bits`` of each
-    column's rank-space so sorting by ONE value clusters on ALL dims —
-    per-file min/max stay selective for every interleaved column, which is
-    what makes multi-predicate row-group skipping work (Delta/Iceberg's
-    OPTIMIZE ZORDER BY, as a plain codegen expression).
-
-    Columns must already be non-negative integers in [0, 2^bits) — map
-    real domains first (e.g. ``F.floor(value / step)``, day numbers,
-    dictionary codes).  Pure bit arithmetic: shiftleft/|, no UDF.
-    """
-    from pyspark.sql import functions as F
-
-    n = len(cols)
-    if n == 0:
-        raise ValueError("zorder_value needs at least one column")
-    parts = []
-    for ci, c in enumerate(cols):
-        col = F.col(c) if isinstance(c, str) else c
-        col = col.cast("bigint")
-        for b in range(bits):
-            # bit b of column ci lands at interleaved position b*n + ci
-            parts.append(
-                F.shiftleft(
-                    F.shiftright(col, b).bitwiseAND(F.lit(1)), b * n + ci
-                )
-            )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.bitwiseOR(p)
-    return out

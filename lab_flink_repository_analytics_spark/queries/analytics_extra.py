@@ -1925,7 +1925,7 @@ def _trained_bpe(spark: SparkSession, sf_dir: str, docs: DataFrame) -> tuple:
 
 def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First 3 BPE merges learned from the corpus (datapipe/bpe.py::
-    train_merges) — tokenizer training as a distributed operator; the
+    train_state) — tokenizer training as a distributed operator; the
     oracle unrolls the identical three iterations in SQL (the k-means
     pattern), sharing the SEP-wrapped greedy-merge representation."""
     from lab_flink_repository_analytics_spark.session import local_relation
@@ -1994,7 +1994,7 @@ BPE_MERGES_SQL = _bpe_merges_sql()
 
 def bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc subword token counts under the 3-merge BPE model trained on
-    the corpus itself (datapipe/bpe.py::doc_token_counts) — segmentation
+    the corpus itself (datapipe/bpe.py::subwords) — segmentation
     runs once per DISTINCT word, the corpus side only explodes + joins;
     the trained state is shared with the other BPE queries via the memo.
 
@@ -2010,9 +2010,7 @@ def bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, merged = _trained_bpe(spark, sf_dir, docs)
     per_word = merged.select(
         F.col("w").alias("term"),
-        F.size(
-            F.split(F.expr("substring(rep, 2, length(rep) - 2)"), BPE.SEP + BPE.SEP)
-        ).alias("n_sub"),
+        F.size(BPE.subwords()).alias("n_sub"),
     )
     return (
         _doc_term_tf(spark, sf_dir)
@@ -2435,9 +2433,7 @@ def bpe_fertility_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, merged = _trained_bpe(spark, sf_dir, docs)
     per_word = merged.select(
         "w",
-        F.size(
-            F.split(F.expr("substring(rep, 2, length(rep) - 2)"), BPE.SEP + BPE.SEP)
-        ).alias("n_sub"),
+        F.size(BPE.subwords()).alias("n_sub"),
     )
     return (
         _source_word_counts(spark, sf_dir)

@@ -11,15 +11,17 @@ from lab_flink_repository_analytics_spark.datapipe import similarity as SIM
 from lab_flink_repository_analytics_spark.datapipe import text as TX
 
 
+_DOCS = [
+    (1, "the quick brown fox jumps over the lazy dog", "en", "a"),
+    (2, "the quick brown fox jumps over the lazy cat", "en", "a"),  # near-dup of 1
+    (3, "completely different content about spark engines", "en", "a"),
+    (4, "the quick brown fox jumps over the lazy dog", "en", "b"),  # exact dup of 1
+    (5, "ab", "en", "b"),  # shorter than shingle size
+]
+
+
 def _docs(spark):
-    rows = [
-        (1, "the quick brown fox jumps over the lazy dog", "en", "a"),
-        (2, "the quick brown fox jumps over the lazy cat", "en", "a"),  # near-dup of 1
-        (3, "completely different content about spark engines", "en", "a"),
-        (4, "the quick brown fox jumps over the lazy dog", "en", "b"),  # exact dup of 1
-        (5, "ab", "en", "b"),  # shorter than shingle size
-    ]
-    return spark.createDataFrame(rows, "doc_id: int, text: string, lang: string, source: string")
+    return spark.createDataFrame(_DOCS, "doc_id: int, text: string, lang: string, source: string")
 
 
 def test_exact_dedup(spark):
@@ -29,37 +31,13 @@ def test_exact_dedup(spark):
     assert len(out) == 4
 
 
-def test_minhash_df_matches_expression_form(spark):
-    df = _docs(spark)
-    a = {r["doc_id"]: r["sig"] for r in DD.minhash_signatures_df(df).collect()}
-    b = {
-        r["doc_id"]: r["sig"]
-        for r in df.select("doc_id", DD.minhash_signature("text").alias("sig")).collect()
-    }
-    assert a == b
-    assert all(len(s) == DD.N_PERMS for s in a.values())
+def test_minhash_df_matches_oracle(spark):
+    from lab_flink_repository_analytics_spark.queries import suite
 
-
-def test_minhash_staged_hashes_matches_expression_form(spark):
-    # The streaming twin stages the shingle-hash array into a column
-    # before the per-permutation transforms; values must be identical to
-    # the inline expression form.
-    from pyspark.sql import functions as F
-
-    df = _docs(spark)
-    a = {
-        r["doc_id"]: r["sig"]
-        for r in df.select(
-            "doc_id", F.transform(DD.shingles("text"), DD.md5_hash32).alias("_h")
-        )
-        .select("doc_id", DD.minhash_signature_from_hashes(F.col("_h")).alias("sig"))
-        .collect()
-    }
-    b = {
-        r["doc_id"]: r["sig"]
-        for r in df.select("doc_id", DD.minhash_signature("text").alias("sig")).collect()
-    }
-    assert a == b
+    got = {r["doc_id"]: r["sig"] for r in DD.minhash_signatures_df(_docs(spark)).collect()}
+    assert got == dict(_duckdb_docs(suite._MINHASH_RAW_SQL, _DOCS))
+    assert len(got) == len(_DOCS)  # doc 5, shorter than a shingle, too
+    assert all(len(s) == DD.N_PERMS for s in got.values())
 
 
 def test_minhash_identical_docs_identical_sigs(spark):
@@ -74,8 +52,7 @@ def test_near_dup_candidates_find_exact_dups(spark):
 
 
 def test_simhash_close_for_near_dups(spark):
-    out = {r["doc_id"]: r["simhash"] for r in
-           _docs(spark).select("doc_id", DD.simhash32("text").alias("simhash")).collect()}
+    out = {r["doc_id"]: r["simhash"] for r in DD.simhash_signatures_df(_docs(spark)).collect()}
     assert out[1] == out[4]
     hamming = bin(out[1] ^ out[2]).count("1")
     assert hamming <= 12  # 8/9 shared tokens → close signatures
@@ -224,12 +201,12 @@ def test_fingerprint_normalization(spark):
     assert fp[1] != fp[3]
 
 
-def test_simhash_df_matches_expression_form(spark):
-    df = _docs(spark)
-    a = {r["doc_id"]: r["simhash"] for r in DD.simhash_signatures_df(df).collect()}
-    b = {r["doc_id"]: r["simhash"] for r in
-         df.select("doc_id", DD.simhash32("text").alias("simhash")).collect()}
-    assert a == b
+def test_simhash_df_matches_oracle(spark):
+    from lab_flink_repository_analytics_spark.queries import suite
+
+    got = {r["doc_id"]: r["simhash"] for r in DD.simhash_signatures_df(_docs(spark)).collect()}
+    assert got == dict(_duckdb_docs(suite.SIMHASH_SQL, _DOCS))
+    assert len(got) == len(_DOCS)
 
 
 def _emb(spark, n=40, dim=8):
@@ -346,17 +323,19 @@ def test_bpe_ish_tokens(spark):
     assert out == ["Hello", ",", "world", "42", "!", "x"]
 
 
-def test_winnow_df_matches_expression_form(spark):
-    df = _docs(spark)
-    a = {r["doc_id"]: r["fps"] for r in TX.winnow_fingerprints_df(df).collect()}
-    b = {
-        r["doc_id"]: r["fps"]
-        for r in df.select(
-            "doc_id", TX.winnow_fingerprints("text").alias("fps")
-        ).collect()
-    }
-    assert a == b
-    assert len(a) == df.count()  # tiny docs fingerprint too
+def test_winnow_df_matches_oracle(spark):
+    import json
+
+    from lab_flink_repository_analytics_spark.queries import suite
+
+    # plus one long doc, whose many windows pin the window width
+    rows = _DOCS + [(6, " ".join(f"w{i}" for i in range(40)), "en", "b")]
+    docs = spark.createDataFrame(rows, _docs(spark).schema)
+    df = TX.winnow_fingerprints_df(docs, k=suite.WINNOW_K, w=suite.WINNOW_W)
+    got = {r["doc_id"]: r["fps"] for r in df.collect()}
+    want = {i: json.loads(fps) for i, fps in _duckdb_docs(suite.WINNOWING_SQL, rows)}
+    assert got == want
+    assert len(got) == len(rows)  # tiny docs fingerprint too
 
 
 def test_winnow_shared_run_guarantee(spark):
@@ -488,7 +467,7 @@ def test_repetition_metrics(spark):
     assert out[3]["n_bigrams"] == 0 and out[3]["dup_bigram_fraction"] == 0.0
 
 
-def test_ngram_overlap_and_decontaminated_filter(spark):
+def test_ngram_overlap_counts_shared_eval_grams(spark):
     from lab_flink_repository_analytics_spark.datapipe import decontaminate
 
     train = spark.createDataFrame(
@@ -511,8 +490,6 @@ def test_ngram_overlap_and_decontaminated_filter(spark):
     assert abs(out[1]["contamination_ratio"] - 0.2) < 1e-12
     assert out[2]["n_contaminated"] == 0
     assert out[3]["n_contaminated"] == 0  # whole-text gram, no match
-    kept = decontaminate.decontaminated(train, eval_set, n=5).select("doc_id")
-    assert sorted(r["doc_id"] for r in kept.collect()) == [2, 3]
 
 
 def test_group_centroids_mean_pool(spark):
@@ -699,6 +676,20 @@ def _duckdb_embeddings(sql, rows, names):
     con = duckdb.connect()
     con.register(
         "embeddings", pa.table({n: [r[i] for r in rows] for i, n in enumerate(names)})
+    )
+    return con.sql(sql).fetchall()
+
+
+def _duckdb_docs(sql, rows):
+    """Rows of the DuckDB oracle ``sql`` over a ``documents`` table of
+    (doc_id, text, ...) rows."""
+    import duckdb
+    import pyarrow as pa
+
+    con = duckdb.connect()
+    con.register(
+        "documents",
+        pa.table({"doc_id": [r[0] for r in rows], "text": [r[1] for r in rows]}),
     )
     return con.sql(sql).fetchall()
 
@@ -1035,7 +1026,7 @@ def test_arrow_assignments_match_literal_chain_projection(spark):
     assert empty.collect() == []
 
 
-def test_assignments_rank_nan_first_and_null_last_like_the_oracles(spark, monkeypatch):
+def test_assignments_rank_nan_first_and_null_last_like_the_oracles(spark):
     # the oracles rank centroids by ORDER BY cs DESC, cid: a zero-norm
     # centroid's x/0 cosine is NULL and last, a NaN cosine first.  The
     # Arrow kernel and the broadcast-join path above MAX_INLINE_CENTROIDS
@@ -1059,17 +1050,23 @@ def test_assignments_rank_nan_first_and_null_last_like_the_oracles(spark, monkey
     def rows(df):
         return sorted((r["id"], r["rn"], r["cid"]) for r in df.collect())
 
+    cent_rows = SIM._bounded_quantizer(cents)
     for n_best in (1, 2, 3):
-        arrow = rows(SIM.ivf_assignments(vectors, cents, n_best))
-        with monkeypatch.context() as m:
-            m.setattr(SIM, "MAX_INLINE_CENTROIDS", 0)
-            df = SIM.ivf_assignments(vectors, cents, n_best)
-            assert "Join" in df._jdf.queryExecution().executedPlan().toString()
-            joined = rows(df)
-        assert arrow == joined, n_best
+        arrow = rows(SIM._arrow_assignments(vectors, cent_rows, n_best, "vec_id", "embedding"))
+        df = SIM._join_assignments(vectors, cents, n_best, "vec_id", "embedding")
+        assert "Join" in df._jdf.queryExecution().executedPlan().toString()
+        assert arrow == rows(df), n_best
     best = {i: cid for i, rn, cid in arrow if rn == 1}
     assert best == {0: 1, 1: 2, 2: 2, 3: 0, 4: 0, 5: 0}
     assert [cid for i, rn, cid in arrow if i == 0] == [1, 2, 0]
+
+
+def _flat_assignments(vectors, centroids):
+    """Each vector's best centroid in one Arrow pass over a driver-held
+    quantizer."""
+    return SIM._arrow_assignments(
+        vectors, SIM._bounded_quantizer(centroids), 1, "vec_id", "embedding"
+    )
 
 
 def test_kmeans_null_initial_centroid_matches_oracle(spark, monkeypatch):
@@ -1107,7 +1104,7 @@ def test_hierarchical_routed_level_ranks_null_cosines_last(spark):
     )
     routed = SIM.hierarchical_assignments(vectors, cents, n_super=2)
     got = {r["id"]: r["cid"] for r in routed.collect()}
-    flat = {r["id"]: r["cid"] for r in SIM.ivf_assignments(vectors, cents).collect()}
+    flat = {r["id"]: r["cid"] for r in _flat_assignments(vectors, cents).collect()}
     assert got == flat == {10: 3, 11: 1, 12: 0}
 
 
@@ -1739,11 +1736,8 @@ def test_bpe_train_merges_greedy_and_tiebreak(spark):
     docs = spark.createDataFrame(
         [(1, "low low lower")], "doc_id bigint, text string"
     )
-    merges = BPE.train_merges(spark, docs, n_merges=2).collect()
-    assert [(m["step"], m["lft"], m["rgt"], m["pair_freq"]) for m in merges] == [
-        (1, "l", "o", 3),
-        (2, "lo", "w", 3),
-    ]
+    merges, _ = BPE.train_state(docs, n_merges=2)
+    assert merges == [(1, "l", "o", "lo", 3), (2, "lo", "w", "low", 3)]
 
 
 def test_bigram_lm_hybrid_head_join_matches_plain(spark, sf_dir):
@@ -1804,8 +1798,8 @@ def test_bpe_periodic_recheckpoint_preserves_model(spark):
     uncut, w1 = BPE.train_state(docs, n_merges=9, repersist_every=100)
     cut, w2 = BPE.train_state(docs, n_merges=9, repersist_every=2)
     assert uncut == cut and len(cut) > 4
-    s1 = {r["w"]: r["subwords"] for r in BPE.segment_words(w1).collect()}
-    s2 = {r["w"]: r["subwords"] for r in BPE.segment_words(w2).collect()}
+    s1 = {r["w"]: r["s"] for r in w1.select("w", BPE.subwords().alias("s")).collect()}
+    s2 = {r["w"]: r["s"] for r in w2.select("w", BPE.subwords().alias("s")).collect()}
     assert s1 == s2
 
 
@@ -1819,24 +1813,23 @@ def test_bpe_merge_application_is_greedy_left_to_right(spark):
         "w", "wc", BPE._initial_rep(F.col("w")).alias("rep")
     )
     merged = BPE.apply_merge(words, "a", "a")
-    segs = {r["w"]: r["subwords"] for r in BPE.segment_words(merged).collect()}
+    segs = {r["w"]: r["s"] for r in merged.select("w", BPE.subwords().alias("s")).collect()}
     assert segs["aaaa"] == ["aa", "aa"]
     assert segs["aaa"] == ["aa", "a"]
 
 
-def test_bpe_doc_token_counts_per_occurrence(spark):
+def test_bpe_subwords_after_one_merge(spark):
     from lab_flink_repository_analytics_spark.datapipe import bpe as BPE
 
-    # one merge: corpus "ab ab b" -> top pair (a,b) freq 2 -> 'ab' merges
-    # to one symbol; 'b' stays 1 symbol. doc1 = "ab ab b": 2*1 + 1 = 3
+    # one merge: words ab x3, b, abb -> top pair (a,b) freq 4 -> 'ab' is
+    # one symbol; 'b' stays one symbol, 'abb' splits after the merged pair
     docs = spark.createDataFrame(
-        [(1, "ab ab b"), (2, "ab")], "doc_id bigint, text string"
+        [(1, "ab ab b"), (2, "ab abb")], "doc_id bigint, text string"
     )
-    out = {
-        r["doc_id"]: r for r in BPE.doc_token_counts(docs, n_merges=1).collect()
-    }
-    assert out[1]["n_words"] == 3 and out[1]["n_bpe_tokens"] == 3
-    assert out[2]["n_words"] == 1 and out[2]["n_bpe_tokens"] == 1
+    merges, words = BPE.train_state(docs, n_merges=1)
+    assert merges == [(1, "a", "b", "ab", 4)]
+    segs = {r["w"]: r["s"] for r in words.select("w", BPE.subwords().alias("s")).collect()}
+    assert segs == {"ab": ["ab"], "b": ["b"], "abb": ["ab", "b"]}
 
 
 def test_training_order_contiguous_and_reshard_stable(spark, sf_dir):
@@ -2062,7 +2055,7 @@ def test_hierarchical_assignments_match_two_level_bruteforce(spark):
 
 
 def test_hierarchical_degenerates_to_flat_below_gate(spark):
-    # a 16-list quantizer must reproduce ivf_assignments' flat argmax
+    # a 16-list quantizer must reproduce the flat argmax
     def vec(i):
         return [float((i * 11 + d * 5) % 23 - 11) + 0.25 for d in range(4)]
 
@@ -2071,9 +2064,7 @@ def test_hierarchical_degenerates_to_flat_below_gate(spark):
     cdf = spark.createDataFrame(
         [(i, vec(i)) for i in range(16)], "cid bigint, cv array<double>"
     )
-    flat = {
-        r["id"]: r["cid"] for r in SIM.ivf_assignments(df, cdf, 1).collect()
-    }
+    flat = {r["id"]: r["cid"] for r in _flat_assignments(df, cdf).collect()}
     hier = {
         r["id"]: r["cid"]
         for r in SIM.hierarchical_assignments(df, cdf).collect()

@@ -4,29 +4,32 @@ Every public top-level function or class of
 ``lab_flink_repository_analytics_spark`` must have a use outside the tests:
 a registry query, another module, ``bench.py``, ``__spark_entry__.py``,
 ``tools/`` or ``perfbench/`` reaching it by import, attribute or name.  A
-name that only tests call is either a reference capability kept as API
-(SURVEY.md §2) or a deletion candidate; both are listed in
-``TEST_ONLY_OK`` with a one-line reason, and a new one fails here until it
-gets a caller or a line.
+name that only tests call must be a reference capability kept as API and
+listed in ``TEST_ONLY_OK`` with its SURVEY.md §2 section; any other fails
+here until it gets a caller or is deleted.
 
 Uses are resolved per module, not by bare name: ``CQ.quiet_sessions``
 counts for ``queries.community`` only, a package ``__init__`` re-export
 is not a use by itself, and a function calling itself is not its own use.
+
+The docs are held to the suite the same way: a full ``test_<name>`` that
+COVERAGE.md or README.md cites must be defined under ``tests/`` or
+``perfbench/``.
 """
 
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
 PKG = "lab_flink_repository_analytics_spark"
 
 #: public names whose only callers are tests, keyed by module path under
-#: the package: a SURVEY.md §2 capability with its section, or
-#: "deletion candidate" (ROADMAP item 6)
+#: the package: each is a SURVEY.md §2 capability kept as API, cited by
+#: its section
 TEST_ONLY_OK = {
-    # SURVEY.md §2 capabilities kept as API
     "changelog.materialize_multiset": "§2.A changelog-mode values source, un-keyed (I,UA,UB,D)",
     "changelog.replay_changelog": "§2.A changelog-mode values source: the ITCases' per-step replay",
     "io.sinks.apply_changelog": "§2.E primary-key upsert source applied to a stored table",
@@ -46,28 +49,6 @@ TEST_ONLY_OK = {
     "streaming.jobs.users_per_window_stream": "§2.E watermarked tumbling window (README.md:217-223)",
     "streaming.jobs.session_threads_stream": "§2.E watermarked session window (README.md:227-236)",
     "streaming.jobs.sliding_activity_stream": "§2.E watermark / late data over overlapping windows",
-    # extension operators that only tests call
-    "datapipe.bpe.doc_token_counts": "deletion candidate",
-    "datapipe.bpe.segment_words": "deletion candidate",
-    "datapipe.bpe.train_merges": "deletion candidate",
-    "datapipe.decontaminate.decontaminated": "deletion candidate",
-    "datapipe.dedup.jaccard_tokens": "deletion candidate",
-    "datapipe.dedup.minhash_signature": "deletion candidate",
-    "datapipe.dedup.simhash32": "deletion candidate",
-    "datapipe.graph.dedup_cluster_summary": "deletion candidate",
-    "datapipe.joins.interval_join": "deletion candidate",
-    "datapipe.sampling.stratified_sample": "deletion candidate",
-    "datapipe.similarity.ivf_assignments": "deletion candidate",
-    "datapipe.sketches.cms_build": "deletion candidate",
-    "datapipe.sketches.cms_merge": "deletion candidate",
-    "datapipe.sketches.distinct_sketches": "deletion candidate",
-    "datapipe.sketches.rollup_sketches": "deletion candidate",
-    "datapipe.skew.salted_count_distinct": "deletion candidate",
-    "datapipe.text.winnow_fingerprints": "deletion candidate",
-    "io.bucketing.cobucketed_join": "deletion candidate",
-    "io.bucketing.write_bucketed": "deletion candidate",
-    "io.sinks.compact_parquet_to_size": "deletion candidate",
-    "io.sinks.zorder_value": "deletion candidate",
 }
 
 
@@ -179,7 +160,7 @@ def test_every_public_name_has_a_non_test_use_or_a_reason():
     assert not missing, (
         f"public names with no use outside tests/: {missing} — give each a "
         "caller, delete it with its tests, or add it to TEST_ONLY_OK with "
-        "its SURVEY.md §2 capability or 'deletion candidate'"
+        "its SURVEY.md §2 capability"
     )
 
 
@@ -191,3 +172,42 @@ def test_dead_code_allowlist_is_current():
     assert not gone, f"TEST_ONLY_OK names no longer defined: {gone}"
     assert not used, f"TEST_ONLY_OK names that now have a non-test use: {used}"
     assert all(reason.strip() for reason in TEST_ONLY_OK.values())
+
+
+def test_test_only_names_cite_a_survey_section():
+    uncited = {k: v for k, v in TEST_ONLY_OK.items() if not v.startswith("§2.")}
+    assert not uncited, (
+        f"TEST_ONLY_OK entries that cite no SURVEY.md §2 section: {uncited} — "
+        "give each a caller or delete it"
+    )
+
+
+def _defined_test_names() -> set[str]:
+    """Test modules and test functions under tests/ and perfbench/."""
+    names = set()
+    for d in ("tests", "perfbench"):
+        for p in (ROOT / d).rglob("*.py"):
+            names.add(p.stem)
+            for n in ast.walk(ast.parse(p.read_text(), str(p))):
+                if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    names.add(n.name)
+    return names
+
+
+def test_docs_cite_only_tests_that_exist():
+    """A cited ``test_<name>`` (``test_x{1,2}`` expands to ``test_x1``,
+    ``test_x2``) must exist; a prefix wildcard such as ``test_simhash_*``
+    is not checked."""
+    defined = _defined_test_names()
+    stale = []
+    for doc in ("COVERAGE.md", "README.md"):
+        text = (ROOT / doc).read_text()
+        for m in re.finditer(r"\b(test_\w+)(?:\{([\w,]+)\})?(?![\w*{])", text):
+            alts = m.group(2).split(",") if m.group(2) else [""]
+            line = text.count("\n", 0, m.start()) + 1
+            stale += [
+                f"{doc}:{line} {m.group(1)}{a}"
+                for a in alts
+                if m.group(1) + a not in defined
+            ]
+    assert not stale, f"docs cite tests that no file defines: {stale}"

@@ -75,17 +75,6 @@ def test_random_graph_matches_union_find(spark):
     assert got == want
 
 
-def test_dedup_cluster_summary(spark):
-    labels = spark.createDataFrame(
-        [(1, 1), (2, 1), (3, 1), (10, 10)], "node long, component long"
-    )
-    got = {
-        r["component"]: (r["size"], r["keep"])
-        for r in graph.dedup_cluster_summary(labels).collect()
-    }
-    assert got == {1: (3, 1), 10: (1, 10)}
-
-
 def test_pagerank_int_symmetry_and_hubs(spark):
     from lab_flink_repository_analytics_spark.datapipe.graph import pagerank_int
     # star 0-(1..4) plus triangle 10-11-12: center outranks leaves,

@@ -1,4 +1,4 @@
-"""Temporal joins: as-of and interval (datapipe/joins.py).
+"""Temporal joins: as-of and interval count (datapipe/joins.py).
 
 The reference has no temporal joins — these are the training-pipeline
 extensions; semantics are pinned against hand-computed fixtures and (for
@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 from lab_flink_repository_analytics_spark.datapipe.joins import (
     asof_join,
     interval_count,
-    interval_join,
 )
 
 def rows(df, *cols):
@@ -102,22 +101,22 @@ def test_interval_join_pairs_exact_no_dups(spark):
     )
     right = spark.createDataFrame(
         [
+            (1, dt(2024, 1, 1, 9, 50, 0), "r0"),   # exactly 10 min before a
             (1, dt(2024, 1, 1, 9, 51, 0), "r1"),   # 9 min before a
             (1, dt(2024, 1, 1, 10, 0, 0), "r2"),   # exactly at a
             (1, dt(2024, 1, 1, 9, 49, 59), "r3"),  # 10m01s before a → out
+            (1, dt(2024, 1, 1, 10, 0, 1), "r5"),   # 1 s after a → out
             (1, dt(2024, 1, 1, 10, 55, 0), "r4"),  # 5 min before b
         ],
         "k long, ts timestamp, rtag string",
     )
-    out = interval_join(
+    # the left rows span several buckets, so a pair counted once per
+    # exploded bucket copy would show here
+    out = interval_count(
         left, right, on="k",
-        lower_seconds=-600.0, upper_seconds=0.0, bucket_seconds=600.0,
-        payload=["rtag"],
+        lower_seconds=-600.0, upper_seconds=0.0, bucket_seconds=120.0,
     )
-    got = rows(out, "tag", "r_rtag")
-    assert got == sorted(
-        [("a", "r1"), ("a", "r2"), ("b", "r4")], key=repr
-    )
+    assert rows(out, "tag", "matches") == [("a", 3), ("b", 1)]
 
 
 def test_interval_count_left_outer_zero_for_no_match(spark):
@@ -143,7 +142,7 @@ def test_interval_join_no_nested_loop(spark):
     right = spark.createDataFrame(
         [(1, dt(2024, 1, 1, 9, 58, 0))], "k long, ts timestamp"
     )
-    out = interval_join(
+    out = interval_count(
         left, right, on="k", lower_seconds=-600.0, upper_seconds=0.0
     )
     plan = out._jdf.queryExecution().executedPlan().toString()

@@ -53,33 +53,6 @@ def test_commit_activity_single_shuffle_agg(spark, sf_dir):
     assert plan.count("Exchange hashpartitioning") == 1, plan
 
 
-def test_bucketed_join_avoids_shuffle(spark, sf_dir, tmp_path):
-    from lab_flink_repository_analytics_spark.io import bucketing
-    from lab_flink_repository_analytics_spark.session import load_tables
-
-    t = load_tables(spark, sf_dir)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force non-broadcast
-    try:
-        bucketing.write_bucketed(t["orders"], "b_orders", ["o_orderkey"], 8)
-        bucketing.write_bucketed(
-            t["lineitem"].select("l_orderkey", "l_quantity"),
-            "b_lineitem",
-            ["l_orderkey"],
-            8,
-        )
-        joined = spark.table("b_lineitem").join(
-            spark.table("b_orders"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        plan = _plan(joined)
-        assert "Exchange" not in plan, plan  # co-located: no shuffle either side
-        assert joined.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
-
-
 def test_inline_assignment_cosines_stay_staged(spark, sf_dir):
     """Centroid assignment against a bounded quantizer is ONE Arrow pass
     over the vector scan: a MapInArrow node and no Exchange — no
@@ -88,7 +61,8 @@ def test_inline_assignment_cosines_stay_staged(spark, sf_dir):
     from lab_flink_repository_analytics_spark.session import load_tables
 
     emb = load_tables(spark, sf_dir)["embeddings"]
-    plan = _plan(SIM.ivf_assignments(emb, SIM.sampled_centroids(emb, 16), 2))
+    cents = SIM._bounded_quantizer(SIM.sampled_centroids(emb, 16))
+    plan = _plan(SIM._arrow_assignments(emb, cents, 2, "vec_id", "embedding"))
     assert "MapInArrow" in plan, plan
     assert "Exchange" not in plan, plan
 

@@ -102,22 +102,20 @@ def test_token_count_matches_split_py(words):
 def test_jaccard_bounds_and_self_similarity(spark):
     """0 ≤ jaccard ≤ 1, self-similarity = 1 for non-empty docs."""
     texts = ["a b c", "c b a", "a a a", "x", "a b c d e f g"]
+    n = len(texts)
+    # every text twice: doc i and its copy i + n
     df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "id: int, text: string"
+        [(i, t) for i, t in enumerate(texts + texts)], "id: int, text: string"
     )
     from lab_flink_repository_analytics_spark.datapipe import dedup as DD
-
-    out = df.select(
-        DD.jaccard_tokens("text", "text").alias("self_sim"),
-    ).collect()
-    assert all(r["self_sim"] == 1.0 for r in out)
 
     pairs = DD.ngram_jaccard_pairs(
         df.withColumn("blk", F.lit(1)), ["blk"], id_col="id"
     ).collect()
     assert all(0.0 <= r["jaccard"] <= 1.0 for r in pairs)
-    # order-insensitivity: "a b c" vs "c b a" are token-identical
     m = {(r["id_a"], r["id_b"]): r["jaccard"] for r in pairs}
+    assert all(m[(i, i + n)] == 1.0 for i in range(n))
+    # order-insensitivity: "a b c" vs "c b a" are token-identical
     assert m[(0, 1)] == 1.0
 
 

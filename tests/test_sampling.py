@@ -50,20 +50,6 @@ def test_split_fractions_must_sum_to_one(spark):
         sampling.deterministic_split(df, "doc_id", [("a", 0.5), ("b", 0.4)])
 
 
-def test_stratified_sample_rates_and_dropped_strata(spark):
-    df = spark.range(10_000).select(
-        F.col("id").alias("doc_id"),
-        F.when(F.col("id") % 10 < 8, "en").otherwise("de").alias("lang"),
-    )
-    out = sampling.stratified_sample(df, "lang", {"en": 0.1})
-    counts = {r["lang"]: r["count"] for r in out.groupBy("lang").count().collect()}
-    assert "de" not in counts  # absent stratum → dropped
-    assert abs(counts["en"] - 800) < 150  # 8000 * 0.1, Bernoulli noise
-    # seeded: repeatable
-    again = sampling.stratified_sample(df, "lang", {"en": 0.1})
-    assert again.count() == out.count()
-
-
 def test_weighted_sample_bounds_and_determinism(spark):
     from pyspark.sql import functions as F
 

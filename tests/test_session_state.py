@@ -1,10 +1,8 @@
 """Session-shared state plumbing: derived_state memo lifecycle (bounded
-FIFO eviction, reset hook) and the compaction partition-layout
-round-trip guarantees these memo-backed benches rely on."""
+FIFO eviction, reset hook), the JVM local relation, the driver-memory
+clamp and the sweep of dead checkpoints."""
 
 from __future__ import annotations
-
-import os
 
 from lab_flink_repository_analytics_spark import session as S
 
@@ -105,39 +103,3 @@ def test_sweep_persistent_rdds_frees_dead_checkpoints(spark):
     assert S.sweep_persistent_rdds(spark) == 0  # nothing left resident
     # fresh plan (not the severed one) recomputes fine
     assert spark.range(100).localCheckpoint(eager=True).count() == 100
-
-
-def test_compact_parquet_partition_values_round_trip_verbatim(spark, tmp_path):
-    # numeric-LOOKING string partition values (split=01) must keep their
-    # directory names through compaction — type inference on the rewrite
-    # read would re-type them and rename the directories to split=1
-    from lab_flink_repository_analytics_spark.io import sinks
-
-    path = str(tmp_path / "padded")
-    df = spark.createDataFrame(
-        [(i, "01" if i % 2 == 0 else "02") for i in range(100)],
-        "id long, split string",
-    )
-    df.write.partitionBy("split").parquet(path)
-    assert sorted(
-        d for d in os.listdir(path) if d.startswith("split=")
-    ) == ["split=01", "split=02"]
-    sinks.compact_parquet(spark, path, target_rows_per_file=1000)
-    assert sorted(
-        d for d in os.listdir(path) if d.startswith("split=")
-    ) == ["split=01", "split=02"]
-    assert spark.read.parquet(path).count() == 100
-
-
-def test_compact_parquet_stray_kv_dir_falls_back_flat(spark, tmp_path):
-    # a flat dataset with one stray k=v-named (empty) directory: detection
-    # sees a bogus partition column absent from the data — compaction must
-    # fall back to the flat path instead of failing partitionBy mid-rewrite
-    from lab_flink_repository_analytics_spark.io import sinks
-
-    path = str(tmp_path / "flat_stray")
-    spark.range(100).write.parquet(path)
-    os.makedirs(os.path.join(path, "note=stray"))
-    n = sinks.compact_parquet(spark, path, target_rows_per_file=60)
-    assert n >= 1
-    assert spark.read.parquet(path).count() == 100

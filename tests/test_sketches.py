@@ -1,60 +1,9 @@
-"""HLL distinct sketches (datapipe/sketches.py): merge-consistency and
-accuracy invariants (binary parity with other engines is undefined, so no
-DuckDB oracle — see the module docstring)."""
+"""Mergeable sketches (datapipe/sketches.py): the count-min grid, the
+histogram quantiles and the PSI drift built on them."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-
-from lab_flink_repository_analytics_spark.datapipe import sketches
-
-
-def _events(spark):
-    # 3 "days" × overlapping user sets (users repeat across days)
-    return spark.range(3000).select(
-        (F.col("id") % 3).alias("day"),
-        (F.col("id") % 400).alias("user"),
-    )
-
-
-def test_rollup_of_daily_sketches_equals_global_sketch(spark):
-    df = _events(spark)
-    daily = sketches.distinct_sketches(df, ["day"], "user")
-    total_from_daily = sketches.rollup_sketches(daily, []).collect()[0][
-        "distinct_est"
-    ]
-    total_direct = (
-        sketches.distinct_sketches(df.withColumn("g", F.lit(1)), ["g"], "user")
-        .select(F.hll_sketch_estimate("sketch").alias("e"))
-        .collect()[0]["e"]
-    )
-    # identical input set → identical sketch state → identical estimate
-    assert total_from_daily == total_direct
-
-
-def test_estimates_within_hll_error_of_exact(spark):
-    df = _events(spark)
-    daily = sketches.distinct_sketches(df, ["day"], "user")
-    est = {
-        r["day"]: r["distinct_est"]
-        for r in sketches.rollup_sketches(daily, ["day"]).collect()
-    }
-    exact = {
-        r["day"]: r["n"]
-        for r in df.groupBy("day")
-        .agg(F.count_distinct("user").alias("n"))
-        .collect()
-    }
-    for day, n in exact.items():
-        assert abs(est[day] - n) / n < 0.05  # 4096 registers ≈ 1.6% RSE
-
-
-def test_sketch_column_is_compact_binary(spark):
-    df = _events(spark)
-    daily = sketches.distinct_sketches(df, ["day"], "user")
-    row = daily.limit(1).collect()[0]
-    assert isinstance(row["sketch"], (bytes, bytearray))
-    assert len(row["sketch"]) < 64 * 1024  # KBs, not MBs: storable per key
 
 
 def test_cms_overestimates_and_merges(spark):
@@ -64,38 +13,38 @@ def test_cms_overestimates_and_merges(spark):
     items = spark.createDataFrame(
         [(w,) for w in ["a"] * 5 + ["b"] * 3 + ["c"] * 2 + ["d"]], "item: string"
     )
-    full = SK.cms_build(items)
-    qs = items.distinct()
-    est = {r["item"]: r["est"] for r in SK.cms_estimate(full, qs).collect()}
-    true = {r["item"]: r["cnt"] for r in items.groupBy("item").agg(F.count(F.lit(1)).alias("cnt")).collect()}
+    counts = items.groupBy("item").agg(F.count(F.lit(1)).alias("cnt"))
+    full = SK.cms_build_weighted(counts, weight="cnt")
+    est = {r["item"]: r["est"] for r in SK.cms_estimate(full, counts).collect()}
+    true = {r["item"]: r["cnt"] for r in counts.collect()}
     for w, t in true.items():
         assert est[w] >= t  # CMS never under-estimates
-    # merging per-half sketches == building over the whole stream
-    h1 = SK.cms_build(items.filter(F.col("item").isin("a", "b")))
-    h2 = SK.cms_build(items.filter(~F.col("item").isin("a", "b")))
-    merged = SK.cms_merge(h1, h2)
-    est_m = {r["item"]: r["est"] for r in SK.cms_estimate(merged, qs).collect()}
+    # the grids of two halves sum cell by cell to the grid of the whole
+    h1 = SK.cms_build_weighted(counts.filter(F.col("item").isin("a", "b")), weight="cnt")
+    h2 = SK.cms_build_weighted(counts.filter(~F.col("item").isin("a", "b")), weight="cnt")
+    merged = h1.unionByName(h2).groupBy("d", "bucket").agg(F.sum("c").alias("c"))
+    est_m = {r["item"]: r["est"] for r in SK.cms_estimate(merged, counts).collect()}
     assert est_m == est
 
 
 def test_cms_build_weighted_matches_stream_build(spark):
-    """cms_build_weighted over a (item, cnt) rollup must land the EXACT
-    cell grid (d, bucket, c) of cms_build over the expanded stream —
-    the algebraic identity word_freq_cms' one-aggregation rewrite rests
-    on — including the schema (non-null bigint c)."""
-    from lab_flink_repository_analytics_spark.datapipe import sketches as SK
-    from pyspark.sql import functions as F
+    """cms_build_weighted over a (item, cnt) rollup must land, per depth
+    row d, each item's count at bucket md5_32("d:item") mod width — the
+    grid the per-occurrence stream gives — with a non-null bigint c."""
+    import hashlib
 
-    items = spark.createDataFrame(
-        [(w,) for w in ["a"] * 5 + ["b"] * 3 + ["c"] * 2 + ["d"]], "item: string"
-    )
-    counts = items.groupBy("item").agg(F.count(F.lit(1)).alias("cnt"))
-    stream_cells = {
-        (r["d"], r["bucket"]): r["c"] for r in SK.cms_build(items).collect()
-    }
-    weighted = SK.cms_build_weighted(counts, weight="cnt")
-    weighted_cells = {(r["d"], r["bucket"]): r["c"] for r in weighted.collect()}
-    assert weighted_cells == stream_cells
+    from lab_flink_repository_analytics_spark.datapipe import sketches as SK
+
+    counts = {"a": 5, "b": 3, "c": 2, "d": 1}
+    df = spark.createDataFrame(list(counts.items()), "item: string, cnt: bigint")
+    want = {}
+    for item, n in counts.items():
+        for d in range(SK.CMS_DEPTH):
+            h = int(hashlib.md5(f"{d}:{item}".encode()).hexdigest()[:8], 16)
+            cell = (d, h % SK.CMS_WIDTH)
+            want[cell] = want.get(cell, 0) + n
+    weighted = SK.cms_build_weighted(df, weight="cnt")
+    assert {(r["d"], r["bucket"]): r["c"] for r in weighted.collect()} == want
     [c_field] = [f for f in weighted.schema.fields if f.name == "c"]
     assert c_field.dataType.simpleString() == "bigint"
     assert not c_field.nullable

@@ -41,19 +41,6 @@ def test_salted_count_sum_matches_unsalted(spark):
     assert got == want
 
 
-def test_salted_count_distinct_matches_unsalted(spark):
-    df = _skewed(spark)
-    got = {
-        r["k"]: r["distinct_n"]
-        for r in skew.salted_count_distinct(df, ["k"], "u", salt_buckets=8).collect()
-    }
-    want = {
-        r["k"]: r["dn"]
-        for r in df.groupBy("k").agg(F.count_distinct("u").alias("dn")).collect()
-    }
-    assert got == want
-
-
 def test_salted_plan_fans_out_hot_key(spark):
     df = _skewed(spark)
     plan = (

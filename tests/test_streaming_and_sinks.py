@@ -384,33 +384,6 @@ def test_fan_out(spark, tmp_path):
     assert sorted(r["x"] for r in spark.read.parquet(p2).collect()) == [2, 4]
 
 
-def test_compact_parquet_reduces_files_and_preserves_rows(spark, tmp_path):
-    path = str(tmp_path / "frag")
-    # simulate the streaming-upsert aftermath: 20 tiny appends
-    for i in range(20):
-        spark.range(i * 50, (i + 1) * 50).select(
-            F.col("id"), (F.col("id") % 7).alias("g")
-        ).coalesce(1).write.mode("append").parquet(path)
-    import glob
-
-    before = len(glob.glob(f"{path}/*.parquet"))
-    assert before >= 20
-
-    n = sinks.compact_parquet(spark, path, target_rows_per_file=600, sort_cols=["id"])
-    after = glob.glob(f"{path}/*.parquet")
-    assert len(after) == n == 2  # 1000 rows / 600 → 2 files
-    df = spark.read.parquet(path)
-    assert df.count() == 1000
-    assert df.agg(F.sum("id")).collect()[0][0] == sum(range(1000))
-    # range-partitioned + sorted: each file's id span is disjoint
-    import pyarrow.parquet as pq
-
-    spans = sorted(
-        (pq.read_table(f, columns=["id"])["id"].to_pylist()) for f in after
-    )
-    assert spans[0][-1] < spans[1][0]
-
-
 class _RenameIntoFs:
     """A real Hadoop FileSystem whose rename onto a path named ``live``
     returns ``result``, or raises it when it is an exception; every other
@@ -448,11 +421,16 @@ def _fail_renames_into(monkeypatch, path, result):
     monkeypatch.setattr(sinks, "_hadoop_fs", wrapped)
 
 
-def test_compact_parquet_crash_before_swap_keeps_data_for_next_upsert(
+def _repartitioned(existing):
+    """A rewrite's merge that keeps every row: the live copy in 2 files."""
+    return existing.repartition(2)
+
+
+def test_rewrite_crash_before_swap_keeps_data_for_next_upsert(
     spark, tmp_path, monkeypatch
 ):
-    # compaction dies after the live copy is moved aside and before the
-    # compacted copy is renamed into place; the next upsert must find a
+    # a rewrite dies after the live copy is moved aside and before the
+    # new copy is renamed into place; the next upsert must find a
     # complete copy to merge into, not start over from its own rows
     import pytest
 
@@ -465,15 +443,15 @@ def test_compact_parquet_crash_before_swap_keeps_data_for_next_upsert(
     with monkeypatch.context() as m:
         _fail_renames_into(m, path, _Crash())
         with pytest.raises(_Crash):
-            sinks.compact_parquet(spark, path, target_rows_per_file=60)
+            sinks.rewrite(spark, path, _repartitioned)
     upd = spark.createDataFrame([(100, 1000)], "k: long, v: long")
     sinks.upsert_by_key(spark, upd, path, ["k"])
     got = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
     assert got == {k: k * 10 for k in range(101)}
 
 
-def test_compact_parquet_raises_on_false_rename(spark, tmp_path, monkeypatch):
-    # Hadoop reports a failed rename by returning false; compaction must
+def test_rewrite_raises_on_false_rename(spark, tmp_path, monkeypatch):
+    # Hadoop reports a failed rename by returning false; a rewrite must
     # raise, not report success with the live path gone, and the next
     # rewrite must recover every row
     import pytest
@@ -483,8 +461,11 @@ def test_compact_parquet_raises_on_false_rename(spark, tmp_path, monkeypatch):
     with monkeypatch.context() as m:
         _fail_renames_into(m, path, False)
         with pytest.raises(RuntimeError, match="rename failed"):
-            sinks.compact_parquet(spark, path, target_rows_per_file=60)
-    assert sinks.compact_parquet(spark, path, target_rows_per_file=60) == 2
+            sinks.rewrite(spark, path, _repartitioned)
+    sinks.rewrite(spark, path, _repartitioned)
+    import glob
+
+    assert len(glob.glob(f"{path}/*.parquet")) == 2  # the new copy is live
     got = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
     assert got == {k: k * 10 for k in range(100)}
 
@@ -529,42 +510,6 @@ def test_streaming_sliding_windows_emit_on_watermark(spark, tmp_path):
     assert all(s <= datetime(2021, 1, 2, 3) < e for s, e in got)
 
 
-def test_zorder_clusters_both_dimensions(spark, tmp_path):
-    # 32×32 grid of (x, y): sorting by z-value then splitting into files
-    # bounds BOTH x and y spans per file; sorting by x alone leaves y
-    # spanning the whole domain in every file
-    from pyspark.sql import functions as F
-
-    grid = (
-        spark.range(32 * 32)
-        .select((F.col("id") % 32).alias("x"), (F.col("id") / 32).cast("long").alias("y"))
-    )
-    z = grid.withColumn("z", sinks.zorder_value("x", "y", bits=5))
-    # z-value is a bijection on the grid (no collisions)
-    assert z.select("z").distinct().count() == 32 * 32
-    n_files = 16
-    zsorted = z.repartitionByRange(n_files, "z").sortWithinPartitions("z")
-    spans = (
-        zsorted.withColumn("pid", F.spark_partition_id())
-        .groupBy("pid")
-        .agg(
-            (F.max("x") - F.min("x")).alias("xs"),
-            (F.max("y") - F.min("y")).alias("ys"),
-        )
-        .collect()
-    )
-    # every file's bounding box is a fraction of the 31-wide domain on BOTH dims
-    assert all(r["xs"] <= 16 and r["ys"] <= 16 for r in spans)
-    xsorted = grid.repartitionByRange(n_files, "x").sortWithinPartitions("x")
-    xspans = (
-        xsorted.withColumn("pid", F.spark_partition_id())
-        .groupBy("pid")
-        .agg((F.max("y") - F.min("y")).alias("ys"))
-        .collect()
-    )
-    assert all(r["ys"] == 31 for r in xspans)  # x-sort leaves y unclustered
-
-
 def test_drop_duplicates_within_watermark_builtin(spark, tmp_path):
     # Spark 3.5+ built-in bounded-state dedup (first row per key while the
     # watermark holds it, engine-managed state eviction): the
@@ -588,60 +533,6 @@ def test_drop_duplicates_within_watermark_builtin(spark, tmp_path):
     q.awaitTermination(120)
     got = sorted(r["fp"] for r in spark.sql("SELECT * FROM ddww_stream").collect())
     assert got == ["aaa", "bbb"]
-
-
-def test_compact_parquet_to_size_targets_bytes(spark, tmp_path):
-    from lab_flink_repository_analytics_spark.io import sinks
-
-    path = str(tmp_path / "sized")
-    df = spark.range(0, 20_000).selectExpr(
-        "id", "repeat('x', 64) AS pad"
-    )
-    df.repartition(16).write.parquet(path)
-    import glob
-    total = sum(
-        __import__("os").path.getsize(f) for f in glob.glob(path + "/*.parquet")
-    )
-    # aim for ~4 files from the measured bytes
-    n = sinks.compact_parquet_to_size(spark, path, target_bytes=max(1, total // 4))
-    files = glob.glob(path + "/*.parquet")
-    assert n == len(files)
-    assert 2 <= n <= 8  # byte-derived, not row-guessed
-    assert spark.read.parquet(path).count() == 20_000
-
-
-def test_compact_parquet_to_size_sees_partitioned_bytes(spark, tmp_path):
-    from lab_flink_repository_analytics_spark.io import sinks
-
-    path = str(tmp_path / "parted")
-    df = spark.range(0, 8_000).selectExpr(
-        "id", "CAST(id % 3 AS STRING) AS split", "repeat('y', 64) AS pad"
-    )
-    df.repartition(12).write.partitionBy("split").parquet(path)
-    import glob
-    total = sum(
-        __import__("os").path.getsize(f)
-        for f in glob.glob(path + "/*/*.parquet")
-    )
-    assert total > 0
-    # recursive byte listing: a flat listStatus would see 0 bytes here and
-    # collapse everything into one file regardless of target
-    n = sinks.compact_parquet_to_size(spark, path, target_bytes=max(1, total // 3))
-    assert 2 <= n <= 6
-    assert spark.read.parquet(path).count() == 8_000
-    # the Hive partition layout must SURVIVE compaction — the rewrite goes
-    # through partitionBy, so split=... stays a directory level (partition
-    # pruning keeps working), not a demoted data column in flat files
-    import os
-    subdirs = sorted(
-        d for d in os.listdir(path) if d.startswith("split=")
-    )
-    assert subdirs == ["split=0", "split=1", "split=2"]
-    assert not glob.glob(path + "/*.parquet")  # no flat data files
-    pruned = spark.read.parquet(path).filter("split = '1'")
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(split" in plan
-    assert pruned.count() == sum(1 for i in range(8_000) if i % 3 == 1)
 
 
 def test_streaming_commit_activity_restart_resume_sf001(spark, tmp_path):

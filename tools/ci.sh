@@ -14,7 +14,8 @@
 #
 # Usage: tools/ci.sh [--quick|--extended-smoke]
 #   --quick           sf0.001 correctness, subset pytest (incl. the sink
-#                     rewrite path: upsert, compaction, swap recovery, and
+#                     rewrite path: upsert, the rewrite crash windows,
+#                     swap recovery, and
 #                     the vector kernels: semdedup, k-means, centroid
 #                     assignment, brute-force top-k, and the dead-code
 #                     audit of the package)
@@ -55,7 +56,7 @@ fi
 
 echo "=== [1/3] pytest ==="
 if [[ "$QUICK" == "--quick" ]]; then
-  python -m pytest tests/ -x -q -k "environment or util or plans or upsert or compact or swap or semdedup or kmeans or assignments or brute_force or covariance or limbs or dead_code"
+  python -m pytest tests/ -x -q -k "environment or util or plans or upsert or test_rewrite or swap or semdedup or kmeans or assignments or brute_force or covariance or limbs or dead_code"
 else
   python -m pytest tests/ -x -q
   # benchmark helpers (metrics, tracing, generators): Spark-free, seconds
